@@ -301,11 +301,17 @@ def q16_simhash_pairs(spark, sf):
     verbatim: a full-minhash-signature precision gate 2.4σ under the
     decision threshold (recall-safe, see sig_jaccard_refine) prunes the
     chance collisions for the price of one signature pass + two narrow
-    joins; the exact verify still decides every emitted pair."""
+    joins; the exact verify still decides every emitted pair.
+
+    Recall bound of the minhash gate: the 64-slot agreement count of a
+    pair with true Jaccard J is Binomial(64, J), and ``min_est=0.35``
+    keeps the pair iff at least 23 slots agree (0.35 · 64 = 22.4). At
+    the decision threshold J = 0.5 a true pair is dropped with
+    P[Binomial(64, 0.5) <= 22] ≈ 0.84%; at J = 0.55 with ≈ 0.07%."""
     from politics_crawler_spark.operators.dedup import (
-        both_sketches,
         exact_jaccard_verify,
         hamming_band_pairs,
+        minhash_signatures,
         sig_jaccard_refine,
     )
 
@@ -314,10 +320,9 @@ def q16_simhash_pairs(spark, sf):
     # signature (precision refine) come from the same mapInPandas pass, so
     # the text is scanned and FNV-shingle-hashed once instead of once per
     # sketch (~3.5 s/pass at sf1.0/50k docs). The localCheckpointed
-    # (id, sim, sig) table feeds the banded self-join's two sides AND both
-    # refine joins — kernels/seeds identical to the separate UDFs, so
-    # every downstream row is byte-identical.
-    sk = both_sketches(d).localCheckpoint(eager=True)
+    # (id, sig, sim) table feeds the banded self-join's two sides AND both
+    # refine joins.
+    sk = minhash_signatures(d, simhash=True).localCheckpoint(eager=True)
     cands = hamming_band_pairs(
         sk.select("doc_id", "sim"), "sim", "doc_id", max_hamming=7, bands=8
     )

@@ -90,10 +90,15 @@ def _contamination_hits(
     multi-arg hash consumes the token values directly (no concatenated
     string is ever allocated), per-doc dedup compares 8-byte longs, and
     the broadcast join builds a long-keyed relation (the q47 lesson:
-    8-byte keys, gram strings never leave the row). A 64-bit collision
-    can only ADD a counted gram — conservative for a contamination
-    filter — with corpus-wide probability ~|train grams|·|eval grams|
-    / 2^64 (≈1e-7 here).
+    8-byte keys, gram strings never leave the row). 64-bit collisions
+    err both ways. A train gram colliding with a different eval gram
+    ADDS a counted gram, with corpus-wide probability ~|train grams|·
+    |eval grams| / 2^64 (≈1e-7 here). Two distinct grams colliding
+    within one train doc (or within the eval set) merge under
+    array_distinct / distinct, so a doc holding both as eval grams is
+    UNDERCOUNTED by one; ~2^-64 per gram pair. A merge never takes a
+    doc's count to zero, so the contaminated/clean decision can only err
+    toward flagging; n_contam_grams can err either way.
 
     The gram-hash transform is applied DIRECTLY over the Project(_t)
     shape (never through an intermediate projected alias): an extra

@@ -4,13 +4,16 @@
   partial agg. 100 TB-safe: dedup key is a fixed-width digest, not the text.
 - latest_by_key: the reference's cross-run upsert semantics (D3/K2) as a
   window — keep the newest version per business key.
-- minhash_signatures / lsh_candidate_pairs: MinHash+LSH near-dup at scale:
-  shingle → 64-perm minhash (vectorized numpy inside a pandas UDF) → band →
-  bucket join on (band, band_hash) so only same-bucket docs ever meet —
-  no O(n²) cross join. Verified candidates get exact shingle-Jaccard.
-- simhash64: 64-bit simhash over token hashes; near-dups = small Hamming
-  distance. Signature computed vectorized; banding by 16-bit chunks gives
-  the candidate join the same no-cross-join property.
+- minhash_signatures: the one text-sketch operator — byte-shingle hashes →
+  64-perm minhash (and optionally a 64-bit simhash), vectorized numpy in one
+  mapInPandas pass.
+- lsh_candidate_pairs / sig_jaccard_refine: MinHash-LSH near-dup at scale:
+  band → bucket join on (band, band_hash) so only same-bucket docs ever
+  meet — no O(n²) cross join — then a full-signature precision gate.
+  Verified candidates get exact shingle-Jaccard.
+- hamming_band_pairs: near-dups of a 64-bit signature (simhash) = small
+  Hamming distance; pigeonhole banding gives the candidate join the same
+  no-cross-join property.
 """
 
 from __future__ import annotations
@@ -20,7 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 # --------------------------------------------------------------------------
 # exact + upsert-style dedup (built-ins only)
@@ -56,28 +58,21 @@ _MERS = np.uint64((1 << 61) - 1)
 _FNV_BASIS = np.uint64(0xCBF29CE484222325)
 _FNV_PRIME = np.uint64(0x100000001B3)
 
+# MinHash permutation count and seed. 64 slots are what lsh_candidate_pairs'
+# 16×4 banding and sig_jaccard_refine's error bound (sd ≈ sqrt(j(1-j)/64))
+# are sized for; the seed fixes the (a, b) coefficients, so signatures are
+# reproducible across runs and workers.
+NUM_PERM = 64
+SEED = 7
+_rng = np.random.default_rng(SEED)
+_PERM_A = _rng.integers(1, (1 << 61) - 1, size=NUM_PERM, dtype=np.uint64)
+_PERM_B = _rng.integers(0, (1 << 61) - 1, size=NUM_PERM, dtype=np.uint64)
+del _rng
+
 # Bound on shingles hashed per (a*x+b) matrix chunk: 64 perms × 2^18
 # shingles × 8 B ≈ 134 MB of temporary — fits comfortably in an Arrow
 # worker while keeping the chunk loop to a handful of iterations per batch.
 _MINHASH_CHUNK_SHINGLES = 1 << 18
-
-
-def _shingle_hashes(text: str, k: int) -> np.ndarray:
-    """Per-doc reference path (kept for tests / single-doc callers): unique
-    FNV-1a hashes of all byte k-grams."""
-    if text is None:
-        return np.zeros(0, dtype=np.uint64)
-    data = text.encode("utf-8", "ignore")
-    n = len(data) - k + 1
-    if n <= 0:
-        return np.zeros(0, dtype=np.uint64)
-    arr = np.frombuffer(data, dtype=np.uint8)
-    windows = np.lib.stride_tricks.sliding_window_view(arr, k).astype(np.uint64)
-    h = np.full(n, _FNV_BASIS, dtype=np.uint64)
-    for i in range(k):
-        h ^= windows[:, i]
-        h *= _FNV_PRIME
-    return np.unique(h)
 
 
 def _batch_shingle_hashes(texts, k: int):
@@ -132,11 +127,10 @@ def _parallelize_input(df: DataFrame, id_col: str) -> DataFrame:
     return df
 
 
-def _minhash_kernel(h, starts, counts, a, b, num_perm: int) -> np.ndarray:
-    """Vectorized minhash over pre-hashed shingles (shared by the minhash
-    UDF and the combined-sketch UDF — r6)."""
+def _minhash_kernel(h, starts, counts) -> np.ndarray:
+    """Vectorized NUM_PERM-slot minhash over pre-hashed shingles."""
     n_docs = len(counts)
-    sigs = np.zeros((n_docs, num_perm), dtype=np.int64)  # empty doc → [0]*p
+    sigs = np.zeros((n_docs, NUM_PERM), dtype=np.int64)  # empty doc → [0]*p
     nz = np.nonzero(counts)[0]
     # chunk the (perm × shingle) matrix by whole docs so each
     # minimum.reduceat segment stays contiguous within its chunk
@@ -154,13 +148,13 @@ def _minhash_kernel(h, starts, counts, a, b, num_perm: int) -> np.ndarray:
             int(tot), dtype=np.int64
         )
         sh = h[gather]
-        # (a*x + b) mod mersenne61 (mul wraps mod 2^64, same as the
-        # per-doc path), min per doc-segment per permutation. The mod
-        # uses the Mersenne fold — y ≡ (y >> 61) + (y & M) (mod 2^61-1)
-        # with one conditional subtract — instead of uint64 division,
-        # which costs ~10× more per element and dominated the UDF.
-        vals = sh[None, :] * a[:, None]
-        vals += b[:, None]
+        # (a*x + b) mod mersenne61 (a*x + b wraps mod 2^64 first), min per
+        # doc-segment per permutation. The mod uses the Mersenne fold —
+        # y ≡ (y >> 61) + (y & M) (mod 2^61-1) with one conditional
+        # subtract — instead of uint64 division, which costs ~10× more per
+        # element and dominated the sketch pass.
+        vals = sh[None, :] * _PERM_A[:, None]
+        vals += _PERM_B[:, None]
         hi61 = vals >> np.uint64(61)
         vals &= _MERS
         vals += hi61
@@ -172,15 +166,14 @@ def _minhash_kernel(h, starts, counts, a, b, num_perm: int) -> np.ndarray:
 
 
 def _simhash_kernel(h, counts) -> np.ndarray:
-    """Vectorized 64-bit simhash over pre-hashed shingles (shared by the
-    simhash UDF and the combined-sketch UDF — r6)."""
+    """Vectorized 64-bit simhash over pre-hashed shingles: bit i is the
+    majority vote of bit i over the doc's DISTINCT shingle hashes."""
     n_docs = len(counts)
     out = np.zeros(n_docs, dtype=np.int64)  # empty doc → 0
     nz = np.nonzero(counts)[0]
     if len(nz):
-        # segment-wise np.unique: simhash votes are per DISTINCT
-        # shingle (the per-doc path hashed np.unique output). Sort by
-        # (doc, hash) in one lexsort, then mask first-occurrences.
+        # segment-wise np.unique: sort by (doc, hash) in one lexsort, then
+        # mask first-occurrences.
         doc_of = np.repeat(np.arange(n_docs, dtype=np.int64), counts)
         order = np.lexsort((h, doc_of))
         hs, ds = h[order], doc_of[order]
@@ -203,63 +196,40 @@ def _simhash_kernel(h, counts) -> np.ndarray:
     return out
 
 
-def make_minhash_udf(num_perm: int = 64, shingle_k: int = 5, seed: int = 7):
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, (1 << 61) - 1, size=num_perm, dtype=np.uint64)
-    b = rng.integers(0, (1 << 61) - 1, size=num_perm, dtype=np.uint64)
+def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
+                       shingle_k: int = 5, simhash: bool = False) -> DataFrame:
+    """Text sketches of every doc's UTF-8 byte ``shingle_k``-grams:
+    ``(id, sig array<long>)`` — the NUM_PERM-slot minhash — plus
+    ``sim long``, the 64-bit simhash, when ``simhash=True``. A NULL text
+    or one shorter than ``shingle_k`` bytes has no shingles: all-zero
+    ``sig``, ``sim = 0``.
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_udf(texts: pd.Series) -> pd.Series:
-        h, starts, counts = _batch_shingle_hashes(texts, shingle_k)
-        return pd.Series(list(_minhash_kernel(h, starts, counts, a, b, num_perm)))
+    One mapInPandas pass: each Arrow batch is FNV-shingle-hashed once and
+    both kernels read the same hashes, so q16 (simhash banding + minhash
+    refine) scans and hashes the text once. The id column passes through
+    with its input type — the output schema takes ``df.schema[id_col]``.
 
-    return minhash_udf
-
-
-def both_sketches(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  num_perm: int = 64, shingle_k: int = 5,
-                  seed: int = 7) -> DataFrame:
-    """(id, sim, sig): BOTH sketches — 64-bit simhash + num_perm-slot
-    minhash — from ONE shingle-hash pass over each Arrow batch (r6): q16
-    needs the simhash for banding and the minhash signature for the
-    precision refine, and computing them with separate UDFs scanned and
-    FNV-hashed every text twice. Kernels and seeds are shared with
-    make_minhash_udf / make_simhash_udf, so the outputs are bit-identical
-    to running the two UDFs separately.
-
-    Shape note (r6, measured): this is mapInPandas with FLAT output
-    columns, not a struct-returning pandas_udf — the pandas→Arrow
-    conversion of a struct column embedding an array<long> measured ~20×
-    slower than the same data as a top-level list column (98.7 s vs ~5 s
-    for the 50k-doc sketch pass)."""
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, (1 << 61) - 1, size=num_perm, dtype=np.uint64)
-    b = rng.integers(0, (1 << 61) - 1, size=num_perm, dtype=np.uint64)
+    Shape note (r6, measured): the output columns are FLAT top-level
+    columns, not a struct — the pandas→Arrow conversion of a struct column
+    embedding an array<long> measured ~20× slower than the same data as a
+    top-level list column (98.7 s vs ~5 s for the 50k-doc sketch pass)."""
 
     def _run(batches):
         for pdf in batches:
             h, starts, counts = _batch_shingle_hashes(pdf[text_col], shingle_k)
-            sim = _simhash_kernel(h, counts)
-            sigs = _minhash_kernel(h, starts, counts, a, b, num_perm)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "sim": pd.Series(sim, index=pdf.index, dtype="int64"),
-                    "sig": pd.Series(list(sigs), index=pdf.index),
-                }
-            )
+            out = {
+                id_col: pdf[id_col],
+                "sig": pd.Series(list(_minhash_kernel(h, starts, counts)), index=pdf.index),
+            }
+            if simhash:
+                out["sim"] = pd.Series(_simhash_kernel(h, counts), index=pdf.index, dtype="int64")
+            yield pd.DataFrame(out)
 
+    fields = [df.schema[id_col], T.StructField("sig", T.ArrayType(T.LongType()))]
+    if simhash:
+        fields.append(T.StructField("sim", T.LongType()))
     src = _parallelize_input(df.select(id_col, text_col), id_col)
-    return src.mapInPandas(
-        _run, schema=f"{id_col} long, sim long, sig array<long>"
-    )
-
-
-def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                       num_perm: int = 64, shingle_k: int = 5) -> DataFrame:
-    udf = make_minhash_udf(num_perm, shingle_k)
-    df = _parallelize_input(df.select(id_col, text_col), id_col)
-    return df.select(id_col, udf(F.col(text_col)).alias("sig"))
+    return src.mapInPandas(_run, schema=T.StructType(fields))
 
 
 def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
@@ -370,7 +340,7 @@ def sig_jaccard_refine(pairs: DataFrame, sigs: DataFrame,
                        id_col: str = "doc_id",
                        min_est: float = 0.35) -> DataFrame:
     """Precision gate between the banded candidate generator and the exact
-    verify: re-score ``(id_a, id_b)`` pairs with the FULL ``num_perm``
+    verify: re-score ``(id_a, id_b)`` pairs with the FULL NUM_PERM
     signature agreement and keep those >= ``min_est``.
 
     Why this stage exists (measured, r5): the banded join is the LSH
@@ -524,19 +494,6 @@ def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     return df.join(dropped, on=id_col, how="left_anti")
 
 
-# --------------------------------------------------------------------------
-# SimHash
-# --------------------------------------------------------------------------
-
-def make_simhash_udf(shingle_k: int = 5):
-    @pandas_udf(T.LongType())
-    def simhash_udf(texts: pd.Series) -> pd.Series:
-        h, _starts, counts = _batch_shingle_hashes(texts, shingle_k)
-        return pd.Series(_simhash_kernel(h, counts), dtype="int64")
-
-    return simhash_udf
-
-
 def hamming_band_pairs(sigs: DataFrame, sig_col: str = "sim",
                        id_col: str = "doc_id", max_hamming: int = 3,
                        bands: int = 4) -> DataFrame:
@@ -585,24 +542,6 @@ def hamming_band_pairs(sigs: DataFrame, sig_col: str = "sim",
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )
-
-
-def simhash_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  max_hamming: int = 3, bands: int = 4) -> DataFrame:
-    """Near-dup pairs by simhash 64-bit banding (see hamming_band_pairs).
-
-    The signature table is localCheckpointed before the banded self-join:
-    both join sides read the same materialized (id, 8-byte sig) rows, so
-    the text scan + signature UDF run ONCE instead of once per side
-    (measured ~3.5 s/side at sf1.0/50k docs). 16 B/row at any corpus
-    size; blocks are freed by the ContextCleaner when the plan dies
-    (same lifetime argument as q15's localCheckpoint — not a persist, so
-    later bench trials cannot be served a plan-matched cached result)."""
-    udf = make_simhash_udf()
-    src = _parallelize_input(df.select(id_col, text_col), id_col)
-    sigs = src.select(id_col, udf(F.col(text_col)).alias("sim"))
-    sigs = sigs.localCheckpoint(eager=True)
-    return hamming_band_pairs(sigs, "sim", id_col, max_hamming, bands)
 
 
 # --------------------------------------------------------------------------

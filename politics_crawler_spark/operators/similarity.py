@@ -73,40 +73,15 @@ def cosine_topk(
     )
 
 
-def make_hyperplane_udf(bits: int = 12, seed: int = 11, dim: int | None = None):
-    """Random-hyperplane bucketer. The plane matrix is derived lazily from
-    the FIRST Arrow batch's vector width (deterministic: seed + dim fix the
-    planes), so no driver-side action is needed to sniff the embedding dim
-    — the query plan stays action-free until the terminal job."""
-    planes_cache: dict[int, np.ndarray] = {}
-
-    def _planes(d: int) -> np.ndarray:
-        if d not in planes_cache:
-            planes_cache[d] = np.random.default_rng(seed).standard_normal((d, bits))
-        return planes_cache[d]
-
-    if dim is not None:
-        _planes(dim)
-
-    @pandas_udf(T.LongType())
-    def bucket_udf(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype="int64")
-        mat = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-        signs = (mat @ _planes(mat.shape[1])) > 0
-        vals = (signs * (1 << np.arange(bits))).sum(axis=1)
-        return pd.Series(vals.astype(np.int64))
-
-    return bucket_udf
-
-
 def make_multitable_bucket_udf(
     bits: int, tables: int, seed_base: int = 100, dim: int | None = None
 ):
     """All ``tables`` hyperplane buckets of a vector in ONE Arrow pass
     (array<long>, one bucket per table) — a per-table UDF would rescan the
-    vector column ``tables`` times. Plane matrices match
-    :func:`make_hyperplane_udf` (``seed_base + t``) bit-for-bit."""
+    vector column ``tables`` times. Table ``t``'s planes are seeded
+    ``seed_base + t`` and sized from the Arrow batch's vector width
+    (deterministic: seed + dim fix the planes), so no driver-side action
+    is needed to sniff the embedding dim."""
     planes_cache: dict[int, np.ndarray] = {}
 
     def _planes(d: int) -> np.ndarray:

@@ -1,8 +1,15 @@
-"""Near-dup operator tests: MinHash+LSH recall, SimHash locality, n-gram
-Jaccard exactness, ANN brute-force vs LSH recall."""
+"""Near-dup operator tests: sketch kernels vs a per-doc reference, MinHash+LSH
+recall, SimHash locality, n-gram Jaccard exactness, ANN brute-force vs LSH
+recall."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+_FNV_BASIS = 0xCBF29CE484222325
+_FNV_PRIME = 0x100000001B3
+_U64 = (1 << 64) - 1
+_MERS = (1 << 61) - 1
 
 
 def _docs(spark):
@@ -28,7 +35,7 @@ def test_minhash_lsh_finds_near_dups(spark):
         minhash_signatures,
     )
 
-    sigs = minhash_signatures(_docs(spark), num_perm=64, shingle_k=5)
+    sigs = minhash_signatures(_docs(spark), shingle_k=5)
     pairs = lsh_candidate_pairs(sigs, est_threshold=0.5)
     got = {(r.id_a, r.id_b): r.jaccard_est for r in pairs.collect()}
     assert (1, 3) in got and got[(1, 3)] == 1.0  # exact dup → all minhashes equal
@@ -76,11 +83,77 @@ def test_minhash_dedup_transitive_chain(spark):
     assert out == {1, 9}, f"expected component collapse to min id, got {out}"
 
 
-def test_simhash_locality(spark):
-    from politics_crawler_spark.operators.dedup import make_simhash_udf
+def _shingle_hashes(text: str, k: int) -> np.ndarray:
+    """Per-doc reference: unique FNV-1a hashes of all UTF-8 byte k-grams."""
+    if text is None:
+        return np.zeros(0, dtype=np.uint64)
+    data = text.encode("utf-8", "ignore")
+    n = len(data) - k + 1
+    if n <= 0:
+        return np.zeros(0, dtype=np.uint64)
+    arr = np.frombuffer(data, dtype=np.uint8)
+    windows = np.lib.stride_tricks.sliding_window_view(arr, k).astype(np.uint64)
+    h = np.full(n, _FNV_BASIS, dtype=np.uint64)
+    for i in range(k):
+        h ^= windows[:, i]
+        h *= _FNV_PRIME
+    return np.unique(h)
 
-    udf = make_simhash_udf()
-    sigs = {r.doc_id: r.s for r in _docs(spark).select("doc_id", udf("text").alias("s")).collect()}
+
+def _reference_sketches(text: str, k: int = 5):
+    """Plain per-doc (sig, sim) in Python ints: slot p of the minhash is
+    min over shingles x of ((a_p·x + b_p) mod 2^64) mod (2^61 − 1); bit i of
+    the simhash is set iff more than half the DISTINCT shingles have bit i
+    set. No shingles → all-zero sig and sim 0."""
+    from politics_crawler_spark.operators.dedup import NUM_PERM, SEED
+
+    rng = np.random.default_rng(SEED)
+    a = [int(v) for v in rng.integers(1, _MERS, size=NUM_PERM, dtype=np.uint64)]
+    b = [int(v) for v in rng.integers(0, _MERS, size=NUM_PERM, dtype=np.uint64)]
+    xs = [int(x) for x in _shingle_hashes(text, k)]
+    if not xs:
+        return [0] * NUM_PERM, 0
+    sig = [min(((ap * x + bp) & _U64) % _MERS for x in xs) for ap, bp in zip(a, b)]
+    sim = sum(1 << i for i in range(64) if 2 * sum((x >> i) & 1 for x in xs) > len(xs))
+    return sig, sim - (1 << 64) if sim >= 1 << 63 else sim
+
+
+def test_sketch_kernels_match_per_doc_reference(spark):
+    """Every doc's batched-kernel ``sig`` and ``sim`` equal the per-doc
+    reference — ASCII, Korean (multi-byte UTF-8 shingles cross character
+    boundaries), a text shorter than k, and a NULL text."""
+    from politics_crawler_spark.operators.dedup import minhash_signatures
+
+    rows = [(r.doc_id, r.text) for r in _docs(spark).collect()] + [
+        (6, "국회 본회의에서 정부 예산안과 정치 개혁 법안을 두고 여야가 토론했다"),
+        (7, "abc"),
+        (8, None),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r.doc_id: (list(r.sig), r.sim)
+        for r in minhash_signatures(df, simhash=True).collect()
+    }
+    assert set(got) == {i for i, _ in rows}
+    for doc_id, text in rows:
+        assert got[doc_id] == _reference_sketches(text), doc_id
+    assert got[7] == got[8] == ([0] * 64, 0)
+
+
+@pytest.mark.parametrize("id_type", ["int", "string"])
+def test_minhash_signatures_keeps_id_type(spark, id_type):
+    from politics_crawler_spark.operators.dedup import minhash_signatures
+
+    df = _docs(spark).withColumn("doc_id", F.col("doc_id").cast(id_type))
+    out = minhash_signatures(df, simhash=True)
+    assert out.schema["doc_id"].dataType == df.schema["doc_id"].dataType
+    assert sorted(r.doc_id for r in out.collect()) == sorted(r.doc_id for r in df.collect())
+
+
+def test_simhash_locality(spark):
+    from politics_crawler_spark.operators.dedup import minhash_signatures
+
+    sigs = {r.doc_id: r.sim for r in minhash_signatures(_docs(spark), simhash=True).collect()}
     ham = lambda a, b: bin((a ^ b) & (2**64 - 1)).count("1")
     assert sigs[1] == sigs[3]
     assert ham(sigs[1], sigs[2]) < ham(sigs[1], sigs[4])
