@@ -90,9 +90,3 @@ class BloomShard:
         bits = np.frombuffer(raw[24:], dtype=np.uint8).copy()
         return cls(int(n_bits), int(k), bits, int(n_keys))
 
-    def union(self, other: "BloomShard") -> "BloomShard":
-        assert self.n_bits == other.n_bits and self.k == other.k
-        return BloomShard(
-            self.n_bits, self.k, np.bitwise_or(self.bits, other.bits),
-            self.n_keys + other.n_keys,
-        )

@@ -252,7 +252,6 @@ def run_crawl(
     run_date: str = RUN_DATE,
     boards: list[BoardConfig] | None = None,
     n_shards: int = 16,
-    use_bloom: bool = True,
     max_rounds: int | None = None,
     max_seconds: float | None = None,
     host_target_rows: int = 5000,
@@ -261,7 +260,6 @@ def run_crawl(
     pages_per_round: int = 16,
     robots: DataFrame | None = None,
     fetcher=None,
-    defer_extraction: bool | None = None,
     min_interval_s: float = 0.0,
     initial_seen: DataFrame | None = None,
 ) -> CrawlResult:
@@ -278,20 +276,23 @@ def run_crawl(
     (``politeness.with_pace``) so a salt-split mega-host's aggregate rate
     still honors the per-host budget.
 
-    ``defer_extraction`` (default: on, unless checkpointing or live-fetching
-    — both need per-round materialization): leave each round's extraction
-    plan lazy and run ALL extraction as one terminal job. Per-round driver
-    work then touches only the list-parse path (staleness collect + bloom
-    commit), so the fixed cost per round stops gating N→4N scaling of the
-    extraction work. Round metrics report ``extracted: None`` in this mode
-    (count it from the result instead)."""
-    defer = (
-        defer_extraction
-        if defer_extraction is not None
-        else (checkpoint_dir is None and fetcher is None)
-    )
-    if checkpoint_dir or fetcher is not None:
-        defer = False  # commits and fetch observations need per-round jobs
+    The seen table is read and written only through
+    ``seen.probe_and_update``. Snapshot crawls fold a round's selected and
+    list URLs in the same pass that probes them (add-at-select). Live
+    crawls probe at select time but fold a detail URL only once its fetch
+    resolved (ok/short), so a URL whose fetch failed stays retryable.
+
+    Extraction is deferred unless ``checkpoint_dir`` or ``fetcher`` is set
+    (round commits and fetch observations need per-round jobs): each
+    round's extraction plan stays lazy and ALL extraction runs as one
+    terminal job. Per-round driver work then touches only the list-parse
+    path (staleness collect + bloom commit), so the fixed cost per round
+    stops gating N→4N scaling of the extraction work. Round metrics report
+    ``extracted: None`` in this mode (count it from the result instead).
+
+    ``initial_seen`` (optional): a previous run's seen table, for cross-run
+    continuity (D3/P11); its sharding must match ``n_shards``."""
+    defer = checkpoint_dir is None and fetcher is None
     boards = boards or ENABLED_BOARDS
     by_name = {b.board: b for b in boards}
     state = {b.board: BoardState() for b in boards}
@@ -695,16 +696,17 @@ def run_crawl(
         # latency + bloom-commit barrier) stops multiplying into the
         # scaling-critical work.
         #
-        # Snapshot mode fuses probe+fold into ONE cogroup pass
-        # (seen.probe_and_update): candidates probe the previous bloom bits
-        # and all keys fold in within the same shard group — the bloom
-        # deserializes once and the round runs one Python stage, not two.
+        # seen.probe_and_update fuses probe+fold into ONE cogroup pass:
+        # candidates probe the previous bloom bits and all keys fold in
+        # within the same shard group — the bloom deserializes once and the
+        # round runs one Python stage, not two.
         #
-        # FETCHER mode instead defers the detail-URL seen-add until the
-        # fetch RESOLVES (ok/short): a URL whose fetch exhausts
-        # max_attempts stays out of the bloom, so later rounds / resumed
-        # runs can retry it — add-at-select would make a transient network
-        # failure permanent data loss. List URLs keep add-at-select.
+        # FETCHER mode keeps only the survivors of this pass and folds the
+        # detail URLs after the fetch RESOLVES (ok/short), with a second
+        # pass below: a URL whose fetch exhausts max_attempts stays out of
+        # the bloom, so later rounds / resumed runs can retry it —
+        # add-at-select would make a transient network failure permanent
+        # data loss (ADVICE r2).
         # P9 staleness state, collected CONCURRENTLY with the seen job:
         # both consume the persisted cand, and BlockManager's per-partition
         # cache locks make each partition compute exactly once (the second
@@ -727,22 +729,14 @@ def run_crawl(
 
         frontier_keys = frontier.select(url_hash(F.col("url")).alias("url_hash"))
         t_pre_seen = time.time() - round_t0
-        if use_bloom and fetcher is None:
-            combined = seen_mod.probe_and_update(
-                selected.select("url_hash"), frontier_keys, seen, n_shards
-            ).localCheckpoint(eager=True)
-            # ONE heavy job per round: materializes cand + probe + fold
-            survivors, seen = seen_mod.split_probe_update(combined)
-            unseen = selected.join(survivors, on="url_hash", how="left_semi")
-        elif use_bloom:
-            unseen = seen_mod.filter_unseen(selected, seen, n_shards).persist()
-            # seen update happens after the detail fetch below
-        else:
-            unseen = selected.persist()
-            seen = seen_mod.update_seen(
-                seen, unseen.select("url_hash").unionByName(frontier_keys), n_shards
-            ).localCheckpoint(eager=True)
-        unseen_cache = unseen  # persist handle (observe() wraps the plan)
+        combined = seen_mod.probe_and_update(
+            selected.select("url_hash"), frontier_keys, seen, n_shards
+        ).localCheckpoint(eager=True)
+        # ONE heavy job per round: materializes cand + probe + fold
+        survivors, folded = seen_mod.split_probe_update(combined)
+        if fetcher is None:
+            seen = folded
+        unseen = selected.join(survivors, on="url_hash", how="left_semi")
         unseen = unseen.observe(st_obs["unseen"], F.count(F.lit(1)).alias("n"))
         t_seen = time.time() - round_t0 - t_pre_seen
 
@@ -779,7 +773,7 @@ def run_crawl(
         # Live mode: the repartition runs BEFORE the HTTP stage so every
         # host's requests execute inside its own salted task(s).
         detail = unseen.drop("url").withColumnRenamed("link", "url")
-        if defer and fetcher is None:
+        if defer:
             # extraction FULLY deferred: bank this round's slim candidate
             # rows (tagged with the round for per-round METRICS
             # attribution); ONE terminal snapshot scan serves every round
@@ -825,26 +819,24 @@ def run_crawl(
         if out is not None:
             out = out.persist()
             n_extracted = out.count()  # materializes the round output
-            if fetcher is not None and use_bloom:
+            if fetcher is not None:
                 # deferred seen-add (ADVICE r2): detail URLs enter the bloom
                 # only once their fetch RESOLVED (ok/short — 'error' rows
-                # stay unseen and retryable); list URLs add-at-select.
+                # stay unseen and retryable). Same operator, other half:
+                # keep the fold, discard the survivors.
                 resolved_keys = fetched_detail.filter(
                     F.col("fetch_status").isin("ok", "short")
                 ).select("url_hash")
-                seen = seen_mod.update_seen(
-                    seen, resolved_keys.unionByName(frontier_keys), n_shards
-                ).localCheckpoint(eager=True)
-            if fetcher is not None:
-                # out.count() materialized the fetch cache; drop it whether
-                # or not the bloom path re-read it (ADVICE r3: the old
-                # use_bloom-gated unpersist leaked one cache per round)
+                _, seen = seen_mod.split_probe_update(
+                    seen_mod.probe_and_update(
+                        resolved_keys, frontier_keys, seen, n_shards
+                    ).localCheckpoint(eager=True)
+                )
+                # out.count() materialized the fetch cache the fold re-read
                 fetched_detail.unpersist()
             for c in round_caches:
                 c.unpersist()
             round_caches.clear()
-            if unseen_cache.is_cached:
-                unseen_cache.unpersist()
             extracted_parts.append(out)
 
         # politeness budget accounting: the serial seconds the reference's

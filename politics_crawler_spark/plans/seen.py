@@ -7,13 +7,14 @@ partitioned, versioned structure instead:
 - candidates get ``shard_id = pmod(url_hash, n_shards)``
 - ``applyInPandas`` per shard loads that shard's bloom bytes (shipped in via
   a same-key join against the ``seen`` table — one shard row per group, no
-  broadcast of the whole filter), marks members, emits survivors
-- after a round commits, new keys fold into fresh shard versions
-  (copy-on-write; monotonically increasing ``version``)
+  broadcast of the whole filter), marks members, emits survivors, and folds
+  the round's keys into a fresh shard version (copy-on-write; monotonically
+  increasing ``version``)
 
-An exact-set path (``left_anti`` on ``url_hash`` against a plain hash table)
-backs the correctness tests: bloom survivors ⊆ exact survivors and the
-difference is bounded by the configured FPR.
+Probe and fold are one operator, :func:`probe_and_update`; every crawl mode
+reads and writes the seen table through it. A caller that needs one half
+only (the live-fetch crawl probes at select time and folds after the fetch
+resolves) discards the other.
 """
 
 from __future__ import annotations
@@ -42,72 +43,6 @@ def empty_seen(spark: SparkSession, n_shards: int = DEFAULT_SHARDS) -> DataFrame
 
 def with_shard(df: DataFrame, n_shards: int, hash_col: str = "url_hash") -> DataFrame:
     return df.withColumn("shard_id", F.pmod(F.col(hash_col), F.lit(n_shards)).cast("int"))
-
-
-def filter_unseen(candidates: DataFrame, seen: DataFrame, n_shards: int) -> DataFrame:
-    """Drop candidates whose url_hash is (probably) already seen.
-
-    Plan shape: only the 8-byte ``url_hash`` column rides the Python path —
-    hashes shuffle on shard_id, co-group with the one matching seen row per
-    shard, vectorized bloom probe inside the group; surviving hashes then
-    JVM-semi-join back against the full candidate rows. Candidate payloads
-    (title/url/… strings) never cross the Arrow boundary: at web-scale
-    candidate volume that halves the probe stage's serialization. No global
-    broadcast, no driver collect.
-    """
-    keys = with_shard(candidates.select("url_hash"), n_shards)
-
-    def _probe(key_pdf, seen_pdf):
-        key_pdf = key_pdf[["url_hash"]]
-        if len(key_pdf) == 0 or len(seen_pdf) == 0:
-            return key_pdf
-        shard = BloomShard.from_bytes(seen_pdf["bloom"].iloc[0])
-        mask = shard.contains(key_pdf["url_hash"].to_numpy(dtype=np.int64))
-        return key_pdf.loc[~mask]
-
-    survivors = (
-        keys.groupBy("shard_id")
-        .cogroup(seen.groupBy("shard_id"))
-        .applyInPandas(_probe, schema="url_hash long")
-    )
-    return candidates.join(survivors, on="url_hash", how="left_semi")
-
-
-def update_seen(seen: DataFrame, new_keys: DataFrame, n_shards: int) -> DataFrame:
-    """Fold new url_hash keys into the blooms → next seen version.
-
-    Copy-on-write: every shard row is re-emitted (touched shards with new
-    bytes and version+1, untouched shards unchanged), so the result is a
-    complete standalone snapshot suitable for checkpoint commit.
-    """
-    keys = with_shard(new_keys.select("url_hash"), n_shards)
-
-    def _fold(key, seen_pdf, keys_pdf):
-        if len(seen_pdf) == 0:  # shard never initialized (shouldn't happen)
-            shard = BloomShard.sized_for(DEFAULT_KEYS_PER_SHARD, DEFAULT_FPR)
-            version = 0
-        else:
-            shard = BloomShard.from_bytes(seen_pdf["bloom"].iloc[0])
-            version = int(seen_pdf["version"].iloc[0])
-        if len(keys_pdf) == 0:
-            return seen_pdf
-        shard.add(keys_pdf["url_hash"].to_numpy(dtype=np.int64))
-        return pd.DataFrame(
-            [
-                {
-                    "shard_id": int(key[0]),
-                    "version": version + 1,
-                    "bloom": shard.to_bytes(),
-                    "n_keys": shard.n_keys,
-                }
-            ]
-        )
-
-    return (
-        seen.groupBy("shard_id")
-        .cogroup(keys.groupBy("shard_id"))
-        .applyInPandas(_fold, schema=SEEN)
-    )
 
 
 def probe_and_update(
@@ -206,7 +141,3 @@ def split_probe_update(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
     return survivors, new_seen
 
-
-def filter_unseen_exact(candidates: DataFrame, seen_exact: DataFrame) -> DataFrame:
-    """Exact-set verification path: left-anti join on url_hash."""
-    return candidates.join(seen_exact.select("url_hash"), on="url_hash", how="left_anti")

@@ -12,6 +12,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+_DRIVER_MEM_CAP_MB = 16 * 1024
+
+
+def _default_driver_mem() -> str:
+    """Half the host's physical memory, capped at 16g: a 16g heap on a
+    16 GB host lets the driver JVM grow until the kernel kills it.
+    ``SPARK_DRIVER_MEM`` overrides this for deployments."""
+    try:
+        total_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    except (ValueError, OSError):  # sysconf names missing on this platform
+        return f"{_DRIVER_MEM_CAP_MB}m"
+    return f"{min(_DRIVER_MEM_CAP_MB, total_mb // 2)}m"
+
 
 def get_spark(
     app_name: str = "politics-crawler-spark",
@@ -37,7 +50,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()),
+        )
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

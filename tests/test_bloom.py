@@ -41,31 +41,6 @@ def test_serialization_round_trip():
     assert bytes(back.bits) == bytes(shard.bits)
 
 
-def test_union_merges_membership():
-    a = BloomShard.sized_for(100, 0.01)
-    b = BloomShard(a.n_bits, a.k)
-    ka = np.array([10, 20], dtype=np.int64)
-    kb = np.array([30, 40], dtype=np.int64)
-    a.add(ka)
-    b.add(kb)
-    u = a.union(b)
-    assert u.contains(np.concatenate([ka, kb])).all()
-    assert u.n_keys == 4
-
-
 def test_empty_probe():
     shard = BloomShard.sized_for(10, 0.01)
     assert shard.contains(np.array([], dtype=np.int64)).shape == (0,)
-
-
-def test_union_commutative_associative():
-    base = BloomShard.sized_for(500, 0.01)
-    a, b, c = (BloomShard(base.n_bits, base.k) for _ in range(3))
-    rng = np.random.default_rng(3)
-    ka, kb, kc = (rng.integers(-(2**62), 2**62, size=200, dtype=np.int64) for _ in range(3))
-    a.add(ka); b.add(kb); c.add(kc)
-    ab_c = a.union(b).union(c)
-    a_bc = a.union(b.union(c))
-    ba_c = b.union(a).union(c)
-    assert bytes(ab_c.bits) == bytes(a_bc.bits) == bytes(ba_c.bits)
-    assert ab_c.contains(np.concatenate([ka, kb, kc])).all()

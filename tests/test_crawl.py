@@ -64,30 +64,33 @@ def test_frontier_equivalence_with_reference_simulator(crawl_result, pages_pdf):
     assert eng == sim
 
 
-def test_bloom_matches_exact(spark, pages_df, crawl_result):
-    res2 = run_crawl(spark, pages_df, use_bloom=False)
-    a = {r.url for r in crawl_result.extracted.select("url").collect()}
-    b = {r.url for r in res2.extracted.select("url").collect()}
-    assert a == b
-
-
 def test_seen_filter_unit(spark):
-    cand = spark.createDataFrame(
-        [(i, f"u{i}") for i in range(100)], "url_hash long, url string"
-    )
+    cand = spark.createDataFrame([(i,) for i in range(100)], "url_hash long")
+    no_keys = spark.createDataFrame([], "url_hash long")
     seen0 = seen_mod.empty_seen(spark, 4)
-    out0 = seen_mod.filter_unseen(cand, seen0, 4)
+
+    def probe(cand_keys, list_keys, seen):
+        return seen_mod.split_probe_update(
+            seen_mod.probe_and_update(cand_keys, list_keys, seen, 4)
+            .localCheckpoint(eager=True)
+        )
+
+    out0, _ = probe(cand, no_keys, seen0)
     assert out0.count() == 100  # nothing seen yet
-    seen1 = seen_mod.update_seen(
-        seen0, cand.filter(F.col("url_hash") < 50), 4
-    ).localCheckpoint(eager=True)
-    out1 = seen_mod.filter_unseen(cand, seen1, 4)
+    _, seen1 = probe(no_keys, cand.filter(F.col("url_hash") < 50), seen0)
+    out1, _ = probe(cand, no_keys, seen1)
     survivors = {r.url_hash for r in out1.collect()}
     assert survivors.issubset(set(range(50, 100)))  # no false negatives
     assert len(survivors) >= 45  # fpr small
     # version monotonicity on touched shards
     v = {r.shard_id: r.version for r in seen1.collect()}
     assert all(ver >= 0 for ver in v.values()) and max(v.values()) == 1
+    # list keys fold into the table but are never returned as survivors
+    lst = spark.createDataFrame([(i,) for i in range(1000, 1020)], "url_hash long")
+    out2, seen2 = probe(cand.filter(F.col("url_hash") >= 50), lst, seen1)
+    assert {r.url_hash for r in out2.collect()} <= set(range(50, 100))
+    again, _ = probe(lst, no_keys, seen2)
+    assert again.count() == 0
 
 
 def test_checkpoint_resume_identical(spark, pages_df, tmp_path, crawl_result):

@@ -302,3 +302,44 @@ def test_run_crawl_live_pacing_wiring(spark, pages_pdf, pages_df):
     a = {(r.url, r.content) for r in live.extracted.collect()}
     b = {(r.url, r.content) for r in base.extracted.collect()}
     assert a == b and len(a) > 0
+
+
+def test_live_crawl_keeps_failed_detail_url_unseen(spark, pages_pdf):
+    """D1 in live mode: a detail URL enters the seen table only once its
+    fetch resolved. A URL whose every fetch attempt fails is absent from the
+    output yet still a survivor against the final seen table (a later run
+    retries it); a fetched URL is not."""
+    from politics_crawler_spark.config import ENABLED_BOARDS, RUN_DATE
+    from politics_crawler_spark.functions.urls import url_hash
+    from politics_crawler_spark.plans import seen as seen_mod
+    from politics_crawler_spark.plans.crawl import run_crawl
+
+    from .ref_simulator import simulate
+
+    pages = dict(zip(pages_pdf["url"], pages_pdf["html"]))
+    _, expected = simulate(pages, ENABLED_BOARDS, RUN_DATE)
+    failed = sorted(expected)[0]
+
+    def transport(url, ua, timeout_s):
+        body = None if url == failed else pages.get(url)
+        return (200, body) if body is not None else (500, b"")
+
+    fetch = make_fetch_stage(
+        transport=transport, max_attempts=2, min_bytes=50, sleep=None
+    )
+    res = run_crawl(spark, None, n_shards=8, fetcher=fetch)
+    got = {r.url for r in res.extracted.select("url").collect()}
+    assert failed not in got
+    assert got == expected - {failed}
+    fetched = sorted(got)[0]
+
+    keys = spark.createDataFrame([(failed,), (fetched,)], "url string").select(
+        "url", url_hash(F.col("url")).alias("url_hash")
+    )
+    no_keys = spark.createDataFrame([], "url_hash long")
+    survivors, _ = seen_mod.split_probe_update(
+        seen_mod.probe_and_update(keys, no_keys, res.seen, 8)
+        .localCheckpoint(eager=True)
+    )
+    by_hash = {r.url_hash: r.url for r in keys.collect()}
+    assert {by_hash[r.url_hash] for r in survivors.collect()} == {failed}
