@@ -1079,6 +1079,7 @@ def q51_cardinality_contract(spark, sf):
     to grade the sketch; at 100 TB only the fixed-width sketch path runs
     (operators/retrieval.py)."""
     from politics_crawler_spark.operators.retrieval import cardinality_profile
+    from politics_crawler_spark.operators.textstats import tokens
 
     d = _t(spark, sf, "documents")
     # r6 negative result: folding the grading-only exact distinct into the
@@ -1090,7 +1091,7 @@ def q51_cardinality_contract(spark, sf):
     # two-scan shape stands.
     prof = cardinality_profile(d, group_col="source", relative_sd=0.01)
     exact = (
-        d.select("source", F.explode(F.regexp_extract_all("text", F.lit(r"\w+"), 0)).alias("tok"))
+        d.select("source", F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("source")
         .agg(F.count_distinct("tok").alias("exact_distinct"))
     )

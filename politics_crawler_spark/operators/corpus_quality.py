@@ -47,8 +47,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import punct_ratio, stopword_ratio
-from .webquality import tokens
+from .textstats import ngrams, punct_ratio, stopword_ratio, tokens
 
 
 # ---------------------------------------------------------------------------
@@ -237,41 +236,20 @@ def _covered_positions(
     count vs gh + doc_id) and drops the distinct-aggregate phase; the
     position-bearing explode below exists only on the join-back side.
     """
-    # project the token array ONCE (CollapseProject would re-embed the
-    # tokenizing regexp at every gram position otherwise — the q41/q45
-    # lesson, 20.7 s → 2.8 s at sf0.1)
+    # project the token array ONCE; ngrams() then runs directly over it
+    # (the collapse-safe Project(_t) → Filter → Project shape, see
+    # textstats.ngrams). Gram hashes: 64-bit collisions only ADD coverage.
     t = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_t"))
-
-    # the gram-hash array expression is applied DIRECTLY over the `_t`
-    # projection in each branch (never through an intermediate projected
-    # alias): an extra Project(_gh = transform(_t)) layer gets merged by
-    # CollapseProject, inlining `_t` — i.e. the tokenizing regexp — into
-    # every per-position F.get, which re-runs regexp_extract_all ~n_grams
-    # × n times per document (measured: a 300k-doc profile that runs in
-    # ~26 s regressed past 400 s). The Project(_t) → Filter → Generate
-    # shape below is the one the q41/q45 fix established as collapse-safe.
-    def gram_hashes():
-        # multi-arg xxhash64 over the n token slots (r6, the q41 lesson):
-        # no concatenated gram string is ever allocated — the hash consumes
-        # the token values directly (~2.5M gram strings skipped at sf1.0).
-        # Key semantics unchanged: distinct grams map to distinct hashes
-        # modulo 64-bit collisions, which only ADD coverage (conservative).
-        return F.transform(
-            F.sequence(F.lit(0), F.size("_t") - n),
-            lambda i: F.xxhash64(*[F.get(F.col("_t"), i + j) for j in range(n)]),
-        )
 
     # ONE gram-hash pass shared by both branches (r6): the detection branch
     # and the position branch each re-ran tokenize + 14.5M concat+xxhash64
     # at sf1.0 (~3 s/pass). localCheckpoint materializes the (id, gram-hash
     # array) rows once — ~8 B per corpus token in block storage (spills to
     # disk), traded against a full second tokenize+hash scan; blocks are
-    # freed by the ContextCleaner when the plan dies. The gram expression
-    # is still applied directly over the Project(_t) → Filter shape (the
-    # collapse-safe form — see the CollapseProject note above).
+    # freed by the ContextCleaner when the plan dies.
     ga = (
         t.filter(F.size("_t") >= n)
-        .select(F.col(id_col), gram_hashes().alias("_g"))
+        .select(F.col(id_col), ngrams(F.col("_t"), n).alias("_g"))
         .localCheckpoint(eager=True)
     )
     grams = ga.select(

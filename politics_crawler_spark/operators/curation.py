@@ -52,24 +52,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .webquality import tokens
-
-# Shared with webquality/textstats and every DuckDB oracle: \w+ tokens.
-
-
-def ngram_set(toks: Column, n: int) -> Column:
-    """Distinct space-joined n-grams of adjacent tokens; empty below n."""
-    return F.when(
-        F.size(toks) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: F.concat_ws(
-                    " ", *[F.get(toks, i + j) for j in range(n)]
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+from .textstats import ngrams, tokens
 
 
 def _contamination_hits(
@@ -99,33 +82,16 @@ def _contamination_hits(
     UNDERCOUNTED by one; ~2^-64 per gram pair. A merge never takes a
     doc's count to zero, so the contaminated/clean decision can only err
     toward flagging; n_contam_grams can err either way.
-
-    The gram-hash transform is applied DIRECTLY over the Project(_t)
-    shape (never through an intermediate projected alias): an extra
-    Project layer gets merged by CollapseProject, inlining the tokenizing
-    regexp into every per-position F.get — re-measured this round at
-    300+ s for the aliased shape vs 3.5 s (the q41/q45/q47 lesson).
     """
-
-    def gram_hashes(t):
-        return F.when(
-            F.size(t) >= n,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.size(t) - n),
-                    lambda i: F.xxhash64(*[F.get(t, i + j) for j in range(n)]),
-                )
-            ),
-        ).otherwise(F.array().cast("array<bigint>"))
-
+    gram_hashes = F.array_distinct(ngrams(F.col("_t"), n))
     eg = (
         evalset.select(tokens(F.col(text_col)).alias("_t"))
-        .select(F.explode(gram_hashes(F.col("_t"))).alias("gh"))
+        .select(F.explode(gram_hashes).alias("gh"))
         .distinct()
     )
     tg = train.select(
         F.col(id_col), tokens(F.col(text_col)).alias("_t")
-    ).select(F.col(id_col), F.explode(gram_hashes(F.col("_t"))).alias("gh"))
+    ).select(F.col(id_col), F.explode(gram_hashes).alias("gh"))
     # per-doc gram hashes are distinct already (array_distinct) ⇒ count(*)
     # after the semi-ish inner join counts distinct matched grams
     return (

@@ -29,22 +29,16 @@ text, fmkorea_politics.py:239-264); this module is engine-added surface.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import EN_STOP
-
-# Shared token definition — identical to textstats.token_count and the
-# DuckDB oracle's regexp_extract_all(text, '\w+').
-_TOKEN_RE = r"\w+"
+from .textstats import EN_STOP, ngrams, stop_hits, tokens
 
 # RE2 ∩ Java-regex safe PII patterns (no lookaround, no backrefs):
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PHONE_RE = r"\b01[0-9]-[0-9]{3,4}-[0-9]{4}\b"
-
-
-def tokens(text: Column) -> Column:
-    return F.regexp_extract_all(text, F.lit(_TOKEN_RE), 0)
 
 
 def dup_word_fraction(toks: Column) -> Column:
@@ -77,17 +71,6 @@ def alpha_word_fraction(toks: Column) -> Column:
         F.filter(toks, lambda x: x.rlike("[A-Za-z]"))
     )
     return F.when(F.size(toks) > 0, n_alpha / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def bigram_array(toks: Column) -> Column:
-    """Adjacent-token bigrams as strings; empty array below 2 tokens."""
-    return F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 2),
-            lambda i: F.concat_ws(" ", F.get(toks, i), F.get(toks, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def _max_run_length(sorted_arr: Column) -> Column:
@@ -146,15 +129,7 @@ def repetition_profile(
     """
     t = tokens(F.col(text_col))
     base = df.select(F.col(id_col), t.alias("_t"))
-    bigram_hashes = F.when(
-        F.size(F.col("_t")) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(F.col("_t")) - 2),
-            lambda i: F.xxhash64(
-                F.get(F.col("_t"), i), F.get(F.col("_t"), i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
+    bigram_hashes = ngrams(F.col("_t"), 2)
     mean_len = F.when(
         F.size(F.col("_t")) > 0,
         F.length(F.concat_ws("", F.col("_t"))).cast("double")
@@ -207,6 +182,37 @@ def gopher_keep(
     )
 
 
+def _c4_rules(
+    df: DataFrame,
+    text_col: str,
+    min_words: int,
+    max_word_len: int,
+    min_alpha_frac: float,
+) -> tuple[DataFrame, dict[str, Column]]:
+    """The C4 rule set shared by c4_doc_gate and c4_filter: `df` with the
+    token array `_t` and the stopword flag `_stop` projected, plus one
+    boolean per rule over those two columns — word floor, max word length,
+    alpha-word fraction, and the 'natural language' fluency proxy (the page
+    contains at least one common English stopword).
+
+    In c4_doc_gate the rules run in a Project over this projection, and
+    CollapseProject refuses to duplicate the non-cheap `_t` into it, so
+    tokenization happens once per row. In c4_filter the optimizer pushes
+    the rule Filter below the projection and inlines `_t`: the tokenizing
+    regexp runs once per token rule there (see c4_filter(df).explain())."""
+    toked = df.withColumns({
+        "_t": tokens(F.col(text_col)),
+        "_stop": stop_hits(F.col(text_col), EN_STOP) > 0,
+    })
+    t = F.col("_t")
+    return toked, {
+        "ok_min_words": F.size(t) >= min_words,
+        "ok_word_len": max_word_length(t) <= max_word_len,
+        "ok_alpha": F.round(alpha_word_fraction(t), 6) >= min_alpha_frac,
+        "ok_stopword": F.col("_stop"),
+    }
+
+
 def c4_doc_gate(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -217,42 +223,18 @@ def c4_doc_gate(
 ) -> DataFrame:
     """C4-style document-shape gate — one row per doc with each rule's
     boolean and the conjunction, all whole-stage-codegen (no shuffle):
-    (id, n_words, ok_min_words, ok_word_len, ok_alpha, ok_stopword, keep).
-
-    ok_stopword is the C4 'natural language' fluency proxy (the page
-    contains at least one common English stopword)."""
-    pat = r"\b(" + "|".join(EN_STOP) + r")\b"
-    # tokenize ONCE into a column: referencing tokens(text) directly in
-    # every stat would re-embed (and re-run) the regexp per use — the
-    # projection boundary keeps one eval per row (CollapseProject refuses
-    # to duplicate non-cheap expressions referenced more than once)
-    toked = df.select(
+    (id, n_words, ok_min_words, ok_word_len, ok_alpha, ok_stopword, keep)."""
+    toked, rules = _c4_rules(df, text_col, min_words, max_word_len, min_alpha_frac)
+    gate = toked.select(
         F.col(id_col),
-        tokens(F.col(text_col)).alias("_t"),
-        (F.size(F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(pat), 0)) > 0
-         ).alias("ok_stopword"),
+        F.size("_t").cast("long").alias("n_words"),
+        *[rule.alias(name) for name, rule in rules.items()],
     )
-    t = F.col("_t")
-    base = toked.select(
-        F.col(id_col),
-        F.size(t).cast("long").alias("n_words"),
-        max_word_length(t).alias("_maxw"),
-        F.round(alpha_word_fraction(t), 6).alias("_alpha"),
-        "ok_stopword",
-    )
-    return base.select(
+    return gate.select(
         id_col,
         "n_words",
-        (F.col("n_words") >= min_words).alias("ok_min_words"),
-        (F.col("_maxw") <= max_word_len).alias("ok_word_len"),
-        (F.col("_alpha") >= min_alpha_frac).alias("ok_alpha"),
-        "ok_stopword",
-        (
-            (F.col("n_words") >= min_words)
-            & (F.col("_maxw") <= max_word_len)
-            & (F.col("_alpha") >= min_alpha_frac)
-            & F.col("ok_stopword")
-        ).alias("keep"),
+        *rules,
+        reduce(lambda a, b: a & b, [F.col(name) for name in rules]).alias("keep"),
     )
 
 
@@ -266,25 +248,11 @@ def c4_filter(
     """Filter form of the q38 gate for pipeline composition: returns the
     input rows (all columns) that pass, evaluated ROW-LOCALLY so Catalyst
     fuses it into the scan — no join back, no second read of a 100 TB
-    table. Tokenization happens once behind a projection boundary (same
-    CollapseProject note as c4_doc_gate)."""
-    pat = r"\b(" + "|".join(EN_STOP) + r")\b"
-    toked = df.withColumns(
-        {
-            "_t": tokens(F.col(text_col)),
-            "_stop": F.size(
-                F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(pat), 0)
-            )
-            > 0,
-        }
+    table."""
+    toked, rules = _c4_rules(df, text_col, min_words, max_word_len, min_alpha_frac)
+    return toked.filter(reduce(lambda a, b: a & b, rules.values())).drop(
+        "_t", "_stop"
     )
-    t = F.col("_t")
-    return toked.filter(
-        (F.size(t) >= min_words)
-        & (max_word_length(t) <= max_word_len)
-        & (F.round(alpha_word_fraction(t), 6) >= min_alpha_frac)
-        & F.col("_stop")
-    ).drop("_t", "_stop")
 
 
 def redact_pii(text: Column) -> Column:
@@ -333,23 +301,9 @@ def ngram_freq(
     the exchange undeduped — ~14.5M rows at sf1.0 vs ~2×vocab×partitions
     now — plus the two-phase distinct-aggregate split (the same lesson
     as the r5 q47 rework). The final n_docs⋈total join is on the
-    vocabulary table, negligible at any corpus size.
-
-    The token array is projected into a column BEFORE the bigram
-    transform: composing ``tokens(text)`` directly into the lambda
-    re-embeds the regexp per array element, so the regex re-ran per
-    BIGRAM instead of per row (measured 8.7 s → 0.9 s at sf0.1)."""
+    vocabulary table, negligible at any corpus size."""
     base = df.select(F.col("doc_id"), tokens(F.col(text_col)).alias("_t"))
-    t = F.col("_t")
-    grams = F.when(
-        F.size(t) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(t) - n),
-            lambda i: F.concat_ws(
-                " ", *[F.get(t, i + j) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = ngrams(F.col("_t"), n, hashed=False)
     total = (
         base.select(F.explode(grams).alias("ngram"))
         .groupBy("ngram")

@@ -57,6 +57,19 @@ def test_bm25_hand_computed_scores(spark):
     assert [r.rank for r in ranked] == [1, 2, 3]
 
 
+def test_bm25_non_ascii_query_term(spark):
+    """The query side is tokenized like the corpus: 'café' is the token
+    'caf' in both (the word class is ASCII), so doc 0 is found with its
+    hand-computed score."""
+    d = spark.createDataFrame(
+        [(0, "café au lait"), (1, "plain coffee"), (2, "black tea")],
+        "doc_id long, text string",
+    )
+    out = bm25_topk(d, [(0, "café")], k=10).collect()
+    want = round(_bm25(1, 1, 3, 3, (3 + 2 + 2) / 3.0), 4)
+    assert [(r.doc_id, r.score, r.rank) for r in out] == [(0, want, 1)]
+
+
 def test_bm25_multi_query_and_k_truncation(spark):
     out = bm25_topk(
         _corpus(spark), [(0, "spark"), (1, "query optimizer")], k=1

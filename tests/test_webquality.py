@@ -103,3 +103,49 @@ def test_gopher_keep_splits_corpus(spark):
         .first()
     )
     assert 0 < agg["kept"] < agg["n"], (agg["kept"], agg["n"])
+
+
+def test_tokens_and_ngrams_match_python_reference(spark, pages_pdf):
+    """tokens() is Python ``re.findall(TOKEN_RE, s, re.ASCII)`` per doc and
+    ngrams() is a Python window over those tokens, on ASCII text, the
+    crawl's own (mostly Korean) page texts, a Korean-only doc, a doc
+    shorter than n and a NULL text. The hashed grams keep the string
+    grams' length and distinct count (no 64-bit collision here)."""
+    import re
+
+    from politics_crawler_spark.operators.textstats import TOKEN_RE, ngrams, tokens
+
+    crawl = [t for t in pages_pdf["text"] if t][:40]
+    texts = [
+        "go go stop the go go fast now",
+        "x1 y2_z 9, a-b.c",
+        "정치 국회 법안",
+        "one two",
+        None,
+    ] + crawl
+    ns = (1, 2, 3, 8)
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    ).select("doc_id", tokens(F.col("text")).alias("_t"))
+    rows = df.select(
+        "doc_id",
+        "_t",
+        *[ngrams(F.col("_t"), n, hashed=False).alias(f"s{n}") for n in ns],
+        *[ngrams(F.col("_t"), n).alias(f"h{n}") for n in ns],
+    ).collect()
+    assert len(rows) == len(texts)
+    n_crawl_tokens = 0
+    for r in rows:
+        text = texts[r["doc_id"]]
+        want = None if text is None else re.findall(TOKEN_RE, text, re.ASCII)
+        assert r["_t"] == want, (text, r["_t"])
+        toks = want or []
+        if r["doc_id"] >= 5:
+            n_crawl_tokens += len(toks)
+        for n in ns:
+            grams = [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+            assert r[f"s{n}"] == grams, (n, text)
+            assert len(r[f"h{n}"]) == len(grams)
+            assert len(set(r[f"h{n}"])) == len(set(grams))
+    assert rows[2]["_t"] == []  # Korean-only: no ASCII word characters
+    assert n_crawl_tokens > 0
