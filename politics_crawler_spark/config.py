@@ -62,25 +62,3 @@ ENABLED_BOARDS = [b for b in BOARDS if b.enabled]
 # FIXTURES.md §3).
 RUN_DATE = "2025-03-12"
 
-
-def site_config_rows() -> list[dict]:
-    return [
-        {
-            "community": b.community,
-            "site": b.site,
-            "host": b.host,
-            "min_views": b.min_views,
-            "max_pages": b.max_pages,
-            "delay_s": b.delay_s,
-            "stop_n": b.stop_n,
-            "encoding": b.encoding,
-            "site_rank": b.site_rank,
-        }
-        for b in ENABLED_BOARDS
-    ]
-
-
-def site_config_df(spark):
-    from .schemas import SITE_CONFIG
-
-    return spark.createDataFrame(site_config_rows(), schema=SITE_CONFIG)

@@ -65,10 +65,6 @@ def url_hash(url: Column) -> Column:
     return F.xxhash64(url)
 
 
-def host_of(url: Column) -> Column:
-    return F.parse_url(url, F.lit("HOST"))
-
-
 def is_valid_post_url(url: Column) -> Column:
     """F1 validity gate (dcinside_politics.py:26-29 + fmkorea variant):
     reject null / javascript: / the dcinside ad host; require http prefix."""

@@ -84,15 +84,6 @@ def stopword_ratio(text: Column, words: list[str] | None = None) -> Column:
     return F.when(toks > 0, stop_hits(text, words) / toks).otherwise(F.lit(0.0))
 
 
-def quality_score(text: Column) -> Column:
-    """Composite [0,1] quality: long enough, modest punctuation, has
-    stopwords (a fluency proxy). Deterministic arithmetic only."""
-    len_term = F.least(F.length(text) / F.lit(500.0), F.lit(1.0))
-    punct_term = F.lit(1.0) - F.least(punct_ratio(text) * 5, F.lit(1.0))
-    stop_term = F.least(stopword_ratio(text) * 4, F.lit(1.0))
-    return F.round((len_term + punct_term + stop_term) / 3.0, 6)
-
-
 def lang_id(text: Column) -> Column:
     """N-gram/stopword heuristic language tag: 'en' vs 'es' vs 'unknown'.
 

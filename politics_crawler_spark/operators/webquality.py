@@ -50,13 +50,6 @@ def dup_word_fraction(toks: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def mean_word_length(toks: Column) -> Column:
-    total = F.aggregate(
-        toks, F.lit(0.0), lambda acc, x: acc + F.length(x).cast("double")
-    )
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def max_word_length(toks: Column) -> Column:
     return F.coalesce(
         F.array_max(F.transform(toks, lambda x: F.length(x).cast("long"))),

@@ -135,7 +135,7 @@ class Node:
             while i < n:
                 c = children[i]
                 i += 1
-                if c.__class__ is Node:
+                if isinstance(c, Node):
                     stack.append((children, i))
                     yield c
                     children = c.children
@@ -179,7 +179,7 @@ class Node:
             while i < n:
                 c = children[i]
                 i += 1
-                if c.__class__ is str:
+                if isinstance(c, str):
                     yield c
                 else:
                     stack.append((children, i))

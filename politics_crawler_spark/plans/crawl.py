@@ -1,35 +1,32 @@
 """The crawl plan: depth-round driver loop over the pages snapshot.
 
-One round = one frontier depth slice (list page ``p`` of every still-active
-board), mirroring the reference's per-site page loop
-(fmkorea_politics.py:119-274) but partition-parallel across all boards at
-once:
+One round = one frontier depth slice (the next ``pages_per_round`` list
+pages of every still-active board), mirroring the reference's per-site page
+loop (fmkorea_politics.py:119-274) but partition-parallel across all boards
+at once. Every frame of a round is computed once:
 
-    list frontier (tiny, broadcast) ⋈ pages            -- "fetch", no shuffle of pages
-      → parse_list_udf → explode                       -- candidate rows
-      → F1 validity / F2 notice / L1-L5 normalize      -- JVM exprs, codegen
-      → per-board aggregate → driver staleness state   -- P9 early-stop
-      → F3 min_views / F4 today                        -- JVM exprs
-      → in-round dedup + bloom seen-filter             -- D1/D2 (sharded)
-      → seen update (ADD-AT-SELECT, ruliweb semantics) -- commits the round
-      → salted repartition by host                     -- politeness / skew
-      → candidates ⋈ pages → extract_udf               -- "detail fetch" (or
-      → F5 detail-date / F6 status                     --  live HTTP fetcher)
-      → extracted rows (lazy by default; materialized per round only when
-        checkpointing / live-fetching)
+    list frontier (tiny, broadcast) ⋈ list-page pool  -- "fetch", no snapshot rescan
+      → parse_list_udf → explode                      -- candidate rows
+      → F1 validity / F2 notice / F4 today / L1-L5    -- JVM exprs; persisted `cand`
+      → per-(board, page) counts → driver             -- job 1: fills `cand`; P9
+                                                         staleness replayed in Python
+      → staleness cut ⋈ F3 min_views → in-round dedup -- job 2: `selected` checkpoint
+      → bloom probe + fold (ADD-AT-SELECT, D1/D2)     -- job 3: commits the round
+      → selected ⋉ survivors → extract at the scan    -- detail "fetch" (or live HTTP)
+      → F5 detail-date / F6 status
 
 D1 uses the reference's add-at-select variant (ruliweb_politics.py:236-241
 marks links seen before the detail fetch; the ordering simulator does the
-same), so the per-round committed state depends only on the cheap
-list-parse path. Extraction therefore DEFERS into one terminal job across
-all rounds: per-round driver cost is two light actions (staleness collect +
-bloom commit), and the heavy extract work scales with cores in a single
-stage instead of paying the fixed round latency R times.
+same), so a round's committed state depends only on the list-parse path.
+Extraction therefore DEFERS into one terminal job across all rounds, which
+reads every round's ``selected`` checkpoint; the terminal output is
+persisted before the final sort, so the extract UDF runs once per detail
+page although the sort samples its input before shuffling it.
 
-Catalyst does the heavy lifting inside a round (filter pushdown before the
-extract UDF, broadcast joins for the tiny frontier); the loop exists only
-because staleness stop (P9) is data-dependent iteration, which Catalyst
-doesn't model (SURVEY.md §4).
+The loop exists only because the staleness stop (P9) is data-dependent
+iteration, which Catalyst doesn't model (SURVEY.md §4). The stop rule runs
+on the driver over per-page counts: O(boards × pages_per_round) numbers,
+the same size as the frontier slice the driver already builds.
 
 Checkpointing: with ``checkpoint_dir`` set, each round commits (extracted
 parquet, seen parquet, state.json with per-board lineage + counters)
@@ -41,22 +38,25 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ENABLED_BOARDS, RUN_DATE, BoardConfig
 from ..functions.dates import is_today, parse_list_date
 from ..functions.numbers import parse_recommend, parse_views
 from ..functions.urls import canonical_url, is_valid_post_url, url_hash
-from ..operators.extract import with_extraction
+from ..operators.extract import site_expr, with_extraction
 from ..operators.listparse import parse_list_pages
-from ..schemas import EXTRACTED
+from ..schemas import EXTRACTED, METRICS, SEEN
 from ..sources.synthetic_pages import list_url
 from . import seen as seen_mod
 from .politeness import host_salt_plan, salted_repartition_by_host, with_pace
+from .robots import gate_by_robots
 
 _CHECK_DETAIL_DATE_SITES = ("ruliweb", "inven")  # F5 boards (+ fmkorea_funny)
 
@@ -98,8 +98,6 @@ class CrawlResult:
         extract-stage observations only resolve then; Observation.get
         blocks otherwise).
         """
-        from ..schemas import METRICS
-
         def val(obs, key):
             # Rounds whose list fetch matches nothing get optimized to an
             # empty LocalRelation; PropagateEmptyRelation drops the
@@ -165,47 +163,71 @@ class CrawlResult:
         return spark.createDataFrame(rows, schema=METRICS)
 
 
+def _frontier_slice(boards: list[BoardConfig], state: dict[str, BoardState],
+                    pages_per_round: int):
+    """The round's depth slice: ``(board, list pages)`` for every active
+    board, its next ``pages_per_round`` pages capped by the P8 budget."""
+    for b in boards:
+        st = state[b.board]
+        if st.active:
+            yield b, range(st.page_no, min(st.page_no + pages_per_round, b.max_pages))
+
+
 def _board_frontier_rows(
     boards: list[BoardConfig], state: dict[str, BoardState], pages_per_round: int
 ) -> list[dict]:
-    """Frontier slice for one round: the next ``pages_per_round`` list pages
-    of every active board (block-speculative expansion — the staleness rule
-    is applied post-hoc on per-page aggregates, so semantics stay exactly
-    sequential while the fetch itself is one batched stage)."""
-    rows = []
-    for b in boards:
-        st = state[b.board]
-        if not st.active:
-            continue
-        hi = min(st.page_no + pages_per_round, b.max_pages)
-        for p in range(st.page_no, hi):
-            rows.append(
-                {
-                    "url": list_url(b, p),
-                    "board": b.board,
-                    "community": b.community,
-                    "site": b.site,
-                    "host": b.host,
-                    "encoding": b.encoding,
-                    "min_views": b.min_views,
-                    "site_rank": b.site_rank,
-                    "page_no": p,
-                    "check_detail_date": _checks_detail_date(b),
-                    "stop_n": b.stop_n,
-                    "max_pages": b.max_pages,
-                    "stale0": st.stale,
-                    "first_page": st.page_no,
-                }
-            )
-    return rows
+    """Frontier rows for one round (block-speculative expansion: the whole
+    slice is fetched in one batched stage, and ``_replay_staleness`` then
+    applies the sequential stop rule to it, so semantics stay exactly
+    sequential)."""
+    return [
+        {
+            "url": list_url(b, p),
+            "board": b.board,
+            "community": b.community,
+            "site": b.site,
+            "host": b.host,
+            "encoding": b.encoding,
+            "min_views": b.min_views,
+            "site_rank": b.site_rank,
+            "page_no": p,
+            "check_detail_date": _checks_detail_date(b),
+        }
+        for b, pages in _frontier_slice(boards, state, pages_per_round)
+        for p in pages
+    ]
 
 
 _FRONTIER_SCHEMA = (
     "url string, board string, community string, site string, host string, "
     "encoding string, min_views long, site_rank int, page_no int, "
-    "check_detail_date boolean, stop_n int, max_pages int, stale0 int, "
-    "first_page int"
+    "check_detail_date boolean"
 )
+
+
+def _replay_staleness(
+    boards: list[BoardConfig], state: dict[str, BoardState], pages_per_round: int,
+    today_counts: dict[tuple[str, int], int],
+) -> dict[str, tuple[int, int]]:
+    """P9 staleness stop over the round's slice, in the reference's page
+    order: a list page with today candidates resets the board's stale
+    streak, any other page extends it, and the board stops at the first
+    page whose streak reaches ``stop_n`` or that ends its page budget.
+    ``today_counts`` maps (board, page_no) to today candidates; absent pages
+    count 0. Advances ``state`` in place and returns, per board of the
+    slice, (last page kept, today candidates over the whole slice)."""
+    out = {}
+    for b, pages in _frontier_slice(boards, state, pages_per_round):
+        st, n_slice = state[b.board], 0
+        for p in pages:
+            n = today_counts.get((b.board, p), 0)
+            n_slice += n
+            if st.active:
+                st.page_no = p + 1
+                st.stale = 0 if n else st.stale + 1
+                st.active = st.stale < b.stop_n and p + 1 < b.max_pages
+        out[b.board] = (st.page_no - 1, n_slice)
+    return out
 
 
 def _empty_extracted(spark: SparkSession) -> DataFrame:
@@ -263,7 +285,14 @@ def run_crawl(
     min_interval_s: float = 0.0,
     initial_seen: DataFrame | None = None,
 ) -> CrawlResult:
-    """``fetcher`` (optional): a live-fetch stage from
+    """Crawl ``pages`` (or the live web through ``fetcher``) round by round
+    until every board stopped, the round budget ran out or ``max_seconds``
+    passed. One round runs three jobs: the per-(board, page) candidate
+    counts (which fill the persisted candidate cache; the P9 stop rule is
+    then replayed on the driver), the ``selected`` checkpoint (staleness
+    cut, F3, in-round dedup, robots gate), and the seen probe + fold.
+
+    ``fetcher`` (optional): a live-fetch stage from
     ``operators.fetch.make_fetch_stage`` — when given, list and detail pages
     are fetched over HTTP (UA rotation / timeout / retry, P1/P2/P6) instead
     of joined from the ``pages`` snapshot; per-round retry totals land in
@@ -283,26 +312,30 @@ def run_crawl(
     resolved (ok/short), so a URL whose fetch failed stays retryable.
 
     Extraction is deferred unless ``checkpoint_dir`` or ``fetcher`` is set
-    (round commits and fetch observations need per-round jobs): each
-    round's extraction plan stays lazy and ALL extraction runs as one
-    terminal job. Per-round driver work then touches only the list-parse
-    path (staleness collect + bloom commit), so the fixed cost per round
-    stops gating N→4N scaling of the extraction work. Round metrics report
-    ``extracted: None`` in this mode (count it from the result instead).
+    (round commits and fetch observations need per-round jobs): ALL
+    extraction runs as one terminal job over every round's ``selected``
+    checkpoint, persisted before the final sort (listed in
+    ``CrawlResult.caches``; unpersist after the terminal action). Round
+    metrics report ``extracted: None`` in this mode (count it from the
+    result instead).
 
     ``initial_seen`` (optional): a previous run's seen table, for cross-run
-    continuity (D3/P11); its sharding must match ``n_shards``."""
+    continuity (D3/P11); its sharding must match ``n_shards``. Without it
+    the first round's fold builds each shard it touches from scratch."""
     defer = checkpoint_dir is None and fetcher is None
     boards = boards or ENABLED_BOARDS
     by_name = {b.board: b for b in boards}
     state = {b.board: BoardState() for b in boards}
     metrics: list[dict] = []
     # cross-RUN seen continuity (D3/P11): a scheduled cadence hands the
-    # previous run's bloom table in; sharding must match n_shards
+    # previous run's bloom table in; sharding must match n_shards. A first
+    # crawl starts from NO shard rows (probe_and_update builds a fresh
+    # shard for a key group without one), not from n_shards empty blooms
+    # shipped into the first probe.
     seen = (
-        initial_seen if initial_seen is not None
-        else seen_mod.empty_seen(spark, n_shards)
-    ).localCheckpoint(eager=True)
+        initial_seen.localCheckpoint(eager=True) if initial_seen is not None
+        else spark.createDataFrame([], schema=SEEN)
+    )
     extracted_parts: list[DataFrame] = []
     start_round = 0
 
@@ -325,8 +358,6 @@ def run_crawl(
             # round K's recompute overwrites those files mid-plan
             # (FileNotFoundException / duplicated rows at the terminal
             # action) — exactly the crash window checkpointing must cover.
-            import shutil
-
             ex_dir = os.path.join(checkpoint_dir, "extracted")
             for d in os.listdir(ex_dir):
                 if d.startswith("round=") and int(d.split("=")[1]) > ckpt["round"]:
@@ -402,7 +433,6 @@ def run_crawl(
         t_pool = time.time() - t_pool0
     t0 = time.time()
     rnd = start_round
-    round_caches: list[DataFrame] = []
     stage_obs: list = []
     detail_parts: list[DataFrame] = []  # defer mode: slim candidates per round
 
@@ -423,8 +453,6 @@ def run_crawl(
         3. only the slim extraction results (content/images/dates, ~KBs)
            shuffle into the equi-join with candidate metadata.
         """
-        from ..operators.extract import site_expr
-
         matched = pages_slim.select("url", "html").join(
             F.broadcast(detail.select("url_hash")),
             on=F.xxhash64(F.col("url")) == F.col("url_hash"),
@@ -529,11 +557,7 @@ def run_crawl(
         # Arrow-path createDataFrame: the frontier slice is O(boards ×
         # pages_per_round) rows; the row-by-row pickle path costs seconds
         # per round at thousands of boards.
-        import pandas as _pd
-
-        frontier = spark.createDataFrame(
-            _pd.DataFrame(rows), schema=_FRONTIER_SCHEMA
-        )
+        frontier = spark.createDataFrame(pd.DataFrame(rows), schema=_FRONTIER_SCHEMA)
 
         # "fetch" list pages: broadcast tiny frontier against the pages scan
         # (synthetic mode), or the live HTTP fetch stage (fetcher mode)
@@ -541,8 +565,6 @@ def run_crawl(
         if fetcher is None:
             lists = F.broadcast(frontier).join(lists_pool, on="url", how="inner")
         else:
-            from pyspark.sql import Observation
-
             list_src = frontier
             if min_interval_s > 0:
                 # one task per host for list pages (tiny frame — the
@@ -563,11 +585,12 @@ def run_crawl(
                 F.col("fetch_status").isin("ok", "short")
             ).drop("fetch_status", "http_code", "attempts", "ua")
 
-        from pyspark.sql import Observation as _Obs
-
         # Per-stage metric observations (A2 METRICS table): piggy-back on
         # the jobs the round already runs — no extra actions.
-        st_obs = {"cand": _Obs(), "sel": _Obs(), "unseen": _Obs(), "ext": _Obs()}
+        st_obs = {
+            "cand": Observation(), "sel": Observation(),
+            "unseen": Observation(), "ext": Observation(),
+        }
 
         cand_raw = parse_list_pages(lists)
         # ONE select + one filter, not a withColumn chain: Spark re-runs
@@ -577,7 +600,7 @@ def run_crawl(
         # normalizations commute; codegen CSE shares the repeated date
         # subtree.)
         _date = parse_list_date(F.col("date_txt"), F.col("date_attr"), run_date)
-        cand = (
+        cand_cache = (
             cand_raw.filter(~F.col("is_notice"))  # F2
             .select(
                 "*",
@@ -585,121 +608,68 @@ def run_crawl(
                 _date.alias("date"),
                 parse_views(F.col("views_txt")).alias("views"),
                 parse_recommend(F.col("rec_txt")).alias("list_recommend"),
-                is_today(_date, run_date).alias("today"),
             )
             # F1 validity + F4 today-only BEFORE the persist: every
-            # downstream consumer — the staleness counts (non-today rows
-            # contribute 0; the page spine fills absent pages), the F3/F4
-            # select, the detail candidates — reads today rows only, so
-            # caching the ~8× larger unfiltered candidate set was pure
-            # memory traffic
-            .filter(is_valid_post_url(F.col("link")) & F.col("today"))
+            # downstream consumer — the staleness counts (pages without
+            # today rows count 0), the F3 select, the detail candidates —
+            # reads today rows only, so caching the ~8× larger unfiltered
+            # candidate set would be pure memory traffic
+            .filter(is_valid_post_url(F.col("link")) & is_today(_date, run_date))
         ).persist()
-        cand_cache = cand  # persist handle (observe() wraps the plan)
-        # The cand observation sits ABOVE the persist: the staleness job
-        # and the seen job run CONCURRENTLY over this cache (below), and
-        # an observation inside the cached subtree would fire only on the
-        # cache-populating partitions of whichever job got there first —
-        # partial counts. Above the cache every consuming job scans all
-        # rows; the first completed query resolves the observation with
-        # the full count. (Metric semantics: today-filtered candidates.)
-        cand = cand.observe(st_obs["cand"], F.count(F.lit(1)).alias("n"))
-
-        # P9 staleness, computed DISTRIBUTED: the sequential per-board
-        # replay is a running-window over (board, page_no) — consecutive
-        # stale streak = distance from the last today-bearing page (with
-        # the previous round's streak carried in). The driver only collects
-        # ONE row per board (next page / streak / active), never the
-        # per-page stats — O(boards), not O(boards × pages).
-        from pyspark.sql import Window as _W
-
-        spine = frontier.select(
-            "board", "page_no", "stop_n", "max_pages", "stale0", "first_page"
-        )
-        counts = cand.groupBy("board", "page_no").agg(
-            F.sum(F.col("today").cast("long")).alias("n_today")
-        )
-        ps = spine.join(counts, ["board", "page_no"], "left").na.fill(
-            {"n_today": 0}
-        )
-        w_run = (
-            _W.partitionBy("board")
-            .orderBy("page_no")
-            .rowsBetween(_W.unboundedPreceding, 0)
-        )
-        last_nz = F.max(F.when(F.col("n_today") > 0, F.col("page_no"))).over(w_run)
-        streak = F.when(
-            last_nz.isNull(),
-            F.col("page_no") - F.col("first_page") + 1 + F.col("stale0"),
-        ).otherwise(F.col("page_no") - last_nz)
-        stop = (streak >= F.col("stop_n")) | (
-            F.col("page_no") + 1 >= F.col("max_pages")
-        )
-        ps = ps.select(
-            "board", "page_no", "n_today",
-            streak.alias("streak"), stop.alias("stop"),
-        )
-        per_board = (
-            ps.groupBy("board")
-            .agg(
-                F.min(F.when(F.col("stop"), F.col("page_no"))).alias("cut_page"),
-                F.max("page_no").alias("last_fetched"),
-                F.sum("n_today").alias("n_today_blk"),
-            )
-            .withColumn(
-                "last_ok", F.coalesce(F.col("cut_page"), F.col("last_fetched"))
-            )
-        )
-        board_state = (
-            ps.join(F.broadcast(per_board), on="board")
-            .filter(F.col("page_no") == F.col("last_ok"))
-            .select(
-                "board", "last_ok", "n_today_blk",
-                F.col("cut_page").isNotNull().alias("stopped"),
-                F.col("streak").alias("new_stale"),
-            )
-        )
+        # The observation sits ABOVE the persist: the counts job below
+        # scans every cached row through it (metric semantics:
+        # today-filtered candidates).
+        cand = cand_cache.observe(st_obs["cand"], F.count(F.lit(1)).alias("n"))
         t_build = time.time() - round_t0  # frontier + plan construction
 
-        # staleness cut as a broadcast-joined dimension (an OR-chain of
+        # job 1: per-page today counts. It fills the `cand` cache (the list
+        # fetch + parse); the driver then replays P9 over the slice.
+        t_jobs0 = time.time()
+        today_counts = {
+            (r["board"], r["page_no"]): r["n"]
+            for r in cand.groupBy("board", "page_no")
+            .agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+        t_stale0 = time.time()
+        kept = _replay_staleness(boards, state, pages_per_round, today_counts)
+        # the staleness cut as a broadcast-joined dimension (an OR-chain of
         # predicates would blow the expression tree at thousands of boards)
-        cuts = per_board.select("board", F.col("last_ok").alias("_max_page"))
+        cuts = spark.createDataFrame(
+            pd.DataFrame(
+                [(b, last) for b, (last, _) in kept.items()],
+                columns=["board", "_max_page"],
+            ),
+            schema="board string, _max_page int",
+        )
+        t_stale = time.time() - t_stale0
 
-        # candidates surviving freshness + threshold + staleness cut,
-        # deduped in-round (D1/D2)
+        # job 2: candidates surviving threshold + staleness cut, deduped
+        # in-round (D1/D2). Checkpointed: the seen probe and the detail
+        # extraction both read it, and the cand cache is done with.
         selected = (
             cand.join(F.broadcast(cuts), on="board")
             .filter(
-                F.col("today")
-                & (F.col("views") >= F.col("min_views"))
+                (F.col("views") >= F.col("min_views"))
                 & (F.col("page_no") <= F.col("_max_page"))
             )
             .drop("_max_page")
             .withColumn("url_hash", url_hash(F.col("link")))
             .dropDuplicates(["url_hash"])
         )
-
-        # P12: robots gating before any fetch (broadcast join, north_rule)
-        if robots is not None:
-            from .robots import gate_by_robots
-
+        if robots is not None:  # P12: robots gating before any fetch
             selected = gate_by_robots(selected, robots, host_col="host", url_col="link")
-        selected = selected.observe(st_obs["sel"], F.count(F.lit(1)).alias("n"))
+        selected = (
+            selected.observe(st_obs["sel"], F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        cand_cache.unpersist()
 
-        # D1 add-at-select (ruliweb_politics.py:236-241 — the reference
-        # marks candidates seen BEFORE the detail fetch; the ordering
-        # simulator uses the same semantics): the seen update depends only
-        # on the cheap list-parse path, never on extraction output. That
-        # breaks the round-to-round dependency on the heavy extract job, so
-        # extraction can defer into ONE terminal job across all rounds —
-        # the per-round fixed driver cost (Catalyst planning + action
-        # latency + bloom-commit barrier) stops multiplying into the
-        # scaling-critical work.
-        #
-        # seen.probe_and_update fuses probe+fold into ONE cogroup pass:
-        # candidates probe the previous bloom bits and all keys fold in
-        # within the same shard group — the bloom deserializes once and the
-        # round runs one Python stage, not two.
+        # job 3: D1 add-at-select (ruliweb_politics.py:236-241 — the
+        # reference marks candidates seen BEFORE the detail fetch; the
+        # ordering simulator uses the same semantics): the seen update
+        # depends only on the list-parse path, never on extraction output,
+        # so extraction can defer into ONE terminal job across all rounds.
+        # probe_and_update fuses probe + fold into one cogroup pass.
         #
         # FETCHER mode keeps only the survivors of this pass and folds the
         # detail URLs after the fetch RESOLVES (ok/short), with a second
@@ -707,58 +677,17 @@ def run_crawl(
         # the bloom, so later rounds / resumed runs can retry it —
         # add-at-select would make a transient network failure permanent
         # data loss (ADVICE r2).
-        # P9 staleness state, collected CONCURRENTLY with the seen job:
-        # both consume the persisted cand, and BlockManager's per-partition
-        # cache locks make each partition compute exactly once (the second
-        # job blocks on the lock, then reads the cached block) — so the
-        # staleness windows + O(boards) collect hide behind the heavier
-        # probe/fold job instead of serializing after it (the post-seen
-        # collect was measured parallelism-independent driver residue).
-        import threading as _threading
-
-        stale_box: dict = {}
-
-        def _collect_stale():
-            try:
-                stale_box["rows"] = board_state.collect()
-            except BaseException as e:  # surfaced after join() below
-                stale_box["err"] = e
-
-        stale_th = _threading.Thread(target=_collect_stale, daemon=True)
-        stale_th.start()
-
         frontier_keys = frontier.select(url_hash(F.col("url")).alias("url_hash"))
-        t_pre_seen = time.time() - round_t0
-        combined = seen_mod.probe_and_update(
-            selected.select("url_hash"), frontier_keys, seen, n_shards
-        ).localCheckpoint(eager=True)
-        # ONE heavy job per round: materializes cand + probe + fold
-        survivors, folded = seen_mod.split_probe_update(combined)
+        survivors, folded = seen_mod.split_probe_update(
+            seen_mod.probe_and_update(
+                selected.select("url_hash"), frontier_keys, seen, n_shards
+            ).localCheckpoint(eager=True)
+        )
         if fetcher is None:
             seen = folded
         unseen = selected.join(survivors, on="url_hash", how="left_semi")
         unseen = unseen.observe(st_obs["unseen"], F.count(F.lit(1)).alias("n"))
-        t_seen = time.time() - round_t0 - t_pre_seen
-
-        # P9 driver-state update from the overlapped collect (one row per
-        # board); by now the seen job has usually outlasted it, so the
-        # join is a no-wait.
-        stale_th.join()
-        if "err" in stale_box:
-            raise stale_box["err"]
-        n_today_by_board: dict[str, int] = {}
-        for r in stale_box["rows"]:  # one row per board
-            st = state[r["board"]]
-            st.page_no = int(r["last_ok"]) + 1
-            st.stale = int(r["new_stale"])
-            if r["stopped"]:
-                st.active = False
-            n_today_by_board[r["board"]] = int(r["n_today_blk"] or 0)
-        t_stale = time.time() - round_t0 - t_pre_seen - t_seen  # cached collect
-        round_caches.append(cand_cache)  # unpersisted once this round's extraction
-        # has materialized (non-defer) or left to cache eviction (defer:
-        # the terminal job re-reads `cand` — candidate volume is bounded
-        # by P8 page budgets, a sliver of the snapshot)
+        t_seen = time.time() - t_jobs0 - t_stale
 
         # detail "fetch" + extraction.
         # Snapshot mode: EXTRACTION RUNS AT THE SCAN (_extract_at_scan) —
@@ -792,8 +721,6 @@ def run_crawl(
                     # concurrent tasks × (salt_n × interval) per task ⇒
                     # the host's aggregate rate stays 1/min_interval_s
                     detail = with_pace(detail, min_interval_s, salt_plan)
-                from pyspark.sql import Observation
-
                 det_obs = Observation()
                 fetched_detail = (
                     fetcher(detail, url_col="url")
@@ -814,10 +741,7 @@ def run_crawl(
                         F.col("fetch_status").isin("ok", "short")
                     ).drop("fetch_status", "http_code", "attempts", "ua")
                 )
-            out = _finish(ext, st_obs["ext"])
-
-        if out is not None:
-            out = out.persist()
+            out = _finish(ext, st_obs["ext"]).persist()
             n_extracted = out.count()  # materializes the round output
             if fetcher is not None:
                 # deferred seen-add (ADVICE r2): detail URLs enter the bloom
@@ -834,18 +758,14 @@ def run_crawl(
                 )
                 # out.count() materialized the fetch cache the fold re-read
                 fetched_detail.unpersist()
-            for c in round_caches:
-                c.unpersist()
-            round_caches.clear()
             extracted_parts.append(out)
 
         # politeness budget accounting: the serial seconds the reference's
         # sleep-based schedule would spend on this round's fetches
         # (inter-page delay ~3.5 s avg + per-post delay_s, SURVEY §2.5 P3/P4)
-        ref_serial_s = 0.0
-        for bname, n_today in n_today_by_board.items():
-            ref_serial_s += by_name[bname].delay_s * n_today
-        ref_serial_s += 3.5 * len(rows)
+        ref_serial_s = 3.5 * len(rows) + sum(
+            by_name[b].delay_s * n_today for b, (_, n_today) in kept.items()
+        )
 
         round_metrics = {
             "round": rnd,
@@ -870,25 +790,19 @@ def run_crawl(
             _commit_round(checkpoint_dir, rnd, out, seen, state, metrics)
         rnd += 1
 
+    caches = [] if pages is None else [lists_pool]
     if detail_parts:
         # defer mode terminal: ONE snapshot scan + extract-at-scan over the
         # union of every round's candidates (cross-round-unique by the seen
-        # filter). One observation, but its metric expressions are
-        # per-banked-round (conditional sums on the _round tag), so
-        # metrics_table attributes extraction to the originating round.
+        # filter; each part reads its round's `selected` checkpoint). One
+        # observation, but its metric expressions are per-banked-round
+        # (conditional sums on the _round tag), so metrics_table attributes
+        # extraction to the originating round.
         ext_rounds = [r for (r, _) in detail_parts]
         all_detail = detail_parts[0][1]
         for _, p in detail_parts[1:]:
             all_detail = all_detail.unionByName(p)
-        # The terminal consumes the banked union TWICE — the candidate-hash
-        # broadcast subquery and the final ext⋈detail join — and each pass
-        # would re-run every round's seen semi-join + the in-round
-        # dropDuplicates SHUFFLE. Materialize the slim candidate set once
-        # (~100 B/row); both consumers then read the checkpoint.
-        all_detail = all_detail.localCheckpoint(eager=True)
-        from pyspark.sql import Observation as _Obs2
-
-        term_obs = _Obs2()
+        term_obs = Observation()
         per_round_metrics = []
         for r in ext_rounds:
             is_r = F.col("_round") == r
@@ -901,9 +815,14 @@ def run_crawl(
                     F.lit(0),
                 ).alias(f"n_error_{r}")
             )
-        extracted_parts.append(
-            _finish(_extract_at_scan(all_detail), term_obs, per_round_metrics)
-        )
+        # Persisted BELOW the global sort: the sort's range partitioner
+        # samples its input in a job of its own, which would otherwise run
+        # the extract UDF (and count the observation) a second time.
+        terminal = _finish(
+            _extract_at_scan(all_detail), term_obs, per_round_metrics
+        ).persist()
+        caches.append(terminal)
+        extracted_parts.append(terminal)
         stage_obs.append((-1, {"ext": term_obs, "ext_rounds": ext_rounds}))
 
     if extracted_parts:
@@ -915,9 +834,6 @@ def run_crawl(
 
     # A1: reference's final sort (Date desc); deterministic tiebreak on url
     result = result.orderBy(F.col("date").desc(), F.col("url").asc())
-    caches = list(round_caches)
-    if pages is not None:
-        caches.append(lists_pool)
     return CrawlResult(
         extracted=result, metrics=metrics, rounds=rnd, seen=seen, caches=caches,
         stage_obs=stage_obs,

@@ -58,16 +58,6 @@ def robots_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
     return spark.createDataFrame(rows, schema=ROBOTS)
 
 
-def allow_all_robots(spark: SparkSession, hosts: list[str]) -> DataFrame:
-    return robots_df(
-        spark,
-        [
-            {"host": h, "rules": "", "fetched_ts": None, "allow_all": True}
-            for h in hosts
-        ],
-    )
-
-
 def gate_by_robots(candidates: DataFrame, robots: DataFrame,
                    host_col: str = "host", url_col: str = "url") -> DataFrame:
     """Broadcast-join the robots table; drop disallowed URLs.

@@ -52,20 +52,6 @@ ROBOTS = T.StructType(
     ]
 )
 
-SITE_CONFIG = T.StructType(
-    [
-        T.StructField("community", T.StringType(), False),
-        T.StructField("site", T.StringType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("min_views", T.LongType(), False),
-        T.StructField("max_pages", T.IntegerType(), False),
-        T.StructField("delay_s", T.DoubleType(), False),
-        T.StructField("stop_n", T.IntegerType(), False),
-        T.StructField("encoding", T.StringType(), False),
-        T.StructField("site_rank", T.IntegerType(), False),
-    ]
-)
-
 CHECKPOINT = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),

@@ -64,6 +64,28 @@ def test_frontier_equivalence_with_reference_simulator(crawl_result, pages_pdf):
     assert eng == sim
 
 
+def test_replay_staleness_carries_streak_across_rounds():
+    """P9 on the driver: a stale streak carries into the next round's
+    slice, the board stops on the page where it reaches stop_n (here the
+    first page of round 2), and the page budget stops a board too. The
+    returned count covers the whole fetched slice."""
+    from politics_crawler_spark.config import BoardConfig
+    from politics_crawler_spark.plans.crawl import BoardState, _replay_staleness
+
+    a = BoardConfig("a", "1", "dcinside", "h", 0, 9, 1.0, 2, "utf-8", 0)
+    b = BoardConfig("b", "2", "dcinside", "h", 0, 4, 1.0, 5, "utf-8", 1)
+    state = {"a": BoardState(), "b": BoardState()}
+    counts = {("a", 1): 3, ("b", 0): 1, ("b", 3): 2}
+    assert _replay_staleness([a, b], state, 3, counts) == {"a": (2, 3), "b": (2, 1)}
+    assert state["a"] == BoardState(page_no=3, stale=1, active=True)
+    assert state["b"] == BoardState(page_no=3, stale=2, active=True)
+    counts = {("a", 4): 7, ("b", 3): 2}
+    assert _replay_staleness([a, b], state, 3, counts) == {"a": (3, 7), "b": (3, 2)}
+    assert state["a"] == BoardState(page_no=4, stale=2, active=False)
+    assert state["b"] == BoardState(page_no=4, stale=0, active=False)  # budget
+    assert _replay_staleness([a, b], state, 3, counts) == {}
+
+
 def test_seen_filter_unit(spark):
     cand = spark.createDataFrame([(i,) for i in range(100)], "url_hash long")
     no_keys = spark.createDataFrame([], "url_hash long")
@@ -238,6 +260,33 @@ def test_metrics_table_from_observations(spark, pages_df):
     assert sum(r.n_out for r in by["extract"]) == n_out
     for c in res.caches:
         c.unpersist()
+
+
+def test_crawl_tick_metrics_count_each_post_once(spark, pages_df, tmp_path, monkeypatch):
+    """A scheduled tick writes the sorted crawl output, and the sort samples
+    its input in a job of its own before shuffling it. The METRICS extract
+    rows must still count every written post once: extract n_out equals the
+    rows in extracted/run=k, and no round filters a negative count."""
+    import os
+
+    from politics_crawler_spark.streaming import cadence
+
+    box = {}
+
+    def capture(*args, **kw):
+        box["res"] = run_crawl(*args, **kw)
+        return box["res"]
+
+    monkeypatch.setattr(cadence, "run_crawl", capture)
+    state = str(tmp_path / "state")
+    tick = cadence.crawl_tick(spark, state, pages=pages_df, n_shards=8)
+    written = spark.read.parquet(
+        os.path.join(state, f"extracted/run={tick['run']}")
+    ).count()
+    ext = [r for r in box["res"].metrics_table(spark).collect() if r.stage == "extract"]
+    assert written == tick["extracted"] > 0
+    assert sum(r.n_out for r in ext) == written
+    assert all(r.n_filtered >= 0 for r in ext)
 
 
 def test_metrics_table_bogus_key_raises(spark, pages_df):
