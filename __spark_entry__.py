@@ -307,7 +307,13 @@ def q16_simhash_pairs(spark, sf):
     pair with true Jaccard J is Binomial(64, J), and ``min_est=0.35``
     keeps the pair iff at least 23 slots agree (0.35 · 64 = 22.4). At
     the decision threshold J = 0.5 a true pair is dropped with
-    P[Binomial(64, 0.5) <= 22] ≈ 0.84%; at J = 0.55 with ≈ 0.07%."""
+    P[Binomial(64, 0.5) <= 22] ≈ 0.84%; at J = 0.55 with ≈ 0.07%.
+
+    Recall AT the threshold is the banding's, not the gate's: Hamming <= 7
+    captures near-identical texts only. On the boundary fixture of
+    tests/test_dedup_ops.py (400 pairs, exact J in [0.45, 0.60)) it
+    recovered 0/152 pairs at J in [0.50, 0.55) and 3/132 at [0.55, 0.60),
+    where q15's 16×4 banding recovered 66% and 86%."""
     from politics_crawler_spark.operators.dedup import (
         exact_jaccard_verify,
         hamming_band_pairs,

@@ -15,8 +15,6 @@ from __future__ import annotations
 import argparse
 import json
 
-from pyspark.sql import functions as F
-
 
 def main(argv=None):
     ap = argparse.ArgumentParser()
@@ -35,7 +33,7 @@ def main(argv=None):
     args = ap.parse_args(argv)
 
     from .config import RUN_DATE
-    from .plans.crawl import run_crawl
+    from .plans.crawl import read_json, run_crawl
     from .session import get_spark
     from .sources.synthetic_pages import crawl_boards, synthesize_pages
 
@@ -69,17 +67,9 @@ def main(argv=None):
             pages_per_round=args.pages_per_round,
         )
         q.awaitTermination()
-        import json as _json
-        import os as _os
-
         # zero pending ticks → crawl_tick never ran and state.json does
         # not exist yet: report an empty run instead of crashing (ADVICE r4)
-        state_path = args.out + "/state.json"
-        if _os.path.exists(state_path):
-            with open(state_path) as f:
-                print(_json.dumps(_json.load(f)))
-        else:
-            print(_json.dumps({"last_run": None}))
+        print(json.dumps(read_json(args.out) or {"last_run": None}))
         return
 
     res = run_crawl(
@@ -94,14 +84,8 @@ def main(argv=None):
     )
     res.extracted.write.mode("overwrite").parquet(args.out)
     # after the terminal write: the per-stage Observations have resolved
-    metrics_df(spark, res).write.mode("overwrite").parquet(args.out + "_metrics")
+    res.metrics_table(spark).write.mode("overwrite").parquet(args.out + "_metrics")
     print(json.dumps({"rounds": res.rounds, "metrics": res.metrics}))
-
-
-def metrics_df(spark, res):
-    """The A2 METRICS surface (schemas.METRICS): per-round × per-stage rows
-    fed by the crawl's own Observations (see CrawlResult.metrics_table)."""
-    return res.metrics_table(spark)
 
 
 if __name__ == "__main__":

@@ -31,28 +31,19 @@ extracted by ANY earlier run stay dropped. Run artifacts land under
     state_dir/seen/v<k>/           the bloom table AFTER run k
     state_dir/state.json           {"last_run": k, "n_shards": n}
 
-state.json is published atomically (write + rename) AFTER the run's
-parquet is durable, so a crash between writes is invisible to the next
-tick — same commit discipline as the in-run checkpoint
-(plans/crawl._commit_round).
+state.json is published atomically (``plans.crawl.publish_json``: write +
+rename) AFTER the run's parquet is durable, so a crash between writes is
+invisible to the next tick — the same commit the in-run round checkpoint
+makes.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import SparkSession
 
-from ..plans.crawl import CrawlResult, run_crawl
-
-
-def _load_state(state_dir: str) -> dict | None:
-    path = os.path.join(state_dir, "state.json")
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
+from ..plans.crawl import CrawlResult, publish_json, read_json, run_crawl
 
 
 def crawl_tick(
@@ -74,7 +65,7 @@ def crawl_tick(
     version and overwrites the same dirs.
     """
     os.makedirs(state_dir, exist_ok=True)
-    st = _load_state(state_dir)
+    st = read_json(state_dir)
     if st is not None and st["n_shards"] != n_shards:
         raise ValueError(
             f"seen table sharded {st['n_shards']}-way; got n_shards={n_shards}"
@@ -103,10 +94,7 @@ def crawl_tick(
     for c in res.caches:
         c.unpersist()
     n = spark.read.parquet(out_dir).count()
-    tmp = os.path.join(state_dir, "state.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"last_run": k, "n_shards": n_shards}, f)
-    os.replace(tmp, os.path.join(state_dir, "state.json"))
+    publish_json(state_dir, {"last_run": k, "n_shards": n_shards})
     return {"run": k, "extracted": n}
 
 

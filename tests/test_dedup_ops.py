@@ -189,3 +189,86 @@ def test_lsh_ann_recall_vs_bruteforce(spark):
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     recall = len(e & a) / len(e)
     assert recall >= 0.5, f"LSH recall too low: {recall}"
+
+
+def _boundary_pairs(n_pairs: int, seed: int = 11):
+    """``n_pairs`` doc pairs whose exact char-5-gram Jaccard lies in
+    [0.45, 0.60): a shared random-word prefix plus a fresh suffix per doc,
+    the suffix length aimed at a uniform target J. Returns (rows, J by
+    pair)."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [
+        "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(rng.randint(3, 9)))
+        for _ in range(3000)
+    ]
+
+    def words(n):
+        return " ".join(rng.choice(vocab) for _ in range(n))
+
+    def grams(t):
+        return {t[i:i + 5] for i in range(len(t) - 4)}
+
+    rows, jac = [], {}
+    while len(jac) < n_pairs:
+        target = rng.uniform(0.45, 0.60)
+        n_prefix = rng.randint(40, 80)
+        n_suffix = max(1, round(n_prefix * (1 - target) / (2 * target)))
+        prefix = words(n_prefix)
+        a, b = f"{prefix} {words(n_suffix)}", f"{prefix} {words(n_suffix)}"
+        ga, gb = grams(a), grams(b)
+        j = len(ga & gb) / len(ga | gb)
+        if 0.45 <= j < 0.60:
+            i = 2 * len(jac)
+            rows += [(i, a), (i + 1, b)]
+            jac[(i, i + 1)] = j
+    return rows, jac
+
+
+def test_cascades_at_the_jaccard_boundary(spark):
+    """q15 and q16 cascades on ~400 pairs straddling the 0.5 decision
+    threshold. Neither emits a pair under J = 0.5 (the exact verify
+    decides), and q15's recall per J bucket tracks the 16×4 banding
+    S-curve 1 − (1 − J⁴)¹⁶: at least its mean over the bucket minus 3σ."""
+    import math
+
+    from politics_crawler_spark.operators.dedup import (
+        exact_jaccard_verify,
+        hamming_band_pairs,
+        lsh_candidate_pairs,
+        minhash_signatures,
+        sig_jaccard_refine,
+    )
+
+    rows, jac = _boundary_pairs(400)
+    texts = dict(rows)
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sk = minhash_signatures(docs, simhash=True).localCheckpoint(eager=True)
+    sigs = sk.select("doc_id", "sig")
+
+    def verified(cands):
+        ref = sig_jaccard_refine(cands, sigs, min_est=0.35)
+        out = exact_jaccard_verify(ref, docs, k=5, threshold=0.5)
+        return {(r.id_a, r.id_b) for r in out.collect()}
+
+    q15 = verified(lsh_candidate_pairs(sigs, est_threshold=0.0))
+    q16 = verified(hamming_band_pairs(
+        sk.select("doc_id", "sim"), "sim", "doc_id", max_hamming=7, bands=8
+    ))
+
+    def grams(t):
+        return {t[i:i + 5] for i in range(len(t) - 4)}
+
+    for a, b in q15 | q16:
+        ga, gb = grams(texts[a]), grams(texts[b])
+        assert len(ga & gb) / len(ga | gb) >= 0.5, (a, b)
+
+    for lo, hi in ((0.50, 0.55), (0.55, 0.60)):
+        bucket = [p for p, j in jac.items() if lo <= j < hi]
+        probs = [1 - (1 - jac[p] ** 4) ** 16 for p in bucket]
+        mean = sum(probs) / len(probs)
+        sigma = math.sqrt(sum(q * (1 - q) for q in probs)) / len(probs)
+        recall = sum(p in q15 for p in bucket) / len(bucket)
+        assert len(bucket) >= 50
+        assert recall >= mean - 3 * sigma, (lo, recall, mean, sigma)

@@ -154,6 +154,8 @@ def test_crawl_over_live_http_matches_snapshot_join(spark, pages_pdf, pages_df):
     the synthetic join-based crawl; retry counters land in metrics."""
     from politics_crawler_spark.plans.crawl import run_crawl
 
+    from .test_crawl import _assert_metrics_flow
+
     srv = _PageServer(dict(zip(pages_pdf["url"], pages_pdf["html"])))
     try:
         port = srv.port
@@ -170,9 +172,12 @@ def test_crawl_over_live_http_matches_snapshot_join(spark, pages_pdf, pages_df):
         live = run_crawl(spark, None, n_shards=8, fetcher=fetch)
         base = run_crawl(spark, pages_df, n_shards=8)
 
-        a = {(r.url, r.content) for r in live.extracted.collect()}
+        live_rows = live.extracted.collect()
+        a = {(r.url, r.content) for r in live_rows}
         b = {(r.url, r.content) for r in base.extracted.collect()}
         assert a == b and len(a) > 0
+        # per-round extraction conserves the seen stage's flow in METRICS
+        _assert_metrics_flow(spark, live, len(live_rows))
 
         # P6 retry counters observed per round, and faults actually fired
         total_att = sum(m["detail_fetch_attempts"] + m["list_fetch_attempts"]
