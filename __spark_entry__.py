@@ -407,7 +407,8 @@ def q17_lsh_ann(spark, sf):
     embeddings (Gaussian mixture — real embedding corpora cluster; uniform
     random is the degenerate case where no partition index can prune), a
     PRUNING config (bits=10 × 6 tables ⇒ measured candidate volume ≈5.8%
-    of N·Q, tests/test_ann_clustered.py asserts it; numpy-measured mean
+    of N·Q distinct pairs, 12.2% collision rows — tests/test_ann_clustered.py
+    bounds the collision rows of candidate_pairs; numpy-measured mean
     recall 0.982), and a mean-recall@10 ≥ 0.9 contract over 100 queries
     against the independent numpy exact top-k. The dataset is
     self-synthesized (100k × 32, deterministic), so the gate is

@@ -2,8 +2,6 @@
 
 - exact_dedup: hash-groupBy on content (or any key); one shuffle, map-side
   partial agg. 100 TB-safe: dedup key is a fixed-width digest, not the text.
-- latest_by_key: the reference's cross-run upsert semantics (D3/K2) as a
-  window — keep the newest version per business key.
 - minhash_signatures: the one text-sketch operator — byte-shingle hashes →
   64-perm minhash (and optionally a 64-bit simhash), vectorized numpy in one
   mapInPandas pass.
@@ -14,18 +12,20 @@
 - hamming_band_pairs: near-dups of a 64-bit signature (simhash) = small
   Hamming distance; pigeonhole banding gives the candidate join the same
   no-cross-join property.
+- drop_near_dups: the one transitive collapse — keep the min id of each
+  connected component of a verified pair graph (text and embedding dedup).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # --------------------------------------------------------------------------
-# exact + upsert-style dedup (built-ins only)
+# exact dedup (built-ins only)
 # --------------------------------------------------------------------------
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -42,12 +42,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
         .agg(F.min(id_col).alias(id_col), F.count("*").alias("dup_count"))
         .select(id_col, "dup_count")
     )
-
-
-def latest_by_key(df: DataFrame, keys: list[str], order_col: str, tiebreak: str) -> DataFrame:
-    """Upsert semantics (K2/D3): latest row per key, deterministic tiebreak."""
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc(), F.col(tiebreak).desc())
-    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
 # --------------------------------------------------------------------------
@@ -467,16 +461,25 @@ def connected_min_reps(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     return labels
 
 
+def drop_near_dups(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Transitive near-dup collapse: keep the min id of each CONNECTED
+    COMPONENT of the verified ``(id_a, id_b)`` pair graph
+    (:func:`connected_min_reps`, eager) and left-anti-join every other
+    member out of ``df``. In a chain A~B~C with A≁C, only A survives even
+    though A and C never paired directly."""
+    reps = connected_min_reps(pairs)
+    dropped = reps.filter(F.col("rep") < F.col("node")).select(
+        F.col("node").alias(id_col)
+    )
+    return df.join(dropped, on=id_col, how="left_anti")
+
+
 def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  threshold: float = 0.5, exact_verify: bool = True,
-                  shingle_k: int = 5) -> DataFrame:
+                  threshold: float = 0.5, shingle_k: int = 5) -> DataFrame:
     """Near-dup collapse: candidates from the MinHash-LSH sketch, DECISIONS
-    from exact character-shingle Jaccard (``exact_verify=True``, default) —
-    the sketch only bounds what gets compared; what gets dropped is exact.
-    Representative = the min id of each CONNECTED COMPONENT of the
-    ≥-threshold pair graph (community-standard transitive collapse, via
-    :func:`connected_min_reps`): in a chain A~B~C with A≁C, only A survives
-    even though A and C never paired directly."""
+    from exact character-shingle Jaccard — the sketch only bounds what gets
+    compared; what gets dropped is exact. Survivors: :func:`drop_near_dups`
+    over the ≥-threshold pair graph."""
     # persisted: sigs feed the banding and both sig_jaccard_refine joins
     sigs = minhash_signatures(df, text_col, id_col, shingle_k=shingle_k).persist()
     # recall stage (banded OR-construction), then the full-sig precision
@@ -485,19 +488,13 @@ def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     # expensive exact verify (measured 27 s at sf0.1, r5)
     cands = lsh_candidate_pairs(sigs, id_col, est_threshold=0.0)
     pairs = sig_jaccard_refine(cands, sigs, id_col, min_est=threshold * 0.7)
-    if exact_verify:
-        pairs = exact_jaccard_verify(
-            pairs, df, id_col=id_col, text_col=text_col,
-            k=shingle_k, threshold=threshold,
-        )
-    else:
-        pairs = pairs.filter(F.col("jaccard_est") >= threshold)
-    reps = connected_min_reps(pairs)
-    sigs.unpersist()  # connected_min_reps checkpointed; sigs no longer needed
-    dropped = reps.filter(F.col("rep") < F.col("node")).select(
-        F.col("node").alias(id_col)
+    pairs = exact_jaccard_verify(
+        pairs, df, id_col=id_col, text_col=text_col,
+        k=shingle_k, threshold=threshold,
     )
-    return df.join(dropped, on=id_col, how="left_anti")
+    out = drop_near_dups(df, pairs, id_col)
+    sigs.unpersist()  # connected_min_reps checkpointed; sigs no longer needed
+    return out
 
 
 def hamming_band_pairs(sigs: DataFrame, sig_col: str = "sim",

@@ -31,13 +31,14 @@ urllib transport and real sleeps.
 sleeps ``delay_s`` between consecutive fetches of a site
 (dcinside_politics.py:54,199, ruliweb_politics.py:91,258). Here each task
 keeps a last-request-time map keyed by the TRUE host and sleeps to honor
-a per-host minimum interval before every request — ``min_interval_s``
-globally, overridden per row by a ``_pace_s`` column when present. A
-salt-split mega-host runs in ``salt_n`` concurrent tasks, so its interval
-must be BUDGET-DIVIDED: ``politeness.with_pace`` writes ``_pace_s =
-min_interval_s × salt_n``, making the aggregate request rate across all
-salted tasks honor the same per-host budget an unsalted host gets
-(SURVEY §2.5 P3; round-3 verdict "what's wrong #1").
+a per-host minimum interval before every request — ``min_interval_s``,
+the stage's one pacing knob. A salt-split mega-host runs in ``salt_n``
+concurrent tasks, so its interval must be BUDGET-DIVIDED:
+``politeness.salted_repartition_by_host`` tags each row with its host's
+``_salt_n`` and the stage paces at ``min_interval_s × salt_n``, making the
+aggregate request rate across all salted tasks honor the same per-host
+budget an unsalted host gets (SURVEY §2.5 P3; round-3 verdict "what's
+wrong #1").
 
 At 100 TB scale this stage is I/O-bound per partition; html bytes never
 shuffle after fetch (extraction runs in the same stage pipeline before any
@@ -72,6 +73,9 @@ FETCH_FIELDS = [
     T.StructField("ua", T.StringType(), True),
 ]
 
+# Per-row host salt factor written by politeness.salted_repartition_by_host.
+SALT_N_COL = "_salt_n"
+
 
 def _det_pick(url: str, attempt: int, n: int) -> int:
     return zlib.crc32(f"{url}#{attempt}".encode()) % n
@@ -101,15 +105,14 @@ def make_fetch_stage(
     min_interval_s: float = 0.0,
     clock: Callable[[], float] = time.monotonic,
     host_col: str = "host",
-    pace_col: str = "_pace_s",
 ):
     """Build ``fetch(df, url_col) -> df + (html, fetch_status, http_code,
     attempts, ua)``. All knobs closure-captured and shipped to executors.
 
-    ``min_interval_s`` > 0 enforces per-host pacing (see module docstring);
-    a ``pace_col`` column on the input overrides it per row (the crawl
-    plan writes the budget-divided interval for salted hosts there). The
-    host key comes from ``host_col`` when present, else from the URL.
+    ``min_interval_s`` > 0 enforces per-host pacing (see module docstring),
+    multiplied per row by a ``_salt_n`` column when present (the salted
+    repartition writes it; the stage drops it). The host key comes from
+    ``host_col`` when present, else from the URL.
     Pacing needs a real ``sleep``; with ``sleep=None`` (fault-injection
     tests that strip all wall-clock cost) it is skipped like backoff is."""
     transport = transport or urllib_transport
@@ -144,8 +147,8 @@ def make_fetch_stage(
 
     def fetch(df: DataFrame, url_col: str = "url") -> DataFrame:
         cols = df.schema.fieldNames()
-        has_host, has_pace = host_col in cols, pace_col in cols
-        out_fields = [f for f in df.schema.fields if f.name != pace_col]
+        has_host, has_salt = host_col in cols, SALT_N_COL in cols
+        out_fields = [f for f in df.schema.fields if f.name != SALT_N_COL]
         out_schema = T.StructType(out_fields + FETCH_FIELDS)
 
         def _host_of(url: str) -> str:
@@ -175,10 +178,10 @@ def make_fetch_stage(
                     if has_host
                     else pdf[url_col].map(_host_of)
                 )
-                paces = (
-                    pdf[pace_col].fillna(min_interval_s)
-                    if has_pace
-                    else pd.Series(min_interval_s, index=pdf.index)
+                paces = min_interval_s * (
+                    pdf[SALT_N_COL].fillna(1)
+                    if has_salt
+                    else pd.Series(1, index=pdf.index)
                 )
                 res = pd.DataFrame(
                     [
@@ -187,7 +190,7 @@ def make_fetch_stage(
                     ],
                     index=pdf.index,
                 )
-                out = pdf.drop(columns=[pace_col]) if has_pace else pdf
+                out = pdf.drop(columns=[SALT_N_COL]) if has_salt else pdf
                 yield pd.concat([out, res], axis=1)
 
         return df.mapInPandas(_run, schema=out_schema)

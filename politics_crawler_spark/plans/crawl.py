@@ -67,7 +67,7 @@ from ..operators.listparse import parse_list_pages
 from ..schemas import EXTRACTED, METRICS, SEEN
 from ..sources.synthetic_pages import list_url
 from . import seen as seen_mod
-from .politeness import host_salt_plan, salted_repartition_by_host, with_pace
+from .politeness import host_salt_plan, salted_repartition_by_host
 from .robots import gate_by_robots
 
 _CHECK_DETAIL_DATE_SITES = ("ruliweb", "inven")  # F5 boards (+ fmkorea_funny)
@@ -304,7 +304,6 @@ def run_crawl(
     pages_per_round: int = 16,
     robots: DataFrame | None = None,
     fetcher=None,
-    min_interval_s: float = 0.0,
     initial_seen: DataFrame | None = None,
 ) -> CrawlResult:
     """Crawl ``pages`` (or the live web through ``fetcher``) round by round
@@ -328,12 +327,11 @@ def run_crawl(
     (no extra actions). ``checkpoint_dir`` with ``fetcher`` raises
     ValueError: a live crawl's durable unit is the tick.
 
-    ``min_interval_s`` (live mode only): per-host minimum seconds between
-    requests, ENFORCED inside the fetch stage (P3-P5). List fetches
-    repartition by host so one task owns each host's list pages; detail
-    fetches ride the salted repartition with a budget-divided interval
-    (``politeness.with_pace``) so a salt-split mega-host's aggregate rate
-    still honors the per-host budget.
+    Live list and detail fetches both run after
+    ``politeness.salted_repartition_by_host``, so every host's requests sit
+    in its own salted task(s) and the fetch stage's ``min_interval_s``
+    (P3-P5) is budget-divided by the host's salt factor: a salt-split
+    mega-host's aggregate rate still honors the per-host interval.
 
     The seen table is read and written only through
     ``seen.probe_and_update``. Snapshot crawls fold a round's selected and
@@ -560,16 +558,10 @@ def run_crawl(
         if fetcher is None:
             lists = F.broadcast(frontier).join(lists_pool, on="url", how="inner")
         else:
-            list_src = frontier
-            if min_interval_s > 0:
-                # one task per host for list pages (tiny frame — the
-                # repartition is noise) so the in-task pacing map sees
-                # every request to that host
-                list_src = with_pace(
-                    frontier.repartition(F.col("host")), min_interval_s
-                )
             list_obs = Observation()
-            fetched = fetcher(list_src, url_col="url").observe(
+            fetched = fetcher(
+                salted_repartition_by_host(frontier, salt_plan), url_col="url"
+            ).observe(
                 list_obs,
                 F.sum("attempts").alias("attempts"),
                 F.count(F.lit(1)).alias("n_fetches"),
@@ -698,14 +690,7 @@ def run_crawl(
         n_extracted = None
         if fetcher is not None:
             t_ext0 = time.time()
-            detail = salted_repartition_by_host(
-                detail, host_col="host", url_col="url", salt_plan=salt_plan
-            )
-            if min_interval_s > 0:
-                # budget-divide the interval for salted hosts: salt_n
-                # concurrent tasks × (salt_n × interval) per task ⇒
-                # the host's aggregate rate stays 1/min_interval_s
-                detail = with_pace(detail, min_interval_s, salt_plan)
+            detail = salted_repartition_by_host(detail, salt_plan)
             det_obs = Observation()
             fetched_detail = (
                 fetcher(detail, url_col="url")

@@ -3,7 +3,9 @@ pruning configs (q17: bits=10 × 6 tables; q32: 64 cells × 4 probes) must
 (a) keep MEAN recall@10 ≥ 0.9 over 100 queries against the independent
 numpy exact top-k (the ann-benchmarks metric) and (b) examine a small
 fraction of N·Q candidates — an "approximate" index doing near-exhaustive
-work demonstrates nothing (round-2 verdict)."""
+work demonstrates nothing (round-2 verdict). The volume is counted on
+``candidate_pairs``, the collision stream lsh_topk/ivf_topk rank: one row
+per exact cosine the query computes."""
 
 from pyspark.sql import functions as F
 
@@ -35,13 +37,14 @@ def _mean_recall(approx_rows, gt):
 
 def test_lsh_candidate_volume_and_recall(spark):
     from politics_crawler_spark.operators.similarity import (
-        lsh_candidates,
+        candidate_pairs,
+        lsh_keys,
         lsh_topk,
     )
 
     emb = synthesize_embeddings(spark, N).persist()
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    n_cands = lsh_candidates(emb, queries, bits=10, tables=6).count()
+    n_cands = candidate_pairs(emb, queries, lsh_keys(bits=10, tables=6)).count()
     frac = n_cands / (N * N_QUERIES)
     assert frac < 0.15, f"LSH candidate volume not pruned: {frac:.3f} of N·Q"
 
@@ -53,13 +56,15 @@ def test_lsh_candidate_volume_and_recall(spark):
 
 def test_ivf_candidate_volume_and_recall(spark):
     from politics_crawler_spark.operators.similarity import (
-        ivf_candidates,
+        candidate_pairs,
+        ivf_keys,
         ivf_topk,
     )
 
     emb = synthesize_embeddings(spark, N).persist()
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    n_cands = ivf_candidates(emb, queries, n_cells=64, n_probe=4).count()
+    keys = ivf_keys(emb, n_cells=64, n_probe=4)
+    n_cands = candidate_pairs(emb, queries, keys).count()
     frac = n_cands / (N * N_QUERIES)
     assert frac < 0.15, f"IVF candidate volume not pruned: {frac:.3f} of N·Q"
 

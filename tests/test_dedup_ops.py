@@ -180,11 +180,10 @@ def test_lsh_ann_recall_vs_bruteforce(spark):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 3)
-    dim = len(emb.select("embedding").first()[0])
     exact = cosine_topk(emb, queries, k=5)
     # random embeddings are the worst case for LSH (no cluster structure);
     # low bits + many tables trades candidate volume for recall
-    approx = lsh_topk(emb, queries, dim=dim, k=5, bits=3, tables=8)
+    approx = lsh_topk(emb, queries, k=5, bits=3, tables=8)
     e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     recall = len(e & a) / len(e)

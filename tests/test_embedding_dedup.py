@@ -109,12 +109,12 @@ def test_neardup_candidate_volume_prunes(spark):
     the bound is asserted at the shipped 23k."""
     from politics_crawler_spark.operators.dedup import hamming_band_pairs
     from politics_crawler_spark.operators.similarity import (
-        make_hyperplane_sig_udf,
+        hyperplane_signature,
     )
 
     corpus = synthesize_neardup_embeddings(spark)
-    sig_udf = make_hyperplane_sig_udf()
-    sigs = corpus.select("vec_id", sig_udf(F.col("embedding")).alias("sim"))
+    sig = hyperplane_signature()
+    sigs = corpus.select("vec_id", sig(F.col("embedding")).alias("sim"))
     # max_hamming=64 disables the distance filter: this counts every
     # distinct pair the banding scheme would ever compare
     n_cand = hamming_band_pairs(
@@ -130,3 +130,47 @@ def test_neardup_candidate_volume_prunes(spark):
     # candidate (pigeonhole: family edges sit at Hamming <= bands-1)
     fam_edges = NEARDUP_FAMS * (NEARDUP_DUPS + 1) * NEARDUP_DUPS // 2
     assert n_cand >= fam_edges
+
+
+def _sign_pack(X, P):
+    """Pure-Python reference: bit j of a row's code = sign(x · P[j])."""
+    return [sum(1 << j for j, b in enumerate(row) if b) for row in (X @ P.T) > 0]
+
+
+def test_hyperplane_codes_match_numpy_reference(spark):
+    """The one sign-bit kernel equals an ``X @ P.T`` sign-pack reference,
+    both for the 64-bit signature (a code with bit 63 set is the negative
+    int64 of the same bits) and for the multi-table LSH keys
+    (``t·2^bits + bucket``, table t's planes seeded 100 + t)."""
+    from politics_crawler_spark.operators.similarity import (
+        hyperplane_signature,
+        lsh_keys,
+    )
+
+    n, d, bits, tables = 300, 24, 10, 6
+    X = np.random.default_rng(5).standard_normal((n, d))
+    df = spark.createDataFrame(
+        [(i, X[i].tolist()) for i in range(n)], "vec_id long, embedding array<double>"
+    )
+    emb = F.col("embedding")
+    rows = sorted(
+        df.select(
+            "vec_id",
+            hyperplane_signature()(emb).alias("sig"),
+            lsh_keys(bits, tables)[0](emb).alias("keys"),
+        ).collect()
+    )
+
+    sig_ref = [
+        c - (1 << 64) if c >> 63 else c
+        for c in _sign_pack(X, np.random.default_rng(424242).standard_normal((64, d)))
+    ]
+    assert [r.sig for r in rows] == sig_ref
+    assert any(c < 0 for c in sig_ref) and any(c > 0 for c in sig_ref)
+
+    per_table = [
+        _sign_pack(X, np.random.default_rng(100 + t).standard_normal((d, bits)).T)
+        for t in range(tables)
+    ]
+    keys_ref = [[(t << bits) + per_table[t][i] for t in range(tables)] for i in range(n)]
+    assert [list(r.keys) for r in rows] == keys_ref

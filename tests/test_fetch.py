@@ -243,7 +243,7 @@ def test_per_host_pacing_unsalted(spark, tmp_path):
 def test_per_host_pacing_salted_budget_division(spark, tmp_path):
     """A salt-split mega-host's AGGREGATE request rate honors the same
     per-host budget: salt_n concurrent tasks each pace at salt_n ×
-    min_interval_s (politeness.with_pace), so among any salt_n+1
+    min_interval_s (the salted repartition's ``_salt_n``), so among any salt_n+1
     consecutive requests (merged across tasks) two share a task and are
     >= salt_n × interval apart — the merged stream can never exceed
     1/min_interval_s for long."""
@@ -251,7 +251,6 @@ def test_per_host_pacing_salted_budget_division(spark, tmp_path):
 
     from politics_crawler_spark.plans.politeness import (
         salted_repartition_by_host,
-        with_pace,
     )
 
     log = str(tmp_path / "req.log")
@@ -261,16 +260,15 @@ def test_per_host_pacing_salted_budget_division(spark, tmp_path):
         [(f"https://m.com/p{i}", "m.com") for i in range(12)],
         "url string, host string",
     )
-    paced = with_pace(
-        salted_repartition_by_host(df, salt_plan=plan), interval, plan
-    )
-    assert "_pace_s" in paced.columns
+    paced = salted_repartition_by_host(df, salt_plan=plan)
+    assert "_salt_n" in paced.columns
     fetch = make_fetch_stage(
         transport=_recording_transport(log), max_attempts=1, sleep=_time.sleep,
+        min_interval_s=interval,
     )
     out = fetch(paced).collect()
     assert len(out) == 12
-    assert "_pace_s" not in out[0].asDict()  # stage consumes the pace column
+    assert "_salt_n" not in out[0].asDict()  # stage consumes the salt column
     ts = _times_by_host(log)["m.com"]
     eps = 0.01
     # pigeonhole over the merged stream: any salt_n+1 consecutive requests
@@ -282,9 +280,9 @@ def test_per_host_pacing_salted_budget_division(spark, tmp_path):
 
 
 def test_run_crawl_live_pacing_wiring(spark, pages_pdf, pages_df):
-    """min_interval_s wired through run_crawl (list repartition-by-host +
-    with_pace, detail budget-divided pace after salting) must leave the
-    extracted output IDENTICAL to the unpaced snapshot crawl — the pace
+    """The stage's min_interval_s under run_crawl (list and detail fetches
+    both salted by host, budget-divided pace) must leave the
+    extracted output IDENTICAL to the unpaced snapshot crawl — the salt
     column and host repartitions are pure scheduling, never semantics."""
     import time as _time
 
@@ -300,13 +298,56 @@ def test_run_crawl_live_pacing_wiring(spark, pages_pdf, pages_df):
         transport=transport, max_attempts=2, min_bytes=50,
         sleep=_time.sleep, min_interval_s=0.002,
     )
-    live = run_crawl(
-        spark, None, n_shards=8, fetcher=fetch, min_interval_s=0.002
-    )
+    live = run_crawl(spark, None, n_shards=8, fetcher=fetch)
     base = run_crawl(spark, pages_df, n_shards=8)
     a = {(r.url, r.content) for r in live.extracted.collect()}
     b = {(r.url, r.content) for r in base.extracted.collect()}
     assert a == b and len(a) > 0
+
+
+def test_run_crawl_paces_salted_host_from_stage_interval(
+    spark, pages_pdf, pages_df, tmp_path
+):
+    """The interval set only on the fetch stage is honoured per host by a
+    live run_crawl: with ``pages`` and a small ``host_target_rows`` the
+    mega-host is salt-split, and any salt_n+1 consecutive requests to it
+    (list and detail, merged across tasks) still span >= salt_n ×
+    interval — no salted task paces at the bare interval."""
+    import time as _time
+
+    from politics_crawler_spark.plans.crawl import run_crawl
+    from politics_crawler_spark.plans.politeness import host_salt_plan
+
+    target, interval = 100, 0.005
+    plan = host_salt_plan(
+        pages_df.select(F.parse_url(F.col("url"), F.lit("HOST")).alias("host")),
+        target_rows_per_task=target,
+    )
+    host, salt_n = max(plan.items(), key=lambda kv: kv[1])
+    assert salt_n >= 2
+    pages = dict(zip(pages_pdf["url"], pages_pdf["html"]))
+    log = str(tmp_path / "req.log")
+    record = _recording_transport(log)
+
+    def transport(url, ua, timeout_s):
+        record(url, ua, timeout_s)
+        body = pages.get(url)
+        return (200, body) if body is not None else (404, b"")
+
+    fetch = make_fetch_stage(
+        transport=transport, max_attempts=1, sleep=_time.sleep,
+        min_interval_s=interval,
+    )
+    res = run_crawl(
+        spark, pages_df, n_shards=8, fetcher=fetch, max_rounds=1,
+        host_target_rows=target,
+    )
+    assert res.extracted.count() > 0
+    ts = _times_by_host(log)[host]
+    assert len(ts) > 2 * salt_n
+    eps = 0.01
+    tightest = min(ts[i + salt_n] - ts[i] for i in range(len(ts) - salt_n))
+    assert tightest >= salt_n * interval - eps, tightest
 
 
 def test_live_crawl_keeps_failed_detail_url_unseen(spark, pages_pdf):

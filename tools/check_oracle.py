@@ -6,9 +6,10 @@ canonicalization). Usage: python tools/check_oracle.py [sf_dir] [q1 q2 ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd

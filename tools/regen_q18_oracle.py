@@ -8,11 +8,12 @@ serial replay of the reference scripts' crawl loops and never touches the
 engine's Spark code.
 """
 
+import os
 import sys
 from collections import Counter
 from urllib.parse import urlparse
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from politics_crawler_spark.config import ENABLED_BOARDS, RUN_DATE
 from politics_crawler_spark.sources.synthetic_pages import synthesize_pages_pandas
