@@ -412,8 +412,14 @@ def run_crawl(
         # snapshot's layout (per-board runs), so scan-order partitions are
         # heavily skewed (measured 0..5,851 list pages/partition at 4.8M —
         # parse stragglers halved 8-core throughput); hashing on url gives
-        # every parse task an equal slice. One bounded shuffle, paid once
-        # per run.
+        # every parse task an equal slice. One partition per core: each
+        # Arrow UDF task pays a fixed Python runner cost whatever its rows
+        # (4 vCPU, a trivial pandas_udf job over 16k rows: 1.7-1.9 s as 16
+        # tasks, 0.5-0.6 s as 4), so tasks beyond the core count only add
+        # that cost (the list-parse stage of a warm perfbench crawl_fresh
+        # pass: 2.2 s as 16 tasks, 0.9 s as 4). The `cand` cache, the
+        # `selected` checkpoint and the probe keys inherit this width. One
+        # bounded shuffle, paid once per run.
         t_pool0 = time.time()
         # Hash semi-join: broadcast 64-bit xxhash64 keys, not the url
         # strings — a LongHashedRelation builds and probes several× faster
@@ -429,7 +435,7 @@ def run_crawl(
                 on=F.xxhash64(F.col("url")) == F.col("_lh"),
                 how="left_semi",
             )
-            .repartition(spark.sparkContext.defaultParallelism * 4, "url")
+            .repartition(spark.sparkContext.defaultParallelism, "url")
             .persist()
         )
         # materialize eagerly: the pool scan is a run-level cost, not round

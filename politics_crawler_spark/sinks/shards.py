@@ -44,15 +44,17 @@ def write_jsonl_shards(
     Returns the per-shard audit table (shard_id, n_docs, shard_tokens) —
     what an operator inspects before launching a training run.
     """
-    # localCheckpoint: the partitioned write AND the audit aggregation both
-    # consume the assignment (ADVICE r5: two full lineage executions); the
-    # checkpointed rows are fixed-width (id, n_tokens, shard_id) and the
-    # blocks free with the returned audit frame. (token_budget_shards
-    # additionally cuts its own tokenize pass internally — r6.)
+    # Two cuts, so the input plan runs once. `docs` (id, text) feeds both
+    # the assignment and the write: joining the assignment back to `df`
+    # itself would re-run all of `df` in the write (for a curation plan,
+    # its dedup anti-join and decontamination join). `assign` feeds both the
+    # write and the audit aggregation; its rows are fixed-width (id,
+    # n_tokens, shard_id). The blocks free with the returned audit frame.
+    docs = df.select(id_col, text_col).localCheckpoint(eager=True)
     assign = token_budget_shards(
-        df, budget=budget, bucket_docs=bucket_docs, id_col=id_col, text_col=text_col
+        docs, budget=budget, bucket_docs=bucket_docs, id_col=id_col, text_col=text_col
     ).localCheckpoint(eager=True)
-    rows = df.select(id_col, text_col).join(assign, id_col)
+    rows = docs.join(assign, id_col)
     (
         rows.repartition("shard_id")
         .write.mode("overwrite")

@@ -67,3 +67,26 @@ def test_write_jsonl_shards_oversized_doc_gets_own_shard(spark, tmp_path):
     # 3/10); doc2 starts 28 -> shard 2
     assert a[0]["n_docs"] == 2 and a[0]["shard_tokens"] == 28
     assert a[2]["n_docs"] == 1 and a[2]["shard_tokens"] == 3
+
+
+def test_write_jsonl_shards_runs_input_once(spark, tmp_path):
+    """The input plan executes once: the assignment and the write share
+    one materialized (id, text) cut instead of each re-running `df`."""
+    from pyspark.sql.types import StringType
+
+    from politics_crawler_spark.sinks.shards import write_jsonl_shards
+
+    evals = spark.sparkContext.accumulator(0)
+
+    def tap(text):
+        evals.add(1)
+        return text
+
+    tap_udf = F.udf(tap, StringType()).asNondeterministic()
+    rows = [(i, " ".join(f"w{i}t{j}" for j in range(10))) for i in range(40)]
+    d = spark.createDataFrame(rows, "doc_id long, text string").select(
+        "doc_id", tap_udf("text").alias("text")
+    )
+    audit = write_jsonl_shards(d, str(tmp_path / "s"), budget=100, bucket_docs=8)
+    assert sum(r["n_docs"] for r in audit.collect()) == 40
+    assert evals.value == 40
