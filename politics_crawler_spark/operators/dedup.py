@@ -232,6 +232,12 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
     """Band the signature, bucket-join on (band, hash(band slice)),
     estimate Jaccard from BAND AGREEMENT; keep pairs over the threshold.
 
+    Band ``i`` (0-based) of a doc is the slice ``sig[i*r : (i+1)*r]`` for
+    ``r = rows_per_band``, and its bucket is ``xxhash64`` of that
+    ``array<long>`` slice. Only bucket EQUALITY matters: two docs meet in
+    band i when their slices hash alike, i.e. (up to a 2^-64 hash
+    collision) when all r slots agree.
+
     Scale: the only joins are equi-joins. The banded self-join's shuffle
     carries (id, band, bucket) ONLY — the bucket hash is computed in the
     projection feeding the exchange and the 64-perm signature never rides
@@ -266,21 +272,16 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
     fixed-width broadcast joins cost well under a second.
     """
     assert bands * rows_per_band <= 64
+    # one xxhash64 per band over its array<long> slice: `bands` Columns in
+    # all, since each Column built in Python is a py4j round trip (~1 ms on
+    # a 4-vCPU host)
     banded = sigs.select(
         id_col,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.xxhash64(F.concat_ws(",", *[
-                        F.col("sig").getItem(i * rows_per_band + j).cast("string")
-                        for j in range(rows_per_band)
-                    ])).alias("bucket"),
-                )
-                for i in range(bands)
-            ])
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
+        F.posexplode(F.array(*[
+            F.xxhash64(F.slice("sig", i * rows_per_band + 1, rows_per_band))
+            for i in range(bands)
+        ])).alias("band", "bucket"),
+    )
 
     left = banded.alias("l")
     right = banded.alias("r")
@@ -479,7 +480,16 @@ def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     """Near-dup collapse: candidates from the MinHash-LSH sketch, DECISIONS
     from exact character-shingle Jaccard — the sketch only bounds what gets
     compared; what gets dropped is exact. Survivors: :func:`drop_near_dups`
-    over the ≥-threshold pair graph."""
+    over the ≥-threshold pair graph.
+
+    ``df`` is read ONCE: it is cut at entry (eager ``localCheckpoint``) and
+    that cut feeds the sketch, the exact verify's texts and the survivors'
+    anti-join, so callers need not persist it. The returned frame's lineage
+    starts at the cut — downstream consumers (decontamination, a shard
+    write) do not re-run the plan that produced ``df`` (a C4 gate, say).
+    Same rule as ``write_jsonl_shards`` and ``token_budget_shards``: an
+    operator that reads its input more than once cuts it once."""
+    df = df.localCheckpoint(eager=True)
     # persisted: sigs feed the banding and both sig_jaccard_refine joins
     sigs = minhash_signatures(df, text_col, id_col, shingle_k=shingle_k).persist()
     # recall stage (banded OR-construction), then the full-sig precision

@@ -8,9 +8,12 @@ Scale notes (100 TB):
 - The write is `partitionBy(shard_id)` — Spark's native dynamic-partition
   write. One shuffle keyed by the long `shard_id` routes each document to
   its shard's writer; no driver-side loop over shards, no collect.
-- `repartition(shard_id)` before the write makes one task own each
-  shard's rows, so each shard directory holds ONE file (what a data
-  loader wants) instead of one fragment per upstream partition.
+- `repartition(defaultParallelism, shard_id)` before the write hashes
+  each shard's rows to one task, so each shard directory holds ONE file
+  (what a data loader wants) instead of one fragment per upstream
+  partition, and the shards are written by one writer per core. The
+  explicit partition count matters: a bare `repartition(shard_id)` lets
+  AQE coalesce a small write to a single task.
   shard_id is derived from a running token sum, so shard populations are
   near-uniform by construction (≈ budget tokens each) — the repartition
   cannot skew.
@@ -56,7 +59,7 @@ def write_jsonl_shards(
     ).localCheckpoint(eager=True)
     rows = docs.join(assign, id_col)
     (
-        rows.repartition("shard_id")
+        rows.repartition(df.sparkSession.sparkContext.defaultParallelism, "shard_id")
         .write.mode("overwrite")
         .partitionBy("shard_id")
         .json(out_dir)

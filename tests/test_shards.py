@@ -90,3 +90,35 @@ def test_write_jsonl_shards_runs_input_once(spark, tmp_path):
     audit = write_jsonl_shards(d, str(tmp_path / "s"), budget=100, bucket_docs=8)
     assert sum(r["n_docs"] for r in audit.collect()) == 40
     assert evals.value == 40
+
+
+def test_write_jsonl_shards_one_writer_per_core(spark, tmp_path):
+    """With more shards than cores the write still leaves ONE part file per
+    shard directory, and it runs as defaultParallelism tasks: hashing
+    shard_id into an explicit partition count keeps AQE from coalescing a
+    small write onto a single task."""
+    from politics_crawler_spark.sinks.shards import write_jsonl_shards
+
+    sc = spark.sparkContext
+    n_shards = 3 * sc.defaultParallelism
+    rows = [(i, " ".join(f"w{i}t{j}" for j in range(10))) for i in range(10 * n_shards)]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
+    out = str(tmp_path / "shards")
+    sc.setJobGroup("shard_write", "shard_write")
+    try:
+        audit = write_jsonl_shards(d, out, budget=100, bucket_docs=8)
+    finally:
+        sc.setJobGroup("", "")
+    assert [r["n_docs"] for r in audit.collect()] == [10] * n_shards
+
+    dirs = sorted(p for p in os.listdir(out) if p.startswith("shard_id="))
+    assert len(dirs) == n_shards
+    for sd in dirs:
+        assert len(glob.glob(os.path.join(out, sd, "part-*.json"))) == 1, sd
+
+    # the write is the group's last job; its result stage is the writers
+    st = sc.statusTracker()
+    write_job = max(st.getJobIdsForGroup("shard_write"))
+    stages = map(st.getStageInfo, st.getJobInfo(write_job).stageIds)
+    tasks = [s.numTasks for s in stages if s is not None]
+    assert max(tasks) == sc.defaultParallelism, tasks
