@@ -256,30 +256,11 @@ def q15_minhash_pairs(spark, sf):
     """MinHash+LSH candidate generation, graded on its VERIFIED output:
     banded-bucket equi-join proposes pairs, exact char-5-gram Jaccard
     re-scores them, and the oracle is the exact all-pairs computation —
-    so a recall miss by the LSH stage fails the gate."""
-    from politics_crawler_spark.operators.dedup import (
-        exact_jaccard_verify,
-        lsh_candidate_pairs,
-        minhash_signatures,
-        sig_jaccard_refine,
-    )
+    so a recall miss by the LSH stage fails the gate. The cascade is
+    ``near_dup_pairs``, the same one ``minhash_dedup`` (q33) collapses."""
+    from politics_crawler_spark.operators.dedup import near_dup_pairs
 
-    d = _t(spark, sf, "documents")
-    # three-stage cascade (r5): banded recall join (band-agreement est
-    # inside the pair agg — no dedup shuffle), full-sig precision refine
-    # (prunes the 170k chance collisions to ~1k for two broadcast joins),
-    # exact verify decides. sigs persisted: banding + both refine joins.
-    # sigs are DERIVED operator work (the vectorized minhash kernel is
-    # what this query benchmarks) — per-trial persist is intentional, and
-    # bench.py's between-queries clearCache bounds the accumulation.
-    # r6 note: fusing the refine est into the collision stage (to skip
-    # the pair-dedup exchange) measured ~3× SLOWER — the codegen-fallback
-    # HOF est de-codegens the whole fused stage; see
-    # dedup._sig_agreement_est for the recorded negative result.
-    sigs = minhash_signatures(d).persist()
-    cands = lsh_candidate_pairs(sigs, est_threshold=0.0)
-    ref = sig_jaccard_refine(cands, sigs, min_est=0.35)
-    out = exact_jaccard_verify(ref, d, k=5, threshold=0.5)
+    out = near_dup_pairs(_t(spark, sf, "documents"), threshold=0.5)
     # localCheckpoint before orderBy: the range-partitioner's sampling
     # pass would otherwise re-execute the whole broadcast-join pipeline
     # (verified set is ~hundreds of rows; measured +21 s at sf0.1). NOT

@@ -115,6 +115,37 @@ def test_lsh_candidate_pairs_match_python_banding(spark):
     assert 1.0 in got.values() and min(got.values()) < 0.75
 
 
+def test_hamming_band_pairs_match_python_banding(spark):
+    """The simhash side of the shared banded join: exactly the pairs that
+    share one of 8 exact 8-bit bands AND lie within Hamming 7, with their
+    distance — the pure-Python pigeonhole banding of the same sims."""
+    from politics_crawler_spark.operators.dedup import (
+        hamming_band_pairs,
+        minhash_signatures,
+    )
+
+    rows, _ = _boundary_pairs(30)
+    rows += [(200, rows[0][1]), (201, rows[1][1])]  # exact dups across blocks
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sims = minhash_signatures(docs, simhash=True).select("doc_id", "sim")
+    sims = sims.localCheckpoint(eager=True)
+    sim = {r.doc_id: r.sim & _U64 for r in sims.collect()}
+    ids = sorted(sim)
+    ref = {}
+    for x, a in enumerate(ids):
+        for b in ids[x + 1:]:
+            ham = bin(sim[a] ^ sim[b]).count("1")
+            if ham <= 7 and any((sim[a] >> s) & 255 == (sim[b] >> s) & 255
+                                for s in range(0, 64, 8)):
+                ref[(a, b)] = ham
+    got = {
+        (r.id_a, r.id_b): r.hamming
+        for r in hamming_band_pairs(sims, "sim", "doc_id", max_hamming=7, bands=8).collect()
+    }
+    assert got == ref
+    assert ref[(0, 200)] == ref[(1, 201)] == 0
+
+
 def test_connected_min_reps_chain(spark):
     """Component labeling must be TRANSITIVE: in pairs (10,50),(30,50) the
     min-id single-hop rule would keep 30 (it never appears as id_b), but all
@@ -126,6 +157,92 @@ def test_connected_min_reps_chain(spark):
     )
     reps = {r.node: r.rep for r in connected_min_reps(pairs).collect()}
     assert reps == {10: 10, 50: 10, 30: 10, 70: 70, 80: 70, 90: 70}
+
+
+def _union_find_reps(edges) -> dict:
+    """Pure-Python union-find: each node's component minimum (the smaller
+    root always wins a union, so every root is its component's min id)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _graphs():
+    import random
+
+    rng = random.Random(5)
+    graphs = {}
+    for seed in (1, 2, 3):
+        g = random.Random(seed)
+        graphs[f"random{seed}"] = [
+            tuple(g.sample(range(1, 80), 2)) for _ in range(g.randint(20, 70))
+        ]
+    path = [1] + rng.sample(range(2, 200), 29)  # 30 nodes, min at one end
+    graphs["path30"] = list(zip(path, path[1:]))
+    graphs["star"] = [(50, leaf) for leaf in (7, 60, 61, 62, 3, 90, 91)]
+    graphs["empty"] = []
+    return graphs
+
+
+@pytest.mark.parametrize("name", sorted(_graphs()))
+def test_connected_min_reps_matches_union_find(spark, name):
+    """Every node's label is its component's min id, as a pure-Python
+    union-find computes it: random multi-component graphs (either edge
+    orientation, repeated edges), a 30-node path whose min sits at one end
+    (29 propagation hops), a star whose centre is not the min, and an
+    empty edge set (no rows)."""
+    from politics_crawler_spark.operators.dedup import connected_min_reps
+
+    edges = _graphs()[name]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = {r.node: r.rep for r in connected_min_reps(pairs).collect()}
+    assert got == _union_find_reps(edges)
+
+
+def test_connected_min_reps_raises_unconverged(spark):
+    """A 10-node path needs more than two propagation steps: with
+    ``max_iters=2`` the labels are still moving, and that is an error."""
+    from politics_crawler_spark.operators.dedup import connected_min_reps
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(10)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_min_reps(pairs, max_iters=2)
+
+
+def test_drop_near_dups_reads_pairs_once(spark):
+    """``drop_near_dups`` evaluates each ``pairs`` row exactly once — the
+    call plus an action on its result — since ``pairs`` is usually a whole
+    pair cascade, and an undirected union of two branches over it would
+    run that cascade twice."""
+    from pyspark.sql.types import LongType
+
+    from politics_crawler_spark.operators.dedup import drop_near_dups
+
+    evals = spark.sparkContext.accumulator(0)
+
+    def tap(x):
+        evals.add(1)
+        return x
+
+    tap_udf = F.udf(tap, LongType()).asNondeterministic()
+    edges = [(1, 4), (4, 9), (2, 3), (5, 6), (6, 7)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long").select(
+        tap_udf("id_a").alias("id_a"), "id_b"
+    )
+    docs = spark.range(1, 11).select(F.col("id").alias("doc_id"))
+    out = drop_near_dups(docs, pairs)
+    assert {r.doc_id for r in out.collect()} == {1, 2, 5, 8, 10}
+    assert evals.value == len(edges)
 
 
 def test_minhash_dedup_transitive_chain(spark):
@@ -289,8 +406,8 @@ def _boundary_pairs(n_pairs: int, seed: int = 11):
 
 
 def test_cascades_at_the_jaccard_boundary(spark):
-    """q15 and q16 cascades on ~400 pairs straddling the 0.5 decision
-    threshold. Neither emits a pair under J = 0.5 (the exact verify
+    """q15's cascade (``near_dup_pairs``) and q16's on ~400 pairs straddling
+    the 0.5 decision threshold. Neither emits a pair under J = 0.5 (the exact verify
     decides), and q15's recall per J bucket tracks the 16×4 banding
     S-curve 1 − (1 − J⁴)¹⁶: at least its mean over the bucket minus 3σ."""
     import math
@@ -298,26 +415,24 @@ def test_cascades_at_the_jaccard_boundary(spark):
     from politics_crawler_spark.operators.dedup import (
         exact_jaccard_verify,
         hamming_band_pairs,
-        lsh_candidate_pairs,
         minhash_signatures,
+        near_dup_pairs,
         sig_jaccard_refine,
     )
 
     rows, jac = _boundary_pairs(400)
     texts = dict(rows)
     docs = spark.createDataFrame(rows, "doc_id long, text string")
+    q15 = {(r.id_a, r.id_b) for r in near_dup_pairs(docs, threshold=0.5).collect()}
     sk = minhash_signatures(docs, simhash=True).localCheckpoint(eager=True)
-    sigs = sk.select("doc_id", "sig")
-
-    def verified(cands):
-        ref = sig_jaccard_refine(cands, sigs, min_est=0.35)
-        out = exact_jaccard_verify(ref, docs, k=5, threshold=0.5)
-        return {(r.id_a, r.id_b) for r in out.collect()}
-
-    q15 = verified(lsh_candidate_pairs(sigs, est_threshold=0.0))
-    q16 = verified(hamming_band_pairs(
+    cands = hamming_band_pairs(
         sk.select("doc_id", "sim"), "sim", "doc_id", max_hamming=7, bands=8
-    ))
+    )
+    ref = sig_jaccard_refine(cands, sk.select("doc_id", "sig"), min_est=0.35)
+    q16 = {
+        (r.id_a, r.id_b)
+        for r in exact_jaccard_verify(ref, docs, k=5, threshold=0.5).collect()
+    }
 
     def grams(t):
         return {t[i:i + 5] for i in range(len(t) - 4)}
