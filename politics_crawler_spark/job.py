@@ -83,7 +83,7 @@ def main(argv=None):
         checkpoint_dir=args.checkpoint,
     )
     res.extracted.write.mode("overwrite").parquet(args.out)
-    # after the terminal write: the per-stage Observations have resolved
+    # after the terminal write: the terminal extraction observation has resolved
     res.metrics_table(spark).write.mode("overwrite").parquet(args.out + "_metrics")
     print(json.dumps({"rounds": res.rounds, "metrics": res.metrics}))
 

@@ -4,11 +4,11 @@ with typed metadata (task directive).
 Image dimension decode is REAL for the three formats the reference's
 crawlers actually collect (``Images`` column, dcinside_politics.py:52-53):
 PNG (IHDR), GIF (logical screen descriptor), JPEG (SOF frame header) —
-pure-stdlib ``struct`` header parsing, no PIL/cv2 dependency. Pixel-level
-feature vectors and audio/video decode remain STUBBED (the container has
-no media libraries; a deterministic fake backs the tests) — the "feature"
-emitted for parsed images is an 8-bin byte histogram, a real but
-byte-level (not pixel-level) descriptor.
+pure-stdlib ``struct`` header parsing, no PIL/cv2 dependency. Any other
+image format reports status ``no_decoder``; pixel-level feature vectors
+and audio/video decode remain STUBBED — the "feature" emitted for parsed
+images is an 8-bin byte histogram, a real but byte-level (not
+pixel-level) descriptor.
 
 Design for 100 TB: media bytes never shuffle — decode/feature UDFs run
 where the scan runs (mapInPandas over the parquet row groups); only the
@@ -115,31 +115,7 @@ def _byte_histogram(payload: bytes, bins: int = 8) -> list[float]:
     return [round(float(c) / n, 6) for c in counts]
 
 
-def _decode_image(payload: bytes, deterministic_fake: bool):
-    """Real header decode (PNG/GIF/JPEG dims + byte histogram); pixel-level
-    decode for other formats still needs PIL/cv2 (absent here)."""
-    hdr = parse_image_header(payload)
-    if hdr is not None:
-        _, w, h = hdr
-        return w, h, _byte_histogram(payload)
-    try:
-        import PIL.Image  # noqa: F401
-    except ImportError:
-        if not deterministic_fake:
-            raise NotImplementedError(
-                "non-PNG/GIF/JPEG image decode requires PIL/cv2 (not in "
-                "this container); pass deterministic_fake=True for the "
-                "test path"
-            )
-        # deterministic fake: dims/features derived from payload bytes only
-        n = len(payload or b"")
-        w, h = 16 + n % 64, 16 + (n // 64) % 64
-        feat = [float((payload[i % max(1, n)] if n else 0)) / 255.0 for i in range(8)]
-        return w, h, feat
-    raise NotImplementedError("real PIL path not wired in-sandbox")
-
-
-def extract_media_features(df: DataFrame, deterministic_fake: bool = True) -> DataFrame:
+def extract_media_features(df: DataFrame) -> DataFrame:
     """mapInPandas media feature extraction — batch-shaped like production
     (one Arrow batch of payloads in, one slim feature frame out)."""
 
@@ -155,22 +131,16 @@ def extract_media_features(df: DataFrame, deterministic_fake: bool = True) -> Da
             for media_id, kind, payload in zip(
                 pdf["media_id"], pdf["kind"], pdf["payload"]
             ):
-                try:
-                    if kind == "image":
-                        w, h, feat = _decode_image(payload, deterministic_fake)
-                        rows.append(
-                            (media_id, kind, len(payload or b""), w, h,
-                             feat, "ok")
-                        )
-                    else:  # audio/video: byte-level metadata only (stub)
-                        rows.append(
-                            (media_id, kind, len(payload or b""), None,
-                             None, None, "stub")
-                        )
-                except NotImplementedError:
-                    rows.append(
-                        (media_id, kind, None, None, None, None, "no_decoder")
-                    )
+                n = len(payload or b"")
+                if kind != "image":  # audio/video: byte-level metadata only (stub)
+                    rows.append((media_id, kind, n, None, None, None, "stub"))
+                    continue
+                hdr = parse_image_header(payload)
+                if hdr is None:  # other formats need a pixel decoder (PIL/cv2)
+                    rows.append((media_id, kind, None, None, None, None, "no_decoder"))
+                else:
+                    rows.append((media_id, kind, n, hdr[1], hdr[2],
+                                 _byte_histogram(payload), "ok"))
             yield pd.DataFrame(rows, columns=cols)
 
     return df.mapInPandas(_run, schema=FEATURES)

@@ -251,30 +251,37 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
 # cosine verify → transitive collapse.
 # --------------------------------------------------------------------------
 
-def hyperplane_signature(seed: int = 424242):
+# Hyperplane seed and band count of the near-dup signature: 8 bands of 8
+# bits give the pigeonhole radius below.
+HYPERPLANE_SEED = 424242
+NEARDUP_BANDS = 8
+
+
+def hyperplane_signature():
     """64-bit hyperplane signature column function: bit j = sign(v ·
-    plane_j), planes ``default_rng(seed).standard_normal((64, d))``."""
+    plane_j), planes drawn as
+    ``default_rng(HYPERPLANE_SEED).standard_normal((64, d))``."""
     udf = hyperplane_codes(
-        lambda d: np.random.default_rng(seed).standard_normal((1, 64, d))
+        lambda d: np.random.default_rng(HYPERPLANE_SEED).standard_normal((1, 64, d))
     )
     return lambda col: udf(col)[0]
 
 
 def embedding_neardup_pairs(df: DataFrame, vec_col: str = "embedding",
-                            id_col: str = "vec_id", threshold: float = 0.99,
-                            bands: int = 8, seed: int = 424242) -> DataFrame:
+                            id_col: str = "vec_id",
+                            threshold: float = 0.99) -> DataFrame:
     """``(id_a, id_b, cos)`` pairs with exact cosine >= threshold, found at
-    scale: 64-bit hyperplane signatures band into ``bands`` buckets
-    (pigeonhole: any pair within Hamming ``bands - 1`` is guaranteed a
-    candidate — at threshold 0.99 the expected signature Hamming is ~1-2
+    scale: 64-bit hyperplane signatures band into ``NEARDUP_BANDS`` buckets
+    (pigeonhole: any pair within Hamming ``NEARDUP_BANDS - 1`` is guaranteed
+    a candidate — at threshold 0.99 the expected signature Hamming is ~1-2
     bits, far inside the radius), candidates get the EXACT cosine
     (zip_with/aggregate, JVM codegen) and the sketch never decides a drop.
     The only joins are bucketed equi-joins; vectors join back once per
     side onto the (small) candidate set."""
     from .dedup import hamming_band_pairs
 
-    sigs = df.select(id_col, hyperplane_signature(seed)(F.col(vec_col)).alias("sim"))
-    cand = hamming_band_pairs(sigs, "sim", id_col, bands - 1, bands)
+    sigs = df.select(id_col, hyperplane_signature()(F.col(vec_col)).alias("sim"))
+    cand = hamming_band_pairs(sigs, "sim", id_col, NEARDUP_BANDS - 1, NEARDUP_BANDS)
     a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
     j = cand.select("id_a", "id_b").join(a, on="id_a").join(b, on="id_b")
@@ -287,8 +294,8 @@ def embedding_neardup_pairs(df: DataFrame, vec_col: str = "embedding",
 
 
 def embedding_neardup_dedup(df: DataFrame, vec_col: str = "embedding",
-                            id_col: str = "vec_id", threshold: float = 0.99,
-                            bands: int = 8, seed: int = 424242) -> DataFrame:
+                            id_col: str = "vec_id",
+                            threshold: float = 0.99) -> DataFrame:
     """Drop every vector whose embedding is a near-duplicate of a
     lower-id vector, transitively (``dedup.drop_near_dups``, the same
     collapse as minhash_dedup). ``df`` is consumed several times
@@ -296,5 +303,5 @@ def embedding_neardup_dedup(df: DataFrame, vec_col: str = "embedding",
     should persist it."""
     from .dedup import drop_near_dups
 
-    pairs = embedding_neardup_pairs(df, vec_col, id_col, threshold, bands, seed)
+    pairs = embedding_neardup_pairs(df, vec_col, id_col, threshold)
     return drop_near_dups(df, pairs, id_col)

@@ -19,18 +19,21 @@ PAGES = T.StructType(
     ]
 )
 
+# One crawl round's list frontier (plans/crawl.py): a row per list page of
+# every active board's depth slice, with the board settings later stages
+# read.
 FRONTIER = T.StructType(
     [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("host", T.StringType(), False),
+        T.StructField("url", T.StringType(), True),
+        T.StructField("board", T.StringType(), True),
         T.StructField("community", T.StringType(), True),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("views", T.LongType(), True),
+        T.StructField("site", T.StringType(), True),
+        T.StructField("host", T.StringType(), True),
+        T.StructField("encoding", T.StringType(), True),
+        T.StructField("min_views", T.LongType(), True),
+        T.StructField("site_rank", T.IntegerType(), True),
         T.StructField("page_no", T.IntegerType(), True),
-        T.StructField("row_idx", T.IntegerType(), True),
-        T.StructField("round", T.IntegerType(), False),
+        T.StructField("check_detail_date", T.BooleanType(), True),
     ]
 )
 
@@ -49,19 +52,6 @@ ROBOTS = T.StructType(
         T.StructField("rules", T.StringType(), True),
         T.StructField("fetched_ts", T.TimestampType(), True),
         T.StructField("allow_all", T.BooleanType(), False),
-    ]
-)
-
-CHECKPOINT = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("frontier_offset", T.LongType(), False),
-        T.StructField("bloom_shard_version", T.LongType(), False),
-        T.StructField("fetch_count", T.LongType(), False),
-        T.StructField("extract_count", T.LongType(), False),
-        T.StructField("round", T.IntegerType(), False),
-        T.StructField("committed_ts", T.TimestampType(), True),
     ]
 )
 

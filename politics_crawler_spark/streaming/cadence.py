@@ -91,9 +91,10 @@ def crawl_tick(
     out_dir = os.path.join(state_dir, f"extracted/run={k}")
     res.extracted.write.mode("overwrite").parquet(out_dir)
     res.seen.write.mode("overwrite").parquet(os.path.join(state_dir, f"seen/v{k}"))
+    # the written row count, from the METRICS rows the write resolved
+    n = sum(r["n_out"] for r in res.metric_rows() if r["stage"] == "extract")
     for c in res.caches:
         c.unpersist()
-    n = spark.read.parquet(out_dir).count()
     publish_json(state_dir, {"last_run": k, "n_shards": n_shards})
     return {"run": k, "extracted": n}
 

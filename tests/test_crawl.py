@@ -345,12 +345,55 @@ def test_metrics_table_bogus_key_raises(spark, pages_df):
 
     res = run_crawl(spark, pages_df, n_shards=8, max_rounds=1)
     res.extracted.count()
-    # corrupt one terminal entry's round list so metrics_table asks the
-    # (resolved) observation for metric keys that were never registered
-    (rnd, st) = res.stage_obs[-1]
-    assert "ext_rounds" in st
-    st["ext_rounds"] = [9999]
+    # relabel the one round so metrics_table asks the (resolved) terminal
+    # observation for metric keys that were never registered
+    assert res.extract_obs is not None and len(res.metrics) == 1
+    res.metrics[0]["round"] = 9999
     with pytest.raises(KeyError):
         res.metrics_table(spark).collect()
     for c in res.caches:
+        c.unpersist()
+
+
+def test_round_counts_are_plain_values(spark, pages_df, tmp_path):
+    """Every round's list/select/seen counts are plain integers in its
+    ``metrics`` entry when run_crawl returns, before any terminal action,
+    and state.json commits them. A resumed crawl's rows for the inherited
+    rounds come from state.json's metrics alone."""
+    import json
+    import os
+
+    from politics_crawler_spark.plans.crawl import read_json
+
+    ck = str(tmp_path / "ck")
+    partial = run_crawl(
+        spark, pages_df, n_shards=8, max_rounds=2, checkpoint_dir=ck, pages_per_round=2
+    )
+    counts = [(m["candidates"], m["selected"], m["unseen"]) for m in partial.metrics]
+    assert len(counts) == 2
+    for c in counts:
+        assert all(type(v) is int for v in c)
+        assert c[0] >= c[1] >= c[2] > 0
+    state = read_json(ck)
+    assert state["metrics"] == partial.metrics and "stages" not in state
+    # plant a count only state.json knows
+    state["metrics"][0]["candidates"] += 1000
+    with open(os.path.join(ck, "state.json"), "w") as f:
+        json.dump(state, f)
+    for c in partial.caches:
+        c.unpersist()
+
+    resumed = run_crawl(
+        spark, pages_df, n_shards=8, checkpoint_dir=ck, pages_per_round=2
+    )
+    assert resumed.rounds > 2
+    for m in resumed.metrics:
+        assert all(type(m[k]) is int for k in ("candidates", "selected", "unseen"))
+    resumed.extracted.count()
+    rows = {(r.round, r.stage): r for r in resumed.metrics_table(spark).collect()}
+    assert rows[(0, "list")].n_out == rows[(0, "select")].n_in == counts[0][0] + 1000
+    for rnd, (n_cand, n_sel, n_uns) in enumerate(counts):
+        assert rows[(rnd, "select")].n_out == rows[(rnd, "seen")].n_in == n_sel
+        assert rows[(rnd, "seen")].n_out == rows[(rnd, "extract")].n_in == n_uns
+    for c in resumed.caches:
         c.unpersist()

@@ -68,3 +68,23 @@ def test_crawl_with_blocking_robots(spark, pages_df):
     res = run_crawl(spark, pages_df, n_shards=8, robots=robots)
     assert res.extracted.filter(F.col("url").contains("theqoo.net/hot/")).count() == 0
     assert res.extracted.count() > 0
+
+
+def test_crawl_with_two_robots_rows_per_host_keeps_urls_unique(spark, pages_df):
+    """ROBOTS carries fetched_ts, so a host fetched twice has two rows. The
+    gate is a left join; it must run before the in-round dedup, or every
+    candidate of that host reaches the output twice."""
+    import datetime as dt
+
+    robots = robots_df(
+        spark,
+        [
+            {"host": "theqoo.net", "rules": "/private/",
+             "fetched_ts": dt.datetime(2024, 1, d), "allow_all": False}
+            for d in (1, 2)
+        ],
+    )
+    res = run_crawl(spark, pages_df, n_shards=8, robots=robots, max_rounds=1)
+    urls = [r.url for r in res.extracted.select("url").collect()]
+    assert any("theqoo.net" in u for u in urls)
+    assert len(urls) == len(set(urls))
