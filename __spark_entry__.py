@@ -311,10 +311,10 @@ def q16_simhash_pairs(spark, sf):
     # refine joins.
     sk = minhash_signatures(d, simhash=True).localCheckpoint(eager=True)
     cands = hamming_band_pairs(
-        sk.select("doc_id", "sim"), "sim", "doc_id", max_hamming=7, bands=8
+        sk.select("doc_id", "sim"), "doc_id", max_hamming=7, bands=8
     )
     ref = sig_jaccard_refine(cands, sk.select("doc_id", "sig"), min_est=0.35)
-    return exact_jaccard_verify(ref, d, k=5, threshold=0.5).orderBy("id_a", "id_b")
+    return exact_jaccard_verify(ref, d, threshold=0.5).orderBy("id_a", "id_b")
 
 
 _ANN_GT_ROWS: list | None = None
@@ -621,7 +621,7 @@ def q31_ngram_jaccard(spark, sf):
         F.concat(F.lit("dup marker "), F.col("text")).alias("text"),
     )
     d = base.unionByName(dups)
-    return ngram_jaccard_pairs(d, n=3, threshold=0.5).orderBy("id_a", "id_b")
+    return ngram_jaccard_pairs(d, threshold=0.5).orderBy("id_a", "id_b")
 
 
 def q33_minhash_dedup(spark, sf):
@@ -650,7 +650,7 @@ def q32_ivf_ann(spark, sf):
 
     emb = _cached_input(spark, "emb", lambda: synthesize_embeddings(spark))
     queries_df = emb.filter(F.col("vec_id") < DEFAULT_QUERIES)
-    approx = ivf_topk(emb, queries_df, k=10, n_cells=64, n_probe=4)
+    approx = ivf_topk(emb, queries_df, n_cells=64)
     return _mean_recall_contract(spark, approx, DEFAULT_QUERIES)
 
 
@@ -701,7 +701,7 @@ def q35_embedding_neardup_dedup(spark, sf):
     corpus = _cached_input(
         spark, "neardup", lambda: synthesize_neardup_embeddings(spark)
     )
-    surv = embedding_neardup_dedup(corpus, threshold=0.99).select("vec_id")
+    surv = embedding_neardup_dedup(corpus).select("vec_id")
     gt = spark.range(NEARDUP_BASE).select(F.col("id").alias("vec_id"))
     j = gt.withColumn("g", F.lit(1)).join(
         surv.withColumn("s", F.lit(1)), on="vec_id", how="full_outer"
@@ -796,7 +796,7 @@ def q39_ngram_freq(spark, sf):
     (ngram, doc_id) partials — never the text."""
     from politics_crawler_spark.operators.webquality import ngram_freq
 
-    return ngram_freq(_t(spark, sf, "documents"), n=2, min_count=2)
+    return ngram_freq(_t(spark, sf, "documents"))
 
 
 def q40_media_header_decode(spark, sf):
@@ -989,7 +989,7 @@ def q47_dup_ngram_coverage(spark, sf):
     from politics_crawler_spark.operators.corpus_quality import dup_ngram_coverage
 
     d = _t(spark, sf, "documents")
-    cov = dup_ngram_coverage(d, n=5, min_docs=2)
+    cov = dup_ngram_coverage(d, n=5)
     return cov.select(
         "doc_id",
         "n_tokens",
@@ -1014,7 +1014,7 @@ def q48_source_quality_gate(spark, sf):
 
     d = _t(spark, sf, "documents")
     return source_quality_profile(
-        d, min_docs=5, max_mean_punct=0.05, min_mean_stop=0.06
+        d, min_docs=5, min_mean_stop=0.06
     ).orderBy("source")
 
 
@@ -1032,7 +1032,7 @@ def q49_drop_dup_spans(spark, sf):
     )
 
     d = _t(spark, sf, "documents")
-    return drop_dup_ngram_spans(d, n=5, min_docs=2)
+    return drop_dup_ngram_spans(d, n=5)
 
 
 _BM25_QUERIES = [
@@ -1077,7 +1077,7 @@ def q51_cardinality_contract(spark, sf):
     # doubles the exploded token stream through the partial aggregates,
     # which costs more than the second lightweight scan it saves. The
     # two-scan shape stands.
-    prof = cardinality_profile(d, group_col="source", relative_sd=0.01)
+    prof = cardinality_profile(d)
     exact = (
         d.select("source", F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("source")

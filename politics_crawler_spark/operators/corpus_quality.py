@@ -38,6 +38,10 @@ Scale notes (100 TB):
 - source_quality_profile: per-source aggregation is tiny (one row per
   source/host — ~10^7 rows web-scale); gating joins it back broadcast.
 
+Input columns: documents are read as ``doc_id`` and ``text`` (plus
+``source`` for the source profile and gate); scored frames carry
+``bits_per_token``.
+
 The reference has no corpus-statistics layer (per-site CSV append only,
 crawler_schedule.py:150-179); this module is engine-added surface.
 """
@@ -55,9 +59,7 @@ from .textstats import ngrams, punct_ratio, stopword_ratio, tokens
 # ---------------------------------------------------------------------------
 
 
-def unigram_lm(
-    corpus: DataFrame, text_col: str = "text", max_vocab: int | None = None
-) -> DataFrame:
+def unigram_lm(corpus: DataFrame, max_vocab: int | None = None) -> DataFrame:
     """Train the unigram model: (tok, logp) with add-one (Laplace)
     smoothing over the observed vocabulary — logp = log2((c+1)/(N+V)).
 
@@ -80,7 +82,7 @@ def unigram_lm(
     # unigram_lm call in a long-lived session left another vocab table in
     # the CacheManager forever.
     cnt = (
-        corpus.select(F.explode(tokens(F.col(text_col))).alias("tok"))
+        corpus.select(F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("c"))
         .persist()
@@ -125,13 +127,7 @@ def oov_logp(lm: DataFrame) -> float:
     return math.log2(1.0 / (row["n"] + row["v"]))
 
 
-def lm_score(
-    docs: DataFrame,
-    lm: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    oov: float | None = None,
-) -> DataFrame:
+def lm_score(docs: DataFrame, lm: DataFrame, oov: float | None = None) -> DataFrame:
     """Score every document with mean token surprisal in bits
     (CCNet's perplexity proxy: bits_per_token = log2(perplexity)).
 
@@ -150,11 +146,11 @@ def lm_score(
     if oov is None:
         oov = oov_logp(lm)
     t = docs.select(
-        F.col(id_col), F.explode_outer(tokens(F.col(text_col))).alias("tok")
+        F.col("doc_id"), F.explode_outer(tokens(F.col("text"))).alias("tok")
     )
     return (
         t.join(F.broadcast(lm.select("tok", "logp")), "tok", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("tok").cast("long").alias("n_tokens"),
             F.round(
@@ -173,24 +169,20 @@ def lm_score(
     )
 
 
-def suggest_ccnet_thresholds(
-    scored: DataFrame,
-    fracs: tuple[float, float] = (1 / 3, 2 / 3),
-    accuracy: int = 10000,
-    bits_col: str = "bits_per_token",
-) -> tuple[float, float]:
-    """Bootstrap (head, middle) cut points for ccnet_bucket from the
-    corpus's own score distribution WITHOUT a global sort:
+def suggest_ccnet_thresholds(scored: DataFrame) -> tuple[float, float]:
+    """Bootstrap (head, middle) cut points for ccnet_bucket — the 1/3 and
+    2/3 quantiles of ``bits_per_token`` — from the corpus's own score
+    distribution WITHOUT a global sort:
     percentile_approx is a mergeable per-partition sketch
     (Greenwald-Khanna) with one tiny final merge — the only way a
     quantile over 10^10 docs is computable without funnelling the corpus
     through a single-partition orderBy. CCNet itself uses frozen
     per-language constants; this helper is for DERIVING those constants
     on a new corpus. The result is approximate by design (error ≤
-    1/accuracy of rank), so freeze the returned values before using them
+    1/10000 of rank), so freeze the returned values before using them
     as the reproducible bucketing contract."""
     row = scored.select(
-        F.percentile_approx(bits_col, list(fracs), accuracy).alias("q")
+        F.percentile_approx("bits_per_token", [1 / 3, 2 / 3], 10000).alias("q")
     ).first()
     return tuple(row["q"])
 
@@ -211,12 +203,13 @@ def ccnet_bucket(bits_col: Column, head: float, middle: float) -> Column:
 # Cross-document duplicated-n-gram coverage (Gopher A1.1 / Dolma)
 # ---------------------------------------------------------------------------
 
+# An n-gram is duplicated once it occurs in this many distinct documents.
+DUP_MIN_DOCS = 2
 
-def _covered_positions(
-    df: DataFrame, n: int, min_docs: int, id_col: str, text_col: str
-) -> DataFrame:
+
+def _covered_positions(df: DataFrame, n: int) -> DataFrame:
     """Per-document sorted array ``_cov`` of the distinct token positions
-    covered by at least one n-gram occurring in ≥ min_docs DISTINCT
+    covered by at least one n-gram occurring in ≥ DUP_MIN_DOCS DISTINCT
     documents — the shared core of dup_ngram_coverage (measure) and
     drop_dup_ngram_spans (transform). Docs with no covered position are
     absent (consumers left-join and coalesce).
@@ -239,7 +232,7 @@ def _covered_positions(
     # project the token array ONCE; ngrams() then runs directly over it
     # (the collapse-safe Project(_t) → Filter → Project shape, see
     # textstats.ngrams). Gram hashes: 64-bit collisions only ADD coverage.
-    t = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_t"))
+    t = df.select(F.col("doc_id"), tokens(F.col("text")).alias("_t"))
 
     # ONE gram-hash pass shared by both branches (r6): the detection branch
     # and the position branch each re-ran tokenize + 14.5M concat+xxhash64
@@ -249,18 +242,18 @@ def _covered_positions(
     # freed by the ContextCleaner when the plan dies.
     ga = (
         t.filter(F.size("_t") >= n)
-        .select(F.col(id_col), ngrams(F.col("_t"), n).alias("_g"))
+        .select(F.col("doc_id"), ngrams(F.col("_t"), n).alias("_g"))
         .localCheckpoint(eager=True)
     )
     grams = ga.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode("_g").alias("gpos", "gh"),
     )
     dup = (
         ga.select(F.explode(F.array_distinct("_g")).alias("gh"))
         .groupBy("gh")
         .agg(F.count("*").alias("nd"))
-        .filter(F.col("nd") >= min_docs)
+        .filter(F.col("nd") >= DUP_MIN_DOCS)
         .select("gh")
     )
     # Per-doc covered-position ARRAY instead of exploded (doc_id, p) rows
@@ -275,10 +268,10 @@ def _covered_positions(
     # ≥1 covered position appear.
     return (
         grams.join(dup, "gh")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.collect_set("gpos").alias("_gp"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.array_sort(
                 F.array_distinct(
                     F.flatten(
@@ -293,29 +286,23 @@ def _covered_positions(
     )
 
 
-def dup_ngram_coverage(
-    df: DataFrame,
-    n: int = 5,
-    min_docs: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def dup_ngram_coverage(df: DataFrame, n: int = 5) -> DataFrame:
     """Fraction of each document's token positions covered by at least one
-    n-gram that occurs in ≥ min_docs DISTINCT documents — the
+    n-gram that occurs in ≥ DUP_MIN_DOCS DISTINCT documents — the
     cross-document duplicated-n-gram signal Gopher/Dolma gate on.
 
     Returns (doc_id, n_tokens, n_covered, dup_coverage) for EVERY doc.
     Plan shape: see _covered_positions; the per-doc rollup adds one more
     fixed-width (doc_id)-keyed exchange.
     """
-    covered = _covered_positions(df, n, min_docs, id_col, text_col).select(
-        F.col(id_col), F.size("_cov").cast("long").alias("n_covered")
+    covered = _covered_positions(df, n).select(
+        F.col("doc_id"), F.size("_cov").cast("long").alias("n_covered")
     )
     base = df.select(
-        F.col(id_col), F.size(tokens(F.col(text_col))).cast("long").alias("n_tokens")
+        F.col("doc_id"), F.size(tokens(F.col("text"))).cast("long").alias("n_tokens")
     )
-    return base.join(covered, id_col, "left").select(
-        id_col,
+    return base.join(covered, "doc_id", "left").select(
+        "doc_id",
         "n_tokens",
         F.coalesce("n_covered", F.lit(0)).cast("long").alias("n_covered"),
         F.round(
@@ -329,13 +316,7 @@ def dup_ngram_coverage(
     )
 
 
-def drop_dup_ngram_spans(
-    df: DataFrame,
-    n: int = 5,
-    min_docs: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def drop_dup_ngram_spans(df: DataFrame, n: int = 5) -> DataFrame:
     """REMOVE every token position covered by a cross-document duplicated
     n-gram and rebuild the text from the survivors — the transform
     counterpart of dup_ngram_coverage, i.e. the C4 "discard any
@@ -357,16 +338,16 @@ def drop_dup_ngram_spans(
     are the dup-gram count and the (doc_id, gpos) covered-set aggregate.
     n_kept = n_tokens − |_cov| exactly, because _cov ⊆ [0, n_tokens).
     """
-    cov = _covered_positions(df, n, min_docs, id_col, text_col)
-    t = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_t"))
+    cov = _covered_positions(df, n)
+    t = df.select(F.col("doc_id"), tokens(F.col("text")).alias("_t"))
     kept_arr = F.when(F.col("_cov").isNull(), F.col("_t")).otherwise(
         F.filter(
             F.col("_t"),
             lambda tok, i: ~F.array_contains(F.col("_cov"), i),
         )
     )
-    return t.join(cov, id_col, "left").select(
-        F.col(id_col),
+    return t.join(cov, "doc_id", "left").select(
+        F.col("doc_id"),
         F.size("_t").cast("long").alias("n_tokens"),
         # greatest(…, 0): size(null array) is -1, and the old posexplode
         # path reported n_kept=0 for null-text docs — keep that exact value
@@ -385,13 +366,7 @@ def drop_dup_ngram_spans(
 
 
 def source_quality_profile(
-    df: DataFrame,
-    min_docs: int = 5,
-    max_mean_punct: float = 0.05,
-    min_mean_stop: float = 0.0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
+    df: DataFrame, min_docs: int = 5, min_mean_stop: float = 0.0
 ) -> DataFrame:
     """Judge each SOURCE (site/domain) on its aggregate document quality —
     the RefinedWeb-style stage that drops whole domains whose average
@@ -400,7 +375,7 @@ def source_quality_profile(
 
     Returns (source, n_docs, mean_punct, mean_stop, keep_source): keep iff
     the source has ≥ min_docs documents AND mean punctuation ratio ≤
-    max_mean_punct AND mean stopword ratio ≥ min_mean_stop.
+    0.05 AND mean stopword ratio ≥ min_mean_stop.
 
     Plan shape: per-document ratios are whole-stage-codegen expressions;
     the only exchange is one aggregation keyed by source (one output row
@@ -408,32 +383,30 @@ def source_quality_profile(
     The profile is what a pipeline broadcast-joins back to gate rows.
     """
     stats = df.select(
-        F.col(source_col),
-        punct_ratio(F.col(text_col)).alias("_p"),
-        stopword_ratio(F.col(text_col)).alias("_s"),
+        F.col("source"),
+        punct_ratio(F.col("text")).alias("_p"),
+        stopword_ratio(F.col("text")).alias("_s"),
     )
-    prof = stats.groupBy(source_col).agg(
+    prof = stats.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.round(F.avg("_p"), 6).alias("mean_punct"),
         F.round(F.avg("_s"), 6).alias("mean_stop"),
     )
     return prof.select(
-        source_col,
+        "source",
         "n_docs",
         "mean_punct",
         "mean_stop",
         (
             (F.col("n_docs") >= min_docs)
-            & (F.col("mean_punct") <= max_mean_punct)
+            & (F.col("mean_punct") <= 0.05)
             & (F.col("mean_stop") >= min_mean_stop)
         ).alias("keep_source"),
     )
 
 
-def source_gate(
-    df: DataFrame, profile: DataFrame, source_col: str = "source"
-) -> DataFrame:
+def source_gate(df: DataFrame, profile: DataFrame) -> DataFrame:
     """Keep only rows whose source passed the profile — broadcast semi
     join against the (tiny, one-row-per-source) profile table."""
-    keep = profile.filter(F.col("keep_source")).select(source_col)
-    return df.join(F.broadcast(keep), source_col, "semi")
+    keep = profile.filter(F.col("keep_source")).select("source")
+    return df.join(F.broadcast(keep), "source", "semi")

@@ -42,6 +42,9 @@ Scale notes (100 TB):
   running sum windows partition-parallel WITHIN buckets. At 10^10 docs
   and bucket_docs=10^6 the sequential structure is 10^4 rows.
 
+Input columns: documents are read as ``doc_id`` (a long) and ``text``,
+plus ``source`` for the mixture profile.
+
 The reference has no corpus-level curation at all (it appends rows to
 per-site CSVs, crawler_schedule.py:150-179); this module is engine-added
 surface.
@@ -55,14 +58,8 @@ from pyspark.sql import functions as F
 from .textstats import ngrams, tokens
 
 
-def _contamination_hits(
-    train: DataFrame,
-    evalset: DataFrame,
-    n: int,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """(id, n_contam_grams) for train docs with ≥1 eval n-gram — the
+def _contamination_hits(train: DataFrame, evalset: DataFrame, n: int) -> DataFrame:
+    """(doc_id, n_contam_grams) for train docs with ≥1 eval n-gram — the
     shared core of decontaminate_profile and contaminated_ids.
 
     Grams are keyed by MULTI-ARG xxhash64 over the n token slots (r6):
@@ -85,41 +82,29 @@ def _contamination_hits(
     """
     gram_hashes = F.array_distinct(ngrams(F.col("_t"), n))
     eg = (
-        evalset.select(tokens(F.col(text_col)).alias("_t"))
+        evalset.select(tokens(F.col("text")).alias("_t"))
         .select(F.explode(gram_hashes).alias("gh"))
         .distinct()
     )
     tg = train.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("_t")
-    ).select(F.col(id_col), F.explode(gram_hashes).alias("gh"))
+        F.col("doc_id"), tokens(F.col("text")).alias("_t")
+    ).select(F.col("doc_id"), F.explode(gram_hashes).alias("gh"))
     # per-doc gram hashes are distinct already (array_distinct) ⇒ count(*)
     # after the semi-ish inner join counts distinct matched grams
     return (
         tg.join(F.broadcast(eg), "gh")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_contam_grams"))
     )
 
 
-def contaminated_ids(
-    train: DataFrame,
-    evalset: DataFrame,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def contaminated_ids(train: DataFrame, evalset: DataFrame, n: int = 8) -> DataFrame:
     """Just the ids to drop — the form a pipeline left_anti-joins against
     (broadcast: contaminated sets are bounded by the eval set's reach)."""
-    return _contamination_hits(train, evalset, n, id_col, text_col).select(id_col)
+    return _contamination_hits(train, evalset, n).select("doc_id")
 
 
-def decontaminate_profile(
-    train: DataFrame,
-    evalset: DataFrame,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def decontaminate_profile(train: DataFrame, evalset: DataFrame, n: int = 8) -> DataFrame:
     """GPT-3-style n-gram-overlap decontamination (arXiv:2005.14165 App C,
     re-expressed): flag every training document sharing at least one
     token n-gram with the evaluation set.
@@ -132,12 +117,12 @@ def decontaminate_profile(
     exchange after the scan is the (doc_id)-keyed count — gram strings
     never shuffle.
     """
-    hits = _contamination_hits(train, evalset, n, id_col, text_col)
+    hits = _contamination_hits(train, evalset, n)
     return (
-        train.select(id_col)
-        .join(hits, id_col, "left")
+        train.select("doc_id")
+        .join(hits, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_contam_grams", F.lit(0)).cast("long").alias(
                 "n_contam_grams"
             ),
@@ -146,12 +131,7 @@ def decontaminate_profile(
     )
 
 
-def drop_boilerplate_lines(
-    df: DataFrame,
-    min_docs: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def drop_boilerplate_lines(df: DataFrame, min_docs: int = 10) -> DataFrame:
     """CCNet-style cross-document line dedup (arXiv:1911.00359 §3.1,
     re-expressed): split each document into lines, count how many
     DISTINCT documents each line occurs in, drop lines present in
@@ -175,11 +155,9 @@ def drop_boilerplate_lines(
     through a (doc_id)-keyed collect_list rebuild exchange; now line
     text never leaves its scan stage.
     """
-    la = df.select(
-        F.col(id_col), F.split(F.col(text_col), "\n").alias("_l")
-    )
+    la = df.select(F.col("doc_id"), F.split(F.col("text"), "\n").alias("_l"))
     dl = la.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.array_distinct(F.transform("_l", lambda x: F.xxhash64(x)))
         ).alias("lh"),
@@ -192,7 +170,7 @@ def drop_boilerplate_lines(
     )
     bad = (
         dl.join(F.broadcast(boiler), "lh")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.collect_set("lh").alias("_bad"))
     )
     kept_arr = F.when(F.col("_bad").isNull(), F.col("_l")).otherwise(
@@ -203,12 +181,12 @@ def drop_boilerplate_lines(
     )
     # kept array behind its own projection: referenced twice below (size +
     # concat_ws), and CollapseProject refuses to duplicate it there
-    j = la.join(bad, id_col, "left").select(
-        F.col(id_col), F.size("_l").cast("long").alias("n_lines"),
+    j = la.join(bad, "doc_id", "left").select(
+        F.col("doc_id"), F.size("_l").cast("long").alias("n_lines"),
         kept_arr.alias("_k"),
     )
     return j.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "n_lines",
         F.greatest(F.size("_k"), F.lit(0)).cast("long").alias("n_kept"),
         F.concat_ws("\n", "_k").alias("text_clean"),
@@ -239,9 +217,7 @@ def mixture_keep(id_col: Column, source_col: Column) -> Column:
     return (h * 20) < (mixture_rate_permille(k) * _MIX_MOD)
 
 
-def mixture_sample_profile(
-    df: DataFrame, id_col: str = "doc_id", source_col: str = "source"
-) -> DataFrame:
+def mixture_sample_profile(df: DataFrame) -> DataFrame:
     """Hash-based Bernoulli mixture sampling by source (the deterministic
     form of the per-source sampling every published LLM data recipe uses):
     keep doc iff (doc_id * 40503) mod 65536 < rate_20ths * 65536 / 20,
@@ -252,16 +228,16 @@ def mixture_sample_profile(
     pipeline operator actually inspects before a 100 TB run. The keep
     decision itself is a codegen row predicate usable as a filter.
     """
-    k = F.regexp_extract(F.col(source_col), r"(\d+)$", 1).cast("long")
+    k = F.regexp_extract(F.col("source"), r"(\d+)$", 1).cast("long")
     rate20 = mixture_rate_permille(k)
-    keep = mixture_keep(F.col(id_col), F.col(source_col))
+    keep = mixture_keep(F.col("doc_id"), F.col("source"))
     return (
         df.select(
-            F.col(source_col),
+            F.col("source"),
             rate20.alias("_r20"),
             keep.cast("long").alias("_keep"),
         )
-        .groupBy(source_col)
+        .groupBy("source")
         .agg(
             F.round(F.first("_r20") / 20.0, 6).alias("target_rate"),
             F.count("*").cast("long").alias("n_total"),
@@ -271,13 +247,7 @@ def mixture_sample_profile(
     )
 
 
-def token_budget_shards(
-    df: DataFrame,
-    budget: int = 2000,
-    bucket_docs: int = 100,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def token_budget_shards(df: DataFrame, budget: int = 2000, bucket_docs: int = 100) -> DataFrame:
     """Assign documents (in id order) to fixed-token-budget output shards —
     the pre-training shard layout (GPT-NeoX / Megatron data loaders):
     shard_id = floor(start_offset / budget) where start_offset is the
@@ -295,9 +265,9 @@ def token_budget_shards(
     from pyspark.sql import Window
 
     base = df.select(
-        F.col(id_col),
-        (F.col(id_col) - F.col(id_col) % bucket_docs).alias("_bucket"),
-        F.size(tokens(F.col(text_col))).cast("long").alias("n_tokens"),
+        F.col("doc_id"),
+        (F.col("doc_id") - F.col("doc_id") % bucket_docs).alias("_bucket"),
+        F.size(tokens(F.col("text"))).cast("long").alias("n_tokens"),
     )
     # Materialize the (id, bucket, n_tokens) projection ONCE (r6): both the
     # subtotal branch and the final join consume `base`, and without a cut
@@ -319,13 +289,13 @@ def token_budget_shards(
     )
     w_in = (
         Window.partitionBy("_bucket")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return (
         base.join(F.broadcast(offsets), "_bucket")
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             (
                 (F.col("_off") + F.sum("n_tokens").over(w_in) - F.col("n_tokens"))

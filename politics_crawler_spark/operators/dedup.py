@@ -16,6 +16,10 @@
   verify — behind minhash_dedup and the graded q15.
 - drop_near_dups: the one transitive collapse — keep the min id of each
   connected component of a verified pair graph (text and embedding dedup).
+
+Input columns: documents are read as ``doc_id`` and ``text``; signature
+frames carry ``doc_id`` with ``sig`` (and ``sim``); pair frames are
+``(id_a, id_b)``.
 """
 
 from __future__ import annotations
@@ -30,7 +34,7 @@ from pyspark.sql import types as T
 # exact dedup (built-ins only)
 # --------------------------------------------------------------------------
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep the lowest-id representative of each exact text duplicate set.
 
     The shuffle key is ``md5(text)`` — a fixed-width 32-byte digest — NOT the
@@ -40,9 +44,9 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     reference's own seen-set is likewise hash-keyed (SURVEY.md §2.4 D1).
     """
     return (
-        df.groupBy(F.md5(F.col(text_col)).alias("_digest"))
-        .agg(F.min(id_col).alias(id_col), F.count("*").alias("dup_count"))
-        .select(id_col, "dup_count")
+        df.groupBy(F.md5(F.col("text")).alias("_digest"))
+        .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("dup_count"))
+        .select("doc_id", "dup_count")
     )
 
 
@@ -58,9 +62,12 @@ _FNV_PRIME = np.uint64(0x100000001B3)
 # LSH_BANDS × LSH_ROWS banding and sig_jaccard_refine's error bound
 # (sd ≈ sqrt(j(1-j)/64)) are sized for; the seed fixes the (a, b)
 # coefficients, so signatures are reproducible across runs and workers.
+# Every sketch and the exact verify shingle UTF-8 bytes / characters in
+# SHINGLE_K-grams.
 NUM_PERM = 64
 SEED = 7
 LSH_BANDS, LSH_ROWS = 16, 4
+SHINGLE_K = 5
 assert LSH_BANDS * LSH_ROWS <= NUM_PERM
 _rng = np.random.default_rng(SEED)
 _PERM_A = _rng.integers(1, (1 << 61) - 1, size=NUM_PERM, dtype=np.uint64)
@@ -109,7 +116,7 @@ def _batch_shingle_hashes(texts, k: int):
     return h_all[idx], starts, counts
 
 
-def _parallelize_input(df: DataFrame, id_col: str) -> DataFrame:
+def _parallelize_input(df: DataFrame) -> DataFrame:
     """Spread a narrow input across the cluster before a CPU-bound stage.
 
     A small parquet table often arrives as ONE scan split (single file /
@@ -121,7 +128,7 @@ def _parallelize_input(df: DataFrame, id_col: str) -> DataFrame:
     """
     sc = df.sparkSession.sparkContext
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism, id_col)
+        return df.repartition(sc.defaultParallelism, "doc_id")
     return df
 
 
@@ -194,18 +201,17 @@ def _simhash_kernel(h, counts) -> np.ndarray:
     return out
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                       shingle_k: int = 5, simhash: bool = False) -> DataFrame:
-    """Text sketches of every doc's UTF-8 byte ``shingle_k``-grams:
-    ``(id, sig array<long>)`` — the NUM_PERM-slot minhash — plus
+def minhash_signatures(df: DataFrame, simhash: bool = False) -> DataFrame:
+    """Text sketches of every doc's UTF-8 byte ``SHINGLE_K``-grams:
+    ``(doc_id, sig array<long>)`` — the NUM_PERM-slot minhash — plus
     ``sim long``, the 64-bit simhash, when ``simhash=True``. A NULL text
-    or one shorter than ``shingle_k`` bytes has no shingles: all-zero
+    or one shorter than ``SHINGLE_K`` bytes has no shingles: all-zero
     ``sig``, ``sim = 0``.
 
     One mapInPandas pass: each Arrow batch is FNV-shingle-hashed once and
     both kernels read the same hashes, so q16 (simhash banding + minhash
-    refine) scans and hashes the text once. The id column passes through
-    with its input type — the output schema takes ``df.schema[id_col]``.
+    refine) scans and hashes the text once. ``doc_id`` passes through
+    with its input type — the output schema takes ``df.schema["doc_id"]``.
 
     Shape note (r6, measured): the output columns are FLAT top-level
     columns, not a struct — the pandas→Arrow conversion of a struct column
@@ -214,19 +220,19 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
 
     def _run(batches):
         for pdf in batches:
-            h, starts, counts = _batch_shingle_hashes(pdf[text_col], shingle_k)
+            h, starts, counts = _batch_shingle_hashes(pdf["text"], SHINGLE_K)
             out = {
-                id_col: pdf[id_col],
+                "doc_id": pdf["doc_id"],
                 "sig": pd.Series(list(_minhash_kernel(h, starts, counts)), index=pdf.index),
             }
             if simhash:
                 out["sim"] = pd.Series(_simhash_kernel(h, counts), index=pdf.index, dtype="int64")
             yield pd.DataFrame(out)
 
-    fields = [df.schema[id_col], T.StructField("sig", T.ArrayType(T.LongType()))]
+    fields = [df.schema["doc_id"], T.StructField("sig", T.ArrayType(T.LongType()))]
     if simhash:
         fields.append(T.StructField("sim", T.LongType()))
-    src = _parallelize_input(df.select(id_col, text_col), id_col)
+    src = _parallelize_input(df.select("doc_id", "text"))
     return src.mapInPandas(_run, schema=T.StructType(fields))
 
 
@@ -249,8 +255,7 @@ def _banded_self_join(sigs: DataFrame, id_col: str, buckets: list,
     ])
 
 
-def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
-                        est_threshold: float = 0.5) -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame, est_threshold: float = 0.5) -> DataFrame:
     """Band the signature, bucket-join on (band, hash(band slice)),
     estimate Jaccard from BAND AGREEMENT; keep pairs over the threshold.
 
@@ -304,11 +309,8 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
     # exactly the number of agreeing bands m
     est = F.pow(F.col("_m") / F.lit(float(LSH_BANDS)), 1.0 / LSH_ROWS)
     return (
-        _banded_self_join(sigs, id_col, buckets)
-        .groupBy(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
+        _banded_self_join(sigs, "doc_id", buckets)
+        .groupBy(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
         .agg(F.count("*").alias("_m"))
         .filter(est >= est_threshold)  # unrounded, like the verify stages
         .select("id_a", "id_b", F.round(est, 6).alias("jaccard_est"))
@@ -346,7 +348,6 @@ def _sig_agreement_est(sig_a, sig_b):
 
 
 def sig_jaccard_refine(pairs: DataFrame, sigs: DataFrame,
-                       id_col: str = "doc_id",
                        min_est: float = 0.35) -> DataFrame:
     """Precision gate between the banded candidate generator and the exact
     verify: re-score ``(id_a, id_b)`` pairs with the FULL NUM_PERM
@@ -368,10 +369,10 @@ def sig_jaccard_refine(pairs: DataFrame, sigs: DataFrame,
     should cut or persist it, as :func:`near_dup_pairs` does.
     """
     withsigs = pairs.select("id_a", "id_b").join(
-        sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a")),
+        sigs.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a")),
         on="id_a",
     ).join(
-        sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b")),
+        sigs.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b")),
         on="id_b",
     )
     est = _sig_agreement_est("sig_a", "sig_b")
@@ -459,10 +460,9 @@ def drop_near_dups(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> D
     return df.join(dropped, on=id_col, how="left_anti")
 
 
-def near_dup_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                   threshold: float = 0.5, shingle_k: int = 5) -> DataFrame:
+def near_dup_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """The near-dup pair cascade: ``(id_a, id_b, jaccard)`` for every pair
-    whose exact character-``shingle_k``-gram Jaccard is >= ``threshold``
+    whose exact character-``SHINGLE_K``-gram Jaccard is >= ``threshold``
     AND that the sketch proposes. :func:`minhash_signatures` →
     :func:`lsh_candidate_pairs` (recall, banded OR-construction) →
     :func:`sig_jaccard_refine` at ``0.7 · threshold`` (the full-signature
@@ -473,17 +473,13 @@ def near_dup_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     The signatures are cut once (eager ``localCheckpoint``): the banding
     and both refine joins read that cut. ``df`` is read by the sketch and
     again by the exact verify, so callers cut or persist it."""
-    sigs = minhash_signatures(df, text_col, id_col, shingle_k=shingle_k)
-    sigs = sigs.localCheckpoint(eager=True)
-    cands = lsh_candidate_pairs(sigs, id_col, est_threshold=0.0)
-    pairs = sig_jaccard_refine(cands, sigs, id_col, min_est=threshold * 0.7)
-    return exact_jaccard_verify(
-        pairs, df, id_col=id_col, text_col=text_col, k=shingle_k, threshold=threshold,
-    )
+    sigs = minhash_signatures(df).localCheckpoint(eager=True)
+    cands = lsh_candidate_pairs(sigs, est_threshold=0.0)
+    pairs = sig_jaccard_refine(cands, sigs, min_est=threshold * 0.7)
+    return exact_jaccard_verify(pairs, df, threshold=threshold)
 
 
-def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  threshold: float = 0.5, shingle_k: int = 5) -> DataFrame:
+def minhash_dedup(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Near-dup collapse: :func:`drop_near_dups` over the
     :func:`near_dup_pairs` graph — the sketch only bounds what gets
     compared; what gets dropped is exact.
@@ -496,14 +492,12 @@ def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     Same rule as ``write_jsonl_shards`` and ``token_budget_shards``: an
     operator that reads its input more than once cuts it once."""
     df = df.localCheckpoint(eager=True)
-    pairs = near_dup_pairs(df, text_col, id_col, threshold, shingle_k)
-    return drop_near_dups(df, pairs, id_col)
+    return drop_near_dups(df, near_dup_pairs(df, threshold))
 
 
-def hamming_band_pairs(sigs: DataFrame, sig_col: str = "sim",
-                       id_col: str = "doc_id", max_hamming: int = 3,
-                       bands: int = 4) -> DataFrame:
-    """Candidate pairs within ``max_hamming`` of a 64-bit signature column
+def hamming_band_pairs(sigs: DataFrame, id_col: str = "doc_id",
+                       max_hamming: int = 3, bands: int = 4) -> DataFrame:
+    """Candidate pairs within ``max_hamming`` of the 64-bit ``sim`` column
     by pigeonhole banding: split the 64 bits into ``bands`` keys of
     ``64//bands`` bits — any pair within Hamming distance ``bands - 1``
     shares at least one exact band, so ``max_hamming <= bands - 1`` gives a
@@ -515,16 +509,16 @@ def hamming_band_pairs(sigs: DataFrame, sig_col: str = "sim",
     width = 64 // bands
     mask = (1 << width) - 1
     buckets = [
-        F.shiftrightunsigned(F.col(sig_col), i * width).bitwiseAND(F.lit(mask))
+        F.shiftrightunsigned(F.col("sim"), i * width).bitwiseAND(F.lit(mask))
         for i in range(bands)
     ]
     return (
-        _banded_self_join(sigs, id_col, buckets, sig_col)
+        _banded_self_join(sigs, id_col, buckets, "sim")
         .select(
             F.col(f"l.{id_col}").alias("id_a"),
             F.col(f"r.{id_col}").alias("id_b"),
             F.bit_count(
-                F.col(f"l.{sig_col}").bitwiseXOR(F.col(f"r.{sig_col}"))
+                F.col("l.sim").bitwiseXOR(F.col("r.sim"))
             ).alias("hamming"),
         )
         # Hamming gate BEFORE the pair dedup: hamming is a pure function of
@@ -561,10 +555,9 @@ def _char_grams(text_col, k: int):
 
 
 def exact_jaccard_verify(pairs: DataFrame, docs: DataFrame,
-                         id_col: str = "doc_id", text_col: str = "text",
-                         k: int = 5, threshold: float = 0.5) -> DataFrame:
-    """Re-score candidate ``(id_a, id_b)`` pairs with EXACT character-k-gram
-    Jaccard and keep those >= threshold.
+                         threshold: float = 0.5) -> DataFrame:
+    """Re-score candidate ``(id_a, id_b)`` pairs with EXACT
+    character-``SHINGLE_K``-gram Jaccard and keep those >= threshold.
 
     This is the verification stage after an approximate candidate generator
     (MinHash LSH or SimHash banding): the candidate set is small (bucketed
@@ -572,13 +565,13 @@ def exact_jaccard_verify(pairs: DataFrame, docs: DataFrame,
     exact set overlap is cheap — and the result is independent of the
     sketch, hence oracle-checkable by an exact all-pairs SQL query.
     """
-    g = _parallelize_input(docs.select(id_col, text_col), id_col).select(
-        F.col(id_col), _char_grams(text_col, k).alias("grams")
+    g = _parallelize_input(docs.select("doc_id", "text")).select(
+        F.col("doc_id"), _char_grams("text", SHINGLE_K).alias("grams")
     )
     out = (
         pairs.select("id_a", "id_b")
-        .join(g.select(F.col(id_col).alias("id_a"), F.col("grams").alias("g_a")), on="id_a")
-        .join(g.select(F.col(id_col).alias("id_b"), F.col("grams").alias("g_b")), on="id_b")
+        .join(g.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("g_a")), on="id_a")
+        .join(g.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("g_b")), on="id_b")
     )
     jac = F.size(F.array_intersect("g_a", "g_b")) / F.size(F.array_union("g_a", "g_b"))
     # threshold the UNROUNDED ratio (exactly what the all-pairs SQL oracle
@@ -595,39 +588,34 @@ def exact_jaccard_verify(pairs: DataFrame, docs: DataFrame,
 # n-gram Jaccard (exact, for verification / small candidate sets)
 # --------------------------------------------------------------------------
 
-def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                        n: int = 3, threshold: float = 0.3) -> DataFrame:
-    """Exact word-n-gram Jaccard over candidate pairs from a same-length
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.3) -> DataFrame:
+    """Exact word-trigram Jaccard over candidate pairs from a same-length
     bucket prefilter (length band ±bucket) — built-ins only, oracle-able."""
+    words = F.split(F.col("text"), r"\s+")
     grams = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array_distinct(
             F.transform(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.size(F.split(F.col(text_col), r"\s+")) - n, F.lit(0)),
-                ),
-                lambda i: F.concat_ws(
-                    " ", F.slice(F.split(F.col(text_col), r"\s+"), i + 1, n)
-                ),
+                F.sequence(F.lit(0), F.greatest(F.size(words) - 3, F.lit(0))),
+                lambda i: F.concat_ws(" ", F.slice(words, i + 1, 3)),
             )
         ).alias("grams"),
-        (F.length(text_col) / 100).cast("int").alias("len_bucket"),
+        (F.length("text") / 100).cast("int").alias("len_bucket"),
     )
     l, r = grams.alias("l"), grams.alias("r")
     pairs = l.join(
         r,
         on=[
             F.col("l.len_bucket") == F.col("r.len_bucket"),
-            F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
+            F.col("l.doc_id") < F.col("r.doc_id"),
         ],
     )
     inter = F.size(F.array_intersect("l.grams", "r.grams"))
     union = F.size(F.array_union("l.grams", "r.grams"))
     return (
         pairs.select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
+            F.col("l.doc_id").alias("id_a"),
+            F.col("r.doc_id").alias("id_b"),
             (inter / union).alias("_jac"),
         )
         .filter(F.col("_jac") >= threshold)  # unrounded, oracle-exact

@@ -5,6 +5,9 @@ The UDF is the only Python in the page hot path; everything around it
 (validity gate, freshness filter, thresholds, dedup, sort) is JVM-side.
 Batch size is governed by ``spark.sql.execution.arrow.maxRecordsPerBatch``;
 HTML parsing cost dominates, so 10k-row batches keep Arrow overhead <1%.
+
+Input columns: pages are read as ``html`` and ``url``, plus the parser
+family column named by ``site_col``.
 """
 
 from __future__ import annotations
@@ -39,8 +42,7 @@ def site_expr(host: Column) -> Column:
     return expr
 
 
-def with_extraction(df: DataFrame, html_col: str = "html", url_col: str = "url",
-                    site_col: str = "site") -> DataFrame:
+def with_extraction(df: DataFrame, site_col: str = "site") -> DataFrame:
     """Append content/images/recommend_raw/actual_date/status columns."""
-    res = extract_udf(F.col(site_col), F.col(html_col), F.col(url_col))
+    res = extract_udf(F.col(site_col), F.col("html"), F.col("url"))
     return df.withColumn("_x", res).select("*", "_x.*").drop("_x")

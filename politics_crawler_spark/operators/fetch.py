@@ -22,8 +22,8 @@ Reference semantics generalized (citations into /root/reference/app/crawler/):
 
 The stage runs after the politeness repartition (salted by host), so each
 host's requests execute within its own task(s) — the partition-parallel
-replacement for the reference's serial sleeps. ``transport``, ``sleep``
-and ``clock`` are injectable: tests drive a fault-injecting local HTTP
+replacement for the reference's serial sleeps. ``transport`` and
+``sleep`` are injectable: tests drive a fault-injecting local HTTP
 server with ``sleep=None`` (no wall-clock cost); production uses the
 urllib transport and real sleeps.
 
@@ -65,6 +65,9 @@ DEFAULT_UA_POOL = (
     "Mozilla/5.0 (X11; Linux x86_64) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/98.0.4758.102 Safari/537.36",
 )
 
+# P6 backoff window in seconds (fmkorea's uniform(2, 4)).
+BACKOFF_S = (2.0, 4.0)
+
 FETCH_FIELDS = [
     T.StructField("html", T.BinaryType(), True),
     T.StructField("fetch_status", T.StringType(), True),  # ok|short|error
@@ -96,15 +99,11 @@ def urllib_transport(url: str, ua: str, timeout_s: float) -> tuple[int, bytes]:
 
 def make_fetch_stage(
     transport: Callable[[str, str, float], tuple[int, bytes]] | None = None,
-    ua_pool: tuple[str, ...] = DEFAULT_UA_POOL,
     timeout_s: float = 10.0,
     max_attempts: int = 2,
     min_bytes: int = 0,
-    backoff_s: tuple[float, float] = (2.0, 4.0),
     sleep: Callable[[float], None] | None = time.sleep,
     min_interval_s: float = 0.0,
-    clock: Callable[[], float] = time.monotonic,
-    host_col: str = "host",
 ):
     """Build ``fetch(df, url_col) -> df + (html, fetch_status, http_code,
     attempts, ua)``. All knobs closure-captured and shipped to executors.
@@ -112,7 +111,7 @@ def make_fetch_stage(
     ``min_interval_s`` > 0 enforces per-host pacing (see module docstring),
     multiplied per row by a ``_salt_n`` column when present (the salted
     repartition writes it; the stage drops it). The host key comes from
-    ``host_col`` when present, else from the URL.
+    the ``host`` column when present, else from the URL.
     Pacing needs a real ``sleep``; with ``sleep=None`` (fault-injection
     tests that strip all wall-clock cost) it is skipped like backoff is."""
     transport = transport or urllib_transport
@@ -120,7 +119,7 @@ def make_fetch_stage(
     def _fetch_one(url: str) -> dict:
         last_code, body, ua = None, b"", ""
         for attempt in range(1, max_attempts + 1):
-            ua = ua_pool[_det_pick(url, attempt, len(ua_pool))]  # P1
+            ua = DEFAULT_UA_POOL[_det_pick(url, attempt, len(DEFAULT_UA_POOL))]  # P1
             try:
                 code, body = transport(url, ua, timeout_s)  # P2
             except Exception:
@@ -138,7 +137,7 @@ def make_fetch_stage(
                     "attempts": attempt, "ua": ua,
                 }
             if attempt < max_attempts and sleep is not None:  # P6 backoff
-                lo, hi = backoff_s
+                lo, hi = BACKOFF_S
                 sleep(lo + (_det_pick(url, attempt + 7919, 1000) / 1000.0) * (hi - lo))
         return {
             "html": None, "fetch_status": "error", "http_code": last_code,
@@ -147,7 +146,7 @@ def make_fetch_stage(
 
     def fetch(df: DataFrame, url_col: str = "url") -> DataFrame:
         cols = df.schema.fieldNames()
-        has_host, has_salt = host_col in cols, SALT_N_COL in cols
+        has_host, has_salt = "host" in cols, SALT_N_COL in cols
         out_fields = [f for f in df.schema.fields if f.name != SALT_N_COL]
         out_schema = T.StructType(out_fields + FETCH_FIELDS)
 
@@ -166,15 +165,15 @@ def make_fetch_stage(
                 if pace > 0 and sleep is not None:
                     prev = last_issue.get(host)
                     if prev is not None:
-                        wait = prev + pace - clock()
+                        wait = prev + pace - time.monotonic()
                         if wait > 0:
                             sleep(wait)
-                    last_issue[host] = clock()
+                    last_issue[host] = time.monotonic()
                 return _fetch_one(url)
 
             for pdf in batches:
                 hosts = (
-                    pdf[host_col]
+                    pdf["host"]
                     if has_host
                     else pdf[url_col].map(_host_of)
                 )

@@ -30,8 +30,11 @@ Scale notes (100 TB):
   size (2^p registers), so the exchange carries one sketch per
   (source × partition) regardless of token volume. Exact distinct at
   100 TB would shuffle every distinct token string; the sketch is the
-  scale path, and `relative_sd` bounds the error a monitoring dashboard
-  tolerates.
+  scale path, and its 1% relative standard deviation bounds the error a
+  monitoring dashboard tolerates.
+
+Input columns: the corpus is read as ``doc_id`` and ``text`` (plus
+``source`` for the cardinality profile).
 
 The reference has no search or cardinality surface (per-site CSV append
 only, crawler_schedule.py:150-179); this module is engine-added surface.
@@ -45,19 +48,11 @@ from pyspark.sql import functions as F
 from .textstats import tokens
 
 # BM25 free parameters (Robertson's recommended defaults).
-K1 = 1.2
-B = 0.75
+BM25_K1 = 1.2
+BM25_B = 0.75
 
 
-def bm25_topk(
-    corpus: DataFrame,
-    queries: list[tuple[int, str]],
-    k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = K1,
-    b: float = B,
-) -> DataFrame:
+def bm25_topk(corpus: DataFrame, queries: list[tuple[int, str]], k: int = 10) -> DataFrame:
     """Top-k documents per query under BM25.
 
     `queries` is a small in-memory list of (query_id, query_text) — the
@@ -83,9 +78,7 @@ def bm25_topk(
     )
     qterms = qtoks.select("query_id", F.explode("terms").alias("term")).distinct()
 
-    toks = corpus.select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("t")
-    )
+    toks = corpus.select(F.col("doc_id"), tokens(F.col("text")).alias("t"))
     # corpus scalars: one fixed-size aggregate, broadcast back as a
     # single-row cross join (never collected to the driver)
     stats = toks.agg(
@@ -151,10 +144,10 @@ def bm25_topk(
         .withColumn(
             "w",
             F.col("idf")
-            * (F.col("tf") * (k1 + 1))
+            * (F.col("tf") * (BM25_K1 + 1))
             / (
                 F.col("tf")
-                + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
+                + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
             ),
         )
         .groupBy("query_id", "doc_id")
@@ -173,25 +166,21 @@ def bm25_topk(
     )
 
 
-def cardinality_profile(
-    corpus: DataFrame,
-    text_col: str = "text",
-    group_col: str = "source",
-    relative_sd: float = 0.01,
-) -> DataFrame:
-    """Per-group corpus cardinality monitor: document count, token
-    volume, and APPROXIMATE distinct tokens (HyperLogLog++, fixed-size
-    sketch exchange — the only distinct-counting strategy that survives
-    100 TB without shuffling every distinct string).
+def cardinality_profile(corpus: DataFrame) -> DataFrame:
+    """Per-source corpus cardinality monitor: document count, token
+    volume, and APPROXIMATE distinct tokens (HyperLogLog++ at 1% relative
+    standard deviation, fixed-size sketch exchange — the only
+    distinct-counting strategy that survives 100 TB without shuffling
+    every distinct string).
 
-    Returns (group, n_docs, n_tokens, approx_distinct_tokens).
+    Returns (source, n_docs, n_tokens, approx_distinct_tokens).
     """
     # ONE corpus pass: posexplode_outer keeps a row for empty documents
     # (tok null, pos null), so doc count = rows at pos 0-or-null and
     # token volume = non-null tok rows — no second scan, no join.
     exploded = corpus.select(
-        F.col(group_col).alias("grp"),
-        F.posexplode_outer(tokens(F.col(text_col))).alias("pos", "tok"),
+        F.col("source").alias("grp"),
+        F.posexplode_outer(tokens(F.col("text"))).alias("pos", "tok"),
     )
     return (
         exploded.groupBy("grp")
@@ -200,12 +189,12 @@ def cardinality_profile(
                 F.col("pos").isNull() | (F.col("pos") == 0)
             ).alias("n_docs"),
             F.count("tok").alias("n_tokens"),
-            F.approx_count_distinct("tok", relative_sd).alias(
+            F.approx_count_distinct("tok", 0.01).alias(
                 "approx_distinct_tokens"
             ),
         )
         .select(
-            F.col("grp").alias(group_col),
+            F.col("grp").alias("source"),
             "n_docs",
             "n_tokens",
             "approx_distinct_tokens",

@@ -13,6 +13,9 @@
 - hyperplane_codes: the one sign-bit kernel — the LSH keys and the 64-bit
   signature of embedding near-dup dedup (signature → pigeonhole Hamming
   banding → exact cosine verify → ``dedup.drop_near_dups``).
+
+Input columns: vector and query frames are read as ``vec_id`` and
+``embedding`` (an array of numbers).
 """
 
 from __future__ import annotations
@@ -25,9 +28,11 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 # IVF quantizer training: a bounded sample (one ``limit`` collect —
-# O(sample) driver bytes, independent of N) and a fixed k-means seed.
+# O(sample) driver bytes, independent of N) and a fixed k-means seed;
+# ivf_topk ranks the top IVF_K inside each query's IVF_PROBES cells.
 IVF_SAMPLE_N = 2048
 IVF_SEED = 23
+IVF_K, IVF_PROBES = 10, 4
 
 
 def _sum(arr) -> "F.Column":
@@ -42,22 +47,21 @@ def _cosine(a, b) -> "F.Column":
     return dot / (norm(a) * norm(b))
 
 
-def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k cosine neighbors per query (query ≠ neighbor), sim
     rounded to 4 places."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
     joined = vectors.alias("v").join(
-        F.broadcast(q), on=F.col("query_id") != F.col(id_col)
+        F.broadcast(q), on=F.col("query_id") != F.col("vec_id")
     )
-    sim = F.round(_cosine(F.col("q_vec"), F.col(vec_col)), 4)
+    sim = F.round(_cosine(F.col("q_vec"), F.col("embedding")), 4)
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id").asc()
     )
     return (
-        joined.select("query_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim"))
+        joined.select("query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("sim"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "sim", "rank")
@@ -150,22 +154,20 @@ def make_cell_udf(centroids: np.ndarray, n_probe: int = 1):
     return cells_udf
 
 
-def ivf_keys(vectors: DataFrame, n_cells: int, n_probe: int,
-             vec_col: str = "embedding"):
+def ivf_keys(vectors: DataFrame, n_cells: int, n_probe: int):
     """IVF keys: train the coarse quantizer on the first ``IVF_SAMPLE_N``
     vectors (one bounded collect), then key each vector by its nearest
     cell and each query by its ``n_probe`` nearest. Candidate volume ≈
     N · n_probe / n_cells per query."""
     sample = np.asarray(
-        [r[0] for r in vectors.select(vec_col).limit(IVF_SAMPLE_N).collect()],
+        [r[0] for r in vectors.select("embedding").limit(IVF_SAMPLE_N).collect()],
         dtype=np.float64,
     )
     cent = _kmeans(sample, n_cells, IVF_SEED)
     return make_cell_udf(cent, n_probe=1), make_cell_udf(cent, n_probe=n_probe)
 
 
-def candidate_pairs(vectors: DataFrame, queries: DataFrame, keys,
-                    id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def candidate_pairs(vectors: DataFrame, queries: DataFrame, keys) -> DataFrame:
     """Collision rows ``(query_id, neighbor_id, sim)``: every (vector,
     query) pair sharing a key of ``keys = (vector_keys, query_keys)``, with
     its exact cosine rounded to 4 places. A pair sharing m keys yields m
@@ -182,14 +184,14 @@ def candidate_pairs(vectors: DataFrame, queries: DataFrame, keys,
     the key join as a shuffle equi-join."""
     v_keys, q_keys = keys
     v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("n_vec"),
-        F.explode(v_keys(F.col(vec_col))).alias("key"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("n_vec"),
+        F.explode(v_keys(F.col("embedding"))).alias("key"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(q_keys(F.col(vec_col))).alias("key"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        F.explode(q_keys(F.col("embedding"))).alias("key"),
     )
     sim = F.round(_cosine(F.col("q_vec"), F.col("n_vec")), 4)
     return (
@@ -227,22 +229,17 @@ def _topk_from_collisions(collisions: DataFrame, k: int) -> DataFrame:
 
 
 def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = 10, bits: int = 8,
-             tables: int = 4, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
+             tables: int = 4) -> DataFrame:
     """Approximate top-k over random-hyperplane buckets × several tables."""
-    pairs = candidate_pairs(vectors, queries, lsh_keys(bits, tables), id_col, vec_col)
-    return _topk_from_collisions(pairs, k)
+    keys = lsh_keys(bits, tables)
+    return _topk_from_collisions(candidate_pairs(vectors, queries, keys), k)
 
 
-def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
-             n_cells: int = 16, n_probe: int = 4, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
-    """IVF ANN: exact cosine re-rank inside each query's ``n_probe``
-    probed cells."""
-    keys = ivf_keys(vectors, n_cells, n_probe, vec_col)
-    return _topk_from_collisions(
-        candidate_pairs(vectors, queries, keys, id_col, vec_col), k
-    )
+def ivf_topk(vectors: DataFrame, queries: DataFrame, n_cells: int = 16) -> DataFrame:
+    """IVF ANN: exact cosine top-``IVF_K`` re-rank inside each query's
+    ``IVF_PROBES`` probed cells."""
+    keys = ivf_keys(vectors, n_cells, IVF_PROBES)
+    return _topk_from_collisions(candidate_pairs(vectors, queries, keys), IVF_K)
 
 
 # --------------------------------------------------------------------------
@@ -252,9 +249,11 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
 # --------------------------------------------------------------------------
 
 # Hyperplane seed and band count of the near-dup signature: 8 bands of 8
-# bits give the pigeonhole radius below.
+# bits give the pigeonhole radius below. NEARDUP_COS is the exact-cosine
+# bar a pair must reach to count as a near-duplicate.
 HYPERPLANE_SEED = 424242
 NEARDUP_BANDS = 8
+NEARDUP_COS = 0.99
 
 
 def hyperplane_signature():
@@ -267,35 +266,31 @@ def hyperplane_signature():
     return lambda col: udf(col)[0]
 
 
-def embedding_neardup_pairs(df: DataFrame, vec_col: str = "embedding",
-                            id_col: str = "vec_id",
-                            threshold: float = 0.99) -> DataFrame:
-    """``(id_a, id_b, cos)`` pairs with exact cosine >= threshold, found at
+def embedding_neardup_pairs(df: DataFrame) -> DataFrame:
+    """``(id_a, id_b, cos)`` pairs with exact cosine >= NEARDUP_COS, found at
     scale: 64-bit hyperplane signatures band into ``NEARDUP_BANDS`` buckets
     (pigeonhole: any pair within Hamming ``NEARDUP_BANDS - 1`` is guaranteed
-    a candidate — at threshold 0.99 the expected signature Hamming is ~1-2
+    a candidate — at cosine 0.99 the expected signature Hamming is ~1-2
     bits, far inside the radius), candidates get the EXACT cosine
     (zip_with/aggregate, JVM codegen) and the sketch never decides a drop.
     The only joins are bucketed equi-joins; vectors join back once per
     side onto the (small) candidate set."""
     from .dedup import hamming_band_pairs
 
-    sigs = df.select(id_col, hyperplane_signature()(F.col(vec_col)).alias("sim"))
-    cand = hamming_band_pairs(sigs, "sim", id_col, NEARDUP_BANDS - 1, NEARDUP_BANDS)
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
+    sigs = df.select("vec_id", hyperplane_signature()(F.col("embedding")).alias("sim"))
+    cand = hamming_band_pairs(sigs, "vec_id", NEARDUP_BANDS - 1, NEARDUP_BANDS)
+    a = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
+    b = df.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"))
     j = cand.select("id_a", "id_b").join(a, on="id_a").join(b, on="id_b")
     cos = _cosine(F.col("_va"), F.col("_vb"))
     return (
         j.select("id_a", "id_b", cos.alias("_cos"))
-        .filter(F.col("_cos") >= threshold)  # unrounded, oracle-exact
+        .filter(F.col("_cos") >= NEARDUP_COS)  # unrounded, oracle-exact
         .select("id_a", "id_b", F.round("_cos", 6).alias("cos"))
     )
 
 
-def embedding_neardup_dedup(df: DataFrame, vec_col: str = "embedding",
-                            id_col: str = "vec_id",
-                            threshold: float = 0.99) -> DataFrame:
+def embedding_neardup_dedup(df: DataFrame) -> DataFrame:
     """Drop every vector whose embedding is a near-duplicate of a
     lower-id vector, transitively (``dedup.drop_near_dups``, the same
     collapse as minhash_dedup). ``df`` is consumed several times
@@ -303,5 +298,4 @@ def embedding_neardup_dedup(df: DataFrame, vec_col: str = "embedding",
     should persist it."""
     from .dedup import drop_near_dups
 
-    pairs = embedding_neardup_pairs(df, vec_col, id_col, threshold)
-    return drop_near_dups(df, pairs, id_col)
+    return drop_near_dups(df, embedding_neardup_pairs(df), "vec_id")

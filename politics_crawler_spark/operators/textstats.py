@@ -78,10 +78,10 @@ def stop_hits(text: Column, words: list[str]) -> Column:
     return F.size(F.regexp_extract_all(F.lower(text), F.lit(pat), 0))
 
 
-def stopword_ratio(text: Column, words: list[str] | None = None) -> Column:
-    words = words or EN_STOP
+def stopword_ratio(text: Column) -> Column:
+    """English stopword hits per token (0 for a doc without tokens)."""
     toks = token_count(text)
-    return F.when(toks > 0, stop_hits(text, words) / toks).otherwise(F.lit(0.0))
+    return F.when(toks > 0, stop_hits(text, EN_STOP) / toks).otherwise(F.lit(0.0))
 
 
 def lang_id(text: Column) -> Column:

@@ -23,6 +23,8 @@ aggregation on the n-gram key; skew on hot n-grams is exactly what
 AQE/partial-agg absorb — the map-side combine collapses each partition's
 duplicates before the exchange).
 
+Input columns: documents are read as ``doc_id`` and ``text``.
+
 The reference has no corpus-quality layer at all (it stores raw board
 text, fmkorea_politics.py:239-264); this module is engine-added surface.
 """
@@ -39,6 +41,20 @@ from .textstats import EN_STOP, ngrams, stop_hits, tokens
 # RE2 ∩ Java-regex safe PII patterns (no lookaround, no backrefs):
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PHONE_RE = r"\b01[0-9]-[0-9]{3,4}-[0-9]{4}\b"
+
+# C4 document-shape thresholds (arXiv:1910.10683 §2.2): word floor, longest
+# word, alphabetic-word fraction.
+C4_MIN_WORDS = 20
+C4_MAX_WORD_LEN = 30
+C4_MIN_ALPHA_FRAC = 0.8
+# Gopher repetition thresholds (arXiv:2112.11446 A1.1), set to split the
+# synthetic corpus non-degenerately (the paper's own values assume real
+# prose): word-count bounds, duplicate-word fraction, mean-word-length
+# bounds, most-common-bigram fraction.
+GOPHER_WORDS = (30, 100_000)
+GOPHER_MAX_DUP_FRAC = 0.55
+GOPHER_WORD_LEN = (3.0, 10.0)
+GOPHER_MAX_TOP_BIGRAM = 0.10
 
 
 def dup_word_fraction(toks: Column) -> Column:
@@ -91,11 +107,9 @@ def _max_run_length(sorted_arr: Column) -> Column:
     return F.aggregate(sorted_arr, acc0, step, lambda acc: acc["best"])
 
 
-def repetition_profile(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_profile(df: DataFrame) -> DataFrame:
     """Per-document Gopher repetition stats:
-    (id, n_words, dup_word_frac, mean_word_len, top_bigram_frac).
+    (doc_id, n_words, dup_word_frac, mean_word_len, top_bigram_frac).
 
     top_bigram_frac = count of the most frequent adjacent bigram / number
     of bigrams (n_words − 1); 0 for docs with < 2 tokens.
@@ -120,8 +134,7 @@ def repetition_profile(
       one codegen concat instead of an interpreted aggregate() lambda per
       token (sum of lengths ≡ length of concatenation, exactly).
     """
-    t = tokens(F.col(text_col))
-    base = df.select(F.col(id_col), t.alias("_t"))
+    base = df.select(F.col("doc_id"), tokens(F.col("text")).alias("_t"))
     bigram_hashes = ngrams(F.col("_t"), 2)
     mean_len = F.when(
         F.size(F.col("_t")) > 0,
@@ -132,14 +145,14 @@ def repetition_profile(
     # once, not once per reference in the ratio below (CollapseProject
     # refuses to duplicate a non-cheap expression referenced twice)
     stats = base.select(
-        id_col,
+        "doc_id",
         F.size("_t").cast("long").alias("n_words"),
         F.round(dup_word_fraction(F.col("_t")), 6).alias("dup_word_frac"),
         F.round(mean_len, 6).alias("mean_word_len"),
         _max_run_length(F.array_sort(bigram_hashes)).alias("_topc"),
     )
     return stats.select(
-        id_col,
+        "doc_id",
         "n_words",
         "dup_word_frac",
         "mean_word_len",
@@ -158,30 +171,18 @@ def gopher_keep(
     dup_word_frac: Column,
     mean_word_len: Column,
     top_bigram_frac: Column,
-    min_words: int = 30,
-    max_words: int = 100_000,
-    max_dup_frac: float = 0.55,
-    word_len_range: tuple[float, float] = (3.0, 10.0),
-    max_top_bigram: float = 0.10,
 ) -> Column:
-    """The Gopher-style keep decision over the repetition profile.
-    Thresholds are arguments; the defaults split the synthetic corpus
-    non-degenerately (the paper's own values assume real prose)."""
+    """The Gopher-style keep decision over the repetition profile, at the
+    ``GOPHER_*`` thresholds."""
     return (
-        n_words.between(min_words, max_words)
-        & (dup_word_frac <= max_dup_frac)
-        & mean_word_len.between(*word_len_range)
-        & (top_bigram_frac <= max_top_bigram)
+        n_words.between(*GOPHER_WORDS)
+        & (dup_word_frac <= GOPHER_MAX_DUP_FRAC)
+        & mean_word_len.between(*GOPHER_WORD_LEN)
+        & (top_bigram_frac <= GOPHER_MAX_TOP_BIGRAM)
     )
 
 
-def _c4_rules(
-    df: DataFrame,
-    text_col: str,
-    min_words: int,
-    max_word_len: int,
-    min_alpha_frac: float,
-) -> tuple[DataFrame, dict[str, Column]]:
+def _c4_rules(df: DataFrame, min_words: int) -> tuple[DataFrame, dict[str, Column]]:
     """The C4 rule set shared by c4_doc_gate and c4_filter: `df` with the
     token array `_t` and the stopword flag `_stop` projected, plus one
     boolean per rule over those two columns — word floor, max word length,
@@ -194,55 +195,43 @@ def _c4_rules(
     the rule Filter below the projection and inlines `_t`: the tokenizing
     regexp runs once per token rule there (see c4_filter(df).explain())."""
     toked = df.withColumns({
-        "_t": tokens(F.col(text_col)),
-        "_stop": stop_hits(F.col(text_col), EN_STOP) > 0,
+        "_t": tokens(F.col("text")),
+        "_stop": stop_hits(F.col("text"), EN_STOP) > 0,
     })
     t = F.col("_t")
     return toked, {
         "ok_min_words": F.size(t) >= min_words,
-        "ok_word_len": max_word_length(t) <= max_word_len,
-        "ok_alpha": F.round(alpha_word_fraction(t), 6) >= min_alpha_frac,
+        "ok_word_len": max_word_length(t) <= C4_MAX_WORD_LEN,
+        "ok_alpha": F.round(alpha_word_fraction(t), 6) >= C4_MIN_ALPHA_FRAC,
         "ok_stopword": F.col("_stop"),
     }
 
 
-def c4_doc_gate(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 20,
-    max_word_len: int = 30,
-    min_alpha_frac: float = 0.8,
-) -> DataFrame:
+def c4_doc_gate(df: DataFrame, min_words: int = C4_MIN_WORDS) -> DataFrame:
     """C4-style document-shape gate — one row per doc with each rule's
     boolean and the conjunction, all whole-stage-codegen (no shuffle):
-    (id, n_words, ok_min_words, ok_word_len, ok_alpha, ok_stopword, keep)."""
-    toked, rules = _c4_rules(df, text_col, min_words, max_word_len, min_alpha_frac)
+    (doc_id, n_words, ok_min_words, ok_word_len, ok_alpha, ok_stopword,
+    keep)."""
+    toked, rules = _c4_rules(df, min_words)
     gate = toked.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("_t").cast("long").alias("n_words"),
         *[rule.alias(name) for name, rule in rules.items()],
     )
     return gate.select(
-        id_col,
+        "doc_id",
         "n_words",
         *rules,
         reduce(lambda a, b: a & b, [F.col(name) for name in rules]).alias("keep"),
     )
 
 
-def c4_filter(
-    df: DataFrame,
-    text_col: str = "text",
-    min_words: int = 20,
-    max_word_len: int = 30,
-    min_alpha_frac: float = 0.8,
-) -> DataFrame:
+def c4_filter(df: DataFrame) -> DataFrame:
     """Filter form of the q38 gate for pipeline composition: returns the
     input rows (all columns) that pass, evaluated ROW-LOCALLY so Catalyst
     fuses it into the scan — no join back, no second read of a 100 TB
     table."""
-    toked, rules = _c4_rules(df, text_col, min_words, max_word_len, min_alpha_frac)
+    toked, rules = _c4_rules(df, C4_MIN_WORDS)
     return toked.filter(reduce(lambda a, b: a & b, rules.values())).drop(
         "_t", "_stop"
     )
@@ -256,32 +245,27 @@ def redact_pii(text: Column) -> Column:
     return F.regexp_replace(out, PHONE_RE, "<PHONE>")
 
 
-def pii_profile(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, n_emails, n_phones, redacted) — detection counts + the
+def pii_profile(df: DataFrame) -> DataFrame:
+    """(doc_id, n_emails, n_phones, redacted) — detection counts + the
     redacted text. Pure expressions; the redacted string is graded
     value-for-value by the oracle."""
+    text = F.col("text")
     return df.select(
-        F.col(id_col),
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(EMAIL_RE), 0))
+        F.col("doc_id"),
+        F.size(F.regexp_extract_all(text, F.lit(EMAIL_RE), 0))
         .cast("long")
         .alias("n_emails"),
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(PHONE_RE), 0))
+        F.size(F.regexp_extract_all(text, F.lit(PHONE_RE), 0))
         .cast("long")
         .alias("n_phones"),
-        redact_pii(F.col(text_col)).alias("redacted"),
+        redact_pii(text).alias("redacted"),
     )
 
 
-def ngram_freq(
-    df: DataFrame,
-    n: int = 2,
-    text_col: str = "text",
-    min_count: int = 2,
-) -> DataFrame:
-    """Corpus-wide n-gram frequency table (the classic training-data
-    statistic: vocabulary/boilerplate discovery): (ngram, n_docs, total).
+def ngram_freq(df: DataFrame) -> DataFrame:
+    """Corpus-wide bigram frequency table (the classic training-data
+    statistic: vocabulary/boilerplate discovery): (ngram, n_docs, total)
+    for every bigram occurring at least twice.
 
     Two n-gram-keyed aggregations (r6), both with map-side partial
     aggregation collapsing each partition's duplicates to the (bounded,
@@ -295,8 +279,8 @@ def ngram_freq(
     now — plus the two-phase distinct-aggregate split (the same lesson
     as the r5 q47 rework). The final n_docs⋈total join is on the
     vocabulary table, negligible at any corpus size."""
-    base = df.select(F.col("doc_id"), tokens(F.col(text_col)).alias("_t"))
-    grams = ngrams(F.col("_t"), n, hashed=False)
+    base = df.select(F.col("doc_id"), tokens(F.col("text")).alias("_t"))
+    grams = ngrams(F.col("_t"), 2, hashed=False)
     total = (
         base.select(F.explode(grams).alias("ngram"))
         .groupBy("ngram")
@@ -309,6 +293,6 @@ def ngram_freq(
     )
     return (
         n_docs.join(total, "ngram")
-        .filter(F.col("total") >= min_count)
+        .filter(F.col("total") >= 2)
         .select("ngram", "n_docs", "total")
     )

@@ -13,7 +13,7 @@ at once. Every frame of a round is computed once:
       → staleness cut ⋈ F3 min_views → P12 robots     -- job 2: `selected` checkpoint
         → in-round dedup
       → bloom probe + fold (ADD-AT-SELECT, D1/D2)     -- job 3: commits the round
-      → selected ⋉ survivors                          -- the round's slim candidates
+      → selected ⋉ broadcast(survivors)               -- the round's slim candidates
       → extract (snapshot: once, at the terminal scan; live: per round over HTTP)
       → F5 detail-date / F6 status
 
@@ -50,6 +50,10 @@ committed candidates into the same terminal extraction, so the output,
 its lineage columns and the METRICS table match an uninterrupted run
 (north_rule resumability). A live crawl's durable unit is the tick
 (``streaming.cadence.crawl_tick``).
+
+Input columns: the snapshot is read as ``url`` and ``html`` (the ``PAGES``
+schema); a robots table as ``host``, ``rules``, ``fetched_ts`` and
+``allow_all``.
 """
 
 from __future__ import annotations
@@ -623,11 +627,12 @@ def run_crawl(
             )
             .drop("_max_page")
         )
-        # P12: robots gating before any fetch, and before the dedup: the
-        # gate is a left join, so a host with several robots rows (one per
-        # fetch) emits each of its candidates once per row
+        # P12: robots gating before any fetch. The gate joins each host's
+        # latest robots row, one per candidate, so it can run ahead of the
+        # in-round dedup without repeating candidates (joining every row of
+        # a host fetched twice used to emit each of its candidates twice)
         if robots is not None:
-            selected = gate_by_robots(selected, robots, host_col="host", url_col="link")
+            selected = gate_by_robots(selected, robots, url_col="link")
         sel_obs = Observation()
         selected = (
             selected.withColumn("url_hash", url_hash(F.col("link")))
@@ -664,7 +669,7 @@ def run_crawl(
         )
         if fetcher is None:
             seen = folded
-        unseen = selected.join(survivors, on="url_hash", how="left_semi")
+        unseen = selected.join(F.broadcast(survivors), "url_hash", "left_semi")
         t_seen = time.time() - t_jobs0 - t_stale
 
         # Detail candidates, tagged with their round for per-round METRICS

@@ -13,6 +13,10 @@ Partition-parallel politeness instead means:
 - **priority ordering** (north_rule): ``(depth asc, freshness desc,
   quota_rank asc)`` + deterministic tiebreaks ``(site_rank, page_no,
   row_idx)`` reproducing the reference's serial crawl order.
+
+Input columns: crawl frames are read as ``host`` and ``url`` (plus
+``depth``/``warc_ts`` for the quota order and the frontier columns for
+:func:`priority_sort`).
 """
 
 from __future__ import annotations
@@ -23,11 +27,7 @@ from pyspark.sql import functions as F
 from ..operators.fetch import SALT_N_COL
 
 
-def host_salt_plan(
-    df: DataFrame,
-    host_col: str = "host",
-    target_rows_per_task: int = 5000,
-) -> dict[str, int]:
+def host_salt_plan(df: DataFrame, target_rows_per_task: int = 5000) -> dict[str, int]:
     """One ``groupBy(host).count()`` pre-pass → per-host salt factors.
 
     Only MEGA-hosts (count > target) are collected; everything else defaults
@@ -40,21 +40,19 @@ def host_salt_plan(
     snapshot (host distribution is stable across depth rounds) and reuse.
     """
     rows = (
-        df.groupBy(host_col)
+        df.groupBy("host")
         .count()
         .filter(F.col("count") > target_rows_per_task)  # mega-hosts only
         .collect()
     )
     return {
-        r[host_col]: max(1, -(-int(r["count"]) // target_rows_per_task)) for r in rows
+        r["host"]: max(1, -(-int(r["count"]) // target_rows_per_task)) for r in rows
     }
 
 
 def salted_repartition_by_host(
     df: DataFrame,
     salt_plan: dict[str, int],
-    host_col: str = "host",
-    url_col: str = "url",
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Repartition fetch candidates by (host, salt) and keep each row's
@@ -71,29 +69,22 @@ def salted_repartition_by_host(
     salt_n = F.lit(1)
     if salt_plan:
         mapping = F.create_map(*[F.lit(x) for kv in salt_plan.items() for x in kv])
-        salt_n = F.coalesce(mapping[F.col(host_col)], F.lit(1))
+        salt_n = F.coalesce(mapping[F.col("host")], F.lit(1))
     salted = df.withColumn(SALT_N_COL, salt_n)
     key = F.concat_ws(
-        "#", F.col(host_col), F.pmod(F.xxhash64(F.col(url_col)), F.col(SALT_N_COL))
+        "#", F.col("host"), F.pmod(F.xxhash64(F.col("url")), F.col(SALT_N_COL))
     )
     if num_partitions:
         return salted.repartition(num_partitions, key)
     return salted.repartition(key)
 
 
-def apply_host_quota(
-    df: DataFrame,
-    quota: int,
-    host_col: str = "host",
-    order_cols: list | None = None,
-) -> DataFrame:
-    """Keep at most ``quota`` rows per host, best-priority first (P8/A3)."""
-    order = order_cols or [
-        F.col("depth").asc(),
-        F.col("warc_ts").desc(),
-        F.col("url").asc(),
-    ]
-    w = Window.partitionBy(host_col).orderBy(*order)
+def apply_host_quota(df: DataFrame, quota: int) -> DataFrame:
+    """Keep at most ``quota`` rows per host, best-priority first (P8/A3):
+    ``(depth asc, warc_ts desc, url asc)``."""
+    w = Window.partitionBy("host").orderBy(
+        F.col("depth").asc(), F.col("warc_ts").desc(), F.col("url").asc()
+    )
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= quota)

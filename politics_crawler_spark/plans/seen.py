@@ -15,6 +15,8 @@ Probe and fold are one operator, :func:`probe_and_update`; every crawl mode
 reads and writes the seen table through it. A caller that needs one half
 only (the live-fetch crawl probes at select time and folds after the fetch
 resolves) discards the other.
+
+Input columns: probed and folded key frames are read as ``url_hash``.
 """
 
 from __future__ import annotations
@@ -41,8 +43,8 @@ def empty_seen(spark: SparkSession, n_shards: int = DEFAULT_SHARDS) -> DataFrame
     return spark.createDataFrame(rows, schema=SEEN)
 
 
-def with_shard(df: DataFrame, n_shards: int, hash_col: str = "url_hash") -> DataFrame:
-    return df.withColumn("shard_id", F.pmod(F.col(hash_col), F.lit(n_shards)).cast("int"))
+def with_shard(df: DataFrame, n_shards: int) -> DataFrame:
+    return df.withColumn("shard_id", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int"))
 
 
 def probe_and_update(

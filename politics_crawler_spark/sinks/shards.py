@@ -20,6 +20,8 @@ Scale notes (100 TB):
 - Documents larger than the budget land in their own shard (the
   assignment's floor semantics); the sink never splits a document.
 
+Input columns: documents are read as ``doc_id`` (a long) and ``text``.
+
 The reference appends rows to flat per-site CSVs
 (crawler_schedule.py:150-179); a partitioned training-shard layout is
 engine-added surface.
@@ -38,8 +40,6 @@ def write_jsonl_shards(
     out_dir: str,
     budget: int = 2000,
     bucket_docs: int = 100,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Assign token-budget shards and write `out_dir/shard_id=N/*.json`
     (JSONL: one record per line with id, token count, and text).
@@ -53,11 +53,11 @@ def write_jsonl_shards(
     # its dedup anti-join and decontamination join). `assign` feeds both the
     # write and the audit aggregation; its rows are fixed-width (id,
     # n_tokens, shard_id). The blocks free with the returned audit frame.
-    docs = df.select(id_col, text_col).localCheckpoint(eager=True)
+    docs = df.select("doc_id", "text").localCheckpoint(eager=True)
     assign = token_budget_shards(
-        docs, budget=budget, bucket_docs=bucket_docs, id_col=id_col, text_col=text_col
+        docs, budget=budget, bucket_docs=bucket_docs
     ).localCheckpoint(eager=True)
-    rows = docs.join(assign, id_col)
+    rows = docs.join(assign, "doc_id")
     (
         rows.repartition(df.sparkSession.sparkContext.defaultParallelism, "shard_id")
         .write.mode("overwrite")

@@ -18,6 +18,9 @@ as-is. Normalizations applied to the batch first:
      rows dropped — crawler_schedule.py:253-262)
   K5 null tokens ('nan','NaN','None' → NULL — :232-237)
   K6 images list → JSON string (:271-277)
+
+Input columns: batches and targets are rows of the extracted-posts schema;
+:func:`upsert_partitioned`'s target is partitioned by ``community``.
 """
 
 from __future__ import annotations
@@ -125,13 +128,8 @@ def upsert(target: DataFrame, batch: DataFrame) -> DataFrame:
     return out
 
 
-def upsert_partitioned(
-    spark,
-    target_path: str,
-    batch: DataFrame,
-    partition_col: str = "community",
-) -> list[str]:
-    """Partition-scoped merge over a ``partitionBy(partition_col)`` parquet
+def upsert_partitioned(spark, target_path: str, batch: DataFrame) -> list[str]:
+    """Partition-scoped merge over a ``partitionBy("community")`` parquet
     target: only partitions containing batch keys are joined and rewritten
     (Spark dynamic partition overwrite); untouched partition files stay
     byte-identical on disk.
@@ -186,9 +184,9 @@ def upsert_partitioned(
 
     b = normalize_batch(batch) if "images" in batch.columns else batch
     # O(#communities) collect — the partition *values*, never row data
-    parts = [r[0] for r in b.select(partition_col).distinct().collect()]
+    parts = [r[0] for r in b.select("community").distinct().collect()]
     target = spark.read.parquet(target_path)
-    merged = upsert(target.filter(F.col(partition_col).isin(parts)), b)
+    merged = upsert(target.filter(F.col("community").isin(parts)), b)
     # STAGING-THEN-SWAP (ADVICE r2): the merge is fully written to a side
     # path first — the live target is untouched until every merged byte is
     # durable — then each touched partition dir is swapped in via two
@@ -199,13 +197,13 @@ def upsert_partitioned(
     # merge_sql()'s MERGE INTO gives true snapshot atomicity.
     staging = target_path.rstrip("/") + ".staging"
     shutil.rmtree(staging, ignore_errors=True)
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
+    merged.write.mode("overwrite").partitionBy("community").parquet(staging)
     # Swap the partition dirs SPARK WROTE (directory listing), not
     # f-string-formatted values: Spark escapes special characters in
     # partition paths and writes NULL as __HIVE_DEFAULT_PARTITION__, so a
     # formatted name can miss the real directory (ADVICE r3).
     for sub in sorted(os.listdir(staging)):
-        if not sub.startswith(f"{partition_col}="):
+        if not sub.startswith("community="):
             continue  # _SUCCESS & friends
         src, dst = os.path.join(staging, sub), os.path.join(target_path, sub)
         bak = dst + ".bak"

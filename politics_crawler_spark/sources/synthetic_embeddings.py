@@ -5,13 +5,14 @@ Real embedding corpora cluster (topics, templates, languages); uniform
 random vectors are the degenerate worst case where every partition-based
 ANN index must probe nearly everything for high recall — grading an index
 there demonstrates nothing (round-2 verdict). This generator fixes a
-mixture of ``n_clusters`` unit-norm centers and draws each vector as
-``normalize(center[i % n_clusters] + sigma * noise_i)``.
+mixture of ``CLUSTERS`` unit-norm centers and draws each vector as
+``normalize(center[i % CLUSTERS] + SIGMA * noise_i)``.
 
-Every vector is a pure function of ``(seed, i)`` — numpy on the driver (for
+Every vector is a pure function of ``(SEED, i)`` — numpy on the driver (for
 the exact ground-truth oracle, computed INDEPENDENTLY of any Spark
 operator) and ``mapInPandas`` over ``spark.range`` (distributed, zero
-shuffle, no driver data) produce bit-identical float32 rows.
+shuffle, no driver data) produce bit-identical float32 rows. Both
+generators emit ``(vec_id long, embedding array<float>)``.
 """
 
 from __future__ import annotations
@@ -19,11 +20,11 @@ from __future__ import annotations
 import numpy as np
 
 DEFAULT_N = 100_000
-DEFAULT_DIM = 32
-DEFAULT_CLUSTERS = 20
-DEFAULT_SIGMA = 0.04
-DEFAULT_SEED = 123
 DEFAULT_QUERIES = 100
+DIM = 32
+CLUSTERS = 20
+SIGMA = 0.04
+SEED = 123
 
 
 def _centers(n_clusters: int, dim: int, seed: int) -> np.ndarray:
@@ -63,45 +64,30 @@ def _counter_normals(ids: np.ndarray, dim: int, seed: int) -> np.ndarray:
     return np.sqrt(-2.0 * np.log(u1)) * np.cos(2.0 * np.pi * u2)
 
 
-def emb_rows(
-    ids: np.ndarray,
-    n_clusters: int = DEFAULT_CLUSTERS,
-    dim: int = DEFAULT_DIM,
-    sigma: float = DEFAULT_SIGMA,
-    seed: int = DEFAULT_SEED,
-) -> np.ndarray:
-    """float32 (len(ids), dim) block; row for id i is reproducible anywhere."""
-    cent = _centers(n_clusters, dim, seed)
+def emb_rows(ids: np.ndarray) -> np.ndarray:
+    """float32 (len(ids), DIM) block; row for id i is reproducible anywhere."""
+    cent = _centers(CLUSTERS, DIM, SEED)
     idx = np.asarray(ids, dtype=np.int64)
-    v = cent[idx % n_clusters] + sigma * _counter_normals(idx, dim, seed)
+    v = cent[idx % CLUSTERS] + SIGMA * _counter_normals(idx, DIM, SEED)
     v /= np.linalg.norm(v, axis=1, keepdims=True)
     return v.astype(np.float32)
 
 
-def embeddings_np(
-    n: int = DEFAULT_N, **kw
-) -> np.ndarray:
-    return emb_rows(np.arange(n), **kw)
+def embeddings_np(n: int = DEFAULT_N) -> np.ndarray:
+    return emb_rows(np.arange(n))
 
 
-def exact_topk_np(
-    n: int = DEFAULT_N,
-    query_ids: list[int] | None = None,
-    k: int = 10,
-    round_to: int = 4,
-    **kw,
-) -> list[tuple[int, int, float, int]]:
+def exact_topk_np(n: int = DEFAULT_N) -> list[tuple[int, int, float, int]]:
     """INDEPENDENT exact ground truth: (query_id, neighbor_id, sim, rank)
-    rows by brute-force numpy cosine — never touches the Spark operators, so
-    it can oracle them (same non-circularity contract as the crawl
-    simulator). Ties broken by ascending neighbor_id on the ROUNDED sim,
-    matching cosine_topk's window order."""
-    query_ids = (
-        query_ids if query_ids is not None else list(range(DEFAULT_QUERIES))
-    )
-    m = embeddings_np(n, **kw).astype(np.float64)
+    rows of the top 10 of each of the first ``DEFAULT_QUERIES`` ids, by
+    brute-force numpy cosine rounded to 4 places — never touches the Spark
+    operators, so it can oracle them (same non-circularity contract as the
+    crawl simulator). Ties broken by ascending neighbor_id on the ROUNDED
+    sim, matching cosine_topk's window order."""
+    query_ids = list(range(DEFAULT_QUERIES))
+    m = embeddings_np(n).astype(np.float64)
     m /= np.linalg.norm(m, axis=1, keepdims=True)
-    sims_all = np.round(m[np.asarray(query_ids)] @ m.T, round_to)  # (Q, N)
+    sims_all = np.round(m[np.asarray(query_ids)] @ m.T, 4)  # (Q, N)
     rows = []
     ids = np.arange(n)
     for row_i, q in enumerate(query_ids):
@@ -109,7 +95,7 @@ def exact_topk_np(
         cand_ids = ids[mask]
         # stable sort on ascending id, then stable sort on -sim → exact
         # (-sim, id) order without a python-level comparator
-        order = cand_ids[np.argsort(-sims_all[row_i][mask], kind="stable")][:k]
+        order = cand_ids[np.argsort(-sims_all[row_i][mask], kind="stable")][:10]
         rows.extend(
             (q, int(i), float(sims_all[row_i][i]), rank + 1)
             for rank, i in enumerate(order)
@@ -139,35 +125,35 @@ NEARDUP_SEED = 777
 NEARDUP_TOTAL = NEARDUP_BASE + NEARDUP_FAMS * NEARDUP_DUPS
 
 
-def neardup_rows(ids: np.ndarray, dim: int = DEFAULT_DIM,
-                 seed: int = NEARDUP_SEED) -> np.ndarray:
-    """float32 block for the near-dup corpus; pure function of (seed, id)
-    — numpy and mapInPandas produce bit-identical rows (same contract as
-    emb_rows)."""
+def neardup_rows(ids: np.ndarray) -> np.ndarray:
+    """float32 block for the near-dup corpus; pure function of
+    (NEARDUP_SEED, id) — numpy and mapInPandas produce bit-identical rows
+    (same contract as emb_rows)."""
     ids = np.asarray(ids, dtype=np.int64)
     base_ids = np.where(ids < NEARDUP_BASE, ids, (ids - NEARDUP_BASE) % NEARDUP_FAMS)
-    base = _counter_normals(base_ids, dim, seed)
+    base = _counter_normals(base_ids, DIM, NEARDUP_SEED)
     base /= np.linalg.norm(base, axis=1, keepdims=True)
     out = base
     dup = ids >= NEARDUP_BASE
     if dup.any():
-        pert = _counter_normals(ids[dup], dim, seed + 1)
+        pert = _counter_normals(ids[dup], DIM, NEARDUP_SEED + 1)
         pert /= np.linalg.norm(pert, axis=1, keepdims=True)
         v = base[dup] + NEARDUP_EPS * pert
         out[dup] = v / np.linalg.norm(v, axis=1, keepdims=True)
     return out.astype(np.float32)
 
 
-def neardup_embeddings_np(n: int = NEARDUP_TOTAL, **kw) -> np.ndarray:
-    return neardup_rows(np.arange(n), **kw)
+def neardup_embeddings_np(n: int = NEARDUP_TOTAL) -> np.ndarray:
+    return neardup_rows(np.arange(n))
 
 
-def neardup_survivors_np(threshold: float = 0.99, n: int = NEARDUP_TOTAL,
-                         block: int = 4096, **kw) -> list[int]:
+def neardup_survivors_np() -> list[int]:
     """INDEPENDENT ground truth for the dedup gate: exact all-pairs cosine
-    (blocked numpy matmul), union-find over >=-threshold edges, min-id
-    survivor per component — never touches the Spark operators."""
-    m = neardup_embeddings_np(n, **kw).astype(np.float64)
+    (numpy matmul in blocks of 4096 rows), union-find over edges at cosine
+    >= 0.99 (the gate's bar), min-id survivor per component — never
+    touches the Spark operators."""
+    n, block = NEARDUP_TOTAL, 4096
+    m = neardup_embeddings_np(n).astype(np.float64)
     m /= np.linalg.norm(m, axis=1, keepdims=True)
     parent = list(range(n))
 
@@ -179,7 +165,7 @@ def neardup_survivors_np(threshold: float = 0.99, n: int = NEARDUP_TOTAL,
 
     for lo in range(0, n, block):
         s = m[lo : lo + block] @ m.T  # (block, n)
-        ii, jj = np.nonzero(s >= threshold)
+        ii, jj = np.nonzero(s >= 0.99)
         for bi, j in zip(ii, jj):
             i = lo + int(bi)
             j = int(j)
@@ -192,9 +178,8 @@ def neardup_survivors_np(threshold: float = 0.99, n: int = NEARDUP_TOTAL,
     return sorted(roots)
 
 
-def synthesize_neardup_embeddings(spark, n: int = NEARDUP_TOTAL,
-                                  partitions: int | None = None, **kw):
-    """Distributed near-dup corpus: spark.range → mapInPandas, schema
+def _synthesize(spark, n: int, rows):
+    """spark.range → mapInPandas over the ``rows(ids)`` generator, schema
     (vec_id long, embedding array<float>) — zero driver data."""
     import pandas as pd
     from pyspark.sql import types as T
@@ -205,39 +190,23 @@ def synthesize_neardup_embeddings(spark, n: int = NEARDUP_TOTAL,
             T.StructField("embedding", T.ArrayType(T.FloatType()), False),
         ]
     )
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
+    parts = max(spark.sparkContext.defaultParallelism, 8)
 
     def _gen(batches):
         for pdf in batches:
             ids = pdf["id"].to_numpy()
-            vecs = neardup_rows(ids, **kw)
             yield pd.DataFrame(
-                {"vec_id": ids, "embedding": [v.tolist() for v in vecs]}
+                {"vec_id": ids, "embedding": [v.tolist() for v in rows(ids)]}
             )
 
     return spark.range(0, n, numPartitions=parts).mapInPandas(_gen, schema=schema)
 
 
-def synthesize_embeddings(spark, n: int = DEFAULT_N, partitions: int | None = None, **kw):
-    """Distributed generation: spark.range → mapInPandas, schema
-    (vec_id long, embedding array<float>)."""
-    import pandas as pd
-    from pyspark.sql import types as T
+def synthesize_neardup_embeddings(spark, n: int = NEARDUP_TOTAL):
+    """Distributed near-dup corpus (see :func:`neardup_rows`)."""
+    return _synthesize(spark, n, neardup_rows)
 
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType(), False),
-            T.StructField("embedding", T.ArrayType(T.FloatType()), False),
-        ]
-    )
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
 
-    def _gen(batches):
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            vecs = emb_rows(ids, **kw)
-            yield pd.DataFrame(
-                {"vec_id": ids, "embedding": [v.tolist() for v in vecs]}
-            )
-
-    return spark.range(0, n, numPartitions=parts).mapInPandas(_gen, schema=schema)
+def synthesize_embeddings(spark, n: int = DEFAULT_N):
+    """Distributed clustered embeddings (see :func:`emb_rows`)."""
+    return _synthesize(spark, n, emb_rows)

@@ -555,12 +555,12 @@ def gen_row(row_id: int, layout: list[dict], seed: int = DEFAULT_SEED) -> dict:
     }
 
 
-def synthesize_pages_pandas(total_rows: int, seed: int = DEFAULT_SEED, replicas: int = 1):
+def synthesize_pages_pandas(total_rows: int, replicas: int = 1):
     import pandas as pd
 
     layout = board_layout(total_rows, replicas)
     n = layout[-1]["start"] + layout[-1]["n_rows"] if layout else 0
-    return pd.DataFrame([gen_row(i, layout, seed) for i in range(n)])
+    return pd.DataFrame([gen_row(i, layout) for i in range(n)])
 
 
 def synthesize_pages(spark, total_rows: int, seed: int = DEFAULT_SEED,

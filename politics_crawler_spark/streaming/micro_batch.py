@@ -9,6 +9,10 @@ equivalent streaming entry points for deployments that prefer them:
   ``Trigger.AvailableNow`` = the reference's "run now, drain, stop" cadence.
 - ``stream_hourly_rollup``: event-time windowed aggregation with watermark
   (the A2 metrics rollup as a stream; late data bounded by the watermark).
+
+Input columns: pages directories hold the ``PAGES`` schema, docs
+directories ``DOCS_DDL`` (deduped on ``text``); rollup events are read as
+``ts``, ``event_type`` and ``value``, fetch events as ``host`` and ``ts``.
 """
 
 from __future__ import annotations
@@ -25,9 +29,9 @@ def stream_extract(
     pages_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
-    """Extract every detail page arriving in ``pages_dir`` (parquet files).
+    """Extract every detail page arriving in ``pages_dir`` (parquet files),
+    draining what is there and stopping (``Trigger.AvailableNow``).
 
     Returns the StreamingQuery; caller awaits termination. Stateless map —
     scales with input files, no state store.
@@ -43,24 +47,21 @@ def stream_extract(
     out = with_extraction(detail).select(
         "url", "warc_ts", "site", "content", "images", "status"
     )
-    writer = (
+    return (
         out.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def stream_hourly_rollup(
-    events: DataFrame,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Watermarked hourly rollup (works on a streaming or batch frame)."""
+def stream_hourly_rollup(events: DataFrame) -> DataFrame:
+    """Hourly rollup with a one-hour watermark (works on a streaming or
+    batch frame)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
         .select(F.col("w.start").alias("hour"), "event_type", "n", "total_value")
@@ -79,14 +80,16 @@ HOST_SESSION_OUT = (
     "n_fetches long, closed boolean"
 )
 _HOST_SESSION_STATE = "start double, last double, n long"
+# A quiet gap longer than this (seconds) closes a host's fetch session.
+SESSION_GAP_S = 600.0
 
 
-def host_fetch_sessions(fetches: DataFrame, gap_s: float = 600.0) -> DataFrame:
+def host_fetch_sessions(fetches: DataFrame) -> DataFrame:
     """Gap-based per-host fetch sessions over a STREAMING frame of
     ``(host string, ts timestamp)`` rows.
 
     Emits one row per closed session (``closed=true``; a quiet gap longer
-    than ``gap_s`` ended it) plus an open-session snapshot per host per
+    than ``SESSION_GAP_S`` ended it) plus an open-session snapshot per host per
     micro-batch (``closed=false`` — the live crawl-rate view). State (one
     tiny tuple per host) persists in the state store across micro-batches,
     so session counts span batch boundaries — the property the test pins.
@@ -108,7 +111,7 @@ def host_fetch_sessions(fetches: DataFrame, gap_s: float = 600.0) -> DataFrame:
         for pdf in pdfs:
             ts_all.extend(float(t.timestamp()) for t in pdf["ts"])
         for tt in sorted(ts_all):
-            if last is not None and tt - last > gap_s:
+            if last is not None and tt - last > SESSION_GAP_S:
                 rows.append((host, start, last, n, True))
                 start, n = tt, 0
             if start is None:
@@ -140,13 +143,11 @@ def stream_exact_dedup(
     docs_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    schema: str = DOCS_DDL,
-    text_col: str = "text",
-    available_now: bool = True,
 ):
-    """Incremental exact dedup over a GROWING corpus directory: emit each
-    document whose content digest has never been seen in any prior
-    micro-batch OR any prior run — the streaming form of
+    """Incremental exact dedup over a GROWING corpus directory
+    (``DOCS_DDL`` parquet files, drained per ``Trigger.AvailableNow``):
+    emit each document whose content digest has never been seen in any
+    prior micro-batch OR any prior run — the streaming form of
     ``operators.dedup.exact_dedup`` for continuous ingestion (new crawl
     drops land as files; only never-before-seen docs flow to the sink).
 
@@ -167,19 +168,18 @@ def stream_exact_dedup(
     Returns the StreamingQuery; caller awaits termination.
     """
     src = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(DOCS_DDL)
         .option("maxFilesPerTrigger", 64)
         .parquet(docs_dir)
     )
-    deduped = src.withColumn("_digest", F.md5(F.col(text_col))).dropDuplicates(
+    deduped = src.withColumn("_digest", F.md5(F.col("text"))).dropDuplicates(
         ["_digest"]
     ).drop("_digest")
-    writer = (
+    return (
         deduped.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -68,7 +68,7 @@ def test_ivf_candidate_volume_and_recall(spark):
     frac = n_cands / (N * N_QUERIES)
     assert frac < 0.15, f"IVF candidate volume not pruned: {frac:.3f} of N·Q"
 
-    approx = ivf_topk(emb, queries, k=10, n_cells=64, n_probe=4)
+    approx = ivf_topk(emb, queries, n_cells=64)
     recall = _mean_recall(approx.collect(), _ground_truth())
     assert recall >= 0.9, f"IVF mean recall {recall}"
     emb.unpersist()

@@ -111,7 +111,7 @@ def test_dup_ngram_coverage_exact(spark):
         ],
     )
     out = {
-        r["doc_id"]: r for r in dup_ngram_coverage(d, n=3, min_docs=2).collect()
+        r["doc_id"]: r for r in dup_ngram_coverage(d, n=3).collect()
     }
     assert len(out) == 4
     assert out[0]["n_covered"] == 3 and out[0]["dup_coverage"] == 0.6
@@ -129,7 +129,7 @@ def test_dup_ngram_coverage_overlapping_spans_dedup(spark):
     # 'a b c' and 'b c d' -> covered positions {0,1,2,3} counted ONCE.
     d = _docs(spark, [(0, "a b c d e"), (1, "x a b c d")])
     out = {
-        r["doc_id"]: r for r in dup_ngram_coverage(d, n=3, min_docs=2).collect()
+        r["doc_id"]: r for r in dup_ngram_coverage(d, n=3).collect()
     }
     assert out[0]["n_covered"] == 4 and out[0]["dup_coverage"] == 0.8
 
@@ -143,7 +143,7 @@ def test_dup_ngram_min_docs_counts_distinct_docs(spark):
     # min_docs=2 the within-doc repeat is NOT cross-document duplication.
     d = _docs(spark, [(0, "a b c z a b c"), (1, "p q r s")])
     out = {
-        r["doc_id"]: r for r in dup_ngram_coverage(d, n=3, min_docs=2).collect()
+        r["doc_id"]: r for r in dup_ngram_coverage(d, n=3).collect()
     }
     assert out[0]["n_covered"] == 0
 
@@ -165,7 +165,7 @@ def test_drop_dup_ngram_spans_rebuild(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in drop_dup_ngram_spans(d, n=3, min_docs=2).collect()
+        for r in drop_dup_ngram_spans(d, n=3).collect()
     }
     assert len(out) == 3
     assert out[0]["text_clean"] == "x y" and out[0]["n_kept"] == 2
@@ -187,8 +187,8 @@ def test_drop_spans_consistent_with_coverage(spark):
             (2, "m n o p q"),
         ],
     )
-    cov = {r["doc_id"]: r for r in dup_ngram_coverage(d, n=3, min_docs=2).collect()}
-    rem = {r["doc_id"]: r for r in drop_dup_ngram_spans(d, n=3, min_docs=2).collect()}
+    cov = {r["doc_id"]: r for r in dup_ngram_coverage(d, n=3).collect()}
+    rem = {r["doc_id"]: r for r in drop_dup_ngram_spans(d, n=3).collect()}
     for i in cov:
         # measure and transform must agree: kept = total - covered
         assert rem[i]["n_kept"] == cov[i]["n_tokens"] - cov[i]["n_covered"]
@@ -214,7 +214,7 @@ def test_source_quality_profile_and_gate(spark):
     rows.append((6, "the cat sat on the mat", "tiny"))
     d = spark.createDataFrame(rows, "doc_id long, text string, source string")
     prof = source_quality_profile(
-        d, min_docs=2, max_mean_punct=0.05, min_mean_stop=0.1
+        d, min_docs=2, min_mean_stop=0.1
     )
     p = {r["source"]: r for r in prof.collect()}
     assert p["good"]["keep_source"] is True
@@ -288,7 +288,7 @@ def test_drop_dup_spans_property_matches_python(spark):
         d = spark.createDataFrame(corpus, "doc_id long, text string")
         got = {
             r["doc_id"]: (r["n_tokens"], r["n_kept"], r["text_clean"])
-            for r in drop_dup_ngram_spans(d, n=3, min_docs=2).collect()
+            for r in drop_dup_ngram_spans(d, n=3).collect()
         }
         assert got == exp
 

@@ -37,6 +37,15 @@ def test_list_pool_one_partition_per_core(spark, crawl_result):
     assert pools[0].rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
+def test_terminal_semi_join_broadcasts_survivors(crawl_result):
+    """Each round's `selected ⋉ survivors` semi-join broadcasts the survivor
+    keys (at most the round's selected rows), so the terminal plan neither
+    sort-merge joins nor shuffles on url_hash."""
+    plan = crawl_result.extracted._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan
+    assert "hashpartitioning(url_hash" not in plan
+
+
 def test_crawl_filters(crawl_result):
     ext = crawl_result.extracted
     # F4: every extracted post dated today

@@ -35,7 +35,7 @@ def test_minhash_lsh_finds_near_dups(spark):
         minhash_signatures,
     )
 
-    sigs = minhash_signatures(_docs(spark), shingle_k=5)
+    sigs = minhash_signatures(_docs(spark))
     pairs = lsh_candidate_pairs(sigs, est_threshold=0.5)
     got = {(r.id_a, r.id_b): r.jaccard_est for r in pairs.collect()}
     assert (1, 3) in got and got[(1, 3)] == 1.0  # exact dup → all minhashes equal
@@ -140,7 +140,7 @@ def test_hamming_band_pairs_match_python_banding(spark):
                 ref[(a, b)] = ham
     got = {
         (r.id_a, r.id_b): r.hamming
-        for r in hamming_band_pairs(sims, "sim", "doc_id", max_hamming=7, bands=8).collect()
+        for r in hamming_band_pairs(sims, "doc_id", max_hamming=7, bands=8).collect()
     }
     assert got == ref
     assert ref[(0, 200)] == ref[(1, 201)] == 0
@@ -348,7 +348,7 @@ def test_ngram_jaccard_exact_values(spark):
     )
     pairs = {
         (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, n=3, threshold=0.0).collect()
+        for r in ngram_jaccard_pairs(df, threshold=0.0).collect()
     }
     assert pairs[(1, 2)] == 1.0
     # grams(1) = {abc,bcd,cde}, grams(3) = {abc,bcx,cxy}: 1 of 5
@@ -426,12 +426,12 @@ def test_cascades_at_the_jaccard_boundary(spark):
     q15 = {(r.id_a, r.id_b) for r in near_dup_pairs(docs, threshold=0.5).collect()}
     sk = minhash_signatures(docs, simhash=True).localCheckpoint(eager=True)
     cands = hamming_band_pairs(
-        sk.select("doc_id", "sim"), "sim", "doc_id", max_hamming=7, bands=8
+        sk.select("doc_id", "sim"), "doc_id", max_hamming=7, bands=8
     )
     ref = sig_jaccard_refine(cands, sk.select("doc_id", "sig"), min_est=0.35)
     q16 = {
         (r.id_a, r.id_b)
-        for r in exact_jaccard_verify(ref, docs, k=5, threshold=0.5).collect()
+        for r in exact_jaccard_verify(ref, docs, threshold=0.5).collect()
     }
 
     def grams(t):

@@ -27,7 +27,7 @@ from politics_crawler_spark.sources.synthetic_embeddings import (
 def test_numpy_ground_truth_survivors():
     """The independent exact all-pairs + union-find collapse yields
     EXACTLY the base ids — anchors the q35 oracle's literal row."""
-    surv = neardup_survivors_np(threshold=0.99)
+    surv = neardup_survivors_np()
     assert surv == list(range(NEARDUP_BASE))
 
 
@@ -82,13 +82,13 @@ def test_embedding_neardup_pairs_and_dedup_small(spark):
 
     got_pairs = {
         (r.id_a, r.id_b)
-        for r in embedding_neardup_pairs(corpus, threshold=0.99).collect()
+        for r in embedding_neardup_pairs(corpus).collect()
     }
     assert got_pairs == exact and len(exact) > 0
 
     surv = {
         r.vec_id
-        for r in embedding_neardup_dedup(corpus, threshold=0.99)
+        for r in embedding_neardup_dedup(corpus)
         .select("vec_id")
         .collect()
     }
@@ -118,7 +118,7 @@ def test_neardup_candidate_volume_prunes(spark):
     # max_hamming=64 disables the distance filter: this counts every
     # distinct pair the banding scheme would ever compare
     n_cand = hamming_band_pairs(
-        sigs, "sim", "vec_id", max_hamming=64, bands=8
+        sigs, "vec_id", max_hamming=64, bands=8
     ).count()
     all_pairs = NEARDUP_TOTAL * (NEARDUP_TOTAL - 1) // 2
     ratio = n_cand / all_pairs

@@ -85,7 +85,6 @@ def test_fetch_backoff_exhausts_attempts_with_bounded_jitter(spark):
     fetch = make_fetch_stage(
         transport=lambda u, ua, t: (500, b""),
         max_attempts=3,
-        backoff_s=(2.0, 4.0),
         sleep=None,  # executor-side sleeps aren't observable; jitter checked below
     )
     df = spark.createDataFrame([("https://h/x",)], "url string").coalesce(1)

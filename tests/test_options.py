@@ -1,0 +1,230 @@
+"""Options census: every defaulted parameter of the package's public
+module-level functions must be set by some call in the repo.
+
+The census parses every ``.py`` file of the repo (package, entry point,
+benches, tools and tests; this file excepted) with ``ast`` and binds each
+call that resolves to a package function to that function's parameters,
+by position or keyword. A call does not set a parameter when it passes a
+literal equal to the callee's default, forwards ``**kw``, or forwards the
+caller's own parameter of the same name and default -- that forward sets
+it only if some call sets the caller's parameter, repeated until nothing
+changes. A defaulted parameter no call sets is a constant in disguise:
+inline it. ``KEEP`` lists the options kept on purpose.
+
+Run ``python tests/test_options.py [repo_root]`` for the per-module table.
+"""
+
+from __future__ import annotations
+
+import ast
+import sys
+from collections import defaultdict
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PKG = "politics_crawler_spark"
+
+# Deployment names of the upsert target, and the only way to schedule a
+# live crawl (a fetcher), which no test or bench runs.
+KEEP = {
+    "sinks.upsert.merge_sql(target_table)",
+    "sinks.upsert.merge_sql(source_view)",
+    "streaming.cadence.crawl_cadence(fetcher)",
+    "streaming.cadence.crawl_tick(fetcher)",
+}
+
+
+class _Module:
+    def __init__(self, root: Path, path: Path):
+        parts = list(path.relative_to(root).with_suffix("").parts)
+        is_init = parts[-1] == "__init__"
+        if is_init:
+            parts.pop()
+        self.name = ".".join(parts)
+        self.tree = ast.parse(path.read_text(), str(path))
+        self.alias = self._imports(self.name if is_init else self.name.rpartition(".")[0])
+
+    def _imports(self, package: str) -> dict[str, str]:
+        """alias -> dotted target (a module or a function), file-wide."""
+        out: dict[str, str] = {}
+        for node in ast.walk(self.tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    head = a.name.split(".")[0]
+                    out[a.asname or head] = a.name if a.asname else head
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:
+                    up = package.split(".")
+                    up = up[: len(up) - (node.level - 1)]
+                    base = ".".join(up + ([base] if base else []))
+                for a in node.names:
+                    out[a.asname or a.name] = f"{base}.{a.name}"
+        return out
+
+    def qualify(self, node) -> str | None:
+        """Dotted repo-wide name of a Name/Attribute expression."""
+        name = _dotted(node)
+        if name is None:
+            return None
+        head, _, rest = name.partition(".")
+        if head in self.alias:
+            return self.alias[head] + (f".{rest}" if rest else "")
+        return f"{self.name}.{name}"
+
+
+def _value(node):
+    """A comparable value: the literal with its type, else the source."""
+    try:
+        v = ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return ("src", ast.unparse(node))
+    return ("lit", type(v), v)
+
+
+def _dotted(node) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        head = _dotted(node.value)
+        return head and f"{head}.{node.attr}"
+    return None
+
+
+class _Func:
+    def __init__(self, module: _Module, node: ast.FunctionDef):
+        self.module, self.name = module.name, node.name
+        a = node.args
+        pos = a.posonlyargs + a.args
+        self.positional = [x.arg for x in pos]
+        self.defaults = {}  # param -> comparable value of its default
+        for x, d in zip(pos[len(pos) - len(a.defaults):], a.defaults):
+            self.defaults[x.arg] = _value(d)
+        for x, d in zip(a.kwonlyargs, a.kw_defaults):
+            if d is not None:
+                self.defaults[x.arg] = _value(d)
+
+    @property
+    def public(self) -> bool:
+        return not self.name.startswith("_")
+
+    def label(self, param: str) -> str:
+        return f"{self.module[len(PKG) + 1:]}.{self.name}({param})"
+
+
+def census(root: Path = ROOT):
+    """Return ``(functions, unset)`` for the repo at ``root``:
+    ``functions`` maps "module.name" to a ``_Func`` for every module-level
+    function of the package (private ones too: they carry forwards), and
+    ``unset`` holds the ``(key, param)`` pairs no call sets."""
+    me = Path(__file__).resolve()
+    modules = {}
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).parts
+        if any(p.startswith(".") or p == "__pycache__" for p in rel) or path.resolve() == me:
+            continue
+        m = _Module(root, path)
+        modules[m.name] = m
+
+    funcs: dict[str, _Func] = {}
+    for m in modules.values():
+        if m.name.split(".")[0] == PKG:
+            for node in m.tree.body:
+                if isinstance(node, ast.FunctionDef):
+                    funcs[f"{m.name}.{node.name}"] = _Func(m, node)
+
+    passed: set[tuple[str, str]] = set()
+    forwards: dict[tuple[str, str], set[tuple[str, str]]] = defaultdict(set)
+
+    def bind(m: _Module, call: ast.Call, enclosing: str | None, outer: dict):
+        key = m.qualify(call.func)
+        if key not in funcs:
+            return
+        f = funcs[key]
+        bound = []
+        for i, arg in enumerate(call.args):
+            if isinstance(arg, ast.Starred) or i >= len(f.positional):
+                break
+            bound.append((f.positional[i], arg))
+        bound += [(k.arg, k.value) for k in call.keywords if k.arg is not None]
+        for param, arg in bound:
+            if param not in f.defaults or _value(arg) == f.defaults[param]:
+                continue
+            if isinstance(arg, ast.Name) and arg.id == param and outer.get(param) == f.defaults[param]:
+                if enclosing is not None:
+                    forwards[(enclosing, param)].add((key, param))
+                continue
+            passed.add((key, param))
+
+    def visit(m: _Module, node, enclosing: str | None, outer: dict):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                key = f"{m.name}.{getattr(child, 'name', '')}"
+                if node is m.tree and key in funcs:
+                    visit(m, child, key, funcs[key].defaults)
+                else:
+                    # a closure still sees the outer parameters it does not
+                    # shadow; any other function forwards nothing
+                    a = child.args
+                    own = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+                    rest = {p: d for p, d in outer.items() if p not in own}
+                    visit(m, child, enclosing if rest else None, rest)
+                continue
+            if isinstance(child, ast.Call):
+                bind(m, child, enclosing, outer)
+            visit(m, child, enclosing, outer)
+
+    for m in modules.values():
+        visit(m, m.tree, None, {})
+
+    live, todo = set(passed), list(passed)
+    while todo:
+        for nxt in forwards.get(todo.pop(), ()):
+            if nxt not in live:
+                live.add(nxt)
+                todo.append(nxt)
+    unset = {(k, p) for k, f in funcs.items() for p in f.defaults if (k, p) not in live}
+    return funcs, unset
+
+
+def _unset_labels(funcs, unset) -> list[str]:
+    return sorted(
+        funcs[k].label(p) for k, p in unset if funcs[k].public and funcs[k].label(p) not in KEEP
+    )
+
+
+def table(root: Path = ROOT) -> str:
+    """Per-module census: public functions, defaulted parameters, unset."""
+    funcs, unset = census(root)
+    rows = defaultdict(lambda: [0, 0, 0])
+    for k, f in funcs.items():
+        if f.public:
+            r = rows[f.module[len(PKG) + 1:]]
+            r[0] += 1
+            r[1] += len(f.defaults)
+    for label in _unset_labels(funcs, unset):
+        rows[label.rpartition("(")[0].rpartition(".")[0]][2] += 1
+    lines = [f"{'module':30s} {'funcs':>5s} {'defaulted':>9s} {'unset':>5s}"]
+    for m in sorted(rows):
+        lines.append(f"{m:30s} {rows[m][0]:5d} {rows[m][1]:9d} {rows[m][2]:5d}")
+    tot = [sum(r[i] for r in rows.values()) for i in range(3)]
+    lines.append(f"{'total':30s} {tot[0]:5d} {tot[1]:9d} {tot[2]:5d}")
+    return "\n".join(lines)
+
+
+def test_every_defaulted_parameter_is_set_by_some_call():
+    labels = _unset_labels(*census())
+    assert not labels, (
+        f"{len(labels)} defaulted parameters are set by no call; "
+        "inline each as a constant:\n  " + "\n  ".join(labels)
+    )
+
+
+def test_keep_list_names_defaulted_parameters():
+    funcs, _ = census()
+    known = {f.label(p) for f in funcs.values() for p in f.defaults}
+    assert KEEP <= known, sorted(KEEP - known)
+
+
+if __name__ == "__main__":
+    print(table(Path(sys.argv[1]).resolve() if len(sys.argv) > 1 else ROOT))

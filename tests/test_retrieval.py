@@ -92,7 +92,7 @@ def test_bm25_duplicate_query_terms_counted_once(spark):
 def test_cardinality_profile_exact_small(spark):
     out = {
         r.source: r
-        for r in cardinality_profile(_corpus(spark), group_col="source").collect()
+        for r in cardinality_profile(_corpus(spark)).collect()
     }
     assert out["s0"].n_docs == 2 and out["s0"].n_tokens == 7
     assert out["s1"].n_docs == 3 and out["s1"].n_tokens == 7
@@ -108,7 +108,7 @@ def test_cardinality_profile_tolerance_at_scale(spark):
         F.lit("g").alias("source"),
         F.concat(F.lit("tok"), F.pmod("id", F.lit(20_000))).alias("text"),
     )
-    row = cardinality_profile(df, group_col="source").collect()[0]
+    row = cardinality_profile(df).collect()[0]
     assert row.n_docs == 40_000 and row.n_tokens == 40_000
     assert abs(row.approx_distinct_tokens - 20_000) / 20_000 < 0.05
 

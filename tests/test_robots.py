@@ -52,6 +52,37 @@ def test_gate_by_robots(spark):
     }
 
 
+def test_gate_by_robots_uses_each_hosts_latest_row(spark):
+    """A newer robots fetch overrides an older one: an old allow_all row
+    must not re-open a path the newer row disallows. A null fetched_ts is
+    the oldest, and of two rows fetched at once the disallowing one wins."""
+    import datetime as dt
+
+    cand = spark.createDataFrame(
+        [
+            ("a.com", "https://a.com/private/1"),
+            ("a.com", "https://a.com/public/2"),
+            ("b.com", "https://b.com/private/3"),
+            ("c.com", "https://c.com/private/4"),
+        ],
+        "host string, link string",
+    )
+    old, new = dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2)
+    robots = robots_df(
+        spark,
+        [
+            {"host": "a.com", "rules": "", "fetched_ts": old, "allow_all": True},
+            {"host": "a.com", "rules": "/private/", "fetched_ts": new, "allow_all": False},
+            {"host": "b.com", "rules": "", "fetched_ts": new, "allow_all": True},
+            {"host": "b.com", "rules": "/private/", "fetched_ts": None, "allow_all": False},
+            {"host": "c.com", "rules": "", "fetched_ts": new, "allow_all": True},
+            {"host": "c.com", "rules": "/private/", "fetched_ts": new, "allow_all": False},
+        ],
+    )
+    got = [r.link for r in gate_by_robots(cand, robots, url_col="link").collect()]
+    assert sorted(got) == ["https://a.com/public/2", "https://b.com/private/3"]
+
+
 def test_crawl_with_blocking_robots(spark, pages_df):
     """Blocking one site's detail paths removes exactly that site's posts."""
     robots = robots_df(
@@ -72,8 +103,8 @@ def test_crawl_with_blocking_robots(spark, pages_df):
 
 def test_crawl_with_two_robots_rows_per_host_keeps_urls_unique(spark, pages_df):
     """ROBOTS carries fetched_ts, so a host fetched twice has two rows. The
-    gate is a left join; it must run before the in-round dedup, or every
-    candidate of that host reaches the output twice."""
+    gate joins only the latest one, so no candidate of that host reaches
+    the output twice."""
     import datetime as dt
 
     robots = robots_df(

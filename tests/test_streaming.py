@@ -17,7 +17,7 @@ def test_stream_extract_available_now(spark, pages_pdf, tmp_path):
     sample = pages_pdf.head(300)
     spark.createDataFrame(sample, schema=PAGES).write.parquet(src)
 
-    q = stream_extract(spark, src, out, ck, available_now=True)
+    q = stream_extract(spark, src, out, ck)
     q.awaitTermination(300)
     got = spark.read.parquet(out)
     n_detail = int((sample["text"] != "").sum())
@@ -61,7 +61,7 @@ def test_host_fetch_sessions_stateful_across_batches(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        host_fetch_sessions(stream, gap_s=600.0)
+        host_fetch_sessions(stream)
         .writeStream.format("memory")
         .queryName("sessions")
         .outputMode("update")

@@ -82,7 +82,7 @@ def test_pii_redaction_exact(spark):
 def test_ngram_freq_exact(spark, docs):
     from politics_crawler_spark.operators.webquality import ngram_freq
 
-    out = {r["ngram"]: r for r in ngram_freq(docs, n=2, min_count=2).collect()}
+    out = {r["ngram"]: r for r in ngram_freq(docs).collect()}
     # 'go go' twice in doc 0; '9 9' twice in doc 4 — the only repeats
     assert set(out) == {"go go", "9 9"}
     assert (out["go go"]["n_docs"], out["go go"]["total"]) == (1, 2)
