@@ -4,6 +4,11 @@ All knobs here are scale-oriented defaults: AQE on (runtime re-plan +
 skew-join splitting), Arrow transport for every pandas UDF, UTC session
 timezone so DuckDB-oracle comparisons are stable, and shuffle parallelism
 sized to the core count instead of the 200-partition default.
+
+Python workers start from ``worker_daemon``, which imports pyspark from
+site-packages instead of Spark's zips when both hold the same release; the
+package's root joins the workers' ``PYTHONPATH`` so that module, like every
+engine UDF, resolves whatever the workers' cwd.
 """
 
 from __future__ import annotations
@@ -13,6 +18,7 @@ import os
 from pyspark.sql import SparkSession
 
 _DRIVER_MEM_CAP_MB = 16 * 1024
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_driver_mem() -> str:
@@ -57,5 +63,14 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.python.daemon.module", "politics_crawler_spark.worker_daemon")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # Spark resolves spark.executorEnv.* (spark-defaults, --conf, builder)
+    # into SparkContext.environment, which every Python function carries to
+    # its workers; append the root there so any PYTHONPATH already set stays.
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(paths + [_PACKAGE_ROOT])
+    return spark

@@ -30,8 +30,8 @@ def test_crawl_content_byte_identical(crawl_result, pages_df):
 
 def test_list_pool_one_partition_per_core(spark, crawl_result):
     """The staged list-page pool is hashed into one partition per core:
-    every list-parse task pays a fixed Python runner cost, so more tasks
-    than cores only adds that cost."""
+    every list-parse task pays a Python worker round trip whatever its
+    rows, so more tasks than cores only add that cost."""
     pools = [c for c in crawl_result.caches if c.columns == ["url", "html"]]
     assert len(pools) == 1
     assert pools[0].rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
