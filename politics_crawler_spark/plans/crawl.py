@@ -422,12 +422,8 @@ def run_crawl(
         # task costs a worker round trip whatever its rows, so tasks beyond
         # the core count only add that cost (4 vCPU, a trivial pandas_udf
         # job over 16k rows: 0.63-0.78 s as 16 tasks, 0.25-0.32 s as 4).
-        # Before worker_daemon kept Spark's zips off the workers' path,
-        # each task's importlib.invalidate_caches() also re-read those
-        # archives (0.19-0.27 s a task; the same job 1.6-2.0 s as 16 tasks,
-        # 0.46-0.59 s as 4). The `cand` cache, the `selected` checkpoint
-        # and the probe keys inherit this width. One bounded shuffle, paid
-        # once per run.
+        # The `cand` cache, the `selected` checkpoint and the probe keys
+        # inherit this width. One bounded shuffle, paid once per run.
         t_pool0 = time.time()
         # every consumer joins the pool against the frontier on the url
         # string, which drops a hash-collision stray

@@ -5,10 +5,13 @@ skew-join splitting), Arrow transport for every pandas UDF, UTC session
 timezone so DuckDB-oracle comparisons are stable, and shuffle parallelism
 sized to the core count instead of the 200-partition default.
 
-Python workers start from ``worker_daemon``, which imports pyspark from
-site-packages instead of Spark's zips when both hold the same release; the
-package's root joins the workers' ``PYTHONPATH`` so that module, like every
-engine UDF, resolves whatever the workers' cwd.
+On a ``local`` master, Python workers start from ``worker_daemon``, which
+imports pyspark from site-packages instead of Spark's zips when both hold
+the same release; the package's root joins the workers' ``PYTHONPATH`` so
+that module, like every engine UDF, resolves whatever the workers' cwd.
+Any other master keeps Spark's own daemon: executors on other hosts have
+neither the driver's paths nor, before a task adds its ``--py-files``, the
+package.
 """
 
 from __future__ import annotations
@@ -32,11 +35,9 @@ def _default_driver_mem() -> str:
     return f"{min(_DRIVER_MEM_CAP_MB, total_mb // 2)}m"
 
 
-def get_spark(
-    app_name: str = "politics-crawler-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def _builder(
+    app_name: str, master: str | None, shuffle_partitions: int | None
+) -> SparkSession.Builder:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -63,14 +64,32 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.python.daemon.module", "politics_crawler_spark.worker_daemon")
     )
-    spark = builder.getOrCreate()
-    # Spark resolves spark.executorEnv.* (spark-defaults, --conf, builder)
-    # into SparkContext.environment, which every Python function carries to
-    # its workers; append the root there so any PYTHONPATH already set stays.
-    env = spark.sparkContext.environment
-    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
-    if _PACKAGE_ROOT not in paths:
-        env["PYTHONPATH"] = os.pathsep.join(paths + [_PACKAGE_ROOT])
+    if _is_local(master):
+        builder = builder.config(
+            "spark.python.daemon.module", "politics_crawler_spark.worker_daemon"
+        )
+    return builder
+
+
+def _is_local(master: str) -> bool:
+    """``local``, ``local[N]``, ``local[N,F]``: workers share the driver's files."""
+    return master.split("[")[0] == "local"
+
+
+def get_spark(
+    app_name: str = "politics-crawler-spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+) -> SparkSession:
+    spark = _builder(app_name, master, shuffle_partitions).getOrCreate()
+    if _is_local(spark.sparkContext.master):
+        # Spark resolves spark.executorEnv.* (spark-defaults, --conf,
+        # builder) into SparkContext.environment, which every Python
+        # function carries to its workers; append the root there so any
+        # PYTHONPATH already set stays.
+        env = spark.sparkContext.environment
+        paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+        if _PACKAGE_ROOT not in paths:
+            env["PYTHONPATH"] = os.pathsep.join(paths + [_PACKAGE_ROOT])
     return spark

@@ -12,8 +12,9 @@ When pyspark and py4j also resolve outside those archives, and that pyspark
 is the release the archives hold, this module drops the archives before
 pyspark is imported, so the forked workers import it from site-packages and a
 task's ``invalidate_caches()`` only resets directory finders (~0.13 ms).
-Otherwise the daemon runs with Spark's path as it is. ``session.get_spark``
-starts the daemon through this module (``spark.python.daemon.module``).
+Otherwise the daemon runs with Spark's path as it is. On a ``local``
+master ``session.get_spark`` starts the daemon through this module
+(``spark.python.daemon.module``).
 """
 
 from __future__ import annotations

@@ -41,6 +41,19 @@ def test_workers_import_pyspark_outside_archives(spark):
     assert not any(d.endswith((".zip", ".jar")) for d in state["pyspark"].split(os.sep))
 
 
+def test_only_local_masters_start_the_engine_daemon():
+    """Executors on other hosts cannot import the package when their daemon
+    starts (``--py-files`` reach a worker per task), so they keep Spark's."""
+    from politics_crawler_spark.session import _builder
+
+    daemon = "spark.python.daemon.module"
+    for master in ("local", "local[2]", "local[2,3]"):
+        conf = _builder("t", master, 2)._options
+        assert conf[daemon] == "politics_crawler_spark.worker_daemon"
+    for master in ("spark://h:7077", "yarn", "k8s://https://h:6443", "local-cluster[2,1,1024]"):
+        assert daemon not in _builder("t", master, 2)._options
+
+
 def _archive(path, files):
     with zipfile.ZipFile(path, "w") as z:
         for name, text in files.items():
