@@ -7,10 +7,11 @@ at once. Every frame of a round is computed once:
 
     list frontier (tiny, broadcast) ⋈ list-page pool  -- "fetch", no snapshot rescan
       → parse_list_udf → explode                      -- candidate rows
-      → F1 validity / F2 notice / F4 today / L1-L5    -- JVM exprs; persisted `cand`
-      → per-(board, page) counts → driver             -- job 1: fills `cand`; P9
+      → F2 notice / L1-L5 normalize                   -- JVM exprs; persisted `cand`
+      → F1 validity / F4 today, read off `cand`:
+        per-(board, page) counts → driver             -- job 1: fills `cand`; P9
                                                          staleness replayed in Python
-      → staleness cut ⋈ F3 min_views → P12 robots     -- job 2: `selected` checkpoint
+        staleness cut ⋈ F3 min_views → P12 robots     -- job 2: `selected` checkpoint
         → in-round dedup
       → bloom probe + fold (ADD-AT-SELECT, D1/D2)     -- job 3: commits the round
       → selected ⋉ broadcast(survivors)               -- the round's slim candidates
@@ -297,6 +298,27 @@ def _per_round_counts(rounds) -> list:
     return out
 
 
+def _normalized_candidates(lists: DataFrame, run_date: str) -> DataFrame:
+    """The list pages' candidate rows with F2 (notices) dropped and the
+    L1-L5 normalizations added: ``link``, ``date``, ``views`` and
+    ``list_recommend``. F1 validity and F4 today-only are the readers' job.
+
+    One select, not a withColumn chain: Spark re-runs the analyzer on every
+    intermediate Dataset, so an 8-step chain pays 8 passes over a growing
+    plan on the driver. No filter on ``date`` either: a filter over it is
+    pushed below the projection with the date cascade inlined, and
+    InferFiltersFromConstraints adds ``isnotnull`` over another copy, so the
+    16-formatter cascade was generated three times into one method of
+    ~22.8 KB, over HotSpot's 8,000-byte JIT limit, and ran interpreted."""
+    return parse_list_pages(lists).filter(~F.col("is_notice")).select(  # F2
+        "*",
+        canonical_url(F.col("url"), F.col("href")).alias("link"),
+        parse_list_date(F.col("date_txt"), F.col("date_attr"), run_date).alias("date"),
+        parse_views(F.col("views_txt")).alias("views"),
+        parse_recommend(F.col("rec_txt")).alias("list_recommend"),
+    )
+
+
 def run_crawl(
     spark: SparkSession,
     pages: DataFrame | None,
@@ -567,30 +589,17 @@ def run_crawl(
                 F.col("fetch_status").isin("ok", "short")
             ).drop("fetch_status", "http_code", "attempts", "ua")
 
-        cand_raw = parse_list_pages(lists)
-        # ONE select + one filter, not a withColumn chain: Spark re-runs
-        # the analyzer on every intermediate Dataset, so an 8-step chain
-        # pays 8 passes over a growing plan — measurable per-round driver
-        # time that no executor count can hide. (Semantics unchanged: the
-        # normalizations commute; codegen CSE shares the repeated date
-        # subtree.)
-        _date = parse_list_date(F.col("date_txt"), F.col("date_attr"), run_date)
-        cand = (
-            cand_raw.filter(~F.col("is_notice"))  # F2
-            .select(
-                "*",
-                canonical_url(F.col("url"), F.col("href")).alias("link"),
-                _date.alias("date"),
-                parse_views(F.col("views_txt")).alias("views"),
-                parse_recommend(F.col("rec_txt")).alias("list_recommend"),
-            )
-            # F1 validity + F4 today-only BEFORE the persist: every
-            # downstream consumer — the staleness counts (pages without
-            # today rows count 0), the F3 select, the detail candidates —
-            # reads today rows only, so caching the ~8× larger unfiltered
-            # candidate set would be pure memory traffic
-            .filter(is_valid_post_url(F.col("link")) & is_today(_date, run_date))
-        ).persist()
+        # Persisted as normalized, with F1/F4 applied where it is read (the
+        # per-page today counts and the `selected` cut): the cache is a
+        # barrier the optimizer cannot push the filter through, so the date
+        # cascade runs once per row (see _normalized_candidates). Holding
+        # the non-today rows too costs little (storage info, 4 cores):
+        # perfbench crawl_fresh 2,278 → 5,100 rows, 0.56 → 1.16 MiB; bench.py
+        # at sf0.1 45,738 → 66,210 rows, 10.1 → 13.9 MiB in the largest round.
+        cand = _normalized_candidates(lists, run_date).persist()
+        today = cand.filter(
+            is_valid_post_url(F.col("link")) & is_today(F.col("date"), run_date)
+        )
         t_build = time.time() - round_t0  # frontier + plan construction
 
         # job 1: per-page today counts. It fills the `cand` cache (the list
@@ -598,7 +607,7 @@ def run_crawl(
         t_jobs0 = time.time()
         today_counts = {
             (r["board"], r["page_no"]): r["n"]
-            for r in cand.groupBy("board", "page_no")
+            for r in today.groupBy("board", "page_no")
             .agg(F.count(F.lit(1)).alias("n")).collect()
         }
         t_stale0 = time.time()
@@ -618,7 +627,7 @@ def run_crawl(
         # in-round (D1/D2). Checkpointed: the seen probe and the detail
         # extraction both read it, and the cand cache is done with.
         selected = (
-            cand.join(F.broadcast(cuts), on="board")
+            today.join(F.broadcast(cuts), on="board")
             .filter(
                 (F.col("views") >= F.col("min_views"))
                 & (F.col("page_no") <= F.col("_max_page"))
