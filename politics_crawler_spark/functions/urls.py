@@ -1,31 +1,14 @@
 """URL scalar functions: canonicalization, hashing, post-id extraction.
 
-L6/L7 from SURVEY.md §2.7. Everything that can stay JVM-side does
-(``regexp_extract``, ``xxhash64``, ``parse_url``); only ``urljoin`` needs an
-Arrow-batched pandas UDF (urllib semantics aren't expressible in Spark SQL).
+L6/L7 from SURVEY.md §2.7. Everything stays JVM-side (``regexp_extract``,
+``xxhash64``, ``parse_url``); ``canonical_url`` covers the ``urljoin`` cases
+that occur in board markup.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
-
-
-@pandas_udf(T.StringType())
-def canonicalize_udf(base: pd.Series, href: pd.Series) -> pd.Series:
-    """``urljoin(base, href)`` per row (reference: dcinside_politics.py:164),
-    vectorized at the Arrow-batch level."""
-    from urllib.parse import urljoin
-
-    return pd.Series(
-        [
-            urljoin(b, h) if (b is not None and h is not None) else None
-            for b, h in zip(base, href)
-        ]
-    )
 
 
 def canonical_url(base: Column, href: Column) -> Column:
@@ -41,8 +24,6 @@ def canonical_url(base: Column, href: Column) -> Column:
       root-relative (/x)  -> scheme://host + href
       query-only (?x)     -> base path + href
       relative (x/y)      -> base directory + href
-
-    (:func:`canonicalize_udf` remains available for exotic grammars.)
     """
     scheme = F.regexp_extract(base, r"^(https?):", 1)
     origin = F.regexp_extract(base, r"^(https?://[^/?#]+)", 1)

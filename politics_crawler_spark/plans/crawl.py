@@ -15,26 +15,31 @@ at once. Every frame of a round is computed once:
         → in-round dedup
       → bloom probe + fold (ADD-AT-SELECT, D1/D2)     -- job 3: commits the round
       → selected ⋉ broadcast(survivors)               -- the round's slim candidates
-      → extract (snapshot: once, at the terminal scan; live: per round over HTTP)
+      → extract, once, at the terminal scan of the pages
       → F5 detail-date / F6 status
 
-Two crawl modes, one extraction each:
+Each round BANKS its slim candidate rows, tagged ``_round``, and ONE
+terminal job extracts them all at a single scan of the pages. The terminal
+output is persisted before the final sort, so the extract UDF runs once per
+detail page although the sort samples its input before shuffling it. The
+two page sources differ only in where the html comes from and which keys
+fold into the seen table:
 
-- **Snapshot crawls** use the reference's add-at-select D1 variant
-  (ruliweb_politics.py:236-241 marks links seen before the detail fetch;
-  the ordering simulator does the same), so a round's seen state depends
-  only on the list-parse path. Each round BANKS its slim candidate rows,
-  tagged ``_round``, and ONE terminal job extracts them all at a single
-  snapshot scan. The terminal output is persisted before the final sort,
-  so the extract UDF runs once per detail page although the sort samples
-  its input before shuffling it.
-- **Live crawls** (``fetcher``) extract per round: a round's seen fold
-  waits for its detail fetch, so a URL whose fetch failed stays retryable.
+- **Snapshot crawls** scan the pages snapshot. They use the reference's
+  add-at-select D1 variant (ruliweb_politics.py:236-241 marks links seen
+  before the detail fetch; the ordering simulator does the same), so a
+  round's seen state depends only on the list-parse path.
+- **Live crawls** (``fetcher``) fetch each round's detail pages over HTTP
+  and bank the resolved ``(url, html)`` rows as the round's pages; the
+  terminal scans their union. A detail URL folds into the seen table only
+  once its fetch resolved, so a URL whose fetch failed stays retryable.
+  Memory trade: a live crawl holds its fetched html until the terminal,
+  not each round's extracted rows.
 
 Each round's METRICS counts (candidates, selected, unseen) are plain
 integers in its ``metrics`` entry once job 3 ran: the candidates are job
 1's per-page counts summed, the other two are observed on the job 2 and
-job 3 checkpoints. Only the snapshot terminal's extraction counts stay an
+job 3 checkpoints. Only the terminal's extraction counts stay an
 Observation until the terminal action.
 
 The loop exists only because the staleness stop (P9) is data-dependent
@@ -42,15 +47,15 @@ iteration, which Catalyst doesn't model (SURVEY.md §4). The stop rule runs
 on the driver over per-page counts: O(boards × pages_per_round) numbers,
 the same size as the frontier slice the driver already builds.
 
-Checkpointing (snapshot crawls): with ``checkpoint_dir`` set, each round
-commits its banked candidates (``candidates/round=K``), the seen table
-(``seen/vK``) and ``state.json`` (per-board lineage, counters and stage
-counts), published last by ``publish_json``'s write-then-rename. A resume
-after a kill continues from the last committed round and feeds the
-committed candidates into the same terminal extraction, so the output,
-its lineage columns and the METRICS table match an uninterrupted run
-(north_rule resumability). A live crawl's durable unit is the tick
-(``streaming.cadence.crawl_tick``).
+Checkpointing: with ``checkpoint_dir`` set, each round commits its banked
+candidates (``candidates/round=K``), a live round its banked pages
+(``pages/round=K``), the seen table (``seen/vK``) and ``state.json``
+(per-board lineage, counters and stage counts), published last by
+``publish_json``'s write-then-rename. A resume after a kill continues from
+the last committed round and feeds the committed candidates (and pages)
+into the same terminal extraction, so the output, its lineage columns and
+the METRICS table match an uninterrupted run (north_rule resumability),
+and a live resume fetches no committed round's detail page again.
 
 Input columns: the snapshot is read as ``url`` and ``html`` (the ``PAGES``
 schema); a robots table as ``host``, ``rules``, ``fetched_ts`` and
@@ -119,8 +124,8 @@ class CrawlResult:
     # persisted DataFrames still referenced by the (lazy) `extracted` plan —
     # callers unpersist these AFTER their terminal action
     caches: list[DataFrame] = field(default_factory=list)
-    # snapshot crawls: the terminal extraction's observation, with
-    # ``n_{r}`` / ``n_error_{r}`` keys for every round of ``metrics``
+    # the terminal extraction's observation, with ``n_{r}`` /
+    # ``n_error_{r}`` keys for every round of ``metrics``
     extract_obs: Observation | None = None
     # run-level setup walls (salt-plan pre-pass, list-pool staging)
     setup_ms: dict = field(default_factory=dict)
@@ -133,7 +138,6 @@ class CrawlResult:
         A round's list, select and seen counts are plain values in its
         ``metrics`` entry, collected by the jobs that ran the round (a
         resumed run restores them from state.json). Its extract row comes
-        from the same entry when the round extracted itself (live), else
         from the terminal job's observation, which attributes extraction to
         the round that selected the candidates. Call AFTER the terminal
         action on ``extracted`` (Observation.get blocks until it ran).
@@ -152,18 +156,15 @@ class CrawlResult:
             r, n_cand, n_sel, n_uns = (
                 m["round"], m["candidates"], m["selected"], m["unseen"]
             )
-            if m["extracted"] is None:  # snapshot: extracted by the terminal
-                n_err = _observed(self.extract_obs, f"n_error_{r}")
-                n_ok = _observed(self.extract_obs, f"n_{r}") - n_err
-            else:
-                n_ok, n_err = m["extracted"], m["extract_errors"]
+            n_err = _observed(self.extract_obs, f"n_error_{r}")
+            n_ok = _observed(self.extract_obs, f"n_{r}") - n_err
             rows += [
                 mk(r, "list", m["list_pages"], n_cand, wall_ms=m["t_build_ms"]),
                 mk(r, "select", n_cand, n_sel, n_filtered=n_cand - n_sel),
                 mk(r, "seen", n_sel, n_uns, n_dup=n_sel - n_uns,
                    wall_ms=m["t_seen_ms"]),
                 mk(r, "extract", n_uns, n_ok, n_filtered=n_uns - n_ok - n_err,
-                   n_error=n_err, wall_ms=m.get("t_extract_ms", 0)),
+                   n_error=n_err),
             ]
         return rows
 
@@ -259,10 +260,11 @@ def _sweep_orphans(checkpoint_dir: str, last: int) -> None:
     rename) leaves a ``round=K`` / ``vK`` dir newer than state.json; left in
     place, round K's recompute would overwrite files a reader had already
     listed (FileNotFoundException / duplicated rows at the terminal action)
-    — exactly the crash window checkpointing must cover."""
-    for sub, prefix in (("candidates", "round="), ("seen", "v")):
+    — exactly the crash window checkpointing must cover. Only live crawls
+    write ``pages``."""
+    for sub, prefix in (("candidates", "round="), ("pages", "round="), ("seen", "v")):
         d = os.path.join(checkpoint_dir, sub)
-        for name in os.listdir(d):
+        for name in os.listdir(d) if os.path.isdir(d) else ():
             k = name[len(prefix):]
             if name.startswith(prefix) and k.isdigit() and int(k) > last:
                 shutil.rmtree(os.path.join(d, name))
@@ -342,20 +344,19 @@ def run_crawl(
     then replayed on the driver), the ``selected`` checkpoint (staleness
     cut, F3, robots gate, in-round dedup), and the seen probe + fold.
 
-    Snapshot crawls (``pages`` without ``fetcher``) extract in ONE terminal
-    job, persisted before the final sort (listed in ``CrawlResult.caches``;
-    unpersist after the terminal action); their round metrics report
-    ``extracted: None``. ``checkpoint_dir`` commits every round and resumes
-    after the last committed one (see the module docstring).
+    Every round's candidates are extracted in ONE terminal job, persisted
+    before the final sort (listed in ``CrawlResult.caches``; unpersist after
+    the terminal action). ``checkpoint_dir`` commits every round and
+    resumes after the last committed one (see the module docstring).
 
     ``fetcher`` (optional): a live-fetch stage from
     ``operators.fetch.make_fetch_stage`` — when given, list and detail pages
-    are fetched over HTTP (UA rotation / timeout / retry, P1/P2/P6) and
-    extracted per round; ``pages``, if given, only sizes the politeness
-    salt plan. Per-round retry totals and extraction errors land in
-    ``metrics`` via Observations (no extra actions). ``checkpoint_dir``
-    with ``fetcher`` raises ValueError: a live crawl's durable unit is the
-    tick.
+    are fetched over HTTP (UA rotation / timeout / retry, P1/P2/P6) and the
+    terminal extracts from the banked detail pages; ``pages``, if given,
+    only sizes the politeness salt plan. A round's list and detail fetches
+    are each cut once (``localCheckpoint``), so each URL is requested once
+    per round. Their per-round retry totals land in ``metrics`` via
+    Observations (no extra actions).
 
     Live list and detail fetches both run after
     ``politeness.salted_repartition_by_host``, so every host's requests sit
@@ -374,11 +375,6 @@ def run_crawl(
     the first round's fold builds each shard it touches from scratch."""
     if fetcher is None and pages is None:
         raise ValueError("run_crawl needs a pages snapshot or a fetcher")
-    if fetcher is not None and checkpoint_dir:
-        raise ValueError(
-            "checkpoint_dir is for snapshot crawls; a live crawl's durable "
-            "unit is the tick (streaming.cadence.crawl_tick)"
-        )
     boards = boards or ENABLED_BOARDS
     by_name = {b.board: b for b in boards}
     state = {b.board: BoardState() for b in boards}
@@ -396,7 +392,7 @@ def run_crawl(
 
     # resume path: restore the last committed round's board lineage,
     # round metrics (stage counts included) and seen table; its banked
-    # candidates are read back by the terminal extraction
+    # candidates and pages are read back by the terminal extraction
     if checkpoint_dir:
         ckpt = read_json(checkpoint_dir)
         if ckpt is not None:
@@ -463,15 +459,44 @@ def run_crawl(
         t_pool = time.time() - t_pool0
         caches.append(lists_pool)
     t0 = time.time()
-    banked: list[DataFrame] = []  # snapshot mode: slim candidates per round
-    extracted_parts: list[DataFrame] = []  # live mode: extracted rows per round
+    # per round, without checkpoint_dir: slim candidates, and a live
+    # round's resolved (url, html) pages
+    banked: dict[str, list[DataFrame]] = {"candidates": [], "pages": []}
 
-    def _extract_at_scan(detail: DataFrame) -> DataFrame:
-        """Snapshot-mode detail "fetch" + parse with ZERO html movement:
+    def _fetch(df: DataFrame) -> tuple[DataFrame, Observation]:
+        """Live fetch of ``df``'s urls, salted by host BEFORE the HTTP stage
+        so every host's requests execute inside its own salted task(s),
+        observed for the P6 counters, and cut once: each url is requested
+        once, whatever re-reads the rows. The partition count is explicit
+        because AQE would coalesce the few-KB shuffle into one task and run
+        every host's requests in series (4 vCPU, the test web's 819
+        requests with 124 list-page 404s backing off: 170 s → 380 s).
+        Returns the resolved rows and the observation: ok, and short, which
+        passes WITH its truncated body (the reference gives up and parses
+        what it got, instiz_issue.py:221-229)."""
+        obs = Observation()
+        fetched = (
+            fetcher(
+                salted_repartition_by_host(
+                    df, salt_plan, spark.sparkContext.defaultParallelism
+                ),
+                url_col="url",
+            )
+            .observe(
+                obs,
+                F.sum("attempts").alias("attempts"),
+                F.count(F.lit(1)).alias("n_fetches"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        return fetched.filter(F.col("fetch_status").isin("ok", "short")), obs
 
-        1. semi-join the snapshot against the candidates' url hashes
-           (``_semi_join_url_hash``; bounded by P8 budgets) — the full
-           snapshot streams and only matched pages survive. Step 3's inner
+    def _extract_at_scan(html: DataFrame, detail: DataFrame) -> DataFrame:
+        """Detail "fetch" + parse with ZERO html movement:
+
+        1. semi-join the ``(url, html)`` pages against the candidates' url
+           hashes (``_semi_join_url_hash``; bounded by P8 budgets) — the
+           pages stream and only matched ones survive. Step 3's inner
            join on the url STRING drops a hash-collision stray;
         2. the parse UDF runs ON the scan output (site re-derived from the
            url host, exactly the dispatch rule of ``site_expr``) — html is
@@ -479,7 +504,7 @@ def run_crawl(
         3. only the slim extraction results (content/images/dates, ~KBs)
            shuffle into the equi-join with candidate metadata.
         """
-        matched = _semi_join_url_hash(pages_slim, detail.select("url_hash"))
+        matched = _semi_join_url_hash(html, detail.select("url_hash"))
         ext = with_extraction(
             matched.withColumn(
                 "_site", site_expr(F.parse_url(F.col("url"), F.lit("HOST")))
@@ -575,19 +600,8 @@ def run_crawl(
         if fetcher is None:
             lists = F.broadcast(frontier).join(lists_pool, on="url", how="inner")
         else:
-            list_obs = Observation()
-            fetched = fetcher(
-                salted_repartition_by_host(frontier, salt_plan), url_col="url"
-            ).observe(
-                list_obs,
-                F.sum("attempts").alias("attempts"),
-                F.count(F.lit(1)).alias("n_fetches"),
-            )
-            # 'short' passes through WITH the truncated body: the reference
-            # gives up and parses what it got (instiz_issue.py:221-229)
-            lists = fetched.filter(
-                F.col("fetch_status").isin("ok", "short")
-            ).drop("fetch_status", "http_code", "attempts", "ua")
+            resolved, list_obs = _fetch(frontier)
+            lists = resolved.drop("fetch_status", "http_code", "attempts", "ua")
 
         # Persisted as normalized, with F1/F4 applied where it is read (the
         # per-page today counts and the `selected` cut): the cache is a
@@ -600,10 +614,11 @@ def run_crawl(
         today = cand.filter(
             is_valid_post_url(F.col("link")) & is_today(F.col("date"), run_date)
         )
-        t_build = time.time() - round_t0  # frontier + plan construction
+        t_build = time.time() - round_t0  # frontier, plans, a live list fetch
 
         # job 1: per-page today counts. It fills the `cand` cache (the list
-        # fetch + parse); the driver then replays P9 over the slice.
+        # parse, and a snapshot's list "fetch"); the driver then replays P9
+        # over the slice.
         t_jobs0 = time.time()
         today_counts = {
             (r["board"], r["page_no"]): r["n"]
@@ -680,61 +695,32 @@ def run_crawl(
         t_seen = time.time() - t_jobs0 - t_stale
 
         # Detail candidates, tagged with their round for per-round METRICS
-        # attribution.
-        # Snapshot mode BANKS them: one terminal snapshot scan extracts
-        # every round's candidates (_extract_at_scan), so R rounds cost one
-        # scan, not R.
-        # Live mode fetches and extracts them now: the salted repartition
-        # runs BEFORE the HTTP stage so every host's requests execute
-        # inside its own salted task(s).
+        # attribution, are BANKED: one terminal scan extracts every round's
+        # candidates (_extract_at_scan), so R rounds cost one scan, not R.
         detail = (
             unseen.drop("url").withColumnRenamed("link", "url")
             .withColumn("_round", F.lit(rnd))
         )
-        n_extracted = None
+        round_banks = {}
         if fetcher is not None:
-            t_ext0 = time.time()
-            detail = salted_repartition_by_host(detail, salt_plan)
-            det_obs = Observation()
-            fetched_detail = (
-                fetcher(detail, url_col="url")
-                .observe(
-                    det_obs,
-                    F.sum("attempts").alias("attempts"),
-                    F.count(F.lit(1)).alias("n_fetches"),
-                )
-                .persist()  # fetch side effects must run exactly once:
-                # the round's out.count() materializes this cache, and
-                # the seen update below re-reads it instead of
-                # re-fetching
+            # A live round fetches its detail pages now. It banks the
+            # resolved pages and only their candidates: a failed URL stays
+            # unseen, so a later round may select it again.
+            resolved, det_obs = _fetch(detail.select("url", "url_hash", "host"))
+            round_banks["pages"] = resolved.select("url", "html")
+            detail = detail.join(
+                F.broadcast(resolved.select("url_hash")), "url_hash", "left_semi"
             )
-            # ok AND short proceed to parsing (instiz gives up WITH the
-            # short body and parses it — instiz_issue.py:221-229)
-            ext = with_extraction(
-                fetched_detail.filter(
-                    F.col("fetch_status").isin("ok", "short")
-                ).drop("fetch_status", "http_code", "attempts", "ua")
-            )
-            ext_obs = Observation()
-            out = _finish(ext, ext_obs, [rnd]).persist()
-            n_extracted = out.count()  # materializes the round output
             # deferred seen-add (ADVICE r2): detail URLs enter the bloom
-            # only once their fetch RESOLVED (ok/short — 'error' rows
-            # stay unseen and retryable). Same operator, other half:
-            # keep the fold, discard the survivors.
-            resolved_keys = fetched_detail.filter(
-                F.col("fetch_status").isin("ok", "short")
-            ).select("url_hash")
+            # only once their fetch RESOLVED ('error' rows stay unseen and
+            # retryable). Same operator, other half: keep the fold, discard
+            # the survivors.
             _, seen = seen_mod.split_probe_update(
                 seen_mod.probe_and_update(
-                    resolved_keys, frontier_keys, seen, n_shards
+                    resolved.select("url_hash"), frontier_keys, seen, n_shards
                 ).localCheckpoint(eager=True)
             )
-            # out.count() materialized the fetch cache the fold re-read
-            fetched_detail.unpersist()
-            extracted_parts.append(out)
-            caches.append(out)
-            t_ext = time.time() - t_ext0
+        round_banks["candidates"] = detail
 
         # politeness budget accounting: the serial seconds the reference's
         # sleep-based schedule would spend on this round's fetches
@@ -750,7 +736,6 @@ def run_crawl(
             "candidates": sum(today_counts.values()),
             "selected": _observed(sel_obs, "n"),
             "unseen": _observed(uns_obs, "n"),
-            "extracted": n_extracted,
             "wall_ms": int((time.time() - round_t0) * 1000),
             "t_build_ms": int(t_build * 1000),
             "t_stale_ms": int(t_stale * 1000),
@@ -758,22 +743,20 @@ def run_crawl(
             "ref_serial_s": round(ref_serial_s, 1),
         }
         if fetcher is not None:  # P6 retry counters (observations, no extra jobs)
-            lo, do = list_obs.get, det_obs.get
-            round_metrics["t_extract_ms"] = int(t_ext * 1000)
-            round_metrics["extract_errors"] = _observed(ext_obs, f"n_error_{rnd}")
-            round_metrics["list_fetches"] = int(lo["n_fetches"] or 0)
-            round_metrics["list_fetch_attempts"] = int(lo["attempts"] or 0)
-            round_metrics["detail_fetches"] = int(do["n_fetches"] or 0)
-            round_metrics["detail_fetch_attempts"] = int(do["attempts"] or 0)
+            for kind, obs in (("list", list_obs), ("detail", det_obs)):
+                round_metrics[f"{kind}_fetches"] = _observed(obs, "n_fetches")
+                round_metrics[f"{kind}_fetch_attempts"] = _observed(obs, "attempts")
         metrics.append(round_metrics)
 
         if checkpoint_dir:
-            # The round commit: banked candidates and seen table, then
-            # state.json, whose metrics carry the round's stage counts (a
-            # resumed run reports them as an uninterrupted one would).
-            detail.write.mode("overwrite").parquet(
-                os.path.join(checkpoint_dir, f"candidates/round={rnd}")
-            )
+            # The round commit: banked candidates (and pages) and seen
+            # table, then state.json, whose metrics carry the round's stage
+            # counts (a resumed run reports them as an uninterrupted one
+            # would).
+            for sub, df in round_banks.items():
+                df.write.mode("overwrite").parquet(
+                    os.path.join(checkpoint_dir, f"{sub}/round={rnd}")
+                )
             seen.write.mode("overwrite").parquet(
                 os.path.join(checkpoint_dir, f"seen/v{rnd}")
             )
@@ -786,35 +769,39 @@ def run_crawl(
                 "metrics": metrics,
             })
         else:
-            banked.append(detail)
+            for sub, df in round_banks.items():
+                banked[sub].append(df)
         rnd += 1
 
-    extract_obs = None
-    if fetcher is None and rnd > 0:
-        # Snapshot terminal: ONE snapshot scan + extract-at-scan over every
-        # round's candidates (cross-round-unique by the seen filter). A
-        # checkpointed crawl reads them back from its round commits, the
-        # rounds a resumed run inherited included.
+    def _union(sub: str) -> DataFrame:
+        """Every round's banked ``sub`` frames; a checkpointed crawl reads
+        them back from its round commits, the rounds a resumed run
+        inherited included."""
         if checkpoint_dir:
-            banked = [spark.read.parquet(*(
-                os.path.join(checkpoint_dir, f"candidates/round={r}")
-                for r in range(rnd)
-            ))]
+            return spark.read.parquet(*(
+                os.path.join(checkpoint_dir, f"{sub}/round={r}") for r in range(rnd)
+            ))
+        return reduce(DataFrame.unionByName, banked[sub])
+
+    extract_obs = None
+    if rnd > 0:
+        # The terminal: ONE scan of the pages + extract-at-scan over every
+        # round's candidates (cross-round-unique by the seen filter). The
+        # html is the snapshot, or the union of a live crawl's banked pages.
         extract_obs = Observation()
         # Persisted BELOW the global sort: the sort's range partitioner
         # samples its input in a job of its own, which would otherwise run
         # the extract UDF (and count the observation) a second time.
-        terminal = _finish(
-            _extract_at_scan(reduce(DataFrame.unionByName, banked)), extract_obs,
-            range(rnd),
+        result = _finish(
+            _extract_at_scan(
+                pages_slim if fetcher is None else _union("pages"),
+                _union("candidates"),
+            ),
+            extract_obs, range(rnd),
         ).persist()
-        caches.append(terminal)
-        extracted_parts.append(terminal)
-
-    result = (
-        reduce(DataFrame.unionByName, extracted_parts) if extracted_parts
-        else spark.createDataFrame([], schema=EXTRACTED)
-    )
+        caches.append(result)
+    else:
+        result = spark.createDataFrame([], schema=EXTRACTED)
 
     # A1: reference's final sort (Date desc); deterministic tiebreak on url
     result = result.orderBy(F.col("date").desc(), F.col("url").asc())

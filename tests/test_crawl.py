@@ -177,12 +177,25 @@ def test_checkpoint_resume_identical(spark, pages_df, pages_pdf, tmp_path,
         c.unpersist()
 
 
-def test_checkpoint_with_fetcher_raises(spark, tmp_path):
-    """Round checkpoints are a snapshot-crawl surface; a live crawl's
-    durable unit is the tick, so the combination is refused up front."""
-    with pytest.raises(ValueError):
-        run_crawl(spark, None, checkpoint_dir=str(tmp_path / "ck"),
-                  fetcher=lambda df, url_col: df)
+def test_sweep_orphans_covers_live_commits(tmp_path):
+    """A kill inside a live round's commit can leave ``candidates``,
+    ``pages`` and ``seen`` dirs newer than state.json. The resume sweep
+    removes all three orphans and keeps every committed round's dirs."""
+    import os
+
+    from politics_crawler_spark.plans.crawl import _sweep_orphans, publish_json, read_json
+
+    ck = str(tmp_path / "ck")
+    dirs = {
+        k: [f"candidates/round={k}", f"pages/round={k}", f"seen/v{k}"] for k in range(3)
+    }
+    for d in sum(dirs.values(), []):
+        os.makedirs(os.path.join(ck, d, "part-0.parquet"))
+    publish_json(ck, {"round": 1})
+    _sweep_orphans(ck, read_json(ck)["round"])
+    for k, ds in dirs.items():
+        for d in ds:
+            assert os.path.isdir(os.path.join(ck, d)) == (k <= 1), d
 
 
 def test_checkpoint_resume_with_orphan_round(spark, pages_df, tmp_path, crawl_result):

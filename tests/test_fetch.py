@@ -388,3 +388,139 @@ def test_live_crawl_keeps_failed_detail_url_unseen(spark, pages_pdf):
     )
     by_hash = {r.url_hash: r.url for r in keys.collect()}
     assert {by_hash[r.url_hash] for r in survivors.collect()} == {failed}
+
+
+# ---------------------------------------------------------------------------
+# live crawls resume from round commits and carry seen state across ticks
+# ---------------------------------------------------------------------------
+
+def _logged_fetch(pages, log_path):
+    """A fetch stage over ``pages`` that appends each requested url to
+    ``log_path``, one line per request (O_APPEND short writes are atomic,
+    and local-mode Python workers share the filesystem)."""
+
+    def transport(url, ua, timeout_s):
+        with open(log_path, "a") as f:
+            f.write(url + "\n")
+        body = pages.get(url)
+        return (200, body) if body is not None else (404, b"")
+
+    return make_fetch_stage(
+        transport=transport, max_attempts=2, min_bytes=50, sleep=None
+    )
+
+
+def _fetched_detail_urls(pages, log_path):
+    """The detail urls the log shows served: every requested url with a
+    page, list pages excepted."""
+    from politics_crawler_spark.config import ENABLED_BOARDS
+    from politics_crawler_spark.sources.synthetic_pages import list_url
+
+    lists = {list_url(b, p) for b in ENABLED_BOARDS for p in range(b.max_pages)}
+    with open(log_path) as f:
+        return {u for u in f.read().split() if u in pages} - lists
+
+
+def test_live_checkpoint_resume_skips_committed_fetches(
+    spark, pages_pdf, pages_df, tmp_path
+):
+    """A checkpointed live crawl stopped after one committed round and
+    resumed returns the posts of an uninterrupted live crawl and of the
+    snapshot crawl, its METRICS conserve flow, and the resume requests no
+    detail url of the committed round (its pages come from the commit)."""
+    from politics_crawler_spark.plans.crawl import run_crawl
+
+    from .test_crawl import _assert_metrics_flow
+
+    pages = dict(zip(pages_pdf["url"], pages_pdf["html"]))
+    logs = {k: str(tmp_path / f"{k}.log") for k in ("first", "resume", "full")}
+    ck = str(tmp_path / "ck")
+    partial = run_crawl(
+        spark, None, n_shards=8, fetcher=_logged_fetch(pages, logs["first"]),
+        checkpoint_dir=ck, max_rounds=1, pages_per_round=2,
+    )
+    assert partial.rounds == 1
+    resumed = run_crawl(
+        spark, None, n_shards=8, fetcher=_logged_fetch(pages, logs["resume"]),
+        checkpoint_dir=ck, pages_per_round=2,
+    )
+    full = run_crawl(
+        spark, None, n_shards=8, fetcher=_logged_fetch(pages, logs["full"]),
+        pages_per_round=2,
+    )
+    base = run_crawl(spark, pages_df, n_shards=8)
+
+    got = resumed.extracted.collect()
+    a = {(r.url, r.content) for r in got}
+    assert resumed.rounds > 1 and len(a) > 0
+    assert a == {(r.url, r.content) for r in full.extracted.collect()}
+    assert a == {(r.url, r.content) for r in base.extracted.collect()}
+    _assert_metrics_flow(spark, resumed, len(got))
+
+    committed = _fetched_detail_urls(pages, logs["first"])
+    assert committed
+    assert not committed & _fetched_detail_urls(pages, logs["resume"])
+    for res in (partial, resumed, full, base):
+        for c in res.caches:
+            c.unpersist()
+
+
+def test_live_crawl_extracts_a_retried_detail_url_once(spark, pages_pdf, tmp_path):
+    """A detail url whose fetch failed stays unseen, so a later round that
+    lists it again fetches it again; only the round that banked its page
+    banks its candidate, so the crawl extracts it once. The web serves list
+    page 2 as a copy of page 1, and one post of page 1 fails both attempts
+    in round 0."""
+    from politics_crawler_spark.config import ENABLED_BOARDS
+    from politics_crawler_spark.plans.crawl import run_crawl
+    from politics_crawler_spark.sources.synthetic_pages import list_url
+
+    board = ENABLED_BOARDS[0]
+    pages = dict(zip(pages_pdf["url"], pages_pdf["html"]))
+    first = run_crawl(
+        spark, None, n_shards=8, boards=[board], pages_per_round=1, max_rounds=1,
+        fetcher=_logged_fetch(pages, str(tmp_path / "first.log")),
+    )
+    target = min(r.url for r in first.extracted.select("url").collect())
+    web = {**pages, list_url(board, 1): pages[list_url(board, 0)]}
+    log = str(tmp_path / "req.log")
+
+    def transport(url, ua, timeout_s):
+        with open(log, "a") as f:
+            f.write(url + "\n")
+        with open(log) as f:
+            n = f.read().split().count(url)
+        body = None if url == target and n <= 2 else web.get(url)
+        return (200, body) if body is not None else (500, b"")
+
+    res = run_crawl(
+        spark, None, n_shards=8, boards=[board], pages_per_round=1, max_rounds=2,
+        fetcher=make_fetch_stage(
+            transport=transport, max_attempts=2, min_bytes=50, sleep=None
+        ),
+    )
+    got = [r.url for r in res.extracted.select("url").collect()]
+    with open(log) as f:
+        assert f.read().split().count(target) == 3  # 2 failed attempts, 1 retry
+    assert got.count(target) == 1
+    assert len(got) == len(set(got))
+
+
+def test_live_crawl_ticks_skip_fetched_detail_urls(spark, pages_pdf, tmp_path):
+    """Two live ticks over the same web: tick 1 starts from tick 0's seen
+    table, so it extracts 0 posts and requests no detail url tick 0
+    fetched."""
+    from politics_crawler_spark.streaming.cadence import crawl_tick
+
+    pages = dict(zip(pages_pdf["url"], pages_pdf["html"]))
+    state = str(tmp_path / "state")
+    logs = [str(tmp_path / f"tick{k}.log") for k in range(2)]
+    ticks = [
+        crawl_tick(spark, state, fetcher=_logged_fetch(pages, log), n_shards=8)
+        for log in logs
+    ]
+    assert ticks[0]["run"] == 0 and ticks[0]["extracted"] > 0
+    assert ticks[1] == {"run": 1, "extracted": 0}
+    fetched = _fetched_detail_urls(pages, logs[0])
+    assert fetched
+    assert not fetched & _fetched_detail_urls(pages, logs[1])
