@@ -1,6 +1,6 @@
-"""URL scalar functions: canonicalization, hashing, post-id extraction.
+"""URL scalar functions: canonicalization, hashing, validity.
 
-L6/L7 from SURVEY.md §2.7. Everything stays JVM-side (``regexp_extract``,
+L7 from SURVEY.md §2.7. Everything stays JVM-side (``regexp_extract``,
 ``xxhash64``, ``parse_url``); ``canonical_url`` covers the ``urljoin`` cases
 that occur in board markup.
 """
@@ -56,21 +56,3 @@ def is_valid_post_url(url: Column) -> Column:
         & ~url.contains("addc.dcinside.com")
     )
 
-
-# Per-site post-id extraction patterns (L6). Fallback: trailing /<digits>,
-# query string stripped (ruliweb_politics.py:233, fmkorea_politics.py:227).
-_SITE_PID_PATTERN = {
-    "bobaedream": r"No=(\d+)",  # bobaedream_politics.py:37-41
-    "dcinside": r"no=(\d+)",
-    "ppomppu": r"no=(\d+)",
-    "82cook": r"num=(\d+)",
-    "mlbpark": r"id=(\d+)",
-}
-_DEFAULT_PID_PATTERN = r"/(\d+)(?:[?#][^/]*)?$"  # last path segment, query stripped
-
-
-def post_id_from_url(site: Column, url: Column) -> Column:
-    expr = F.regexp_extract(url, _DEFAULT_PID_PATTERN, 1)
-    for s, pat in _SITE_PID_PATTERN.items():
-        expr = F.when(site == s, F.regexp_extract(url, pat, 1)).otherwise(expr)
-    return expr

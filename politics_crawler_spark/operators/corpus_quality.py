@@ -3,8 +3,8 @@ directive — "beyond the reference's own operators"): quality decisions
 that need CORPUS-level statistics, not just per-document shape — a
 unigram language-model score (the CCNet perplexity-bucketing proxy),
 cross-document duplicated-n-gram coverage (the Gopher/Dolma repetition
-signal at corpus scope), and source-level aggregate gating (the
-RefinedWeb-style "judge the site, not just the page" stage).
+signal at corpus scope), and a source-level aggregate quality profile
+(the RefinedWeb-style "judge the site, not just the page" stage).
 
 Public provenance of the methods (methods, not code):
 - LM-perplexity bucketing — CCNet (Wenzek et al. 2019, arXiv:1911.00359
@@ -36,10 +36,10 @@ Scale notes (100 TB):
   A 64-bit collision can only add a covered span (conservative direction:
   slightly over-counts duplication, never under-counts).
 - source_quality_profile: per-source aggregation is tiny (one row per
-  source/host — ~10^7 rows web-scale); gating joins it back broadcast.
+  source/host — ~10^7 rows web-scale), so a gate joins it back broadcast.
 
 Input columns: documents are read as ``doc_id`` and ``text`` (plus
-``source`` for the source profile and gate); scored frames carry
+``source`` for the source profile); scored frames carry
 ``bits_per_token``.
 
 The reference has no corpus-statistics layer (per-site CSV append only,
@@ -167,24 +167,6 @@ def lm_score(docs: DataFrame, lm: DataFrame, oov: float | None = None) -> DataFr
             ).alias("bits_per_token"),
         )
     )
-
-
-def suggest_ccnet_thresholds(scored: DataFrame) -> tuple[float, float]:
-    """Bootstrap (head, middle) cut points for ccnet_bucket — the 1/3 and
-    2/3 quantiles of ``bits_per_token`` — from the corpus's own score
-    distribution WITHOUT a global sort:
-    percentile_approx is a mergeable per-partition sketch
-    (Greenwald-Khanna) with one tiny final merge — the only way a
-    quantile over 10^10 docs is computable without funnelling the corpus
-    through a single-partition orderBy. CCNet itself uses frozen
-    per-language constants; this helper is for DERIVING those constants
-    on a new corpus. The result is approximate by design (error ≤
-    1/10000 of rank), so freeze the returned values before using them
-    as the reproducible bucketing contract."""
-    row = scored.select(
-        F.percentile_approx("bits_per_token", [1 / 3, 2 / 3], 10000).alias("q")
-    ).first()
-    return tuple(row["q"])
 
 
 def ccnet_bucket(bits_col: Column, head: float, middle: float) -> Column:
@@ -404,9 +386,3 @@ def source_quality_profile(
         ).alias("keep_source"),
     )
 
-
-def source_gate(df: DataFrame, profile: DataFrame) -> DataFrame:
-    """Keep only rows whose source passed the profile — broadcast semi
-    join against the (tiny, one-row-per-source) profile table."""
-    keep = profile.filter(F.col("keep_source")).select("source")
-    return df.join(F.broadcast(keep), "source", "semi")

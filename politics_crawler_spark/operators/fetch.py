@@ -18,7 +18,9 @@ Reference semantics generalized (citations into /root/reference/app/crawler/):
   instiz 3 attempts with ``uniform(2,5)`` and SHORT-RESPONSE detection —
   ``len(response.text) < 1000`` triggers a retry
   (hotissue/instiz_issue.py:211-229). Backoff jitter here is deterministic:
-  ``lo + (crc32(url,attempt) % 1000)/1000 * (hi-lo)``.
+  ``lo + (crc32(url,attempt) % 1000)/1000 * (hi-lo)``. A 4xx answer other
+  than 408 (request timeout) and 429 (too many requests) is final: retrying
+  cannot change the answer, so it is an ``error`` at once, with no backoff.
 
 The stage runs after the politeness repartition (salted by host), so each
 host's requests execute within its own task(s) — the partition-parallel
@@ -136,12 +138,14 @@ def make_fetch_stage(
                     "html": body, "fetch_status": "short", "http_code": code,
                     "attempts": attempt, "ua": ua,
                 }
+            if code is not None and 400 <= code < 500 and code not in (408, 429):
+                break  # permanent: a retry gets the same answer
             if attempt < max_attempts and sleep is not None:  # P6 backoff
                 lo, hi = BACKOFF_S
                 sleep(lo + (_det_pick(url, attempt + 7919, 1000) / 1000.0) * (hi - lo))
         return {
             "html": None, "fetch_status": "error", "http_code": last_code,
-            "attempts": max_attempts, "ua": ua,
+            "attempts": attempt, "ua": ua,
         }
 
     def fetch(df: DataFrame, url_col: str = "url") -> DataFrame:

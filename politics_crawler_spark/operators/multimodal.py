@@ -22,7 +22,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA = T.StructType(
@@ -145,21 +144,3 @@ def extract_media_features(df: DataFrame) -> DataFrame:
 
     return df.mapInPandas(_run, schema=FEATURES)
 
-
-def media_from_images(extracted: DataFrame) -> DataFrame:
-    """Bridge: the crawl output's image-URL arrays as a media table
-    (payload deferred — a fetch stage would fill it; kept NULL here)."""
-    return (
-        extracted.select(F.explode("images").alias("src"))
-        .withColumn("media_id", F.xxhash64("src"))
-        .select(
-            "media_id",
-            F.lit("image").alias("kind"),
-            F.lit(None).cast("binary").alias("payload"),
-            F.when(F.col("src").endswith(".png"), "image/png")
-            .when(F.col("src").endswith(".gif"), "image/gif")
-            .otherwise("image/jpeg")
-            .alias("mime"),
-            F.create_map(F.lit("src"), F.col("src")).alias("meta"),
-        )
-    )

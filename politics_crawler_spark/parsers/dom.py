@@ -5,7 +5,7 @@ extraction *byte-identically* (reference calls like
 ``soup.find("div", class_="write_div").get_text(separator="\\n", strip=True)``,
 see /root/reference/app/crawler/politics/dcinside_politics.py:47-55). This
 module implements exactly the subset of bs4 behavior those call sites rely on,
-on top of stdlib ``html.parser``:
+on top of a one-regex tokenizer whose trees match stdlib ``html.parser``'s:
 
 - tree building with void elements and forgiving close-tag recovery
 - ``find`` / ``find_all`` by tag name, class (token match; whitespace-joined
@@ -13,7 +13,8 @@ on top of stdlib ``html.parser``:
   arbitrary attributes (``itemprop=...``, ``style=...``)
 - ``get_text(separator, strip)``: document-order text nodes; when strip=True
   each string is ``str.strip()``-ed and empties are dropped; joined by the
-  separator. Entity refs are decoded by html.parser (convert_charrefs).
+  separator. Entity refs in text are decoded (``html.unescape``), as
+  html.parser's convert_charrefs does.
 - ``find_parent(tag, attrs)`` for the mlbpark ad-div exclusion
   (mlbpark_bullpen.py:64-68).
 
@@ -24,7 +25,6 @@ from __future__ import annotations
 
 import re
 from html import unescape
-from html.parser import HTMLParser
 
 # HTML5 void elements — never pushed on the open-element stack.
 _VOID = frozenset(
@@ -206,46 +206,10 @@ class Node:
         return f"<Node {self.tag} {self.attrs}>"
 
 
-class _TreeBuilder(HTMLParser):
-    """stdlib-tokenizer fallback (kept for parity testing)."""
-
-    def __init__(self):
-        super().__init__(convert_charrefs=True)
-        self.root = Node("[document]")
-        self._stack = [self.root]
-
-    def handle_starttag(self, tag, attrs):
-        node = Node(tag, dict(attrs), parent=self._stack[-1])
-        self._stack[-1].children.append(node)
-        if tag not in _VOID:
-            self._stack.append(node)
-
-    def handle_startendtag(self, tag, attrs):
-        node = Node(tag, dict(attrs), parent=self._stack[-1])
-        self._stack[-1].children.append(node)
-
-    def handle_endtag(self, tag):
-        # forgiving recovery: pop to nearest matching open tag, else ignore
-        for i in range(len(self._stack) - 1, 0, -1):
-            if self._stack[i].tag == tag:
-                del self._stack[i:]
-                return
-
-    def handle_data(self, data):
-        if data:
-            self._stack[-1].children.append(data)
-
-
-def parse_html_stdlib(text: str) -> Node:
-    builder = _TreeBuilder()
-    builder.feed(text)
-    builder.close()
-    return builder.root
-
-
 # Fast tokenizer: one compiled regex over the document; comments/doctype
 # skipped; raw attr text stored for lazy parsing. ~3× the stdlib tokenizer
-# on board-post HTML (tests assert tree parity against the stdlib path).
+# on board-post HTML (tests assert tree parity against a stdlib html.parser
+# tree builder).
 _TOKEN_RE = re.compile(
     r"<(?:"
     r"!--.*?--\s*>"                      # comment

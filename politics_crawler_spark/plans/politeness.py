@@ -1,27 +1,18 @@
 """Politeness / scheduling operators (SURVEY.md §2.5, north_rule).
 
 The reference's sleeps (P3-P5) serialize one site at ~0.1-0.3 posts/s.
-Partition-parallel politeness instead means:
+Partition-parallel politeness instead means a salted repartition by host
+with skew splitting: every host's fetches land in its own task(s); a
+mega-host (dcinside holds ~50% of synthetic rows) is split across
+``ceil(count/target)`` salted partitions so it can't straggle the stage,
+while per-host budget accounting stays keyed by the true host.
 
-- **salted repartition by host with skew splitting** — every host's fetches
-  land in its own task(s); a mega-host (dcinside holds ~50% of synthetic
-  rows) is split across ``ceil(count/target)`` salted partitions so it can't
-  straggle the stage, while per-host budget accounting stays keyed by the
-  true host.
-- **per-host quota** (P8 page budgets as data): ``row_number() over
-  (partition by host order by priority) <= quota``.
-- **priority ordering** (north_rule): ``(depth asc, freshness desc,
-  quota_rank asc)`` + deterministic tiebreaks ``(site_rank, page_no,
-  row_idx)`` reproducing the reference's serial crawl order.
-
-Input columns: crawl frames are read as ``host`` and ``url`` (plus
-``depth``/``warc_ts`` for the quota order and the frontier columns for
-:func:`priority_sort`).
+Input columns: crawl frames are read as ``host`` and ``url``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.fetch import SALT_N_COL
@@ -78,27 +69,3 @@ def salted_repartition_by_host(
         return salted.repartition(num_partitions, key)
     return salted.repartition(key)
 
-
-def apply_host_quota(df: DataFrame, quota: int) -> DataFrame:
-    """Keep at most ``quota`` rows per host, best-priority first (P8/A3):
-    ``(depth asc, warc_ts desc, url asc)``."""
-    w = Window.partitionBy("host").orderBy(
-        F.col("depth").asc(), F.col("warc_ts").desc(), F.col("url").asc()
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= quota)
-        .drop("_rn")
-    )
-
-
-def priority_sort(frontier: DataFrame) -> DataFrame:
-    """Deterministic frontier priority: (depth, freshness desc, site_rank,
-    page_no, row_idx) — north_rule's priority queue as a total order."""
-    return frontier.orderBy(
-        F.col("depth").asc(),
-        F.col("warc_ts").desc_nulls_last(),
-        F.col("site_rank").asc(),
-        F.col("page_no").asc(),
-        F.col("row_idx").asc(),
-    )

@@ -2,9 +2,8 @@
 anywhere; SURVEY.md §2.5), REQUIRED by north_rule.
 
 The ``robots`` table (``host``, ``rules``, ``fetched_ts``, ``allow_all``)
-holds one row per fetch of a host's robots.txt: a serialized rule set
-(subset of the robots.txt grammar: newline-separated ``Disallow:
-<path-prefix>`` lines for ``User-agent: *``) plus an ``allow_all``
+holds one row per fetch of a host's robots.txt: its ``Disallow`` path
+prefixes for ``User-agent: *``, newline-separated, plus an ``allow_all``
 fast-path flag. Only a host's latest fetch applies. The table is tiny
 relative to the frontier (a few rows per distinct host) → broadcast join;
 the path check is a vectorized pandas UDF over (rules, url). Candidates
@@ -14,30 +13,10 @@ are read as ``host`` plus the url column named by ``url_col``.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
-
-from ..schemas import ROBOTS
-
-
-def parse_rules(robots_txt: str) -> list[str]:
-    """Extract Disallow prefixes for User-agent: * (minimal, deterministic)."""
-    out = []
-    applies = False
-    for line in robots_txt.splitlines():
-        line = line.split("#", 1)[0].strip()
-        if not line:
-            continue
-        key, _, val = line.partition(":")
-        key = key.strip().lower()
-        val = val.strip()
-        if key == "user-agent":
-            applies = val == "*"
-        elif key == "disallow" and applies and val:
-            out.append(val)
-    return out
 
 
 @pandas_udf(T.BooleanType())
@@ -55,10 +34,6 @@ def can_fetch_udf(rules: pd.Series, url: pd.Series) -> pd.Series:
         full = path + ("?" + qs if qs else "")
         out.append(not any(full.startswith(p) for p in r.split("\n")))
     return pd.Series(out)
-
-
-def robots_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
-    return spark.createDataFrame(rows, schema=ROBOTS)
 
 
 def gate_by_robots(candidates: DataFrame, robots: DataFrame,

@@ -29,7 +29,7 @@ engine-added surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.curation import token_budget_shards
@@ -73,8 +73,3 @@ def write_jsonl_shards(
         .orderBy("shard_id")
     )
 
-
-def read_jsonl_shards(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read the layout back (partition column `shard_id` is recovered
-    from the directory names)."""
-    return spark.read.json(out_dir)

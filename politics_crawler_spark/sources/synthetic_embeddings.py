@@ -114,7 +114,8 @@ def exact_topk_np(n: int = DEFAULT_N) -> list[tuple[int, int, float, int]]:
 # normalize(base + EPS*noise)). Every family pair sits at cos >= ~0.997;
 # the closest cross-family pair is far below the 0.99 threshold, so the
 # exact component structure — and the survivor set {0..B-1} — is known by
-# construction AND recomputed independently in numpy (neardup_survivors_np).
+# construction (tests/test_embedding_dedup.py recomputes it independently in
+# numpy).
 # --------------------------------------------------------------------------
 
 NEARDUP_BASE = 20_000
@@ -141,41 +142,6 @@ def neardup_rows(ids: np.ndarray) -> np.ndarray:
         v = base[dup] + NEARDUP_EPS * pert
         out[dup] = v / np.linalg.norm(v, axis=1, keepdims=True)
     return out.astype(np.float32)
-
-
-def neardup_embeddings_np(n: int = NEARDUP_TOTAL) -> np.ndarray:
-    return neardup_rows(np.arange(n))
-
-
-def neardup_survivors_np() -> list[int]:
-    """INDEPENDENT ground truth for the dedup gate: exact all-pairs cosine
-    (numpy matmul in blocks of 4096 rows), union-find over edges at cosine
-    >= 0.99 (the gate's bar), min-id survivor per component — never
-    touches the Spark operators."""
-    n, block = NEARDUP_TOTAL, 4096
-    m = neardup_embeddings_np(n).astype(np.float64)
-    m /= np.linalg.norm(m, axis=1, keepdims=True)
-    parent = list(range(n))
-
-    def find(a):
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
-
-    for lo in range(0, n, block):
-        s = m[lo : lo + block] @ m.T  # (block, n)
-        ii, jj = np.nonzero(s >= 0.99)
-        for bi, j in zip(ii, jj):
-            i = lo + int(bi)
-            j = int(j)
-            if i >= j:
-                continue
-            ri, rj = find(i), find(j)
-            if ri != rj:
-                parent[max(ri, rj)] = min(ri, rj)
-    roots = {find(i) for i in range(n)}
-    return sorted(roots)
 
 
 def _synthesize(spark, n: int, rows):

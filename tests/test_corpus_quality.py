@@ -80,20 +80,6 @@ def test_ccnet_bucket_thresholds(spark):
     assert (r["h"], r["m"], r["t"]) == ("head", "middle", "tail")
 
 
-def test_suggest_ccnet_thresholds_near_exact_quantiles(spark):
-    from politics_crawler_spark.operators.corpus_quality import (
-        suggest_ccnet_thresholds,
-    )
-
-    # 3000 known scores 0..2999 -> exact terciles ~999.67 and ~1999.33
-    df = spark.range(3000).select(
-        (F.col("id").cast("double")).alias("bits_per_token")
-    )
-    head, middle = suggest_ccnet_thresholds(df)
-    assert abs(head - 1000) <= 5 and abs(middle - 2000) <= 5
-    assert head < middle
-
-
 def test_dup_ngram_coverage_exact(spark):
     from politics_crawler_spark.operators.corpus_quality import (
         dup_ngram_coverage,
@@ -199,7 +185,6 @@ def test_drop_spans_consistent_with_coverage(spark):
 
 def test_source_quality_profile_and_gate(spark):
     from politics_crawler_spark.operators.corpus_quality import (
-        source_gate,
         source_quality_profile,
     )
 
@@ -222,27 +207,6 @@ def test_source_quality_profile_and_gate(spark):
     assert p["tiny"]["keep_source"] is False  # n_docs < min_docs
     # 'the' is 2 of 9 tokens
     assert p["good"]["mean_stop"] == pytest.approx(round(2 / 9, 6))
-    kept = source_gate(d, prof)
-    assert {r["source"] for r in kept.collect()} == {"good"}
-    assert kept.count() == 3
-
-
-def test_source_gate_plan_is_broadcast(spark):
-    from politics_crawler_spark.operators.corpus_quality import (
-        source_gate,
-        source_quality_profile,
-    )
-
-    d = spark.createDataFrame(
-        [(0, "the a", "s")], "doc_id long, text string, source string"
-    )
-    plan = (
-        source_gate(d, source_quality_profile(d))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
 # ---------------------------------------------------------------------------

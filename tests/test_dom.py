@@ -1,6 +1,45 @@
 """DOM module unit tests — pin the bs4-compatible semantics we rely on."""
 
-from politics_crawler_spark.parsers.dom import parse_html
+from html.parser import HTMLParser
+
+from politics_crawler_spark.parsers.dom import _VOID, Node, parse_html
+
+
+class _TreeBuilder(HTMLParser):
+    """stdlib-tokenizer reference tree builder for the parity tests."""
+
+    def __init__(self):
+        super().__init__(convert_charrefs=True)
+        self.root = Node("[document]")
+        self._stack = [self.root]
+
+    def handle_starttag(self, tag, attrs):
+        node = Node(tag, dict(attrs), parent=self._stack[-1])
+        self._stack[-1].children.append(node)
+        if tag not in _VOID:
+            self._stack.append(node)
+
+    def handle_startendtag(self, tag, attrs):
+        node = Node(tag, dict(attrs), parent=self._stack[-1])
+        self._stack[-1].children.append(node)
+
+    def handle_endtag(self, tag):
+        # forgiving recovery: pop to nearest matching open tag, else ignore
+        for i in range(len(self._stack) - 1, 0, -1):
+            if self._stack[i].tag == tag:
+                del self._stack[i:]
+                return
+
+    def handle_data(self, data):
+        if data:
+            self._stack[-1].children.append(data)
+
+
+def parse_html_stdlib(text: str) -> Node:
+    builder = _TreeBuilder()
+    builder.feed(text)
+    builder.close()
+    return builder.root
 
 
 def test_get_text_separator_strip():
@@ -59,7 +98,6 @@ def test_find_all_nested_order():
 def test_fast_tokenizer_parity_with_stdlib():
     """Tree parity: fast regex tokenizer vs stdlib html.parser on generator
     output (text nodes + tags + attrs identical)."""
-    from politics_crawler_spark.parsers.dom import parse_html, parse_html_stdlib
     from politics_crawler_spark.sources.synthetic_pages import board_layout, gen_row
 
     def dump(node):
@@ -89,7 +127,6 @@ def test_script_style_rawtext_cdata():
     '<' inside JS / tag-like strings must not create phantom nodes, and
     their bodies must not be entity-decoded (html.parser CDATA semantics).
     Parity asserted against the stdlib path on the same inputs."""
-    from politics_crawler_spark.parsers.dom import parse_html, parse_html_stdlib
 
     html = (
         '<div class="c"><script type="text/javascript">'

@@ -18,10 +18,44 @@ from politics_crawler_spark.sources.synthetic_embeddings import (
     NEARDUP_DUPS,
     NEARDUP_FAMS,
     NEARDUP_TOTAL,
-    neardup_embeddings_np,
-    neardup_survivors_np,
+    neardup_rows,
     synthesize_neardup_embeddings,
 )
+
+
+def neardup_embeddings_np(n: int = NEARDUP_TOTAL) -> np.ndarray:
+    return neardup_rows(np.arange(n))
+
+
+def neardup_survivors_np() -> list[int]:
+    """INDEPENDENT ground truth for the dedup gate: exact all-pairs cosine
+    (numpy matmul in blocks of 4096 rows), union-find over edges at cosine
+    >= 0.99 (the gate's bar), min-id survivor per component — never
+    touches the Spark operators."""
+    n, block = NEARDUP_TOTAL, 4096
+    m = neardup_embeddings_np(n).astype(np.float64)
+    m /= np.linalg.norm(m, axis=1, keepdims=True)
+    parent = list(range(n))
+
+    def find(a):
+        while parent[a] != a:
+            parent[a] = parent[parent[a]]
+            a = parent[a]
+        return a
+
+    for lo in range(0, n, block):
+        s = m[lo : lo + block] @ m.T  # (block, n)
+        ii, jj = np.nonzero(s >= 0.99)
+        for bi, j in zip(ii, jj):
+            i = lo + int(bi)
+            j = int(j)
+            if i >= j:
+                continue
+            ri, rj = find(i), find(j)
+            if ri != rj:
+                parent[max(ri, rj)] = min(ri, rj)
+    roots = {find(i) for i in range(n)}
+    return sorted(roots)
 
 
 def test_numpy_ground_truth_survivors():

@@ -34,6 +34,10 @@ def _flaky_transport(url, ua, timeout_s):
         return 200, b"<html>recovered</html>"
     if "dead" in url:
         return 500, b""
+    if "gone" in url:
+        return 404, b""  # permanent: never retried
+    if "throttled" in url:
+        return 429, b""  # transient: retried
     if "short" in url:
         return (200, b"x") if n == 1 else (200, b"<html>full body here</html>")
     if "tiny" in url:
@@ -48,6 +52,8 @@ def test_fetch_retry_short_and_ua(spark):
     urls = [
         ("https://h/flaky",),
         ("https://h/dead",),
+        ("https://h/gone",),
+        ("https://h/throttled",),
         ("https://h/short",),
         ("https://h/tiny",),
         ("https://h/fine",),
@@ -63,6 +69,11 @@ def test_fetch_retry_short_and_ua(spark):
     assert rows["https://h/dead"].fetch_status == "error"
     assert rows["https://h/dead"].attempts == 2
     assert rows["https://h/dead"].html is None
+    assert rows["https://h/gone"].fetch_status == "error"  # a 4xx is final
+    assert rows["https://h/gone"].attempts == 1
+    assert rows["https://h/gone"].html is None
+    assert rows["https://h/throttled"].fetch_status == "error"
+    assert rows["https://h/throttled"].attempts == 2
     assert rows["https://h/short"].fetch_status == "ok"   # short → retry → full
     assert rows["https://h/short"].attempts == 2
     assert rows["https://h/tiny"].fetch_status == "short"  # gave up with body

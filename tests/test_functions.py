@@ -9,7 +9,6 @@ from politics_crawler_spark.functions.numbers import parse_recommend, parse_view
 from politics_crawler_spark.functions.urls import (
     canonical_url,
     is_valid_post_url,
-    post_id_from_url,
     url_hash,
 )
 
@@ -129,23 +128,6 @@ def test_canonical_url_all_forms(spark):
     ]
     want = [urljoin(b, h) for b, h in cases]
     assert got == want  # JVM expressions match urllib semantics
-
-
-def test_post_id_patterns(spark):
-    rows = [
-        ("bobaedream", "https://b.co.kr/view?code=p&No=991", "991"),
-        ("dcinside", "https://gall.dcinside.com/v/?id=g&no=123", "123"),
-        ("82cook", "https://www.82cook.com/entiz/read.php?num=77", "77"),
-        ("mlbpark", "https://mlbpark.donga.com/mp/b.php?b=bull&id=55", "55"),
-        ("fmkorea", "https://www.fmkorea.com/4242", "4242"),
-        ("ruliweb", "https://bbs.ruliweb.com/c/b/300148/read/9?page=2", "9"),
-    ]
-    df = spark.createDataFrame([(s, u) for s, u, _ in rows], "site string, url string")
-    got = [
-        r.pid
-        for r in df.select(post_id_from_url(F.col("site"), F.col("url")).alias("pid")).collect()
-    ]
-    assert got == [want for _, _, want in rows]
 
 
 def test_url_hash_is_stable_xxhash(spark):

@@ -1,11 +1,9 @@
 """Multimodal plumbing tests: schemas/batching real, decode stubbed."""
 
-from pyspark.sql import functions as F
 
 from politics_crawler_spark.operators.multimodal import (
     MEDIA,
     extract_media_features,
-    media_from_images,
 )
 
 
@@ -33,17 +31,6 @@ def test_feature_extraction_undecodable_image_no_decoder(spark):
     assert rows[3].status == "stub" and rows[3].feature is None
     assert rows[3].n_bytes == 14
     assert rows[4].status == "stub" and rows[4].n_bytes == 0
-
-
-def test_media_from_images_bridge(spark):
-    ext = spark.createDataFrame(
-        [(["https://x/a.png", "https://x/b.gif", "https://x/c.jpg"],)],
-        "images array<string>",
-    )
-    media = media_from_images(ext)
-    rows = sorted(media.collect(), key=lambda r: r.meta["src"])
-    assert [r.mime for r in rows] == ["image/png", "image/gif", "image/jpeg"]
-    assert all(r.payload is None and r.kind == "image" for r in rows)
 
 
 def _png(w, h):

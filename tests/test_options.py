@@ -11,7 +11,15 @@ it only if some call sets the caller's parameter, repeated until nothing
 changes. A defaulted parameter no call sets is a constant in disguise:
 inline it. ``KEEP`` lists the options kept on purpose.
 
-Run ``python tests/test_options.py [repo_root]`` for the per-module table.
+A second census, over the same parse, asks the same of definitions: every
+module-level function or class of the package must be reached from an
+entry point (a non-test file outside the package, or a module-level
+statement of the package), directly or through other reached definitions.
+Code only tests reach is a reference, and lives in ``tests/``.
+``KEEP_LIVE`` lists the definitions kept on purpose.
+
+Run ``python tests/test_options.py [repo_root]`` for the per-module table
+and the unreached definitions.
 """
 
 from __future__ import annotations
@@ -24,13 +32,17 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 PKG = "politics_crawler_spark"
 
-# Deployment names of the upsert target, and the only way to schedule a
-# live crawl stream (a fetcher), which no test or bench runs; live ticks
-# are tested directly through crawl_tick.
+# The only way to schedule a live crawl stream (a fetcher), which no test
+# or bench runs; live ticks are tested directly through crawl_tick.
 KEEP = {
-    "sinks.upsert.merge_sql(target_table)",
-    "sinks.upsert.merge_sql(source_view)",
     "streaming.cadence.crawl_cadence(fetcher)",
+}
+
+# The only live page source run_crawl(fetcher=...) takes (the reference's
+# P1-P6 fetch); no entry point crawls live, and wiring one into job.py
+# would add an option.
+KEEP_LIVE = {
+    "operators.fetch.make_fetch_stage",
 }
 
 
@@ -112,11 +124,8 @@ class _Func:
         return f"{self.module[len(PKG) + 1:]}.{self.name}({param})"
 
 
-def census(root: Path = ROOT):
-    """Return ``(functions, unset)`` for the repo at ``root``:
-    ``functions`` maps "module.name" to a ``_Func`` for every module-level
-    function of the package (private ones too: they carry forwards), and
-    ``unset`` holds the ``(key, param)`` pairs no call sets."""
+def _modules(root: Path) -> dict[str, _Module]:
+    """Every ``.py`` file of the repo at ``root`` but this one, by module name."""
     me = Path(__file__).resolve()
     modules = {}
     for path in sorted(root.rglob("*.py")):
@@ -125,7 +134,15 @@ def census(root: Path = ROOT):
             continue
         m = _Module(root, path)
         modules[m.name] = m
+    return modules
 
+
+def census(root: Path = ROOT):
+    """Return ``(functions, unset)`` for the repo at ``root``:
+    ``functions`` maps "module.name" to a ``_Func`` for every module-level
+    function of the package (private ones too: they carry forwards), and
+    ``unset`` holds the ``(key, param)`` pairs no call sets."""
+    modules = _modules(root)
     funcs: dict[str, _Func] = {}
     for m in modules.values():
         if m.name.split(".")[0] == PKG:
@@ -212,6 +229,88 @@ def table(root: Path = ROOT) -> str:
     return "\n".join(lines)
 
 
+def _is_test(name: str) -> bool:
+    parts = name.split(".")
+    return parts[0] == "tests" or parts[-1] == "conftest" or parts[-1].startswith("test_")
+
+
+def _resolve(modules: dict[str, _Module], name: str) -> str:
+    """Follow a name imported into a module to where it is defined."""
+    for _ in range(len(modules)):
+        parts = name.split(".")
+        for i in range(len(parts) - 1, 0, -1):
+            m = modules.get(".".join(parts[:i]))
+            if m is not None:
+                break
+        else:
+            return name
+        target = m.alias.get(parts[i])
+        if target is None or target == ".".join(parts[: i + 1]):
+            return name
+        name = ".".join([target] + parts[i + 1:])
+    return name
+
+
+def _references(m: _Module, nodes) -> set[str]:
+    """Dotted names the nodes reference, ``getattr(x, "name")`` included."""
+    out = set()
+    for node in nodes:
+        for n in ast.walk(node):
+            if isinstance(n, ast.Call) and _dotted(n.func) == "getattr" and len(n.args) > 1:
+                attr = n.args[1]
+                if isinstance(attr, ast.Constant) and isinstance(attr.value, str):
+                    n = ast.Attribute(value=n.args[0], attr=attr.value)
+            if isinstance(n, (ast.Name, ast.Attribute)) and (q := m.qualify(n)):
+                out.add(q)
+    return out
+
+
+def unreached(root: Path = ROOT) -> dict[str, int]:
+    """Package definitions no entry point reaches, with their line counts.
+
+    A module-level function or class of the package is live when a root or
+    a live definition references it, repeated until nothing changes. The
+    roots are every non-test file outside the package, the package's own
+    module-level statements and decorators, and ``KEEP_LIVE``."""
+    modules = _modules(root)
+    defs: dict[str, tuple[_Module, ast.AST]] = {}
+    roots: list[tuple[_Module, list]] = []
+    for m in modules.values():
+        if m.name.split(".")[0] != PKG:
+            if not _is_test(m.name):
+                roots.append((m, [m.tree]))
+            continue
+        for node in m.tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs[f"{m.name}.{node.name}"] = (m, node)
+                roots.append((m, node.decorator_list))
+            else:
+                roots.append((m, [node]))
+
+    def reached(m: _Module, nodes) -> set[str]:
+        out = set()
+        for name in _references(m, nodes):
+            parts = _resolve(modules, name).split(".")
+            out |= {k for i in range(1, len(parts) + 1) if (k := ".".join(parts[:i])) in defs}
+        return out
+
+    live = {f"{PKG}.{k}" for k in KEEP_LIVE}
+    for m, nodes in roots:
+        live |= reached(m, nodes)
+    todo = list(live & defs.keys())
+    while todo:
+        m, node = defs[todo.pop()]
+        body = [v for f, v in ast.iter_fields(node) if f != "decorator_list"]
+        nodes = [n for v in body for n in (v if isinstance(v, list) else [v]) if isinstance(n, ast.AST)]
+        for k in reached(m, nodes) - live:
+            live.add(k)
+            todo.append(k)
+    return {
+        k[len(PKG) + 1:]: node.end_lineno - node.lineno + 1
+        for k, (_, node) in defs.items() if k not in live
+    }
+
+
 def test_every_defaulted_parameter_is_set_by_some_call():
     labels = _unset_labels(*census())
     assert not labels, (
@@ -226,5 +325,26 @@ def test_keep_list_names_defaulted_parameters():
     assert KEEP <= known, sorted(KEEP - known)
 
 
+def test_every_package_definition_is_reached_from_an_entry_point():
+    dead = unreached()
+    assert not dead, (
+        f"{len(dead)} package definitions ({sum(dead.values())} lines) are reached "
+        "from no entry point, only from tests or not at all; delete each, or move "
+        "a test-only reference into tests/:\n  "
+        + "\n  ".join(f"{k} ({n} lines)" for k, n in sorted(dead.items()))
+    )
+
+
+def test_keep_live_names_package_definitions():
+    for k in KEEP_LIVE:
+        module, _, name = k.rpartition(".")
+        path = ROOT / PKG / (module.replace(".", "/") + ".py")
+        tree = ast.parse(path.read_text())
+        assert any(getattr(n, "name", None) == name for n in tree.body), k
+
+
 if __name__ == "__main__":
-    print(table(Path(sys.argv[1]).resolve() if len(sys.argv) > 1 else ROOT))
+    root = Path(sys.argv[1]).resolve() if len(sys.argv) > 1 else ROOT
+    print(table(root))
+    for k, n in sorted(unreached(root).items()):
+        print(f"unreached {k} ({n} lines)")

@@ -1,11 +1,7 @@
-"""Politeness/scheduling operator tests (P3/P8 as partitioning + quota)."""
-
-from pyspark.sql import functions as F
+"""Politeness/scheduling operator tests (P3 as salted partitioning)."""
 
 from politics_crawler_spark.plans.politeness import (
-    apply_host_quota,
     host_salt_plan,
-    priority_sort,
     salted_repartition_by_host,
 )
 
@@ -58,33 +54,3 @@ def test_salted_repartition_bounds_per_task_host_rows(spark):
     assert max(mega) < 900
     assert sum(mega) == 900
 
-
-def test_apply_host_quota(spark):
-    df = spark.createDataFrame(
-        [("h1", f"https://h1/{i}", 0, None) for i in range(10)]
-        + [("h2", f"https://h2/{i}", 0, None) for i in range(3)],
-        "host string, url string, depth int, warc_ts timestamp",
-    )
-    out = apply_host_quota(df, quota=5)
-    got = {r.host: 0 for r in out.collect()}
-    for r in out.collect():
-        got[r.host] += 1
-    assert got == {"h1": 5, "h2": 3}
-
-
-def test_priority_sort_deterministic(spark):
-    import datetime as dt
-
-    rows = [
-        ("u1", 1, dt.datetime(2025, 3, 12), 2, 0, 0),
-        ("u2", 0, dt.datetime(2025, 3, 12), 1, 0, 0),
-        ("u3", 0, dt.datetime(2025, 3, 12, 12), 1, 0, 0),
-        ("u4", 0, dt.datetime(2025, 3, 12, 12), 0, 0, 0),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "url string, depth int, warc_ts timestamp, site_rank int, page_no int, row_idx int",
-    )
-    got = [r.url for r in priority_sort(df).collect()]
-    # depth asc, freshness desc, site_rank asc
-    assert got == ["u4", "u3", "u2", "u1"]

@@ -3,25 +3,12 @@
 from pyspark.sql import functions as F
 
 from politics_crawler_spark.plans.crawl import run_crawl
-from politics_crawler_spark.plans.robots import (
-    gate_by_robots,
-    parse_rules,
-    robots_df,
-)
+from politics_crawler_spark.plans.robots import gate_by_robots
+from politics_crawler_spark.schemas import ROBOTS
 
 
-def test_parse_rules():
-    txt = """
-    # comment
-    User-agent: Googlebot
-    Disallow: /google-only/
-
-    User-agent: *
-    Disallow: /private/
-    Disallow: /tmp
-    Allow: /tmp/ok
-    """
-    assert parse_rules(txt) == ["/private/", "/tmp"]
+def robots_df(spark, rows: list[dict]):
+    return spark.createDataFrame(rows, schema=ROBOTS)
 
 
 def test_gate_by_robots(spark):

@@ -9,11 +9,14 @@ import os
 from pyspark.sql import functions as F
 
 
+def read_jsonl_shards(spark, out_dir: str):
+    """Read the layout back (partition column `shard_id` is recovered
+    from the directory names)."""
+    return spark.read.json(out_dir)
+
+
 def test_write_jsonl_shards_layout_and_budget(spark, tmp_path):
-    from politics_crawler_spark.sinks.shards import (
-        read_jsonl_shards,
-        write_jsonl_shards,
-    )
+    from politics_crawler_spark.sinks.shards import write_jsonl_shards
 
     # 40 docs x 10 tokens = 400 tokens; budget 100 -> 4 shards of 10 docs
     rows = [(i, " ".join(f"w{i}t{j}" for j in range(10))) for i in range(40)]
