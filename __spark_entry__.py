@@ -249,7 +249,7 @@ def q14_ann_cosine(spark, sf):
 
     emb = _t(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    return cosine_topk(emb, queries, k=10).orderBy("query_id", "rank")
+    return cosine_topk(emb, queries).orderBy("query_id", "rank")
 
 
 def q15_minhash_pairs(spark, sf):
@@ -402,7 +402,7 @@ def q17_lsh_ann(spark, sf):
 
     emb = _cached_input(spark, "emb", lambda: synthesize_embeddings(spark))
     queries = emb.filter(F.col("vec_id") < DEFAULT_QUERIES)
-    approx = lsh_topk(emb, queries, k=10, bits=10, tables=6)
+    approx = lsh_topk(emb, queries, bits=10, tables=6)
     return _mean_recall_contract(spark, approx, DEFAULT_QUERIES)
 
 
@@ -670,7 +670,7 @@ def q34_ann_exact_clustered(spark, sf):
     emb = _cached_input(spark, "emb", lambda: synthesize_embeddings(spark))
     queries_df = emb.filter(F.col("vec_id") < DEFAULT_QUERIES)
     return (
-        cosine_topk(emb, queries_df, k=10)
+        cosine_topk(emb, queries_df)
         .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
         .orderBy("query_id", "rank")
     )
@@ -883,7 +883,7 @@ def q41_decontaminate(spark, sf):
     from politics_crawler_spark.operators.curation import decontaminate_profile
 
     d = _t(spark, sf, "documents")
-    return decontaminate_profile(d, d.filter(F.col("doc_id") % 19 == 0), n=8)
+    return decontaminate_profile(d, d.filter(F.col("doc_id") % 19 == 0))
 
 
 def q42_line_dedup(spark, sf):
@@ -896,7 +896,7 @@ def q42_line_dedup(spark, sf):
     back broadcast (operators/curation.py)."""
     from politics_crawler_spark.operators.curation import drop_boilerplate_lines
 
-    return drop_boilerplate_lines(_planted_lines(spark, sf), min_docs=10)
+    return drop_boilerplate_lines(_planted_lines(spark, sf))
 
 
 def q43_mixture_sample(spark, sf):
@@ -921,9 +921,7 @@ def q44_token_shards(spark, sf):
     (operators/curation.py)."""
     from politics_crawler_spark.operators.curation import token_budget_shards
 
-    return token_budget_shards(
-        _t(spark, sf, "documents"), budget=2000, bucket_docs=100
-    )
+    return token_budget_shards(_t(spark, sf, "documents"), budget=2000)
 
 
 def q45_curation_pipeline(spark, sf):
@@ -947,9 +945,9 @@ def q45_curation_pipeline(spark, sf):
     surv = c4_filter(d).filter(
         mixture_keep(F.col("doc_id"), F.col("source"))
     )
-    contam = contaminated_ids(d, d.filter(F.col("doc_id") % 19 == 0), n=8)
+    contam = contaminated_ids(d, d.filter(F.col("doc_id") % 19 == 0))
     clean = surv.join(F.broadcast(contam), "doc_id", "left_anti")
-    return token_budget_shards(clean, budget=500, bucket_docs=100)
+    return token_budget_shards(clean, budget=500)
 
 
 def q46_lm_score_buckets(spark, sf):
@@ -989,7 +987,7 @@ def q47_dup_ngram_coverage(spark, sf):
     from politics_crawler_spark.operators.corpus_quality import dup_ngram_coverage
 
     d = _t(spark, sf, "documents")
-    cov = dup_ngram_coverage(d, n=5)
+    cov = dup_ngram_coverage(d)
     return cov.select(
         "doc_id",
         "n_tokens",
@@ -1013,9 +1011,7 @@ def q48_source_quality_gate(spark, sf):
     )
 
     d = _t(spark, sf, "documents")
-    return source_quality_profile(
-        d, min_docs=5, min_mean_stop=0.06
-    ).orderBy("source")
+    return source_quality_profile(d, min_mean_stop=0.06).orderBy("source")
 
 
 def q49_drop_dup_spans(spark, sf):
@@ -1032,7 +1028,7 @@ def q49_drop_dup_spans(spark, sf):
     )
 
     d = _t(spark, sf, "documents")
-    return drop_dup_ngram_spans(d, n=5)
+    return drop_dup_ngram_spans(d)
 
 
 _BM25_QUERIES = [
@@ -1053,7 +1049,7 @@ def q50_bm25_search(spark, sf):
     from politics_crawler_spark.operators.retrieval import bm25_topk
 
     d = _t(spark, sf, "documents")
-    return bm25_topk(d, _BM25_QUERIES, k=10).orderBy("query_id", "rank")
+    return bm25_topk(d, _BM25_QUERIES).orderBy("query_id", "rank")
 
 
 def q51_cardinality_contract(spark, sf):

@@ -23,8 +23,8 @@ Scale notes (100 TB):
 - unigram_lm: one aggregation keyed by token. Token keys are strings but
   the domain is a natural-language VOCABULARY — bounded (≤ ~10^7 distinct
   even web-scale) and Zipf-headed, so map-side partial aggregation
-  collapses almost all rows before the exchange. `max_vocab` caps the
-  broadcast side for scoring; out-of-vocab tokens get the Laplace floor.
+  collapses almost all rows before the exchange; out-of-vocab tokens
+  get the Laplace floor.
 - lm_score: the LM table is broadcast (vocabulary-bounded); the only
   exchange after the scan-side token explode is the (doc_id)-keyed mean —
   token strings never shuffle beyond the broadcast hash lookup.
@@ -59,17 +59,13 @@ from .textstats import ngrams, punct_ratio, stopword_ratio, tokens
 # ---------------------------------------------------------------------------
 
 
-def unigram_lm(corpus: DataFrame, max_vocab: int | None = None) -> DataFrame:
+def unigram_lm(corpus: DataFrame) -> DataFrame:
     """Train the unigram model: (tok, logp) with add-one (Laplace)
     smoothing over the observed vocabulary — logp = log2((c+1)/(N+V)).
 
     One aggregation keyed by token (vocabulary-bounded, Zipf-headed ⇒
-    map-side combine does the heavy lifting). With `max_vocab`, only the
-    top-V tokens by count keep their own probability (rank ties broken by
-    token so the cut is deterministic); everything else is scored at the
-    out-of-vocab floor `oov_logp(lm)` — this bounds the broadcast side of
-    lm_score regardless of corpus size. N and V always reflect the FULL
-    observed vocabulary so capping never changes in-vocab scores.
+    map-side combine does the heavy lifting). A token the corpus never
+    saw is scored at the out-of-vocab floor `oov_logp(lm)`.
     """
     # One corpus scan total, caller-managed storage lifetime (r6, VERDICT
     # r5 #4 / ADVICE r5): the count table persists only for the duration
@@ -99,19 +95,7 @@ def unigram_lm(corpus: DataFrame, max_vocab: int | None = None) -> DataFrame:
             ),
             "n",
             "v",
-        )
-        if max_vocab is not None:
-            from pyspark.sql import Window
-
-            w = Window.orderBy(F.desc("c"), "tok")
-            # single-partition window — but over the VOCAB table (bounded),
-            # not the corpus; at 10^7 vocab rows this is one small sort.
-            lm = (
-                lm.withColumn("_r", F.row_number().over(w))
-                .filter(F.col("_r") <= max_vocab)
-                .drop("_r")
-            )
-        lm = lm.persist()
+        ).persist()
         lm.count()  # materialize while cnt's cache is live (one job)
         return lm
     finally:
@@ -119,7 +103,7 @@ def unigram_lm(corpus: DataFrame, max_vocab: int | None = None) -> DataFrame:
 
 
 def oov_logp(lm: DataFrame) -> float:
-    """Laplace floor for unseen/capped tokens: log2(1/(N+V)). One-row
+    """Laplace floor for unseen tokens: log2(1/(N+V)). One-row
     driver read of the model's own metadata (bounded by construction)."""
     row = lm.select("n", "v").first()
     import math
@@ -133,9 +117,8 @@ def lm_score(docs: DataFrame, lm: DataFrame, oov: float | None = None) -> DataFr
 
     Returns (doc_id, n_tokens, bits_per_token) for EVERY input doc; an
     empty doc scores 0.0 with n_tokens=0. `oov` is the log-prob applied
-    to tokens absent from the LM table (required when the model was
-    trained with max_vocab or on different text; defaults to the exact
-    Laplace floor via oov_logp).
+    to tokens absent from the LM table (defaults to the exact Laplace
+    floor via oov_logp).
 
     Plan shape: the token explode is scan-side and uses explode_outer so
     empty documents survive WITHOUT a join back to the id base (a
@@ -187,12 +170,14 @@ def ccnet_bucket(bits_col: Column, head: float, middle: float) -> Column:
 
 # An n-gram is duplicated once it occurs in this many distinct documents.
 DUP_MIN_DOCS = 2
+# The gram length n of the duplicated-n-gram signal (token 5-grams, q47/q49).
+DUP_NGRAM_N = 5
 
 
-def _covered_positions(df: DataFrame, n: int) -> DataFrame:
+def _covered_positions(df: DataFrame) -> DataFrame:
     """Per-document sorted array ``_cov`` of the distinct token positions
-    covered by at least one n-gram occurring in ≥ DUP_MIN_DOCS DISTINCT
-    documents — the shared core of dup_ngram_coverage (measure) and
+    covered by at least one DUP_NGRAM_N-gram occurring in ≥ DUP_MIN_DOCS
+    DISTINCT documents — the shared core of dup_ngram_coverage (measure) and
     drop_dup_ngram_spans (transform). Docs with no covered position are
     absent (consumers left-join and coalesce).
 
@@ -223,8 +208,8 @@ def _covered_positions(df: DataFrame, n: int) -> DataFrame:
     # disk), traded against a full second tokenize+hash scan; blocks are
     # freed by the ContextCleaner when the plan dies.
     ga = (
-        t.filter(F.size("_t") >= n)
-        .select(F.col("doc_id"), ngrams(F.col("_t"), n).alias("_g"))
+        t.filter(F.size("_t") >= DUP_NGRAM_N)
+        .select(F.col("doc_id"), ngrams(F.col("_t"), DUP_NGRAM_N).alias("_g"))
         .localCheckpoint(eager=True)
     )
     grams = ga.select(
@@ -259,7 +244,7 @@ def _covered_positions(df: DataFrame, n: int) -> DataFrame:
                     F.flatten(
                         F.transform(
                             F.col("_gp"),
-                            lambda g: F.sequence(g, g + (n - 1)),
+                            lambda g: F.sequence(g, g + (DUP_NGRAM_N - 1)),
                         )
                     )
                 )
@@ -268,16 +253,16 @@ def _covered_positions(df: DataFrame, n: int) -> DataFrame:
     )
 
 
-def dup_ngram_coverage(df: DataFrame, n: int = 5) -> DataFrame:
+def dup_ngram_coverage(df: DataFrame) -> DataFrame:
     """Fraction of each document's token positions covered by at least one
-    n-gram that occurs in ≥ DUP_MIN_DOCS DISTINCT documents — the
-    cross-document duplicated-n-gram signal Gopher/Dolma gate on.
+    DUP_NGRAM_N-gram that occurs in ≥ DUP_MIN_DOCS DISTINCT documents —
+    the cross-document duplicated-n-gram signal Gopher/Dolma gate on.
 
     Returns (doc_id, n_tokens, n_covered, dup_coverage) for EVERY doc.
     Plan shape: see _covered_positions; the per-doc rollup adds one more
     fixed-width (doc_id)-keyed exchange.
     """
-    covered = _covered_positions(df, n).select(
+    covered = _covered_positions(df).select(
         F.col("doc_id"), F.size("_cov").cast("long").alias("n_covered")
     )
     base = df.select(
@@ -298,10 +283,10 @@ def dup_ngram_coverage(df: DataFrame, n: int = 5) -> DataFrame:
     )
 
 
-def drop_dup_ngram_spans(df: DataFrame, n: int = 5) -> DataFrame:
+def drop_dup_ngram_spans(df: DataFrame) -> DataFrame:
     """REMOVE every token position covered by a cross-document duplicated
-    n-gram and rebuild the text from the survivors — the transform
-    counterpart of dup_ngram_coverage, i.e. the C4 "discard any
+    DUP_NGRAM_N-gram and rebuild the text from the survivors — the
+    transform counterpart of dup_ngram_coverage, i.e. the C4 "discard any
     three-sentence span occurring more than once" rule (arXiv:1910.10683
     §2.2) and Lee et al.'s exact substring deduplication
     (arXiv:2107.06499), re-expressed at token-window granularity.
@@ -320,7 +305,7 @@ def drop_dup_ngram_spans(df: DataFrame, n: int = 5) -> DataFrame:
     are the dup-gram count and the (doc_id, gpos) covered-set aggregate.
     n_kept = n_tokens − |_cov| exactly, because _cov ⊆ [0, n_tokens).
     """
-    cov = _covered_positions(df, n)
+    cov = _covered_positions(df)
     t = df.select(F.col("doc_id"), tokens(F.col("text")).alias("_t"))
     kept_arr = F.when(F.col("_cov").isNull(), F.col("_t")).otherwise(
         F.filter(
@@ -347,17 +332,19 @@ def drop_dup_ngram_spans(df: DataFrame, n: int = 5) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def source_quality_profile(
-    df: DataFrame, min_docs: int = 5, min_mean_stop: float = 0.0
-) -> DataFrame:
+# A source needs this many documents before its mean quality is judged.
+SOURCE_MIN_DOCS = 5
+
+
+def source_quality_profile(df: DataFrame, min_mean_stop: float = 0.0) -> DataFrame:
     """Judge each SOURCE (site/domain) on its aggregate document quality —
     the RefinedWeb-style stage that drops whole domains whose average
     page fails the bar, catching spam farms whose individual pages each
     squeak past per-document gates.
 
     Returns (source, n_docs, mean_punct, mean_stop, keep_source): keep iff
-    the source has ≥ min_docs documents AND mean punctuation ratio ≤
-    0.05 AND mean stopword ratio ≥ min_mean_stop.
+    the source has ≥ SOURCE_MIN_DOCS documents AND mean punctuation ratio
+    ≤ 0.05 AND mean stopword ratio ≥ min_mean_stop.
 
     Plan shape: per-document ratios are whole-stage-codegen expressions;
     the only exchange is one aggregation keyed by source (one output row
@@ -380,7 +367,7 @@ def source_quality_profile(
         "mean_punct",
         "mean_stop",
         (
-            (F.col("n_docs") >= min_docs)
+            (F.col("n_docs") >= SOURCE_MIN_DOCS)
             & (F.col("mean_punct") <= 0.05)
             & (F.col("mean_stop") >= min_mean_stop)
         ).alias("keep_source"),

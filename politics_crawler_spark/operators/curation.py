@@ -37,10 +37,11 @@ Scale notes (100 TB):
   beyond the per-source count.
 - Sharding: a naive global cumulative sum is a single-partition window —
   a scale-killer. This module uses the two-pass prefix-sum: per-bucket
-  subtotals (tiny table, one row per `bucket_docs` documents), a
+  subtotals (tiny table, one row per SHARD_BUCKET_DOCS documents), a
   cumulative offset over THAT table only, broadcast back, then the
-  running sum windows partition-parallel WITHIN buckets. At 10^10 docs
-  and bucket_docs=10^6 the sequential structure is 10^4 rows.
+  running sum windows partition-parallel WITHIN buckets. The sequential
+  structure is 1/SHARD_BUCKET_DOCS of the corpus: 10^8 rows at 10^10
+  docs, so a corpus that size wants a larger constant.
 
 Input columns: documents are read as ``doc_id`` (a long) and ``text``,
 plus ``source`` for the mixture profile.
@@ -98,16 +99,24 @@ def _contamination_hits(train: DataFrame, evalset: DataFrame, n: int) -> DataFra
     )
 
 
-def contaminated_ids(train: DataFrame, evalset: DataFrame, n: int = 8) -> DataFrame:
+# Token n-gram length of the decontamination overlap (q41/q45).
+DECONTAM_N = 8
+# A line in at least this many distinct documents is boilerplate (q42).
+BOILERPLATE_MIN_DOCS = 10
+# Documents per prefix-sum bucket of the shard assignment (q44/q45).
+SHARD_BUCKET_DOCS = 100
+
+
+def contaminated_ids(train: DataFrame, evalset: DataFrame, n: int = DECONTAM_N) -> DataFrame:
     """Just the ids to drop — the form a pipeline left_anti-joins against
     (broadcast: contaminated sets are bounded by the eval set's reach)."""
     return _contamination_hits(train, evalset, n).select("doc_id")
 
 
-def decontaminate_profile(train: DataFrame, evalset: DataFrame, n: int = 8) -> DataFrame:
+def decontaminate_profile(train: DataFrame, evalset: DataFrame) -> DataFrame:
     """GPT-3-style n-gram-overlap decontamination (arXiv:2005.14165 App C,
     re-expressed): flag every training document sharing at least one
-    token n-gram with the evaluation set.
+    token DECONTAM_N-gram with the evaluation set.
 
     Returns (doc_id, n_contam_grams, contaminated) for EVERY train doc —
     n_contam_grams counts the distinct eval n-grams the doc contains.
@@ -117,7 +126,7 @@ def decontaminate_profile(train: DataFrame, evalset: DataFrame, n: int = 8) -> D
     exchange after the scan is the (doc_id)-keyed count — gram strings
     never shuffle.
     """
-    hits = _contamination_hits(train, evalset, n)
+    hits = _contamination_hits(train, evalset, DECONTAM_N)
     return (
         train.select("doc_id")
         .join(hits, "doc_id", "left")
@@ -131,12 +140,13 @@ def decontaminate_profile(train: DataFrame, evalset: DataFrame, n: int = 8) -> D
     )
 
 
-def drop_boilerplate_lines(df: DataFrame, min_docs: int = 10) -> DataFrame:
+def drop_boilerplate_lines(df: DataFrame) -> DataFrame:
     """CCNet-style cross-document line dedup (arXiv:1911.00359 §3.1,
     re-expressed): split each document into lines, count how many
     DISTINCT documents each line occurs in, drop lines present in
-    ≥ min_docs documents (boilerplate: nav bars, cookie banners, footers),
-    and reconstruct the surviving text in original line order.
+    ≥ BOILERPLATE_MIN_DOCS documents (boilerplate: nav bars, cookie
+    banners, footers), and reconstruct the surviving text in original line
+    order.
 
     Returns (doc_id, n_lines, n_kept, text_clean) for EVERY input doc;
     a fully-boilerplate doc survives with n_kept=0 and text_clean=''.
@@ -147,7 +157,7 @@ def drop_boilerplate_lines(df: DataFrame, min_docs: int = 10) -> DataFrame:
     frequency is a plain count(*): the old count_distinct(doc_id)
     carried (lh, doc_id) pairs through the exchange undeduped plus the
     two-phase distinct split (the r5 q47 lesson, VERDICT r5 #3). Only
-    hashes with n_docs ≥ min_docs survive the HAVING (a small
+    hashes with n_docs ≥ BOILERPLATE_MIN_DOCS survive the HAVING (a small
     boilerplate table by nature); the per-doc bad-hash sets come back
     through one tiny doc-keyed collect_set, and the text is rebuilt
     ROW-LOCALLY by filtering the line array against that set — the old
@@ -165,7 +175,7 @@ def drop_boilerplate_lines(df: DataFrame, min_docs: int = 10) -> DataFrame:
     boiler = (
         dl.groupBy("lh")
         .agg(F.count("*").alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= BOILERPLATE_MIN_DOCS)
         .select("lh")
     )
     bad = (
@@ -247,7 +257,7 @@ def mixture_sample_profile(df: DataFrame) -> DataFrame:
     )
 
 
-def token_budget_shards(df: DataFrame, budget: int = 2000, bucket_docs: int = 100) -> DataFrame:
+def token_budget_shards(df: DataFrame, budget: int = 2000) -> DataFrame:
     """Assign documents (in id order) to fixed-token-budget output shards —
     the pre-training shard layout (GPT-NeoX / Megatron data loaders):
     shard_id = floor(start_offset / budget) where start_offset is the
@@ -255,18 +265,18 @@ def token_budget_shards(df: DataFrame, budget: int = 2000, bucket_docs: int = 10
 
     A naive `sum() over (order by id)` is a single-partition window — a
     scale-killer at 10^10 docs. This is the two-pass distributed prefix
-    sum: (1) per-bucket token subtotals (bucket = id div bucket_docs — one
-    row per bucket_docs docs), (2) exclusive cumulative offsets over that
-    TINY table (the only sequential window, 10^4 rows at 10^10 docs with
-    bucket_docs=10^6), (3) broadcast the offsets back and run the running
-    sum partition-parallel WITHIN each bucket. Result is identical to the
+    sum: (1) per-bucket token subtotals (bucket = id div SHARD_BUCKET_DOCS
+    — one row per SHARD_BUCKET_DOCS docs), (2) exclusive cumulative
+    offsets over that small table (the only sequential window), (3)
+    broadcast the offsets back and run the running sum partition-parallel
+    WITHIN each bucket. Result is identical to the
     global window (the oracle states it that way).
     """
     from pyspark.sql import Window
 
     base = df.select(
         F.col("doc_id"),
-        (F.col("doc_id") - F.col("doc_id") % bucket_docs).alias("_bucket"),
+        (F.col("doc_id") - F.col("doc_id") % SHARD_BUCKET_DOCS).alias("_bucket"),
         F.size(tokens(F.col("text"))).cast("long").alias("n_tokens"),
     )
     # Materialize the (id, bucket, n_tokens) projection ONCE (r6): both the

@@ -112,8 +112,8 @@ def make_fetch_stage(
 
     ``min_interval_s`` > 0 enforces per-host pacing (see module docstring),
     multiplied per row by a ``_salt_n`` column when present (the salted
-    repartition writes it; the stage drops it). The host key comes from
-    the ``host`` column when present, else from the URL.
+    repartition writes it; the stage drops it). The input's ``host``
+    column is the pacing key.
     Pacing needs a real ``sleep``; with ``sleep=None`` (fault-injection
     tests that strip all wall-clock cost) it is skipped like backoff is."""
     transport = transport or urllib_transport
@@ -150,14 +150,11 @@ def make_fetch_stage(
 
     def fetch(df: DataFrame, url_col: str = "url") -> DataFrame:
         cols = df.schema.fieldNames()
-        has_host, has_salt = "host" in cols, SALT_N_COL in cols
+        if "host" not in cols:
+            raise ValueError("fetch needs a host column (the pacing key)")
+        has_salt = SALT_N_COL in cols
         out_fields = [f for f in df.schema.fields if f.name != SALT_N_COL]
         out_schema = T.StructType(out_fields + FETCH_FIELDS)
-
-        def _host_of(url: str) -> str:
-            from urllib.parse import urlsplit
-
-            return urlsplit(url).netloc
 
         def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # per-TASK last-request-issue time, keyed by TRUE host: one
@@ -176,11 +173,6 @@ def make_fetch_stage(
                 return _fetch_one(url)
 
             for pdf in batches:
-                hosts = (
-                    pdf["host"]
-                    if has_host
-                    else pdf[url_col].map(_host_of)
-                )
                 paces = min_interval_s * (
                     pdf[SALT_N_COL].fillna(1)
                     if has_salt
@@ -189,7 +181,7 @@ def make_fetch_stage(
                 res = pd.DataFrame(
                     [
                         _paced_fetch(u, h, float(p))
-                        for u, h, p in zip(pdf[url_col], hosts, paces)
+                        for u, h, p in zip(pdf[url_col], pdf["host"], paces)
                     ],
                     index=pdf.index,
                 )

@@ -24,16 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-MEDIA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-
 FEATURES = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -116,7 +106,8 @@ def _byte_histogram(payload: bytes, bins: int = 8) -> list[float]:
 
 def extract_media_features(df: DataFrame) -> DataFrame:
     """mapInPandas media feature extraction — batch-shaped like production
-    (one Arrow batch of payloads in, one slim feature frame out)."""
+    (one Arrow batch of payloads in, one slim feature frame out). Reads
+    ``media_id``, ``kind`` (image|audio|video) and the binary ``payload``."""
 
     cols = list(FEATURES.fieldNames())
 

@@ -50,17 +50,19 @@ from .textstats import tokens
 # BM25 free parameters (Robertson's recommended defaults).
 BM25_K1 = 1.2
 BM25_B = 0.75
+# Documents returned per query.
+BM25_TOP_K = 10
 
 
-def bm25_topk(corpus: DataFrame, queries: list[tuple[int, str]], k: int = 10) -> DataFrame:
-    """Top-k documents per query under BM25.
+def bm25_topk(corpus: DataFrame, queries: list[tuple[int, str]]) -> DataFrame:
+    """Top-BM25_TOP_K documents per query under BM25.
 
     `queries` is a small in-memory list of (query_id, query_text) — the
     interactive-search shape. Scores are rounded to 4 decimals BEFORE
     ranking so the ordering is reproducible across engines (ties broken
     by ascending doc id).
 
-    Returns (query_id, doc_id, score, rank) with rank ≤ k.
+    Returns (query_id, doc_id, score, rank) with rank ≤ BM25_TOP_K.
     """
     # The query list as an inline VALUES table, i.e. a LocalRelation:
     # collecting its tokens below runs on the driver, with no Spark job (a
@@ -161,7 +163,7 @@ def bm25_topk(corpus: DataFrame, queries: list[tuple[int, str]], k: int = 10) ->
     )
     return (
         scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= BM25_TOP_K)
         .select("query_id", "doc_id", "score", "rank")
     )
 

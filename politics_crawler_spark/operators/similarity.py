@@ -29,10 +29,12 @@ from pyspark.sql.functions import pandas_udf
 
 # IVF quantizer training: a bounded sample (one ``limit`` collect —
 # O(sample) driver bytes, independent of N) and a fixed k-means seed;
-# ivf_topk ranks the top IVF_K inside each query's IVF_PROBES cells.
+# ivf_topk re-ranks inside each query's IVF_PROBES cells. Every top-k
+# search here returns the TOP_K nearest neighbours per query.
 IVF_SAMPLE_N = 2048
 IVF_SEED = 23
-IVF_K, IVF_PROBES = 10, 4
+IVF_PROBES = 4
+TOP_K = 10
 
 
 def _sum(arr) -> "F.Column":
@@ -47,8 +49,8 @@ def _cosine(a, b) -> "F.Column":
     return dot / (norm(a) * norm(b))
 
 
-def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
-    """Exact top-k cosine neighbors per query (query ≠ neighbor), sim
+def cosine_topk(vectors: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact top-TOP_K cosine neighbors per query (query ≠ neighbor), sim
     rounded to 4 places."""
     q = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
@@ -63,7 +65,7 @@ def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 10) -> DataFram
     return (
         joined.select("query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("sim"))
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "sim", "rank")
     )
 
@@ -228,18 +230,17 @@ def _topk_from_collisions(collisions: DataFrame, k: int) -> DataFrame:
     )
 
 
-def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = 10, bits: int = 8,
-             tables: int = 4) -> DataFrame:
-    """Approximate top-k over random-hyperplane buckets × several tables."""
+def lsh_topk(vectors: DataFrame, queries: DataFrame, bits: int = 8, tables: int = 4) -> DataFrame:
+    """Approximate top-TOP_K over random-hyperplane buckets × several tables."""
     keys = lsh_keys(bits, tables)
-    return _topk_from_collisions(candidate_pairs(vectors, queries, keys), k)
+    return _topk_from_collisions(candidate_pairs(vectors, queries, keys), TOP_K)
 
 
 def ivf_topk(vectors: DataFrame, queries: DataFrame, n_cells: int = 16) -> DataFrame:
-    """IVF ANN: exact cosine top-``IVF_K`` re-rank inside each query's
+    """IVF ANN: exact cosine top-``TOP_K`` re-rank inside each query's
     ``IVF_PROBES`` probed cells."""
     keys = ivf_keys(vectors, n_cells, IVF_PROBES)
-    return _topk_from_collisions(candidate_pairs(vectors, queries, keys), IVF_K)
+    return _topk_from_collisions(candidate_pairs(vectors, queries, keys), TOP_K)
 
 
 # --------------------------------------------------------------------------

@@ -182,7 +182,7 @@ def gopher_keep(
     )
 
 
-def _c4_rules(df: DataFrame, min_words: int) -> tuple[DataFrame, dict[str, Column]]:
+def _c4_rules(df: DataFrame) -> tuple[DataFrame, dict[str, Column]]:
     """The C4 rule set shared by c4_doc_gate and c4_filter: `df` with the
     token array `_t` and the stopword flag `_stop` projected, plus one
     boolean per rule over those two columns — word floor, max word length,
@@ -200,19 +200,19 @@ def _c4_rules(df: DataFrame, min_words: int) -> tuple[DataFrame, dict[str, Colum
     })
     t = F.col("_t")
     return toked, {
-        "ok_min_words": F.size(t) >= min_words,
+        "ok_min_words": F.size(t) >= C4_MIN_WORDS,
         "ok_word_len": max_word_length(t) <= C4_MAX_WORD_LEN,
         "ok_alpha": F.round(alpha_word_fraction(t), 6) >= C4_MIN_ALPHA_FRAC,
         "ok_stopword": F.col("_stop"),
     }
 
 
-def c4_doc_gate(df: DataFrame, min_words: int = C4_MIN_WORDS) -> DataFrame:
+def c4_doc_gate(df: DataFrame) -> DataFrame:
     """C4-style document-shape gate — one row per doc with each rule's
     boolean and the conjunction, all whole-stage-codegen (no shuffle):
     (doc_id, n_words, ok_min_words, ok_word_len, ok_alpha, ok_stopword,
     keep)."""
-    toked, rules = _c4_rules(df, min_words)
+    toked, rules = _c4_rules(df)
     gate = toked.select(
         F.col("doc_id"),
         F.size("_t").cast("long").alias("n_words"),
@@ -231,7 +231,7 @@ def c4_filter(df: DataFrame) -> DataFrame:
     input rows (all columns) that pass, evaluated ROW-LOCALLY so Catalyst
     fuses it into the scan — no join back, no second read of a 100 TB
     table."""
-    toked, rules = _c4_rules(df, C4_MIN_WORDS)
+    toked, rules = _c4_rules(df)
     return toked.filter(reduce(lambda a, b: a & b, rules.values())).drop(
         "_t", "_stop"
     )

@@ -39,11 +39,9 @@ NO_CONTENT = "내용을 찾을 수 없습니다."  # dcinside/ruliweb/mlbpark/bo
 NO_CONTENT_FMK = "내용을 찾을 수 없음"  # fmkorea_politics.py:80
 NO_PICBG = "pic_bg 테이블을 찾을 수 없습니다."  # ppomppu_freeboard.py:52
 NO_TEXT = "텍스트 없음"  # ppomppu_freeboard.py:75
-INVALID_URL = "유효하지 않은 URL"  # dcinside_politics.py:35
 
 STATUS_OK = "ok"
 STATUS_NO_CONTENT = "no_content"
-STATUS_INVALID_URL = "invalid_url"
 STATUS_ERROR = "error"
 
 

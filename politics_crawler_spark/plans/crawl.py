@@ -327,7 +327,6 @@ def run_crawl(
     run_date: str = RUN_DATE,
     boards: list[BoardConfig] | None = None,
     n_shards: int = 16,
-    max_rounds: int | None = None,
     max_seconds: float | None = None,
     host_target_rows: int = 5000,
     checkpoint_dir: str | None = None,
@@ -338,11 +337,12 @@ def run_crawl(
     initial_seen: DataFrame | None = None,
 ) -> CrawlResult:
     """Crawl ``pages`` (or the live web through ``fetcher``) round by round
-    until every board stopped, the round budget ran out or ``max_seconds``
-    passed. One round runs three jobs: the per-(board, page) candidate
-    counts (which fill the persisted candidate cache; the P9 stop rule is
-    then replayed on the driver), the ``selected`` checkpoint (staleness
-    cut, F3, robots gate, in-round dedup), and the seen probe + fold.
+    until every board stopped (P9 staleness or the end of its P8
+    ``max_pages`` budget) or ``max_seconds`` passed. One round runs three
+    jobs: the per-(board, page) candidate counts (which fill the persisted
+    candidate cache; the P9 stop rule is then replayed on the driver), the
+    ``selected`` checkpoint (staleness cut, F3, robots gate, in-round
+    dedup), and the seen probe + fold.
 
     Every round's candidates are extracted in ONE terminal job, persisted
     before the final sort (listed in ``CrawlResult.caches``; unpersist after
@@ -577,12 +577,7 @@ def run_crawl(
                 else []
             ),
         )
-    if max_rounds is not None:
-        total_rounds = max_rounds
-    else:
-        total_rounds = (max(b.max_pages for b in boards) + pages_per_round - 1) // pages_per_round
-
-    while rnd < total_rounds and any(s.active for s in state.values()):
+    while any(s.active for s in state.values()):
         if max_seconds is not None and time.time() - t0 > max_seconds:
             break  # P7 wall-clock budget; state stays resumable
         round_t0 = time.time()

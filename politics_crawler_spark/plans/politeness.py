@@ -42,12 +42,13 @@ def host_salt_plan(df: DataFrame, target_rows_per_task: int = 5000) -> dict[str,
 
 
 def salted_repartition_by_host(
-    df: DataFrame,
-    salt_plan: dict[str, int],
-    num_partitions: int | None = None,
+    df: DataFrame, salt_plan: dict[str, int], num_partitions: int
 ) -> DataFrame:
-    """Repartition fetch candidates by (host, salt) and keep each row's
-    host salt factor as the ``_salt_n`` column.
+    """Repartition fetch candidates by (host, salt) into ``num_partitions``
+    and keep each row's host salt factor as the ``_salt_n`` column. The
+    count is explicit because a bare ``repartition(key)`` lets AQE
+    coalesce a small fetch shuffle into one task, which runs every host's
+    requests in series.
 
     ``salt_plan`` comes from :func:`host_salt_plan`; its factors are
     inlined as a literal map lookup (no extra job), and a host absent from
@@ -65,7 +66,5 @@ def salted_repartition_by_host(
     key = F.concat_ws(
         "#", F.col("host"), F.pmod(F.xxhash64(F.col("url")), F.col(SALT_N_COL))
     )
-    if num_partitions:
-        return salted.repartition(num_partitions, key)
-    return salted.repartition(key)
+    return salted.repartition(num_partitions, key)
 

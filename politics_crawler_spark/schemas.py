@@ -46,15 +46,6 @@ SEEN = T.StructType(
     ]
 )
 
-ROBOTS = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("rules", T.StringType(), True),
-        T.StructField("fetched_ts", T.TimestampType(), True),
-        T.StructField("allow_all", T.BooleanType(), False),
-    ]
-)
-
 METRICS = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),

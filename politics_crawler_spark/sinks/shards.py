@@ -35,12 +35,7 @@ from pyspark.sql import functions as F
 from ..operators.curation import token_budget_shards
 
 
-def write_jsonl_shards(
-    df: DataFrame,
-    out_dir: str,
-    budget: int = 2000,
-    bucket_docs: int = 100,
-) -> DataFrame:
+def write_jsonl_shards(df: DataFrame, out_dir: str, budget: int = 2000) -> DataFrame:
     """Assign token-budget shards and write `out_dir/shard_id=N/*.json`
     (JSONL: one record per line with id, token count, and text).
 
@@ -54,9 +49,7 @@ def write_jsonl_shards(
     # write and the audit aggregation; its rows are fixed-width (id,
     # n_tokens, shard_id). The blocks free with the returned audit frame.
     docs = df.select("doc_id", "text").localCheckpoint(eager=True)
-    assign = token_budget_shards(
-        docs, budget=budget, bucket_docs=bucket_docs
-    ).localCheckpoint(eager=True)
+    assign = token_budget_shards(docs, budget=budget).localCheckpoint(eager=True)
     rows = docs.join(assign, "doc_id")
     (
         rows.repartition(df.sparkSession.sparkContext.defaultParallelism, "shard_id")

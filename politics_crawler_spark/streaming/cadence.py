@@ -12,10 +12,11 @@ Streaming:
   streaming analog of the reference's fire-time list.
 - ``crawl_cadence`` reads the tick dir as a file stream with
   ``maxFilesPerTrigger=1`` — each tick file becomes its OWN micro-batch —
-  and ``foreachBatch`` runs one full crawl per batch. With
+  and ``foreachBatch`` runs one full crawl per batch. Under
   ``Trigger.AvailableNow`` the query drains all pending ticks then stops
-  (the reference's "run now, finish, exit" shape); with a processing-time
-  trigger it stays up and fires as ticks arrive.
+  (the reference's "run now, finish, exit" shape); the fire times come
+  from whatever starts it, as cron supplies the reference's
+  (crawler_schedule.py:373-376).
 - the stream CHECKPOINT makes ticks exactly-once across restarts: a
   processed tick file is never re-run, an unprocessed one survives a
   crash. A retried batch (crash mid-crawl) reruns against the same prior
@@ -106,14 +107,12 @@ def crawl_cadence(
     state_dir: str,
     pages=None,
     fetcher=None,
-    available_now: bool = True,
-    processing_interval: str | None = None,
     n_shards: int = 16,
     **crawl_kw,
 ):
-    """Start the cadence stream: one crawl per tick file. Returns the
-    StreamingQuery; caller awaits termination (``available_now``) or stops
-    it. ``batch_id`` keys the run dirs, so stream-checkpoint replay after
+    """Start the cadence stream: one crawl per pending tick file, then
+    stop. Returns the StreamingQuery; the caller awaits its termination.
+    ``batch_id`` keys the run dirs, so stream-checkpoint replay after
     a crash rewrites the same run deterministically instead of forking."""
     os.makedirs(tick_dir, exist_ok=True)
     src = (
@@ -137,12 +136,9 @@ def crawl_cadence(
             **kw,
         )
 
-    writer = (
+    return (
         src.writeStream.foreachBatch(_run_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_interval:
-        writer = writer.trigger(processingTime=processing_interval)
-    return writer.start()

@@ -48,7 +48,7 @@ def test_lsh_candidate_volume_and_recall(spark):
     frac = n_cands / (N * N_QUERIES)
     assert frac < 0.15, f"LSH candidate volume not pruned: {frac:.3f} of N·Q"
 
-    approx = lsh_topk(emb, queries, k=10, bits=10, tables=6)
+    approx = lsh_topk(emb, queries, bits=10, tables=6)
     recall = _mean_recall(approx.collect(), _ground_truth())
     assert recall >= 0.9, f"LSH mean recall {recall}"
     emb.unpersist()

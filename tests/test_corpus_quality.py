@@ -47,21 +47,18 @@ def test_lm_score_mean_surprisal_and_empty_doc(spark):
     assert out[2]["n_tokens"] == 0 and out[2]["bits_per_token"] == 0.0
 
 
-def test_lm_score_oov_floor_with_vocab_cap(spark):
+def test_lm_score_oov_floor(spark):
     from politics_crawler_spark.operators.corpus_quality import (
         lm_score,
         oov_logp,
         unigram_lm,
     )
 
-    train = _docs(spark, [(0, "a a a b b c")])  # N=6, V=3
-    lm = unigram_lm(train, max_vocab=2)  # keeps a(3), b(2); drops c
-    assert {r["tok"] for r in lm.select("tok").collect()} == {"a", "b"}
-    # N/V metadata must still reflect the FULL vocab (cap never changes
-    # in-vocab probabilities)
+    lm = unigram_lm(_docs(spark, [(0, "a a a b b c")]))  # N=6, V=3
     assert oov_logp(lm) == pytest.approx(math.log2(1 / 9))
-    out = {r["doc_id"]: r for r in lm_score(train, lm).collect()}
-    # 'c' now scores at the floor 1/(N+V); a and b unchanged
+    # 'd' is out of vocabulary: it scores at the floor 1/(N+V)
+    scored = _docs(spark, [(0, "a a a b b d")])
+    out = {r["doc_id"]: r for r in lm_score(scored, lm).collect()}
     expect = -(
         3 * math.log2(4 / 9) + 2 * math.log2(3 / 9) + math.log2(1 / 9)
     ) / 6
@@ -85,25 +82,25 @@ def test_dup_ngram_coverage_exact(spark):
         dup_ngram_coverage,
     )
 
-    # docs 0 and 1 share the 3-gram 'a b c' (cross-doc dup); doc 2 is
-    # clean; doc 3 too short for any 3-gram.
+    # docs 0 and 1 share the 5-gram 'a b c d e' (cross-doc dup); doc 2 is
+    # clean; doc 3 too short for any 5-gram.
     d = _docs(
         spark,
         [
-            (0, "a b c x y"),        # gram 'a b c' dup -> covers pos 0,1,2
-            (1, "z a b c"),          # covers pos 1,2,3
-            (2, "p q r s t"),        # no dup gram
-            (3, "u v"),              # shorter than n
+            (0, "a b c d e x y z"),      # 'a b c d e' dup -> covers pos 0-4
+            (1, "w v a b c d e u z q"),  # covers pos 2-6
+            (2, "p q r s t u"),          # no dup gram
+            (3, "u v w x"),              # shorter than n
         ],
     )
     out = {
-        r["doc_id"]: r for r in dup_ngram_coverage(d, n=3).collect()
+        r["doc_id"]: r for r in dup_ngram_coverage(d).collect()
     }
     assert len(out) == 4
-    assert out[0]["n_covered"] == 3 and out[0]["dup_coverage"] == 0.6
-    assert out[1]["n_covered"] == 3 and out[1]["dup_coverage"] == 0.75
+    assert out[0]["n_covered"] == 5 and out[0]["dup_coverage"] == 0.625
+    assert out[1]["n_covered"] == 5 and out[1]["dup_coverage"] == 0.5
     assert out[2]["n_covered"] == 0 and out[2]["dup_coverage"] == 0.0
-    assert out[3]["n_tokens"] == 2 and out[3]["n_covered"] == 0
+    assert out[3]["n_tokens"] == 4 and out[3]["n_covered"] == 0
 
 
 def test_dup_ngram_coverage_overlapping_spans_dedup(spark):
@@ -111,13 +108,13 @@ def test_dup_ngram_coverage_overlapping_spans_dedup(spark):
         dup_ngram_coverage,
     )
 
-    # 'a b c d' appears in both docs: doc0 has overlapping dup grams
-    # 'a b c' and 'b c d' -> covered positions {0,1,2,3} counted ONCE.
-    d = _docs(spark, [(0, "a b c d e"), (1, "x a b c d")])
+    # 'a b c d e f' appears in both docs: doc0 has overlapping dup grams
+    # 'a b c d e' and 'b c d e f' -> covered positions {0..5} counted ONCE.
+    d = _docs(spark, [(0, "a b c d e f g h"), (1, "x a b c d e f")])
     out = {
-        r["doc_id"]: r for r in dup_ngram_coverage(d, n=3).collect()
+        r["doc_id"]: r for r in dup_ngram_coverage(d).collect()
     }
-    assert out[0]["n_covered"] == 4 and out[0]["dup_coverage"] == 0.8
+    assert out[0]["n_covered"] == 6 and out[0]["dup_coverage"] == 0.75
 
 
 def test_dup_ngram_min_docs_counts_distinct_docs(spark):
@@ -125,11 +122,12 @@ def test_dup_ngram_min_docs_counts_distinct_docs(spark):
         dup_ngram_coverage,
     )
 
-    # 'a b c' occurs twice WITHIN doc 0 but in no other doc: with
-    # min_docs=2 the within-doc repeat is NOT cross-document duplication.
-    d = _docs(spark, [(0, "a b c z a b c"), (1, "p q r s")])
+    # 'a b c d e' occurs twice WITHIN doc 0 but in no other doc: with
+    # DUP_MIN_DOCS=2 the within-doc repeat is NOT cross-document
+    # duplication.
+    d = _docs(spark, [(0, "a b c d e z a b c d e"), (1, "p q r s t u")])
     out = {
-        r["doc_id"]: r for r in dup_ngram_coverage(d, n=3).collect()
+        r["doc_id"]: r for r in dup_ngram_coverage(d).collect()
     }
     assert out[0]["n_covered"] == 0
 
@@ -139,24 +137,24 @@ def test_drop_dup_ngram_spans_rebuild(spark):
         drop_dup_ngram_spans,
     )
 
-    # 'a b c' is shared -> positions covered in both docs; the rest of
-    # each doc survives in original order.
+    # 'a b c d e' is shared -> positions covered in both docs; the rest
+    # of each doc survives in original order.
     d = _docs(
         spark,
         [
-            (0, "x a b c y"),   # drop pos 1-3 -> 'x y'
-            (1, "a b c"),       # fully covered -> ''
-            (2, "p q r"),       # untouched
+            (0, "x a b c d e y"),   # drop pos 1-5 -> 'x y'
+            (1, "a b c d e"),       # fully covered -> ''
+            (2, "p q r s t"),       # untouched
         ],
     )
     out = {
         r["doc_id"]: r
-        for r in drop_dup_ngram_spans(d, n=3).collect()
+        for r in drop_dup_ngram_spans(d).collect()
     }
     assert len(out) == 3
     assert out[0]["text_clean"] == "x y" and out[0]["n_kept"] == 2
     assert out[1]["text_clean"] == "" and out[1]["n_kept"] == 0
-    assert out[2]["text_clean"] == "p q r" and out[2]["n_kept"] == 3
+    assert out[2]["text_clean"] == "p q r s t" and out[2]["n_kept"] == 5
 
 
 def test_drop_spans_consistent_with_coverage(spark):
@@ -168,13 +166,13 @@ def test_drop_spans_consistent_with_coverage(spark):
     d = _docs(
         spark,
         [
-            (0, "a b c d e f"),
-            (1, "z a b c d w"),
-            (2, "m n o p q"),
+            (0, "a b c d e f g h"),
+            (1, "z a b c d e f w"),
+            (2, "m n o p q r"),
         ],
     )
-    cov = {r["doc_id"]: r for r in dup_ngram_coverage(d, n=3).collect()}
-    rem = {r["doc_id"]: r for r in drop_dup_ngram_spans(d, n=3).collect()}
+    cov = {r["doc_id"]: r for r in dup_ngram_coverage(d).collect()}
+    rem = {r["doc_id"]: r for r in drop_dup_ngram_spans(d).collect()}
     for i in cov:
         # measure and transform must agree: kept = total - covered
         assert rem[i]["n_kept"] == cov[i]["n_tokens"] - cov[i]["n_covered"]
@@ -189,22 +187,22 @@ def test_source_quality_profile_and_gate(spark):
     )
 
     rows = []
-    # good source: 3 docs, fluent (stopword 'the' present), no punct
-    for i in range(3):
+    # good source: SOURCE_MIN_DOCS = 5 docs, fluent (stopword 'the'
+    # present), no punct
+    for i in range(5):
         rows.append((i, "the quick brown fox jumps over the lazy dog", "good"))
-    # spammy source: 3 docs, zero stopwords
-    for i in range(3, 6):
+    # spammy source: 5 docs, zero stopwords
+    for i in range(5, 10):
         rows.append((i, "buy cheap pills buy cheap pills", "spam"))
-    # tiny source: fluent but below min_docs
-    rows.append((6, "the cat sat on the mat", "tiny"))
+    # tiny source: fluent but one doc below SOURCE_MIN_DOCS
+    for i in range(10, 14):
+        rows.append((i, "the cat sat on the mat", "tiny"))
     d = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    prof = source_quality_profile(
-        d, min_docs=2, min_mean_stop=0.1
-    )
+    prof = source_quality_profile(d, min_mean_stop=0.1)
     p = {r["source"]: r for r in prof.collect()}
     assert p["good"]["keep_source"] is True
     assert p["spam"]["keep_source"] is False  # mean_stop = 0
-    assert p["tiny"]["keep_source"] is False  # n_docs < min_docs
+    assert p["tiny"]["keep_source"] is False  # n_docs < SOURCE_MIN_DOCS
     # 'the' is 2 of 9 tokens
     assert p["good"]["mean_stop"] == pytest.approx(round(2 / 9, 6))
 
@@ -238,21 +236,23 @@ def test_drop_dup_spans_property_matches_python(spark):
     from hypothesis import strategies as st
 
     from politics_crawler_spark.operators.corpus_quality import (
+        DUP_MIN_DOCS,
+        DUP_NGRAM_N,
         drop_dup_ngram_spans,
     )
 
-    word = st.sampled_from(list("abcdefg"))  # tiny alphabet -> many dups
-    doc = st.lists(word, min_size=0, max_size=12).map(" ".join)
+    word = st.sampled_from(list("abc"))  # tiny alphabet -> many dups
+    doc = st.lists(word, min_size=0, max_size=16).map(" ".join)
 
     @settings(max_examples=8, deadline=None)
     @given(st.lists(doc, min_size=1, max_size=6))
     def run(texts):
         corpus = list(enumerate(texts))
-        exp = _py_drop_dup_spans(corpus, n=3, min_docs=2)
+        exp = _py_drop_dup_spans(corpus, n=DUP_NGRAM_N, min_docs=DUP_MIN_DOCS)
         d = spark.createDataFrame(corpus, "doc_id long, text string")
         got = {
             r["doc_id"]: (r["n_tokens"], r["n_kept"], r["text_clean"])
-            for r in drop_dup_ngram_spans(d, n=3).collect()
+            for r in drop_dup_ngram_spans(d).collect()
         }
         assert got == exp
 

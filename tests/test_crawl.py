@@ -1,6 +1,8 @@
 """End-to-end crawl tests: byte identity, filter semantics, dedup, ordering
 equivalence vs the independent reference simulator, and checkpoint resume."""
 
+import contextlib
+import dataclasses
 import datetime as dt
 
 import pytest
@@ -133,6 +135,40 @@ def test_seen_filter_unit(spark):
     assert again.count() == 0
 
 
+def first_pages_boards(max_pages):
+    """ENABLED_BOARDS with each P8 page budget cut to ``max_pages``: a
+    crawl with ``pages_per_round >= max_pages`` runs one round."""
+    return [
+        dataclasses.replace(b, max_pages=min(b.max_pages, max_pages))
+        for b in ENABLED_BOARDS
+    ]
+
+
+class _Killed(Exception):
+    """The crawl process dying inside a round commit."""
+
+
+@contextlib.contextmanager
+def killed_after_commits(n):
+    """The crawl run in the body dies right after its ``n``-th round
+    commit: the next round writes its banks and seen table, then the
+    process is killed before state.json names that round."""
+    from politics_crawler_spark.plans import crawl
+
+    publish, commits = crawl.publish_json, []
+
+    def dying_publish(directory, obj):
+        if len(commits) == n:
+            raise _Killed
+        publish(directory, obj)
+        commits.append(obj["round"])
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(crawl, "publish_json", dying_publish)
+        with pytest.raises(_Killed):
+            yield
+
+
 def _assert_metrics_flow(spark, res, n_out):
     """METRICS flow conservation: per round, extraction takes exactly the
     seen stage's survivors and filters a non-negative count; the extract
@@ -150,16 +186,19 @@ def _assert_metrics_flow(spark, res, n_out):
 @pytest.mark.parametrize("keep_lineage", [False, True], ids=["plain", "lineage"])
 def test_checkpoint_resume_identical(spark, pages_df, pages_pdf, tmp_path,
                                      crawl_result, keep_lineage):
-    """A crawl stopped after two committed rounds and resumed yields the
+    """A crawl killed after two committed rounds and resumed yields the
     uninterrupted run's posts; with lineage on, the resumed output keeps
     the lineage columns and the reference simulator's crawl order, and the
     METRICS table covers every round, the inherited ones included."""
+    from politics_crawler_spark.plans.crawl import read_json
+
     ck = str(tmp_path / "ck")
-    partial = run_crawl(
-        spark, pages_df, n_shards=8, max_rounds=2, checkpoint_dir=ck,
-        pages_per_round=2, keep_lineage=keep_lineage,
-    )
-    assert partial.rounds == 2
+    with killed_after_commits(2):
+        run_crawl(
+            spark, pages_df, n_shards=8, checkpoint_dir=ck,
+            pages_per_round=2, keep_lineage=keep_lineage,
+        )
+    assert read_json(ck)["round"] == 1
     resumed = run_crawl(
         spark, pages_df, n_shards=8, checkpoint_dir=ck, pages_per_round=2,
         keep_lineage=keep_lineage,
@@ -205,16 +244,17 @@ def test_checkpoint_resume_with_orphan_round(spark, pages_df, tmp_path, crawl_re
     import os
     import shutil
 
+    from politics_crawler_spark.plans.crawl import read_json
+
     ck = str(tmp_path / "ck_orphan")
-    run_crawl(
-        spark, pages_df, n_shards=8, max_rounds=2, checkpoint_dir=ck, pages_per_round=2
-    )
-    # simulate the crash: replay round=1's artifacts as an orphan round=2
-    # (parquet written, state.json NOT advanced), with poisoned content
-    shutil.copytree(
-        os.path.join(ck, "candidates/round=1"), os.path.join(ck, "candidates/round=2")
-    )
-    shutil.copytree(os.path.join(ck, "seen/v1"), os.path.join(ck, "seen/v2"))
+    with killed_after_commits(2):
+        run_crawl(spark, pages_df, n_shards=8, checkpoint_dir=ck, pages_per_round=2)
+    # the kill left round 2's parquet written and state.json NOT advanced;
+    # poison the orphans with round 1's artifacts
+    assert read_json(ck)["round"] == 1
+    for orphan, src in (("candidates/round=2", "candidates/round=1"), ("seen/v2", "seen/v1")):
+        shutil.rmtree(os.path.join(ck, orphan))
+        shutil.copytree(os.path.join(ck, src), os.path.join(ck, orphan))
 
     resumed = run_crawl(
         spark, pages_df, n_shards=8, checkpoint_dir=ck, pages_per_round=2
@@ -365,7 +405,7 @@ def test_metrics_table_bogus_key_raises(spark, pages_df):
     computed is a genuine bug and must raise, not silently read 0."""
     import pytest
 
-    res = run_crawl(spark, pages_df, n_shards=8, max_rounds=1)
+    res = run_crawl(spark, pages_df, n_shards=8, boards=first_pages_boards(16))
     res.extracted.count()
     # relabel the one round so metrics_table asks the (resolved) terminal
     # observation for metric keys that were never registered
@@ -380,30 +420,26 @@ def test_metrics_table_bogus_key_raises(spark, pages_df):
 def test_round_counts_are_plain_values(spark, pages_df, tmp_path):
     """Every round's list/select/seen counts are plain integers in its
     ``metrics`` entry when run_crawl returns, before any terminal action,
-    and state.json commits them. A resumed crawl's rows for the inherited
-    rounds come from state.json's metrics alone."""
+    and each round commit (state.json) carries them. A resumed crawl's rows
+    for the inherited rounds come from state.json's metrics alone."""
     import json
     import os
 
     from politics_crawler_spark.plans.crawl import read_json
 
     ck = str(tmp_path / "ck")
-    partial = run_crawl(
-        spark, pages_df, n_shards=8, max_rounds=2, checkpoint_dir=ck, pages_per_round=2
-    )
-    counts = [(m["candidates"], m["selected"], m["unseen"]) for m in partial.metrics]
-    assert len(counts) == 2
+    with killed_after_commits(2):
+        run_crawl(spark, pages_df, n_shards=8, checkpoint_dir=ck, pages_per_round=2)
+    state = read_json(ck)
+    counts = [(m["candidates"], m["selected"], m["unseen"]) for m in state["metrics"]]
+    assert len(counts) == 2 and "stages" not in state
     for c in counts:
         assert all(type(v) is int for v in c)
         assert c[0] >= c[1] >= c[2] > 0
-    state = read_json(ck)
-    assert state["metrics"] == partial.metrics and "stages" not in state
     # plant a count only state.json knows
     state["metrics"][0]["candidates"] += 1000
     with open(os.path.join(ck, "state.json"), "w") as f:
         json.dump(state, f)
-    for c in partial.caches:
-        c.unpersist()
 
     resumed = run_crawl(
         spark, pages_df, n_shards=8, checkpoint_dir=ck, pages_per_round=2

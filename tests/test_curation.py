@@ -11,64 +11,66 @@ from pyspark.sql import functions as F
 def test_decontaminate_exact(spark):
     from politics_crawler_spark.operators.curation import decontaminate_profile
 
-    # eval doc = "a b c d e"; 3-grams: {a b c, b c d, c d e}
+    # eval doc = "a b c d e f g h i j"; 8-grams: {a..h, b..i, c..j}
     evalset = spark.createDataFrame(
-        [(100, "a b c d e")], "doc_id long, text string"
+        [(100, "a b c d e f g h i j")], "doc_id long, text string"
     )
     train = spark.createDataFrame(
         [
-            (0, "x a b c d y"),      # contains 'a b c' and 'b c d' -> 2
-            (1, "a c b d e x"),      # no eval 3-gram -> 0
-            (2, "c d e"),            # exactly 'c d e' -> 1
-            (3, "a b"),              # too short for 3-grams -> 0
-            (4, "a b c a b c"),      # 'a b c' twice but DISTINCT count -> >=1
+            (0, "x a b c d e f g h i y"),            # a..h and b..i -> 2
+            (1, "a c b d e f g h i j"),              # no eval 8-gram -> 0
+            (2, "c d e f g h i j"),                  # exactly c..j -> 1
+            (3, "a b c d e f g"),                    # too short -> 0
+            (4, "a b c d e f g h a b c d e f g h"),  # a..h twice, DISTINCT -> 1
         ],
         "doc_id long, text string",
     )
     out = {
         r["doc_id"]: r
-        for r in decontaminate_profile(train, evalset, n=3).collect()
+        for r in decontaminate_profile(train, evalset).collect()
     }
     assert len(out) == 5
     assert out[0]["n_contam_grams"] == 2 and out[0]["contaminated"]
     assert out[1]["n_contam_grams"] == 0 and not out[1]["contaminated"]
     assert out[2]["n_contam_grams"] == 1
     assert out[3]["n_contam_grams"] == 0
-    # doc 4 grams: {a b c, b c a, c a b} distinct -> only 'a b c' matches
+    # doc 4 grams: a..h, b..a, ..., h..g, a..h -> only 'a..h' matches
     assert out[4]["n_contam_grams"] == 1
 
 
 def test_drop_boilerplate_lines_exact(spark):
     from politics_crawler_spark.operators.curation import drop_boilerplate_lines
 
-    rows = [(i, f"unique content {i}\ncookie banner") for i in range(4)]
-    rows.append((4, "cookie banner"))          # boilerplate-only doc
-    rows.append((5, "solo line\nrare footer"))  # nothing repeated enough
+    # 'cookie banner' sits in exactly BOILERPLATE_MIN_DOCS = 10 docs
+    rows = [(i, f"unique content {i}\ncookie banner") for i in range(9)]
+    rows.append((9, "cookie banner"))           # boilerplate-only doc
+    rows.append((10, "solo line\nrare footer"))  # nothing repeated enough
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
-        r["doc_id"]: r for r in drop_boilerplate_lines(df, min_docs=5).collect()
+        r["doc_id"]: r for r in drop_boilerplate_lines(df).collect()
     }
-    assert len(out) == 6
-    for i in range(4):
+    assert len(out) == 11
+    for i in range(9):
         assert out[i]["n_lines"] == 2 and out[i]["n_kept"] == 1
         assert out[i]["text_clean"] == f"unique content {i}"
     # boilerplate-only doc survives as a row with empty text
-    assert out[4]["n_lines"] == 1 and out[4]["n_kept"] == 0
-    assert out[4]["text_clean"] == ""
+    assert out[9]["n_lines"] == 1 and out[9]["n_kept"] == 0
+    assert out[9]["text_clean"] == ""
     # below-threshold lines all survive, order preserved
-    assert out[5]["n_kept"] == 2
-    assert out[5]["text_clean"] == "solo line\nrare footer"
+    assert out[10]["n_kept"] == 2
+    assert out[10]["text_clean"] == "solo line\nrare footer"
 
 
 def test_drop_boilerplate_line_frequency_is_per_doc(spark):
     from politics_crawler_spark.operators.curation import drop_boilerplate_lines
 
-    # one doc repeating a line 10x: count_distinct(doc) == 1 < min_docs,
-    # so within-doc repetition alone must NOT trigger the drop
+    # one doc repeating a line 10x: 10 occurrences would reach
+    # BOILERPLATE_MIN_DOCS, but count_distinct(doc) == 1, so within-doc
+    # repetition alone must NOT trigger the drop
     df = spark.createDataFrame(
         [(0, "\n".join(["echo"] * 10))], "doc_id long, text string"
     )
-    r = drop_boilerplate_lines(df, min_docs=2).collect()[0]
+    r = drop_boilerplate_lines(df).collect()[0]
     assert r["n_kept"] == 10
 
 
@@ -106,17 +108,17 @@ def test_mixture_sample_profile_exact(spark):
 def test_token_budget_shards_matches_global_cumsum(spark):
     from politics_crawler_spark.operators.curation import token_budget_shards
 
-    # words of deterministic pseudo-random counts; small bucket to force
-    # the two-pass path across many buckets
-    rows = [(i, " ".join(["w"] * ((i * 13) % 29 + 1))) for i in range(137)]
+    # words of deterministic pseudo-random counts; enough docs to force
+    # the two-pass path across many SHARD_BUCKET_DOCS-doc buckets
+    rows = [(i, " ".join(["w"] * ((i * 13) % 29 + 1))) for i in range(1037)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r["doc_id"]: r
-        for r in token_budget_shards(df, budget=50, bucket_docs=10).collect()
+        for r in token_budget_shards(df, budget=50).collect()
     }
     cum = 0
     max_shard = 0
-    for i in range(137):
+    for i in range(1037):
         n = (i * 13) % 29 + 1
         assert out[i]["n_tokens"] == n
         assert out[i]["shard_id"] == cum // 50
@@ -128,18 +130,19 @@ def test_token_budget_shards_matches_global_cumsum(spark):
 def test_token_budget_shards_monotone_and_bounded(spark):
     from politics_crawler_spark.operators.curation import token_budget_shards
 
-    rows = [(i, "a b c d e") for i in range(100)]
+    # 7-doc shards straddle the 100-doc bucket boundaries
+    rows = [(i, "a b c d") for i in range(350)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = sorted(
-        token_budget_shards(df, budget=25, bucket_docs=7).collect(),
+        token_budget_shards(df, budget=28).collect(),
         key=lambda r: r["doc_id"],
     )
     shards = [r["shard_id"] for r in got]
     assert shards == sorted(shards)  # monotone in doc order
-    # every shard holds exactly 5 docs of 5 tokens (budget 25)
+    # every shard holds exactly 7 docs of 4 tokens (budget 28)
     from collections import Counter
 
-    assert set(Counter(shards).values()) == {5}
+    assert set(Counter(shards).values()) == {7}
 
 
 def test_c4_filter_matches_gate_keep_set(spark):

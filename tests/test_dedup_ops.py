@@ -264,14 +264,14 @@ def test_minhash_dedup_transitive_chain(spark):
 
 
 def _shingle_hashes(text: str, k: int) -> np.ndarray:
-    """Per-doc reference: unique FNV-1a hashes of all UTF-8 byte k-grams."""
+    """Per-doc reference: unique FNV-1a hashes of all character (code
+    point) k-grams, one code point folded in per step."""
     if text is None:
         return np.zeros(0, dtype=np.uint64)
-    data = text.encode("utf-8", "ignore")
-    n = len(data) - k + 1
+    n = len(text) - k + 1
     if n <= 0:
         return np.zeros(0, dtype=np.uint64)
-    arr = np.frombuffer(data, dtype=np.uint8)
+    arr = np.fromiter(map(ord, text), dtype=np.uint64, count=len(text))
     windows = np.lib.stride_tricks.sliding_window_view(arr, k).astype(np.uint64)
     h = np.full(n, _FNV_BASIS, dtype=np.uint64)
     for i in range(k):
@@ -300,8 +300,8 @@ def _reference_sketches(text: str, k: int = 5):
 
 def test_sketch_kernels_match_per_doc_reference(spark):
     """Every doc's batched-kernel ``sig`` and ``sim`` equal the per-doc
-    reference — ASCII, Korean (multi-byte UTF-8 shingles cross character
-    boundaries), a text shorter than k, and a NULL text."""
+    reference — ASCII, Korean (one shingle step per syllable, not per
+    UTF-8 byte), a text shorter than k, and a NULL text."""
     from politics_crawler_spark.operators.dedup import minhash_signatures
 
     rows = [(r.doc_id, r.text) for r in _docs(spark).collect()] + [
@@ -318,6 +318,35 @@ def test_sketch_kernels_match_per_doc_reference(spark):
     for doc_id, text in rows:
         assert got[doc_id] == _reference_sketches(text), doc_id
     assert got[7] == got[8] == ([0] * 64, 0)
+
+
+def test_minhash_estimates_char_gram_jaccard_on_crawl_text(spark, pages_pdf):
+    """The sketches and the exact verify share one shingle: on the crawl's
+    own text (about a third Hangul, 3 UTF-8 bytes per syllable) the 64-slot
+    agreement is an unbiased estimate of the exact character-SHINGLE_K-gram
+    Jaccard. Over 300 random pairs the mean signed error is within ±0.02;
+    sketches of UTF-8 byte grams read about +0.1 here."""
+    import random
+
+    from politics_crawler_spark.operators.dedup import SHINGLE_K, minhash_signatures
+
+    texts = [t for t in pages_pdf["text"] if len(t) >= 20]
+    hangul = sum(1 for t in texts for c in t if "가" <= c <= "힣")
+    assert hangul > 0.2 * sum(map(len, texts))
+    rng = random.Random(5)
+    ids = rng.sample(range(len(texts)), 200)
+    df = spark.createDataFrame([(i, texts[i]) for i in ids], "doc_id long, text string")
+    sig = {r.doc_id: np.array(r.sig) for r in minhash_signatures(df).collect()}
+
+    def grams(t):
+        return {t[p : p + SHINGLE_K] for p in range(len(t) - SHINGLE_K + 1)}
+
+    errs = []
+    for _ in range(300):
+        a, b = rng.sample(ids, 2)
+        ga, gb = grams(texts[a]), grams(texts[b])
+        errs.append(np.mean(sig[a] == sig[b]) - len(ga & gb) / len(ga | gb))
+    assert abs(np.mean(errs)) <= 0.02, np.mean(errs)
 
 
 @pytest.mark.parametrize("id_type", ["int", "string"])
@@ -360,10 +389,10 @@ def test_lsh_ann_recall_vs_bruteforce(spark):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 3)
-    exact = cosine_topk(emb, queries, k=5)
+    exact = cosine_topk(emb, queries)
     # random embeddings are the worst case for LSH (no cluster structure);
     # low bits + many tables trades candidate volume for recall
-    approx = lsh_topk(emb, queries, k=5, bits=3, tables=8)
+    approx = lsh_topk(emb, queries, bits=3, tables=8)
     e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     recall = len(e & a) / len(e)

@@ -50,15 +50,15 @@ _flaky_transport.calls = {}
 
 def test_fetch_retry_short_and_ua(spark):
     urls = [
-        ("https://h/flaky",),
-        ("https://h/dead",),
-        ("https://h/gone",),
-        ("https://h/throttled",),
-        ("https://h/short",),
-        ("https://h/tiny",),
-        ("https://h/fine",),
+        ("https://h/flaky", "h"),
+        ("https://h/dead", "h"),
+        ("https://h/gone", "h"),
+        ("https://h/throttled", "h"),
+        ("https://h/short", "h"),
+        ("https://h/tiny", "h"),
+        ("https://h/fine", "h"),
     ]
-    df = spark.createDataFrame(urls, "url string").coalesce(1)
+    df = spark.createDataFrame(urls, "url string, host string").coalesce(1)
     fetch = make_fetch_stage(
         transport=_flaky_transport, max_attempts=2, min_bytes=5, sleep=None
     )
@@ -98,7 +98,9 @@ def test_fetch_backoff_exhausts_attempts_with_bounded_jitter(spark):
         max_attempts=3,
         sleep=None,  # executor-side sleeps aren't observable; jitter checked below
     )
-    df = spark.createDataFrame([("https://h/x",)], "url string").coalesce(1)
+    df = spark.createDataFrame(
+        [("https://h/x", "h")], "url string, host string"
+    ).coalesce(1)
     out = fetch(df).collect()
     assert out[0].attempts == 3 and out[0].fetch_status == "error"
     # deterministic backoff jitter lands in [lo, hi)
@@ -270,7 +272,9 @@ def test_per_host_pacing_salted_budget_division(spark, tmp_path):
         [(f"https://m.com/p{i}", "m.com") for i in range(12)],
         "url string, host string",
     )
-    paced = salted_repartition_by_host(df, salt_plan=plan)
+    paced = salted_repartition_by_host(
+        df, salt_plan=plan, num_partitions=spark.sparkContext.defaultParallelism
+    )
     assert "_salt_n" in paced.columns
     fetch = make_fetch_stage(
         transport=_recording_transport(log), max_attempts=1, sleep=_time.sleep,
@@ -328,6 +332,8 @@ def test_run_crawl_paces_salted_host_from_stage_interval(
     from politics_crawler_spark.plans.crawl import run_crawl
     from politics_crawler_spark.plans.politeness import host_salt_plan
 
+    from .test_crawl import first_pages_boards
+
     target, interval = 100, 0.005
     plan = host_salt_plan(
         pages_df.select(F.parse_url(F.col("url"), F.lit("HOST")).alias("host")),
@@ -349,7 +355,7 @@ def test_run_crawl_paces_salted_host_from_stage_interval(
         min_interval_s=interval,
     )
     res = run_crawl(
-        spark, pages_df, n_shards=8, fetcher=fetch, max_rounds=1,
+        spark, pages_df, n_shards=8, fetcher=fetch, boards=first_pages_boards(16),
         host_target_rows=target,
     )
     assert res.extracted.count() > 0
@@ -435,22 +441,28 @@ def _fetched_detail_urls(pages, log_path):
 def test_live_checkpoint_resume_skips_committed_fetches(
     spark, pages_pdf, pages_df, tmp_path
 ):
-    """A checkpointed live crawl stopped after one committed round and
+    """A checkpointed live crawl killed after one committed round and
     resumed returns the posts of an uninterrupted live crawl and of the
     snapshot crawl, its METRICS conserve flow, and the resume requests no
     detail url of the committed round (its pages come from the commit)."""
+    import os
+
     from politics_crawler_spark.plans.crawl import run_crawl
 
-    from .test_crawl import _assert_metrics_flow
+    from .test_crawl import _assert_metrics_flow, killed_after_commits
 
     pages = dict(zip(pages_pdf["url"], pages_pdf["html"]))
     logs = {k: str(tmp_path / f"{k}.log") for k in ("first", "resume", "full")}
     ck = str(tmp_path / "ck")
-    partial = run_crawl(
-        spark, None, n_shards=8, fetcher=_logged_fetch(pages, logs["first"]),
-        checkpoint_dir=ck, max_rounds=1, pages_per_round=2,
-    )
-    assert partial.rounds == 1
+    with killed_after_commits(1):
+        run_crawl(
+            spark, None, n_shards=8, fetcher=_logged_fetch(pages, logs["first"]),
+            checkpoint_dir=ck, pages_per_round=2,
+        )
+    committed = {
+        r.url for r in spark.read.parquet(os.path.join(ck, "pages/round=0")).collect()
+    }
+    assert committed and committed <= _fetched_detail_urls(pages, logs["first"])
     resumed = run_crawl(
         spark, None, n_shards=8, fetcher=_logged_fetch(pages, logs["resume"]),
         checkpoint_dir=ck, pages_per_round=2,
@@ -468,10 +480,8 @@ def test_live_checkpoint_resume_skips_committed_fetches(
     assert a == {(r.url, r.content) for r in base.extracted.collect()}
     _assert_metrics_flow(spark, resumed, len(got))
 
-    committed = _fetched_detail_urls(pages, logs["first"])
-    assert committed
     assert not committed & _fetched_detail_urls(pages, logs["resume"])
-    for res in (partial, resumed, full, base):
+    for res in (resumed, full, base):
         for c in res.caches:
             c.unpersist()
 
@@ -482,6 +492,8 @@ def test_live_crawl_extracts_a_retried_detail_url_once(spark, pages_pdf, tmp_pat
     banks its candidate, so the crawl extracts it once. The web serves list
     page 2 as a copy of page 1, and one post of page 1 fails both attempts
     in round 0."""
+    import dataclasses
+
     from politics_crawler_spark.config import ENABLED_BOARDS
     from politics_crawler_spark.plans.crawl import run_crawl
     from politics_crawler_spark.sources.synthetic_pages import list_url
@@ -489,7 +501,8 @@ def test_live_crawl_extracts_a_retried_detail_url_once(spark, pages_pdf, tmp_pat
     board = ENABLED_BOARDS[0]
     pages = dict(zip(pages_pdf["url"], pages_pdf["html"]))
     first = run_crawl(
-        spark, None, n_shards=8, boards=[board], pages_per_round=1, max_rounds=1,
+        spark, None, n_shards=8, boards=[dataclasses.replace(board, max_pages=1)],
+        pages_per_round=1,
         fetcher=_logged_fetch(pages, str(tmp_path / "first.log")),
     )
     target = min(r.url for r in first.extracted.select("url").collect())
@@ -505,7 +518,8 @@ def test_live_crawl_extracts_a_retried_detail_url_once(spark, pages_pdf, tmp_pat
         return (200, body) if body is not None else (500, b"")
 
     res = run_crawl(
-        spark, None, n_shards=8, boards=[board], pages_per_round=1, max_rounds=2,
+        spark, None, n_shards=8, boards=[dataclasses.replace(board, max_pages=2)],
+        pages_per_round=1,
         fetcher=make_fetch_stage(
             transport=transport, max_attempts=2, min_bytes=50, sleep=None
         ),

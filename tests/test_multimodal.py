@@ -1,9 +1,19 @@
 """Multimodal plumbing tests: schemas/batching real, decode stubbed."""
 
 
-from politics_crawler_spark.operators.multimodal import (
-    MEDIA,
-    extract_media_features,
+from pyspark.sql import types as T
+
+from politics_crawler_spark.operators.multimodal import extract_media_features
+
+# The media table extract_media_features reads.
+MEDIA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("kind", T.StringType(), False),  # image|audio|video
+        T.StructField("payload", T.BinaryType(), True),
+        T.StructField("mime", T.StringType(), True),
+        T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
+    ]
 )
 
 

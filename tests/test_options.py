@@ -1,19 +1,23 @@
 """Options census: every defaulted parameter of the package's public
-module-level functions must be set by some call in the repo.
+module-level functions must be set by some call from an entry point.
 
-The census parses every ``.py`` file of the repo (package, entry point,
-benches, tools and tests; this file excepted) with ``ast`` and binds each
-call that resolves to a package function to that function's parameters,
-by position or keyword. A call does not set a parameter when it passes a
-literal equal to the callee's default, forwards ``**kw``, or forwards the
-caller's own parameter of the same name and default -- that forward sets
-it only if some call sets the caller's parameter, repeated until nothing
-changes. A defaulted parameter no call sets is a constant in disguise:
-inline it. ``KEEP`` lists the options kept on purpose.
+The census parses every ``.py`` file of the repo (this file excepted) with
+``ast`` and binds each call that resolves to a package function to that
+function's parameters, by position or keyword. Only calls outside test
+modules count: the package, the entry point, the benches and the tools. A
+call from a test sets nothing, because an option is justified only when
+two callers that are not tests need different values. A call does not set
+a parameter when it passes a literal equal to the callee's default,
+forwards ``**kw``, or forwards the caller's own parameter of the same name
+and default -- that forward sets it only if some call sets the caller's
+parameter, repeated until nothing changes. A defaulted parameter no call
+sets is a constant in disguise: inline it. ``KEEP`` names the options kept
+on purpose, each with its reason; an entry that an entry-point call now
+sets is stale and fails the census too.
 
 A second census, over the same parse, asks the same of definitions: every
-module-level function or class of the package must be reached from an
-entry point (a non-test file outside the package, or a module-level
+module-level function, class or constant of the package must be reached
+from an entry point (a non-test file outside the package, or a module-level
 statement of the package), directly or through other reached definitions.
 Code only tests reach is a reference, and lives in ``tests/``.
 ``KEEP_LIVE`` lists the definitions kept on purpose.
@@ -32,10 +36,38 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 PKG = "politics_crawler_spark"
 
-# The only way to schedule a live crawl stream (a fetcher), which no test
-# or bench runs; live ticks are tested directly through crawl_tick.
+_LIVE = (
+    "the live page source (the reference's P1-P6 fetch); no entry point "
+    "crawls live, see KEEP_LIVE"
+)
+_FETCH_POLICY = "the live stage's P2/P6/P3 policy; no entry point crawls live"
+_SYNTH_SIZE = "the size of a synthetic corpus; tests build small ones"
+
+# Options only tests set, kept on purpose: label -> reason.
 KEEP = {
-    "streaming.cadence.crawl_cadence(fetcher)",
+    "job.main(argv)": "the command line",
+    "operators.dedup.connected_min_reps(max_iters)": (
+        "a fault bound; a test drives its non-convergence error"
+    ),
+    "operators.fetch.make_fetch_stage(transport)": "the test fake for the network",
+    "operators.fetch.make_fetch_stage(sleep)": "the test fake for the clock",
+    "operators.fetch.make_fetch_stage(timeout_s)": _FETCH_POLICY,
+    "operators.fetch.make_fetch_stage(max_attempts)": _FETCH_POLICY,
+    "operators.fetch.make_fetch_stage(min_bytes)": _FETCH_POLICY,
+    "operators.fetch.make_fetch_stage(min_interval_s)": _FETCH_POLICY,
+    "plans.crawl.run_crawl(fetcher)": _LIVE,
+    "streaming.cadence.crawl_tick(fetcher)": _LIVE,
+    "streaming.cadence.crawl_cadence(fetcher)": _LIVE,
+    "plans.crawl.run_crawl(robots)": "the P12 gate's table; no entry point has robots data",
+    "plans.crawl.run_crawl(keep_lineage)": (
+        "the crawl-order check reads these columns, and the reference's "
+        "post row does not carry them"
+    ),
+    "sources.synthetic_embeddings.embeddings_np(n)": _SYNTH_SIZE,
+    "sources.synthetic_embeddings.exact_topk_np(n)": _SYNTH_SIZE,
+    "sources.synthetic_embeddings.synthesize_embeddings(n)": _SYNTH_SIZE,
+    "sources.synthetic_embeddings.synthesize_neardup_embeddings(n)": _SYNTH_SIZE,
+    "sources.synthetic_pages.synthesize_pages_pandas(replicas)": _SYNTH_SIZE,
 }
 
 # The only live page source run_crawl(fetcher=...) takes (the reference's
@@ -192,7 +224,8 @@ def census(root: Path = ROOT):
             visit(m, child, enclosing, outer)
 
     for m in modules.values():
-        visit(m, m.tree, None, {})
+        if not _is_test(m.name):
+            visit(m, m.tree, None, {})
 
     live, todo = set(passed), list(passed)
     while todo:
@@ -265,12 +298,29 @@ def _references(m: _Module, nodes) -> set[str]:
     return out
 
 
+def _assigned_names(node) -> list[str]:
+    """The names a module-level assignment binds (dunders excepted), or
+    ``[]`` for any other statement."""
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign) and node.value is not None:
+        targets = [node.target]
+    else:
+        return []
+    return [
+        n.id for t in targets for n in ast.walk(t)
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+        and not n.id.startswith("__")
+    ]
+
+
 def unreached(root: Path = ROOT) -> dict[str, int]:
     """Package definitions no entry point reaches, with their line counts.
 
-    A module-level function or class of the package is live when a root or
-    a live definition references it, repeated until nothing changes. The
-    roots are every non-test file outside the package, the package's own
+    A module-level function, class or constant (a name a module-level
+    assignment binds) of the package is live when a root or a live
+    definition references it, repeated until nothing changes. The roots
+    are every non-test file outside the package, the package's other
     module-level statements and decorators, and ``KEEP_LIVE``."""
     modules = _modules(root)
     defs: dict[str, tuple[_Module, ast.AST]] = {}
@@ -284,6 +334,9 @@ def unreached(root: Path = ROOT) -> dict[str, int]:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 defs[f"{m.name}.{node.name}"] = (m, node)
                 roots.append((m, node.decorator_list))
+            elif names := _assigned_names(node):
+                for name in names:
+                    defs[f"{m.name}.{name}"] = (m, node)
             else:
                 roots.append((m, [node]))
 
@@ -322,7 +375,16 @@ def test_every_defaulted_parameter_is_set_by_some_call():
 def test_keep_list_names_defaulted_parameters():
     funcs, _ = census()
     known = {f.label(p) for f in funcs.values() for p in f.defaults}
-    assert KEEP <= known, sorted(KEEP - known)
+    assert KEEP.keys() <= known, sorted(KEEP.keys() - known)
+
+
+def test_keep_list_has_no_stale_entry():
+    funcs, unset = census()
+    stale = sorted(KEEP.keys() - {funcs[k].label(p) for k, p in unset})
+    assert not stale, (
+        f"{len(stale)} KEEP entries are set by an entry-point call; "
+        "drop each from KEEP:\n  " + "\n  ".join(stale)
+    )
 
 
 def test_every_package_definition_is_reached_from_an_entry_point():

@@ -34,7 +34,7 @@ def _corpus(spark):
 
 
 def test_bm25_hand_computed_scores(spark):
-    out = bm25_topk(_corpus(spark), [(0, "spark query")], k=10)
+    out = bm25_topk(_corpus(spark), [(0, "spark query")])
     rows = {r.doc_id: r for r in out.collect()}
     n, avgdl = 5, (3 + 4 + 3 + 4 + 0) / 5.0
     # doc 0 matches both terms once, dl=3
@@ -65,25 +65,31 @@ def test_bm25_non_ascii_query_term(spark):
         [(0, "café au lait"), (1, "plain coffee"), (2, "black tea")],
         "doc_id long, text string",
     )
-    out = bm25_topk(d, [(0, "café")], k=10).collect()
+    out = bm25_topk(d, [(0, "café")]).collect()
     want = round(_bm25(1, 1, 3, 3, (3 + 2 + 2) / 3.0), 4)
     assert [(r.doc_id, r.score, r.rank) for r in out] == [(0, want, 1)]
 
 
 def test_bm25_multi_query_and_k_truncation(spark):
-    out = bm25_topk(
-        _corpus(spark), [(0, "spark"), (1, "query optimizer")], k=1
-    ).collect()
-    by_q = {r.query_id: r for r in out}
-    assert len(out) == 2  # k=1 truncates each query
-    assert by_q[0].rank == 1
+    from politics_crawler_spark.operators.retrieval import BM25_TOP_K
+
+    # 12 fillers match both queries, so each has 14 > BM25_TOP_K hits
+    fillers = [(10 + i, f"spark query filler{i}", "s2") for i in range(12)]
+    corpus = spark.createDataFrame(DOCS + fillers, ["doc_id", "text", "source"])
+    out = bm25_topk(corpus, [(0, "spark"), (1, "query optimizer")]).collect()
+    by_q = {}
+    for r in out:
+        by_q.setdefault(r.query_id, []).append(r)
+    # BM25_TOP_K truncates each query
+    assert sorted(len(rs) for rs in by_q.values()) == [BM25_TOP_K] * 2
+    assert sorted(r.rank for r in by_q[0]) == list(range(1, BM25_TOP_K + 1))
     # query 1: doc 2 matches both terms, must out-rank single-term docs
-    assert by_q[1].doc_id == 2
+    assert min(by_q[1], key=lambda r: r.rank).doc_id == 2
 
 
 def test_bm25_duplicate_query_terms_counted_once(spark):
-    once = bm25_topk(_corpus(spark), [(0, "spark")], k=10).collect()
-    twice = bm25_topk(_corpus(spark), [(0, "spark spark")], k=10).collect()
+    once = bm25_topk(_corpus(spark), [(0, "spark")]).collect()
+    twice = bm25_topk(_corpus(spark), [(0, "spark spark")]).collect()
     assert {(r.doc_id, r.score) for r in once} == {
         (r.doc_id, r.score) for r in twice
     }
@@ -150,5 +156,5 @@ def test_bm25_posting_volume_pruned(spark):
     assert n_postings <= 200 * len(term_list)
     assert n_postings * 2 < total_tokens  # << corpus token volume
     # and the operator's own output agrees with a brute-force tf count
-    out = bm25_topk(d, queries, k=5)
+    out = bm25_topk(d, queries)
     assert out.count() > 0

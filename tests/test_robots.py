@@ -1,10 +1,22 @@
 """robots.txt gating tests (P12)."""
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from politics_crawler_spark.plans.crawl import run_crawl
 from politics_crawler_spark.plans.robots import gate_by_robots
-from politics_crawler_spark.schemas import ROBOTS
+
+from .test_crawl import first_pages_boards
+
+# The robots table gate_by_robots reads (one row per host fetch).
+ROBOTS = T.StructType(
+    [
+        T.StructField("host", T.StringType(), False),
+        T.StructField("rules", T.StringType(), True),
+        T.StructField("fetched_ts", T.TimestampType(), True),
+        T.StructField("allow_all", T.BooleanType(), False),
+    ]
+)
 
 
 def robots_df(spark, rows: list[dict]):
@@ -102,7 +114,9 @@ def test_crawl_with_two_robots_rows_per_host_keeps_urls_unique(spark, pages_df):
             for d in (1, 2)
         ],
     )
-    res = run_crawl(spark, pages_df, n_shards=8, robots=robots, max_rounds=1)
+    res = run_crawl(
+        spark, pages_df, n_shards=8, robots=robots, boards=first_pages_boards(16)
+    )
     urls = [r.url for r in res.extracted.select("url").collect()]
     assert any("theqoo.net" in u for u in urls)
     assert len(urls) == len(set(urls))

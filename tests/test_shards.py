@@ -18,15 +18,16 @@ def read_jsonl_shards(spark, out_dir: str):
 def test_write_jsonl_shards_layout_and_budget(spark, tmp_path):
     from politics_crawler_spark.sinks.shards import write_jsonl_shards
 
-    # 40 docs x 10 tokens = 400 tokens; budget 100 -> 4 shards of 10 docs
-    rows = [(i, " ".join(f"w{i}t{j}" for j in range(10))) for i in range(40)]
+    # 240 docs x 10 tokens = 2400 tokens over three 100-doc prefix-sum
+    # buckets; budget 600 -> 4 shards of 60 docs
+    rows = [(i, " ".join(f"w{i}t{j}" for j in range(10))) for i in range(240)]
     d = spark.createDataFrame(rows, "doc_id long, text string")
     out = str(tmp_path / "shards")
-    audit = write_jsonl_shards(d, out, budget=100, bucket_docs=8)
+    audit = write_jsonl_shards(d, out, budget=600)
 
     a = {r["shard_id"]: r for r in audit.collect()}
     assert sorted(a) == [0, 1, 2, 3]
-    assert all(a[s]["n_docs"] == 10 and a[s]["shard_tokens"] == 100 for s in a)
+    assert all(a[s]["n_docs"] == 60 and a[s]["shard_tokens"] == 600 for s in a)
 
     # one directory per shard, ONE data file per shard (repartition by id)
     dirs = sorted(
@@ -43,31 +44,31 @@ def test_write_jsonl_shards_layout_and_budget(spark, tmp_path):
 
     # round trip: every doc back, in its assigned shard, text intact
     back = read_jsonl_shards(spark, out)
-    assert back.count() == 40
-    assert back.select("doc_id").distinct().count() == 40
+    assert back.count() == 240
+    assert back.select("doc_id").distinct().count() == 240
     orig = d.withColumnRenamed("text", "orig_text")
     j = back.join(orig, "doc_id")
     assert j.filter(F.col("text") != F.col("orig_text")).count() == 0
     # shard membership matches the floor(running_total/budget) contract
     got = {r["doc_id"]: r["shard_id"] for r in back.collect()}
-    assert all(got[i] == i // 10 for i in range(40))
+    assert all(got[i] == i // 60 for i in range(240))
 
 
 def test_write_jsonl_shards_oversized_doc_gets_own_shard(spark, tmp_path):
     from politics_crawler_spark.sinks.shards import write_jsonl_shards
 
-    # doc 1 alone exceeds the budget; it must not be split and later
-    # docs start new shards after it
+    # doc 100 alone exceeds the budget; it must not be split and later
+    # docs start new shards after it (one doc per 100-doc bucket)
     rows = [
         (0, "a b c"),                                 # 3 tokens -> shard 0
-        (1, " ".join(f"x{k}" for k in range(25))),    # 25 tokens, budget 10
-        (2, "d e f"),
+        (100, " ".join(f"x{k}" for k in range(25))),  # 25 tokens, budget 10
+        (200, "d e f"),
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    audit = write_jsonl_shards(d, str(tmp_path / "s"), budget=10, bucket_docs=2)
+    audit = write_jsonl_shards(d, str(tmp_path / "s"), budget=10)
     a = {r["shard_id"]: r for r in audit.collect()}
-    # offsets: doc0 starts 0 -> shard 0; doc1 starts 3 -> shard 0 (floor
-    # 3/10); doc2 starts 28 -> shard 2
+    # offsets: doc0 starts 0 -> shard 0; doc100 starts 3 -> shard 0 (floor
+    # 3/10); doc200 starts 28 -> shard 2
     assert a[0]["n_docs"] == 2 and a[0]["shard_tokens"] == 28
     assert a[2]["n_docs"] == 1 and a[2]["shard_tokens"] == 3
 
@@ -90,7 +91,7 @@ def test_write_jsonl_shards_runs_input_once(spark, tmp_path):
     d = spark.createDataFrame(rows, "doc_id long, text string").select(
         "doc_id", tap_udf("text").alias("text")
     )
-    audit = write_jsonl_shards(d, str(tmp_path / "s"), budget=100, bucket_docs=8)
+    audit = write_jsonl_shards(d, str(tmp_path / "s"), budget=100)
     assert sum(r["n_docs"] for r in audit.collect()) == 40
     assert evals.value == 40
 
@@ -109,7 +110,7 @@ def test_write_jsonl_shards_one_writer_per_core(spark, tmp_path):
     out = str(tmp_path / "shards")
     sc.setJobGroup("shard_write", "shard_write")
     try:
-        audit = write_jsonl_shards(d, out, budget=100, bucket_docs=8)
+        audit = write_jsonl_shards(d, out, budget=100)
     finally:
         sc.setJobGroup("", "")
     assert [r["n_docs"] for r in audit.collect()] == [10] * n_shards

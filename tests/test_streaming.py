@@ -72,41 +72,6 @@ def test_crawl_cadence_dated_tick_overrides_default(spark, pages_df, tmp_path):
     assert n > 0  # default date would have matched zero pages
 
 
-def test_crawl_cadence_processing_time_trigger(spark, pages_df, tmp_path):
-    """The long-running mode (processing-time trigger) must fire a crawl
-    when a tick lands, without the stream terminating (VERDICT r4 #5: only
-    Trigger.AvailableNow was exercised)."""
-    import pathlib
-    import time
-
-    from politics_crawler_spark.streaming.cadence import crawl_cadence
-
-    tick = tmp_path / "ticks"
-    tick.mkdir()
-    (tick / "t0.txt").write_text("")
-
-    q = crawl_cadence(
-        spark, str(tick), str(tmp_path / "ck"), str(tmp_path / "state"),
-        pages=pages_df, n_shards=8,
-        available_now=False, processing_interval="500 milliseconds",
-    )
-    try:
-        state_json = pathlib.Path(tmp_path, "state/state.json")
-        deadline = time.time() + 240
-        while time.time() < deadline and not state_json.exists():
-            if q.exception():
-                raise q.exception()
-            time.sleep(0.5)
-        assert state_json.exists(), "processing-time trigger never ran the tick"
-        assert q.isActive  # the stream stays up after the batch
-        n = spark.read.parquet(
-            str(pathlib.Path(tmp_path, "state/extracted/run=0"))
-        ).count()
-        assert n > 0
-    finally:
-        q.stop()
-
-
 def test_job_ticks_drain_with_zero_ticks(tmp_path, capsys):
     """--ticks with an empty tick dir must report an empty run, not crash
     on the missing state.json (ADVICE r4)."""

@@ -46,14 +46,21 @@ def test_repetition_profile_exact(spark, docs):
 def test_c4_doc_gate_rules(spark, docs):
     from politics_crawler_spark.operators.webquality import c4_doc_gate
 
-    out = {r["doc_id"]: r for r in c4_doc_gate(docs, min_words=3).collect()}
+    # docs 5 and 6 sit on either side of the C4_MIN_WORDS = 20 floor
+    words = ["the", "go"] * 10
+    extra = spark.createDataFrame(
+        [(5, " ".join(words)), (6, " ".join(words[:-1]))], docs.schema
+    )
+    out = {r["doc_id"]: r for r in c4_doc_gate(docs.union(extra)).collect()}
     # doc 0 has stopword 'the'; doc 3 has none
     assert out[0]["ok_stopword"] is True
     assert out[3]["ok_stopword"] is False
     assert out[2]["ok_min_words"] is False  # empty
+    assert out[0]["ok_min_words"] is False  # 8 words
     # doc 4: tokens x1 y2 9 9 9 -> alpha fraction 2/5 < 0.8
     assert out[4]["ok_alpha"] is False and out[4]["keep"] is False
-    assert out[0]["keep"] is True
+    assert out[5]["keep"] is True
+    assert out[6]["ok_min_words"] is False and out[6]["keep"] is False
 
 
 def test_pii_redaction_exact(spark):

@@ -183,7 +183,7 @@ def main():
             t0 = time.time()
             lm = None
             if args.mode == "dupngram":
-                out = dup_ngram_coverage(pages, n=5)
+                out = dup_ngram_coverage(pages)
                 # force every column end-to-end (count alone would let
                 # Catalyst prune the coverage join)
                 n_flagged = out.filter(F.col("dup_coverage") > 0.05).count()
